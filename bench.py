@@ -127,18 +127,10 @@ def main() -> None:
     # timings (observed 3-5x swings on identical plans).  Steady-state
     # is also the number that extrapolates to a long-running cluster.
     #
-    # r13 MEASUREMENT FIX (r12 verdict #1 / task 1): Spark's
-    # CacheManager matches cached plans by logical subtree, so any
-    # query whose operator calls .cache()/.persist() left pass 0's
-    # InMemoryRelation registered — pass 1 (and the solo re-runs) then
-    # read the warm cache and the per-query min partially measured
-    # warm-cache execution, not the query.  spark.catalog.clearCache()
-    # between passes (and before the solo block) makes every timed run
-    # compute from the parquet inputs.  This can only RAISE the
-    # reported numbers vs r12 for the affected queries; the r12
-    # methodology's numbers are kept in BENCH_r12.json /
-    # bench_r12_*.json and the delta is documented in
-    # OPTIMIZATION_r13.md.
+    # clearCache() stays as a guard: the engine registers nothing in the
+    # CacheManager (every pin is a lazy localCheckpoint), so it only
+    # keeps a future cache() from serving a warm pass (CHANGES.md, the
+    # one-pin() entry).
     timings: dict[str, float] = {}
     for pass_no in range(2):
         spark.catalog.clearCache()

@@ -34,9 +34,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
+
+from ..pin import pin
 
 FP = 1_000_000  # micro fixed-point: float32 -> exact int64 components
 
@@ -111,15 +112,7 @@ def kmeans_fixed(emb: DataFrame, k: int = 8, iters: int = 2, fp: int = FP) -> Da
     # per-iteration recompute collect, and the final assignment are
     # separate actions, so unpinned the scan+transform runs iters+2
     # times (guide §5 — reused AND recompute costs a full input pass).
-    # r13 (r12 verdict #1): eager serialized-disk localCheckpoint, not
-    # cache() — the projection is |emb| x dim (input-scale), so an
-    # unreleased cache entry leaks it for the session lifetime; the
-    # checkpoint is freed by the ContextCleaner when the returned plan
-    # is GC'd, and the serialized level bounds the resident footprint.
-    vec = (
-        emb.select("vec_id", to_fp_vec("embedding", fp).alias("v"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
+    vec = pin(emb.select("vec_id", to_fp_vec("embedding", fp).alias("v")))
     # seed from the k SMALLEST vec_ids (not the literal vec_id < k):
     # deterministic on any id space, and a short read fails loudly
     # instead of silently running with fewer clusters (r3 ADVICE)

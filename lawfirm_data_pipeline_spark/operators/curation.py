@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from . import text as TX
 from .sampling import hash_bucket
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
@@ -384,7 +385,7 @@ def token_drift_kl(
     the full-outer, then the normalizer and the contribution path), and
     exchange reuse does NOT dedupe them — the round-6 plan-lint census
     measured the unpinned form re-tokenizing the corpus six times even
-    post-execution.  Both pin via localCheckpoint: they are aggregated
+    post-execution.  Both are pinned: they are aggregated
     (source, token)-level tables, orders smaller than the corpus.
     """
     from . import text as TXm
@@ -395,14 +396,10 @@ def token_drift_kl(
         split.alias("is_a"),
         F.explode(TXm.tokens(F.lower(F.col(text_col)))).alias("w"),
     )
-    counts = (
-        tok.groupBy("src", "is_a", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    counts = pin(tok.groupBy("src", "is_a", "w").agg(F.count(F.lit(1)).alias("c")))
     a = counts.filter("is_a").select("src", "w", F.col("c").alias("ca"))
     b = counts.filter(~F.col("is_a")).select("src", "w", F.col("c").alias("cb"))
-    merged = (
+    merged = pin(
         a.join(b, ["src", "w"], "full_outer")
         .select(
             "src",
@@ -410,7 +407,6 @@ def token_drift_kl(
             F.coalesce("ca", F.lit(0)).alias("ca"),
             F.coalesce("cb", F.lit(0)).alias("cb"),
         )
-        .localCheckpoint(eager=True)
     )
     per_src = merged.groupBy("src").agg(
         F.sum("ca").alias("na"),

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from .text import fingerprint, shingles_of, tokenized
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
@@ -175,7 +176,7 @@ def incremental_exact_dedup(
         # time inside its own plan (measured 39 scan nodes on a 3-branch
         # union input; 3 after).  This is also the production artifact —
         # the ingest round's dedup decision set.
-        keep_ids = keep_ids.localCheckpoint(eager=True)
+        keep_ids = pin(keep_ids)
     # no broadcast hint: survivors scale with the batch — AQE picks
     # broadcast when the materialized stats say it fits
     return new_batch.join(keep_ids, on=id_col, how="left_semi")
@@ -220,7 +221,7 @@ def ngram_jaccard_pairs(
     stop-shingles.  ``df_cap=None`` keeps the fully exact all-shingle
     self-join for bounded subsets.
     """
-    idx = _shingle_index(docs, text_col, id_col, n).cache()
+    idx = pin(_shingle_index(docs, text_col, id_col, n))
     sizes = idx.groupBy("did").agg(F.count(F.lit(1)).alias("sz"))
     if df_cap is None:
         a, b = idx.alias("a"), idx.alias("b")
@@ -318,9 +319,7 @@ def lsh_candidate_pairs(
     # otherwise re-derive the MinHash signatures (k md5 aggregations per
     # row) from the raw scan.  (did, band-md5 x bands) rows are ~100
     # bytes — this IS the LSH index table a production run persists.
-    with_bands = signatures.select(
-        F.col(id_col).alias("did"), *band_keys
-    ).localCheckpoint(eager=True)
+    with_bands = pin(signatures.select(F.col(id_col).alias("did"), *band_keys))
     stacked = with_bands.select(
         "did",
         F.explode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias("bucket"),
@@ -420,9 +419,7 @@ def simhash_neardup_pairs(
     sigs = docs.select(F.col(id_col).alias("did"), simhash_bits(text_col, bits).alias("sig"))
     # (did, sig) rows are tiny; materializing avoids re-running the
     # per-token majority-vote signature on both self-join sides
-    with_bucket = sigs.withColumn(
-        "bucket", F.substring("sig", 1, prefix_bits)
-    ).localCheckpoint(eager=True)
+    with_bucket = pin(sigs.withColumn("bucket", F.substring("sig", 1, prefix_bits)))
     a, b = with_bucket.alias("a"), with_bucket.alias("b")
     hamming = F.aggregate(
         F.zip_with(
@@ -639,18 +636,17 @@ def containment_pairs(
     side's own containment.  ``min_shingles`` drops trivially-small
     sets whose containment is noise.
     """
-    idx = _shingle_index(docs, text_col, id_col, n).cache()
+    idx = pin(_shingle_index(docs, text_col, id_col, n))
     sizes = idx.groupBy("did").agg(F.count(F.lit(1)).alias("sz"))
     a, b = idx.alias("a"), idx.alias("b")
     # the candidate self-join is the expensive stage and the direction
     # union consumes its result twice — exchange reuse does not dedupe
     # the repeated subtree (round-6 scan census), so pin the
     # candidate-pair-sized table rather than run the join twice
-    common = (
+    common = pin(
         a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.did") < F.col("b.did")))
         .groupBy(F.col("a.did").alias("da"), F.col("b.did").alias("db"))
         .agg(F.count(F.lit(1)).alias("common"))
-        .localCheckpoint(eager=True)
     )
     # both directions from the one unordered-common table
     directed = common.select(
@@ -704,11 +700,11 @@ def prefix_filter_jaccard_pairs(
     rounds to 29 on binary-float dust and would silently shrink
     recall).
     """
-    idx = _shingle_index(docs, text_col, id_col, n).cache()
+    idx = pin(_shingle_index(docs, text_col, id_col, n))
     sizes = idx.groupBy("did").agg(F.count(F.lit(1)).alias("sz"))
     freq = idx.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     rank_w = Window.partitionBy("did").orderBy("df", "sh")
-    prefix = (
+    prefix = pin(
         idx.join(freq, "sh")
         .withColumn("rnk", F.row_number().over(rank_w))
         .join(sizes, "did")
@@ -723,7 +719,6 @@ def prefix_filter_jaccard_pairs(
         # window and its two joins run once per side (round-6 scan
         # census).  It is a small fraction of the index by design —
         # pin it instead of deriving it twice.
-        .localCheckpoint(eager=True)
     )
     pa, pb = prefix.alias("a"), prefix.alias("b")
     cands = (
@@ -828,9 +823,7 @@ def winnow_overlap_pairs(
     both sides of the fraction.  Threshold is exact rational
     (num/den), applied before the one rounded output column.
     """
-    fps = winnow_fingerprints(docs, text_col, id_col, k=k, w=w).localCheckpoint(
-        eager=False
-    )
+    fps = pin(winnow_fingerprints(docs, text_col, id_col, k=k, w=w))
     sizes = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("nf"))
     keep = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= max_doc_freq

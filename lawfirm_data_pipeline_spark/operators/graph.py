@@ -16,7 +16,7 @@ here as distributed min-label propagation:
 Scale shape: each round is one shuffle of the edge list plus one of the
 label table; rounds needed = graph diameter.  Near-dup graphs are
 near-cliques (diameter 2-3), so this settles in a handful of rounds at
-any corpus size.  Lineage is truncated with ``localCheckpoint`` each
+any corpus size.  Lineage is truncated with a ``pin`` each
 round — without it the plan doubles per iteration and the driver dies
 long before 100 TB does.  (For adversarially long path graphs the
 alternating small-star/large-star variant halves diameter per round;
@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
+
+from ..pin import pin
 
 
 def connected_components(
@@ -54,7 +56,7 @@ def connected_components(
     # propagation round re-joins against it.  Both orientations come
     # from a single explode over one evaluation of the pair plan (a
     # self-union would run that plan twice).
-    edges = (
+    edges = pin(
         pairs.select(
             F.explode(
                 F.array(
@@ -64,7 +66,6 @@ def connected_components(
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .localCheckpoint(eager=True)
     )
 
     endpoints = edges.select(F.col("src").alias(node_col))
@@ -93,7 +94,6 @@ def connected_components(
             "map string keys to a numeric surrogate first"
         )
     prev_sum = None
-    superseded: list[DataFrame] = []
     for i in range(max_iters):
         if i == 0:
             # labels are the identity map on round 0: joining edges
@@ -121,28 +121,15 @@ def connected_components(
                     labels[node_col], F.col("__l").alias("label")
                 )
                 prop = prop.unionByName(jump)
-        labels = (
+        # the convergence agg is the action that materializes the
+        # round's pin (no separate materialize job), and the pin keeps
+        # the next round's plan one round deep.
+        labels = pin(
             labels.unionByName(prop)
             .groupBy(node_col)
             .agg(F.min("label").alias("label"))
         )
-        # ONE job per round: persist + let the convergence agg be the
-        # materializing action (an eager localCheckpoint every round ran
-        # a materialize job AND an agg job — the q71 r2 bench drift was
-        # that doubled fixed cost).  Lineage grows across persisted
-        # rounds, so truncate with a real checkpoint every 4th round —
-        # near-dup graphs converge in 2-4 rounds and never hit it; only
-        # adversarial long-path graphs pay.
-        checkpointed = (i + 1) % 4 == 0
-        labels = labels.localCheckpoint(eager=True) if checkpointed else labels.persist()
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        # previous round's cache can go now; on eviction Spark walks
-        # lineage back to the last checkpoint — correct, just slower.
-        # NEVER unpersist a checkpointed round: localCheckpoint blocks
-        # ARE its data (lineage is truncated — loss is unrecoverable).
-        for df in superseded:
-            df.unpersist()
-        superseded = [] if checkpointed else [labels]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum

@@ -25,9 +25,8 @@ problem:
   ``rank_fp div degree`` (integer division) and the damping multiply is
   ``(85 * sum) div 100`` — no float ever enters an aggregate, so the
   result is bit-identical regardless of partitioning, and hash-checks
-  against an unrolled SQL oracle.  Three iterations is the plan-depth
-  sweet spot; production runs would checkpoint every ~5 rounds exactly
-  like `graph.connected_components`.
+  against an unrolled SQL oracle.  Each round's input is pinned, as in
+  `graph.connected_components`, so plan depth stays one round.
 
 Reference parity: the reference has no graph analytics — charter
 addition alongside SURVEY.md §2.C's dedup-graph story.
@@ -37,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..pin import pin
 
 PAGERANK_SCALE = 10**12  # pico fixed point, matches the repo-wide discipline
 
@@ -113,16 +114,14 @@ def undirect(edges: DataFrame) -> DataFrame:
     ).select("e.u", "e.v")
 
 
-def degree_histogram(edges: DataFrame, *, deg: DataFrame | None = None) -> DataFrame:
+def degree_histogram(edges: DataFrame) -> DataFrame:
     """(degree, n_nodes) histogram of the undirected graph.
 
     Two map-side-combinable aggregations; output cardinality is the
     number of DISTINCT degrees (tiny at any scale).  The skew check a
-    pipeline runs before choosing a triangle/join strategy.  ``deg``
-    accepts the shared (u, d) table from :func:`graph_artifacts_for`.
+    pipeline runs before choosing a triangle/join strategy.
     """
-    if deg is None:
-        deg = undirect(edges).groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    deg = undirect(edges).groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
     return (
         deg.select(F.col("d").alias("degree"))
         .groupBy("degree")
@@ -131,12 +130,7 @@ def degree_histogram(edges: DataFrame, *, deg: DataFrame | None = None) -> DataF
 
 
 def triangle_counts(
-    edges: DataFrame,
-    *,
-    deg: DataFrame | None = None,
-    n_nodes: int | None = None,
-    edges_materialized: bool = False,
-    broadcast_max_nodes: int | None = None,
+    edges: DataFrame, *, broadcast_max_nodes: int | None = None
 ) -> DataFrame:
     """Per-node triangle participation counts: (node, n_triangles) for
     every node in at least one triangle.
@@ -147,20 +141,10 @@ def triangle_counts(
     canonical edge set.  Work is sum(out_degree^2) with out-degrees
     capped near sqrt(|E|) — hub-proof.  Each triangle appears exactly
     once, then credits its three corners via a 3-way explode.
-
-    ``deg``/``n_nodes`` accept the shared artifacts from
-    :func:`graph_artifacts_for` so the four graph queries build the
-    degree table once, not four times.
     """
-    canon = edges.select("src", "dst")
-    if not edges_materialized:
-        canon = canon.localCheckpoint(eager=True)
-    if deg is None:
-        deg = undirect(canon).groupBy("u").agg(
-            F.count(F.lit(1)).cast("long").alias("d")
-        ).localCheckpoint(eager=True)
-    if n_nodes is None:
-        n_nodes = deg.count()
+    canon = pin(edges.select("src", "dst"))
+    deg = pin(undirect(canon).groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d")))
+    n_nodes = deg.count()
     # orient: (u -> v) iff (d_u, u) < (d_v, v); the degree table is |V|
     # rows (graph-summary-sized — |V| << |E| whenever triangles exist),
     # so at small-to-medium |V| both endpoint joins broadcast it instead
@@ -200,12 +184,12 @@ def triangle_counts(
     # side), and Spark evaluated the whole orient→collect_list pipeline
     # once per consumer — the before-plan shows two identical
     # ObjectHashAggregate legs, each with its own Exchange (plans/r12/
-    # q127_triangle_count_before.txt).  One eager localCheckpoint
+    # q127_triangle_count_before.txt).  One pin
     # materializes the |V|-row adjacency (payload |E| longs, bounded by
     # GRAPH_MAX_BASKET) so both consumers scan it: 4 Exchanges + twice-
     # built adjacency → 3 Exchanges + once-built (sf0.1 in-session A/B:
     # 2.30 s → 2.12 s steady-state, match-verified row-for-row).
-    adj = adj.localCheckpoint(eager=True)
+    adj = pin(adj)
     # re-derive the edge stream from adj itself (explode carries each
     # apex's own array alongside), so closing needs ONE join — probe the
     # exploded edges against adj on the head endpoint.
@@ -245,14 +229,7 @@ def triangle_counts(
 
 
 def pagerank_fixed(
-    edges: DataFrame,
-    iters: int = 3,
-    *,
-    und: DataFrame | None = None,
-    deg: DataFrame | None = None,
-    n_nodes: int | None = None,
-    broadcast_max_nodes: int | None = None,
-    pin_rounds: bool = True,
+    edges: DataFrame, iters: int = 3, *, broadcast_max_nodes: int | None = None
 ) -> DataFrame:
     """PageRank with damping 0.85 over the undirected graph, ``iters``
     synchronous rounds, 64-bit pico fixed point throughout.
@@ -269,19 +246,15 @@ def pagerank_fixed(
     Node universe = edge endpoints (every node has degree >= 1;
     dangling mass does not arise on an undirected graph).
 
-    ``und``/``deg``/``n_nodes`` accept :func:`graph_artifacts_for`
-    outputs.  |V| is established once (a bounded 1-row count, the only
-    driver action) and picks the per-round join strategy: broadcast the
+    |V| is established once (a bounded 1-row count, the only driver
+    action) and picks the per-round join strategy: broadcast the
     |V|-row rank table when it fits ``BROADCAST_MAX_NODES``, else a
     co-partitioned shuffle join — the automatic fallback the r3 verdict
     asked for in place of the old unconditional hint.
     """
-    if und is None:
-        und = undirect(edges).localCheckpoint(eager=True)
-    if deg is None:
-        deg = und.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    if n_nodes is None:
-        n_nodes = deg.count()
+    und = pin(undirect(edges))
+    deg = und.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    n_nodes = deg.count()
     if n_nodes == 0:
         # empty graph (no edges survive upstream filters): the rank of
         # nothing is an EMPTY result, not a driver-side
@@ -297,22 +270,16 @@ def pagerank_fixed(
     # unit and base terms are in-plan literals of the (already bounded)
     # node count — one integer reaches the driver, never a row set.
     unit = F.lit(PAGERANK_SCALE // n_nodes).cast("long")
-    # pin each round's |V|-row rank table: round k reads ranks_{k-1}
-    # TWICE (contrib build + rank update), so an unpinned chain
-    # re-evaluates early rounds 2^k times — materializing |V| rows per
-    # round is far cheaper than re-running the per-round join/agg tree.
-    # ``pin_rounds=False`` keeps the full lineage visible for plan
-    # assertions (tests/test_plans.py inspects every round's join).
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if pin_rounds else df
-
-    ranks = _pin(
-        deg.select(
-            "u", "d", unit.alias("r"), (F.lit(15) * unit).cast("long").alias("base15")
-        )
+    ranks = deg.select(
+        "u", "d", unit.alias("r"), (F.lit(15) * unit).cast("long").alias("base15")
     )
     base = F.expr("base15 div 100")
     for _ in range(iters):
+        # pin each round's |V|-row input: the round reads it TWICE
+        # (contrib build + rank update), so an unpinned chain
+        # re-evaluates early rounds 2^k times.  The returned plan keeps
+        # the last round's joins visible.
+        ranks = pin(ranks)
         # the rank table is |V| rows vs |E| edge rows — broadcast it so
         # each round costs one map-side join + one combinable sum, not
         # two exchanges; beyond BROADCAST_MAX_NODES the hint drops
@@ -328,7 +295,7 @@ def pagerank_fixed(
             .groupBy(F.col("v").alias("u"))
             .agg(F.sum("c").cast("long").alias("s"))
         )
-        ranks = _pin(
+        ranks = (
             ranks.select("u", "d", "base15")
             .join(contrib, "u", "left")
             .select(
@@ -353,10 +320,7 @@ def bfs_distances(
     seeds: DataFrame,
     max_hops: int = 3,
     *,
-    und: DataFrame | None = None,
-    n_nodes: int | None = None,
     broadcast_max_nodes: int | None = None,
-    pin_rounds: bool = True,
 ) -> DataFrame:
     """Minimum hop distance from a seed set, bounded at ``max_hops``
     synchronous frontier expansions: each round joins the undirected
@@ -372,73 +336,27 @@ def bfs_distances(
 
     The distance table grows toward |V| rows, so the per-round
     broadcast hint is applied only when |V| (established once, a
-    bounded count; pass ``n_nodes`` from :func:`graph_artifacts_for`
-    to skip even that) fits ``BROADCAST_MAX_NODES`` — beyond it the
+    bounded count) fits ``BROADCAST_MAX_NODES`` — beyond it the
     frontier join falls back to a shuffle equi-join automatically.
     """
-    if und is None:
-        und = undirect(edges).localCheckpoint(eager=True)
-    if n_nodes is None:
-        n_nodes = und.select("u").distinct().count()
+    und = pin(undirect(edges))
+    n_nodes = und.select("u").distinct().count()
     dist = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().withColumn(
         "dist", F.lit(0).cast("long")
     )
     for _ in range(max_hops):
+        # pin the ≤|V|-row distance table: the round reads it twice
+        # (frontier join + union), so an unpinned chain re-evaluates
+        # early rounds 2^k times (same fix as pagerank_fixed's per-round
+        # rank pin)
+        dist = pin(dist)
         prop = und.join(
             _maybe_broadcast(dist, n_nodes, broadcast_max_nodes),
             und["u"] == dist["node"],
         ).select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
-        # pin the ≤|V|-row distance table: round k reads dist_{k-1}
-        # twice (frontier join + union), so an unpinned chain
-        # re-evaluates early rounds 2^k times (same fix as
-        # pagerank_fixed's per-round rank pin); ``pin_rounds=False``
-        # keeps lineage visible for plan assertions
         dist = (
             dist.unionByName(prop)
             .groupBy("node")
             .agg(F.min("dist").cast("long").alias("dist"))
         )
-        if pin_rounds:
-            dist = dist.localCheckpoint(eager=True)
     return dist
-
-
-# The co-purchase graph is a DERIVED ARTIFACT: four registered queries
-# (degrees, triangles, PageRank, BFS) consume the same edge list AND the
-# same degree/undirected tables, and a production pipeline materializes
-# all of them once per snapshot rather than re-deriving them per query
-# (r3 verdict task #6: q127/q128/q156 each rebuilt degree/orientation).
-# Cache keyed by (session, sf_dir) so a restarted SparkSession can never
-# serve DataFrames of a dead one.
-_ARTIFACT_CACHE: dict[tuple[str, str], dict] = {}
-
-
-def graph_artifacts_for(spark, sf_dir: str) -> dict:
-    """Session-cached, checkpoint-materialized co-purchase graph
-    artifacts for ``sf_dir``: ``edges`` (canonical src < dst),
-    ``und`` (both orientations), ``deg`` ((u, d) degrees), and
-    ``n_nodes`` (|V|, the broadcast-strategy input) — the shared
-    inputs of the whole-graph query family."""
-    from ..io import load_table
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    art = _ARTIFACT_CACHE.get(key)
-    if art is None:
-        edges = copurchase_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
-            eager=True
-        )
-        und = undirect(edges).localCheckpoint(eager=True)
-        deg = (
-            und.groupBy("u")
-            .agg(F.count(F.lit(1)).cast("long").alias("d"))
-            .localCheckpoint(eager=True)
-        )
-        art = {"edges": edges, "und": und, "deg": deg, "n_nodes": deg.count()}
-        _ARTIFACT_CACHE[key] = art
-    return art
-
-
-def copurchase_edges_for(spark, sf_dir: str) -> DataFrame:
-    """Session-cached, checkpoint-materialized co-purchase edges for
-    ``sf_dir`` — the shared input of the whole-graph query family."""
-    return graph_artifacts_for(spark, sf_dir)["edges"]

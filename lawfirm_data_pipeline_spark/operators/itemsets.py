@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from ..pin import pin
 
 # Baskets with more distinct items than this are EXCLUDED from pair
 # mining — on every side of every oracle pair (the SQL twins carry the
@@ -127,7 +128,7 @@ def association_rules(
     )
     if max_basket is not None:
         adj = adj.filter(F.size("ps") <= max_basket)
-    adj = adj.localCheckpoint(eager=True)
+    adj = pin(adj)
     n_baskets = adj.agg(F.count(F.lit(1)).cast("long").alias("nb"))
     item_sup = (
         adj.select(F.explode("ps").alias("pk"))

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
 from .cdc import table_diff
 
 
@@ -40,9 +41,9 @@ def maintain_group_totals(
     maintained and recomputed views drift by summation order).
     """
     # the changed-key set is delta-sized by IVM's own premise and is
-    # consumed by both the retract and apply semi-joins — uncached, the
+    # consumed by both the retract and apply semi-joins — unpinned, the
     # full old-vs-new diff join ran once per consumer (round-6 census)
-    changed = table_diff(old, new, keys).select(*keys).cache()
+    changed = pin(table_diff(old, new, keys).select(*keys))
     base = old.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("dn"),
         F.sum(cents_col).cast("long").alias("dc"),

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pin import pin
+
 
 def name_variant_pairs(
     df: DataFrame,
@@ -47,19 +49,14 @@ def name_variant_pairs(
     O(len x max_dist) instead of O(len x len); returns -1 past the
     bound, and the true distance otherwise — so ``dist >= 0`` is
     exactly the old ``dist <= max_dist`` and kept rows carry identical
-    distances).  The dictionary is pinned with an eager
-    ``localCheckpoint`` rather than ``cache()`` so nothing is left
-    registered in the session CacheManager after the query completes
-    (r12 verdict #1: cache-lifecycle hygiene); blocks are freed by the
-    ContextCleaner once the returned plan is garbage collected.
+    distances).
     """
     # the dictionary feeds both sides of the block join — unpinned, the
     # full-table distinct-name aggregate runs once per side (guide §5)
-    names = (
+    names = pin(
         df.groupBy(F.col(name_col).alias("name"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .withColumn("blk", block_key)
-        .localCheckpoint(eager=True)
     )
     a = names.select(
         F.col("blk"), F.col("name").alias("name_a"), F.col("n").alias("n_a")

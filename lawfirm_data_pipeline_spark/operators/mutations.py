@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..predicates import compile_where
+from ..pin import pin
 
 
 def merge_update(
@@ -185,7 +186,7 @@ def connect_or_create(
     Ordering contract (SURVEY.md §4): dim merge runs before bridge append
     so bridge rows always resolve.
 
-    ``materialize_dim=True`` checkpoints the merged dimension before the
+    ``materialize_dim=True`` pins the merged dimension before the
     bridge derives from it.  The merged dim appears TWICE downstream (the
     bridge resolve joins it, and the caller writes it), so the lazy plan
     carries two copies of the distinct+anti-join subtree — Catalyst
@@ -211,7 +212,7 @@ def connect_or_create(
         allowMissingColumns=True,
     )
     if materialize_dim:
-        new_dim = new_dim.localCheckpoint(eager=True)
+        new_dim = pin(new_dim)
     # 2. bridge append (connect), dedup'd against existing pairs
     resolved = tags.join(
         new_dim.select(F.col(dim_name).alias("__tag"), F.col(dim_key).alias("__did")),

@@ -10,10 +10,10 @@ two-phase scan:
 
 1. ``repartitionByRange`` on the sort expressions (Spark samples range
    boundaries — works for ANY key distribution, skew handled by the
-   sampler) and pin the result with ``localCheckpoint``.  The pin is
-   CORRECTNESS, not caching: the totals pass and the main pass must see
-   the *same* sampled boundaries, and two re-executions of an unpinned
-   range shuffle may sample differently.
+   sampler) and ``pin`` the result.  The pin is CORRECTNESS, not
+   caching: the totals pass and the main pass must see the *same*
+   sampled boundaries, and two re-executions of an unpinned range
+   shuffle may sample differently.
 2. per-partition totals (one tiny row per partition) → exclusive
    partition offsets via a window over the ≤P-row totals table;
 3. per-partition local window (partitioned BY ``spark_partition_id`` —
@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..pin import pin
 
 
 def _default_partitions(df: DataFrame) -> int:
@@ -69,11 +71,6 @@ def _check_reserved(df: DataFrame) -> None:
         )
 
 
-def _ordered_pinned(df: DataFrame, order_cols: list[Column | str], n: int) -> DataFrame:
-    parted = df.repartitionByRange(n, *order_cols).localCheckpoint()
-    return parted.withColumn("_rk_pid", F.spark_partition_id())
-
-
 def global_running_sum(
     df: DataFrame,
     value_col: Column | str,
@@ -102,16 +99,19 @@ def global_running_sum(
     # running sum would drift by accumulation order vs the single-window
     # form, a silent correctness bug rather than a loud one.  Resolved
     # on a LAZY projection of the input (r8 ADVICE) — schema analysis
-    # runs no job, so an invalid value column raises before
-    # _ordered_pinned's eager localCheckpoint pays a full cluster
-    # materialization.
+    # runs no job, so an invalid value column raises before the range
+    # pin plans (and samples) the input.
     vt = df.withColumn("_rk_val", value).schema["_rk_val"].dataType.typeName()
     if vt in ("float", "double"):
         raise TypeError(
             f"global_running_sum requires exact arithmetic (integer/decimal); "
             f"value column resolved to {vt} — cast to DECIMAL or integer cents first"
         )
-    b = _ordered_pinned(df, order_cols, n).withColumn("_rk_val", value)
+    b = (
+        pin(df.repartitionByRange(n, *order_cols))
+        .withColumn("_rk_pid", F.spark_partition_id())
+        .withColumn("_rk_val", value)
+    )
     totals = b.groupBy("_rk_pid").agg(F.sum("_rk_val").alias("_rk_tot"))
     w_parts = Window.orderBy("_rk_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.select(
@@ -146,7 +146,9 @@ def global_row_number(
     scan."""
     _check_reserved(df)
     n = num_partitions or _default_partitions(df)
-    b = _ordered_pinned(df, order_cols, n)
+    b = pin(df.repartitionByRange(n, *order_cols)).withColumn(
+        "_rk_pid", F.spark_partition_id()
+    )
     totals = b.groupBy("_rk_pid").agg(F.count(F.lit(1)).alias("_rk_tot"))
     w_parts = Window.orderBy("_rk_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.select(

@@ -14,6 +14,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
+from ..pin import pin
+
 
 def hash_bucket(key: Column | str, n_buckets: int = 100, salt: str = "") -> Column:
     """Stable bucket in [0, n_buckets): first 8 md5 hex digits mod n.
@@ -289,40 +291,22 @@ def hash_bucket_negatives(
     if n_buckets is None:
         # r12 OPTIMIZATION (guide §2.4/§5): the distinct item catalog
         # feeds BOTH the in-plan bucket-count aggregate and the bucketed
-        # candidate side, and the 1-row bucket count is cross-joined
-        # into both u and it — without pinning, the catalog distinct ran
-        # 3x and the count aggregate 2x per query.  Both pins are
-        # bounded by CATALOG size (|items| rows of one key / 1 row),
-        # never fact volume (sf0.1 in-session A/B: 1.81 s → 1.46 s,
-        # match-verified).  r13 (r12 verdict #1): eager localCheckpoint,
-        # not cache() — no CacheManager entry survives the query;
-        # blocks are ContextCleaner-freed on GC.
-        it_distinct = it_distinct.localCheckpoint(eager=True)
-        nb_df = it_distinct.agg(
+        # candidate side — without pinning, the catalog distinct ran 3x
+        # per query.  The pin is bounded by CATALOG size (|items| rows of
+        # one key), never fact volume (sf0.1 in-session A/B: 1.81 s →
+        # 1.46 s, match-verified).  The 1-row bucket count is a scalar
+        # subquery read by both u and it.
+        it_distinct = pin(it_distinct)
+        nb = it_distinct.agg(
             F.greatest(
                 F.lit(100),
                 F.floor(F.count(F.lit(1)) / items_per_bucket),
-            )
-            .cast("long")
-            .alias("__nb")
-        ).localCheckpoint(eager=True)
-        u = (
-            positives.select(F.col(user_col))
-            .distinct()
-            .crossJoin(F.broadcast(nb_df))
-            .withColumn("bkt", F.col(user_col) % F.col("__nb"))
-            .drop("__nb")
-        )
-        it = (
-            it_distinct.crossJoin(F.broadcast(nb_df))
-            .withColumn("bkt", F.col(item_col) % F.col("__nb"))
-            .drop("__nb")
-        )
+            ).cast("long")
+        ).scalar()
     else:
-        u = positives.select(F.col(user_col)).distinct().withColumn(
-            "bkt", F.col(user_col) % n_buckets
-        )
-        it = it_distinct.withColumn("bkt", F.col(item_col) % n_buckets)
+        nb = F.lit(n_buckets)
+    u = positives.select(F.col(user_col)).distinct().withColumn("bkt", F.col(user_col) % nb)
+    it = it_distinct.withColumn("bkt", F.col(item_col) % nb)
     cand = u.join(it, "bkt").drop("bkt")
     cand = cand.join(positives.select(user_col, item_col), [user_col, item_col], "left_anti")
     w = Window.partitionBy(user_col).orderBy(

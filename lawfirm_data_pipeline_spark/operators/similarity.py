@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
+from ..pin import pin
+
 
 def _dvec(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -202,10 +204,15 @@ def _bucket_keys_arrow(n_planes: int, n_tables: int, dim: int):
 def _with_centered(
     df: DataFrame, vec_col: str, mean_df: DataFrame, out_col: str = "__vc"
 ) -> DataFrame:
-    """Attach ``out_col`` = vec - mean (mean_df is a 1-row broadcast)."""
-    return df.crossJoin(F.broadcast(mean_df)).withColumn(
-        out_col, F.zip_with(F.col(vec_col), F.col("__mean"), lambda x, m: x - m)
-    ).drop("__mean")
+    """Attach ``out_col`` = vec - mean.  ``mean_df`` is the 1-row
+    :func:`_mean_vector` table, read as a scalar subquery (no join); it
+    is projected before the subtraction because Spark rejects a
+    subquery inside a higher-order function."""
+    return (
+        df.withColumn("__mean", mean_df.scalar())
+        .withColumn(out_col, F.zip_with(F.col(vec_col), F.col("__mean"), lambda x, m: x - m))
+        .drop("__mean")
+    )
 
 
 def _mean_vector(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
@@ -276,11 +283,10 @@ def lsh_topk(
 
     # center BOTH sides with the CORPUS mean (bucket geometry must match).
     # The 1-row mean has two consumers (cb, qb) and exchange reuse does
-    # not dedupe repeated subtrees — uncached it re-aggregates (and
+    # not dedupe repeated subtrees — unpinned it re-aggregates (and
     # re-scans) the corpus once per side (r7 rescans census: embeddings
-    # ×10 in the q38 plan).  Cache the tiny aggregate per the standing
-    # multi-consumer convention.
-    mean = _mean_vector(c, "cv", dim).cache()
+    # ×10 in the q38 plan).
+    mean = pin(_mean_vector(c, "cv", dim))
     cb = (
         _with_centered(c, "cv", mean)
         .withColumn("bucket", F.explode(table_keys(F.col("__vc"))))
@@ -533,7 +539,7 @@ def lsh_neardup_pairs(
     if target_occupancy:
         # r8 ADVICE: size the plane count from a count over the RAW
         # input, not `v` — counting `v` re-ran the _dvec parse + norm
-        # projection (a full extra pass) before the localCheckpoint
+        # projection (a full extra pass) before the pin
         # that exists precisely to avoid recomputing it; a bare count
         # lets Catalyst prune every column and read parquet row counts.
         n_rows = vectors.count()
@@ -546,13 +552,12 @@ def lsh_neardup_pairs(
     # are trees, so both join sides would otherwise re-run the centering
     # aggregate + Arrow matmul from the raw scan (measured 2x the key
     # computation on every call).  Production writes this index table
-    # anyway; keys ride pre-explode so the checkpoint stores one row per
+    # anyway; keys ride pre-explode so the pin stores one row per
     # vector, not per (vector, table).
-    v_keyed = (
+    v_keyed = pin(
         _with_centered(v, "v", _mean_vector(v, "v", dim))
         .withColumn("buckets", keys(F.col("__vc")))
         .drop("__vc")
-        .localCheckpoint(eager=True)
     )
     vb = v_keyed.withColumn("bucket", F.explode("buckets")).drop("buckets")
     a, b = vb.alias("a"), vb.alias("b")

@@ -34,10 +34,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..pin import pin
 from .text import tokens
 
 _CAND_SCHEMA = T.StructType([T.StructField("token", T.StringType(), False)])
@@ -102,7 +103,8 @@ def heavy_hitters(
     # counts and the total token count — non-candidates collapse into a
     # single NULL group (their identity is irrelevant, only their mass
     # enters n_total).  The naive form ran a third full tokenize pass
-    # just for the total (round-6 census).
+    # just for the total (round-6 census).  The total is a window over
+    # the <= k+1-row recount, so the recount has one consumer.
     toks = docs.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("token"))
     per = (
         toks.join(F.broadcast(cands.withColumn("__hit", F.lit(1))), "token", "left")
@@ -110,13 +112,13 @@ def heavy_hitters(
             F.when(F.col("__hit") == 1, F.col("token")).alias("token")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .cache()
     )
-    total = per.groupBy().agg(F.sum("cnt").alias("n_total"))
     return (
-        per.filter(F.col("token").isNotNull())
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("cnt") >= F.ceil(F.lit(phi) * F.col("n_total")))
+        per.withColumn("n_total", F.sum("cnt").over(Window.partitionBy()))
+        .filter(
+            F.col("token").isNotNull()
+            & (F.col("cnt") >= F.ceil(F.lit(phi) * F.col("n_total")))
+        )
         .select("token", "cnt")
     )
 
@@ -126,38 +128,6 @@ def _cms_col(tok: Column, row: int, width: int) -> Column:
     of ``row|token`` mod width — reproducible in ANSI SQL."""
     h = F.md5(F.concat(F.lit(f"{row}|"), tok))
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % width
-
-
-def count_min_sketch_cells(
-    docs: DataFrame,
-    depth: int = 4,
-    width: int = 256,
-    text_col: str = "text",
-) -> DataFrame:
-    """Count-min sketch of the token stream as a (row, col, cnt) table.
-
-    CMS is a LINEAR sketch: each partition's cell counts sum to the
-    stream's cell counts, so the build is one explode (depth rows per
-    token occurrence) + a map-side-combinable groupBy over depth×width
-    cells — the exchange carries at most depth×width rows per map task
-    regardless of corpus size, and merging shards/days is plain cell
-    addition.  Hashes are md5-derived (deterministic, engine-portable).
-    """
-    toks = docs.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("token"))
-    cells = toks.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("row"),
-                        _cms_col(F.col("token"), j, width).alias("col"),
-                    )
-                    for j in range(depth)
-                ]
-            )
-        ).alias("c")
-    ).select("c.row", "c.col")
-    return cells.groupBy("row", "col").agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def cms_frequency_audit(
@@ -180,7 +150,7 @@ def cms_frequency_audit(
     r12 OPTIMIZATION (guide §2.3/§2.4): CMS is linear, so the cell
     table is the same whether built from the raw token stream or from
     the per-token exact counts — cell = Σ cnt of tokens hashing there.
-    Building it from the vocabulary-sized ``true_counts`` (cached: it
+    Building it from the vocabulary-sized ``true_counts`` (pinned: it
     also feeds the probes and the N total) removes the second full
     tokenize+explode pass over the corpus; the depth-way cell explode
     now runs over |vocab| rows instead of the token stream (sf0.1
@@ -189,14 +159,7 @@ def cms_frequency_audit(
     import math
 
     toks = docs.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("token"))
-    # r13 (r12 verdict #1): eager localCheckpoint, not cache() — the
-    # vocabulary-sized pin must not outlive the query in the session
-    # CacheManager; blocks are ContextCleaner-freed on GC.
-    true_counts = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
+    true_counts = pin(toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt")))
     total = true_counts.agg(F.sum("cnt").alias("n_total"))
     cms = (
         true_counts.select(

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
+from ..pin import pin
+
 _SCALE = 100  # inputs carry <= 2 decimals; exact at integer cents
 
 
@@ -155,11 +157,13 @@ def mad_outliers(
     """
     # |groups|-row table; dev is consumed twice (MAD derivation + final
     # flag pass — inherent multi-pass over row-level data), and an
-    # uncached med re-ran its grouped percentile per consumption
-    med = df.groupBy(group_col).agg(
-        F.expr(f"percentile({cents_col}, 0.5)").alias("med_cents"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    ).cache()
+    # unpinned med re-ran its grouped percentile per consumption
+    med = pin(
+        df.groupBy(group_col).agg(
+            F.expr(f"percentile({cents_col}, 0.5)").alias("med_cents"),
+            F.count(F.lit(1)).cast("long").alias("n"),
+        )
+    )
     # med/mad tables are |groups| rows — broadcast both join-backs so
     # the event stream never reshuffles on the group key twice
     dev = df.join(F.broadcast(med), group_col).withColumn(
@@ -205,12 +209,11 @@ def chisq_independence(
     moves.
     """
     # the |R|x|C| contingency table feeds four consumers (marginals,
-    # totals, densified grid); uncached, each re-ran the corpus groupBy
+    # totals, densified grid); unpinned, each re-ran the corpus groupBy
     # (round-6 census: 4 full scans for one tiny aggregate)
-    cells = (
+    cells = pin(
         df.groupBy(F.col(row_col).alias("r"), F.col(col_col).alias("c"))
         .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        .cache()
     )
     rows = cells.groupBy("r").agg(F.sum("o").cast("long").alias("rn"))
     cols = cells.groupBy("c").agg(F.sum("o").cast("long").alias("cn"))
@@ -230,8 +233,14 @@ def chisq_independence(
     snapped = bfround(contrib * F.lit(float(scale))).cast("decimal(38,0)")
     # densify to the full R x C grid: a zero cell contributes E to the
     # statistic and MUST appear (groupBy alone omits it — chi2 would be
-    # silently understated exactly when association is strongest)
-    grid = rows.crossJoin(cols)
+    # silently understated exactly when association is strongest).  The
+    # column marginal crosses over as ONE collected row, so the
+    # nested-loop build side is a global aggregate, bounded at any scale.
+    grid = (
+        rows.crossJoin(cols.agg(F.collect_list(F.struct("c", "cn")).alias("cs")))
+        .select("r", "rn", F.explode("cs").alias("y"))
+        .select("r", "rn", "y.c", "y.cn")
+    )
     return (
         grid.join(cells, ["r", "c"], "left")
         .withColumn("o", F.coalesce(F.col("o"), F.lit(0).cast("long")))

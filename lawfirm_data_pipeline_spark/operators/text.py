@@ -21,9 +21,10 @@ import pandas as pd  # noqa: F401 — pandas_udf type hints at runtime
 
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
+
+from ..pin import pin
 
 # Tiny per-language marker vocabularies for the heuristic language id.
 # Real pipelines use char-n-gram models; the *operator shape* (argmax of
@@ -195,17 +196,7 @@ def tfidf_topk(docs, k: int = 3, text_col: str = "text", id_col: str = "doc_id")
     # frequencies, the tf join); pinned, the corpus tokenizes exactly
     # once.  doc_lens derives algebraically from it (sum of per-term
     # counts = token count) instead of re-exploding the corpus.
-    # r13: eager serialized-disk localCheckpoint, not cache() — the
-    # table is CORPUS-scale (one row per (doc, term)), so an unreleased
-    # MEMORY_AND_DISK cache entry is a multi-TB session leak at 100 TB;
-    # checkpoint blocks are ContextCleaner-freed on GC and the explicit
-    # serialized level keeps the resident footprint bounded (r12
-    # verdict #1, guide §5).
-    term_counts = (
-        toks.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tc"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
+    term_counts = pin(toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tc")))
     doc_lens = term_counts.groupBy(id_col).agg(F.sum("tc").alias("dl"))
     df_counts = term_counts.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(F.count_distinct(F.col(id_col)).alias("n_docs"))
@@ -268,16 +259,8 @@ def unigram_logprob_scores(docs, text_col: str = "text", id_col: str = "doc_id")
     # tc feeds two consumers (the corpus unigram model on the broadcast
     # side and the per-doc scoring join) — unpinned the tokenize+explode+
     # count pipeline runs once per consumer (guide §5; same fix as
-    # tfidf_topk's term_counts and q117's bigram table).  r13: eager
-    # serialized-disk localCheckpoint instead of cache() — tc is
-    # CORPUS-scale, and a cache() entry never unpersisted leaks it into
-    # the session CacheManager for the session's lifetime (r12 verdict
-    # #1); checkpoint blocks are freed by the ContextCleaner on GC.
-    tc = (
-        tok.groupBy(id_col, "w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
+    # tfidf_topk's term_counts and q117's bigram table).
+    tc = pin(tok.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("cnt")))
     corpus = tc.groupBy("w").agg(F.sum("cnt").alias("cw"))
     total = corpus.agg(F.sum("cw").alias("n"))
     lp = corpus.crossJoin(F.broadcast(total)).select(
@@ -367,7 +350,7 @@ def pmi_bigrams(
     — the corpus stream is touched exactly once.
     """
     tok = tokenized(docs, text_col=text_col, id_col=id_col)
-    big = (
+    big = pin(
         tok.filter(F.size("toks") >= 2)
         .select(
             F.explode(
@@ -386,7 +369,6 @@ def pmi_bigrams(
         # materialize: total/left/right marginals all read this table —
         # without it each branch re-runs the corpus tokenize+explode+agg
         # (measured: 8 parquet scans in the lazy plan, 1 after)
-        .localCheckpoint(eager=True)
     )
     total = big.agg(F.sum("c_ab").alias("n_total"))
     left = big.groupBy("w1").agg(F.sum("c_ab").alias("c_l"))
@@ -423,7 +405,7 @@ def bigram_logprob_scores(docs, text_col: str = "text", id_col: str = "doc_id"):
     logs snap to nano fixed point before the per-doc sum (the q58/q90
     discipline), so results are partition-order independent.
 
-    Plan: the per-doc bigram count table is built once and persisted —
+    Plan: the per-doc bigram count table is built once and pinned —
     both its consumers (corpus model derivation, per-doc scoring join)
     read the materialization instead of re-running tokenize+explode
     (Catalyst plans are trees; a second reference re-derives the
@@ -431,20 +413,12 @@ def bigram_logprob_scores(docs, text_col: str = "text", id_col: str = "doc_id"):
 
     r12 OPTIMIZATION (guide §2.4): the corpus bigram table ``cb`` has
     THREE consumers (per-w1 totals, vocabulary size, per-bigram logprob)
-    and was re-aggregated from the cached ``dbc`` once per consumer;
-    persisting ``cb`` too drops two full (w1, w2) aggregation passes
+    and was re-aggregated from the pinned ``dbc`` once per consumer;
+    pinning ``cb`` too drops two full (w1, w2) aggregation passes
     (sf0.1 in-session A/B: 2.21 s → 1.73 s, match-verified).
-
-    r13 (r12 verdict #1, guide §5): both pins are eager
-    localCheckpoints, not persist() — ``dbc`` is CORPUS-scale (one row
-    per (doc, bigram)) and an unreleased persist is a multi-TB session
-    leak at 100 TB; the explicit serialized MEMORY_AND_DISK level
-    bounds the resident footprint, and checkpoint blocks are
-    ContextCleaner-freed once the returned plan is GC'd.  ``cb`` is
-    vocabulary-pair-bounded and takes the default level.
     """
     tok = tokenized(docs, text_col=text_col, id_col=id_col)
-    dbc = (
+    dbc = pin(
         tok.filter(F.size("toks") >= 2)
         .select(
             F.col(id_col),
@@ -461,13 +435,8 @@ def bigram_logprob_scores(docs, text_col: str = "text", id_col: str = "doc_id"):
         .select(id_col, "b.w1", "b.w2")
         .groupBy(id_col, "w1", "w2")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
-    cb = (
-        dbc.groupBy("w1", "w2")
-        .agg(F.sum("cnt").alias("c12"))
-        .localCheckpoint(eager=True)
-    )
+    cb = pin(dbc.groupBy("w1", "w2").agg(F.sum("cnt").alias("c12")))
     cl = cb.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = cb.agg(F.count_distinct("w2").alias("v"))
     lp = (

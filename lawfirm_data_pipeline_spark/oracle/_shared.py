@@ -48,28 +48,12 @@ def planted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return docs.select("doc_id", "text").unionByName(near).unionByName(exact)
 
-# The planted-corpus jaccard pair list is a DERIVED ARTIFACT shared by
-# q32 (emits the pairs) and q71 (clusters them): generation is the
-# expensive leg (shingle inverted index + verify), so materialize it
-# once per (session, sf_dir) — the same pattern as
-# operators.graph_metrics.graph_artifacts_for.
-_JACCARD_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def planted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached q32 pair list: ngram_jaccard_pairs over the
-    planted corpus at threshold 0.5, n=3, df_cap=64 — checkpointed so
-    q71's connected components never re-run the pair generation."""
+    """The q32 pair list, which q71 clusters: ngram_jaccard_pairs over
+    the planted corpus at threshold 0.5, n=3, df_cap=64."""
     from ..operators.dedup import ngram_jaccard_pairs
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _JACCARD_PAIR_CACHE.get(key)
-    if df is None:
-        df = ngram_jaccard_pairs(
-            planted_corpus(spark, sf_dir), threshold=0.5, n=3, df_cap=64
-        ).localCheckpoint(eager=True)
-        _JACCARD_PAIR_CACHE[key] = df
-    return df
+    return ngram_jaccard_pairs(planted_corpus(spark, sf_dir), threshold=0.5, n=3, df_cap=64)
 
 
 _COS = (

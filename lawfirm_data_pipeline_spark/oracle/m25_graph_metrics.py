@@ -17,9 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import load_table
 from ..operators.graph_metrics import (
+    copurchase_edges,
     degree_histogram,
-    graph_artifacts_for,
     pagerank_fixed,
     triangle_counts,
 )
@@ -88,8 +89,7 @@ def q126_copurchase_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree histogram: per-order bounded self-join -> two map-side
     combinable aggs; output cardinality = number of distinct degrees
     (operators/graph_metrics.degree_histogram)."""
-    art = graph_artifacts_for(spark, sf_dir)
-    return degree_histogram(art["edges"], deg=art["deg"])
+    return degree_histogram(copurchase_edges(load_table(spark, sf_dir, "lineitem")))
 
 
 # -- q127: degree-oriented triangle counting
@@ -112,11 +112,7 @@ def q127_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle uses the simple a<b<c id orientation — triangle counts
     are orientation-independent, so the hashes still match
     (operators/graph_metrics.triangle_counts)."""
-    art = graph_artifacts_for(spark, sf_dir)
-    return triangle_counts(
-        art["edges"], deg=art["deg"], n_nodes=art["n_nodes"],
-        edges_materialized=True,
-    )
+    return triangle_counts(copurchase_edges(load_table(spark, sf_dir, "lineitem")))
 
 
 # -- q128: integer fixed-point PageRank, 3 synchronous rounds
@@ -143,8 +139,4 @@ def q128_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     100` — integer arithmetic end to end, so the distributed result is
     bit-identical to the single-threaded unrolled oracle
     (operators/graph_metrics.pagerank_fixed)."""
-    art = graph_artifacts_for(spark, sf_dir)
-    return pagerank_fixed(
-        art["edges"], iters=3,
-        und=art["und"], deg=art["deg"], n_nodes=art["n_nodes"],
-    )
+    return pagerank_fixed(copurchase_edges(load_table(spark, sf_dir, "lineitem")), iters=3)

@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_events_stream, load_table
-from ..operators.graph_metrics import bfs_distances, graph_artifacts_for
+from ..operators.graph_metrics import bfs_distances, copurchase_edges, undirect
+from ..pin import pin
 from ..queries import query
 from ..streaming.windows import run_stream_to_table
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
@@ -304,11 +305,8 @@ def q156_bfs_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     three synchronous frontier expansions, each one equi-join + one
     combinable min — the fixed-depth reachability audit
     (operators/graph_metrics.bfs_distances)."""
-    art = graph_artifacts_for(spark, sf_dir)
-    seeds = art["deg"].select(F.col("u").alias("node")).filter(
+    edges = pin(copurchase_edges(load_table(spark, sf_dir, "lineitem")))
+    seeds = undirect(edges).select(F.col("u").alias("node")).filter(
         F.col("node") % 1000 == 0
     )
-    return bfs_distances(
-        art["edges"], seeds, max_hops=3,
-        und=art["und"], n_nodes=art["n_nodes"],
-    )
+    return bfs_distances(edges, seeds, max_hops=3)

@@ -73,7 +73,7 @@ def q164_rec_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     mega-basket QUALIFY (itemsets.MAX_BASKET) is now the ``size(ps)``
     filter on the collected basket array — same predicate, zero extra
     window pass — and the single-consumer items table no longer needs a
-    localCheckpoint.  sf0.1 in-session A/B: 2.68 s → 2.31 s,
+    pin.  sf0.1 in-session A/B: 2.68 s → 2.31 s,
     match-verified; plan loses one ObjectHashAggregate leg, the
     broadcast hit-join and the window cap pass."""
     items = (

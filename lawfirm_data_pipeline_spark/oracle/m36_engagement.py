@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
@@ -97,17 +98,22 @@ def q168_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     support.  Warm-up days (incomplete trailing week) are excluded."""
     events = load_table(spark, sf_dir, "events")
     # the (day, user) distinct pairs are the compressed activity table
-    # (orders smaller than events) and feed four consumers — cached, the
+    # (orders smaller than events) and feed four consumers — pinned, the
     # events scan + distinct shuffle run once (round-6 census: 4x)
-    du = events.select(F.to_date("ts").alias("d"), "user_id").distinct().cache()
+    du = pin(events.select(F.to_date("ts").alias("d"), "user_id").distinct())
     days = du.select("d").distinct()
     dau = du.groupBy("d").agg(F.count(F.lit(1)).cast("long").alias("dau"))
-    j = days.alias("g").join(
-        du.alias("p"),
-        (F.col("p.d") >= F.date_sub(F.col("g.d"), 6)) & (F.col("p.d") <= F.col("g.d")),
-    )
-    wau = j.groupBy(F.col("g.d").alias("d")).agg(
-        F.count_distinct(F.col("p.user_id")).cast("long").alias("wau")
+    # each pair lands on the <= 7 calendar days whose trailing week holds
+    # it: explode it onto those days and equi-join the calendar (the
+    # range-condition join planned a nested loop over the day table)
+    wau = (
+        du.select(
+            F.explode(F.sequence(F.col("d"), F.date_add(F.col("d"), 6))).alias("d"),
+            "user_id",
+        )
+        .join(days, "d")
+        .groupBy("d")
+        .agg(F.count_distinct("user_id").cast("long").alias("wau"))
     )
     start = days.agg(F.date_add(F.min("d"), 6).alias("s"))
     return (

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..operators.similarity import cosine, _dvec
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
@@ -68,10 +69,16 @@ def q177_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("label", _dvec("embedding").alias("v"))
     ex = e.select("label", F.posexplode("v").alias("pos", "x"))
-    agg = ex.select(
-        "label", "pos", bfround(F.col("x") * 1e9).cast("long").alias("x_fp")
-    ).groupBy("label", "pos").agg(
-        F.sum("x_fp").alias("s"), F.count(F.lit(1)).alias("n")
+    # cent is #labels rows but its lineage is the corpus-wide posexplode
+    # aggregate, and it feeds THREE consumers (the intra broadcast, both
+    # sides of the prototype cross) — unpinned the explode+agg pipeline
+    # runs once per consumer (guide §5).  The pin holds the #labels x dim
+    # sums; the per-label collect above it is the aggregate that bounds
+    # cent's broadcast sides.
+    agg = pin(
+        ex.select("label", "pos", bfround(F.col("x") * 1e9).cast("long").alias("x_fp"))
+        .groupBy("label", "pos")
+        .agg(F.sum("x_fp").alias("s"), F.count(F.lit(1)).alias("n"))
     )
     cent = (
         agg.select(
@@ -85,13 +92,6 @@ def q177_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sort_array(F.collect_list(F.struct("pos", "el"))), lambda r: r["el"]
             ).alias("c")
         )
-        # cent is #labels rows but its lineage is the corpus-wide
-        # posexplode aggregate, and it feeds THREE consumers (the intra
-        # broadcast, both sides of the prototype cross) — unpinned the
-        # explode+agg pipeline runs once per consumer (guide §5).  r13
-        # (r12 verdict #1): eager localCheckpoint, not cache() — no
-        # CacheManager entry survives the query.
-        .localCheckpoint(eager=True)
     )
     intra = (
         e.join(F.broadcast(cent), "label")
@@ -165,12 +165,11 @@ def q178_cusum_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     # the etype x day grid is tiny and consumed by the totals and the
     # CUSUM chain (which is itself read twice: max excursion + peak
-    # pick) — pinned, events scans once (round-6 census: 4x).  r13 (r12
-    # verdict #1): eager localCheckpoint, not cache() — no CacheManager
-    # entry survives the query.
-    daily = events.groupBy(
-        F.col("event_type").alias("etype"), F.to_date("ts").alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("y")).localCheckpoint(eager=True)
+    # pick) — pinned, events scans once (round-6 census: 4x).
+    daily = pin(
+        events.groupBy(F.col("event_type").alias("etype"), F.to_date("ts").alias("d"))
+        .agg(F.count(F.lit(1)).cast("long").alias("y"))
+    )
     tot = daily.groupBy("etype").agg(
         F.sum("y").cast("long").alias("sm"), F.count(F.lit(1)).cast("long").alias("n")
     )

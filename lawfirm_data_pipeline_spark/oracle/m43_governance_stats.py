@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..operators.similarity import brute_force_topk
 from ..operators.text import shingles_of, tokenized
 from ..queries import query
@@ -84,11 +85,7 @@ def q185_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct (source, shingle) table feeds BOTH the per-source
     # denominators and the mask build — materialize the tokenize +
     # explode + distinct once instead of once per consumer
-    p = (
-        t.select("s", F.explode(shingles_of(F.col("toks"), 3)).alias("sh"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    p = pin(t.select("s", F.explode(shingles_of(F.col("toks"), 3)).alias("sh")).distinct())
     d = p.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("nd"))
     masks = p.groupBy("sh").agg(
         F.bit_or(
@@ -100,7 +97,7 @@ def q185_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 63rd+ source fails loudly instead of silently wrapping shiftleft /
     # dropping its pairs (r3 ADVICE: the old fixed sequence(0,19) would
     # under-count a 21st source while the oracle counted it).
-    # r12 OPTIMIZATION (guide §2.4): read the bound from the CHECKPOINTED
+    # r12 OPTIMIZATION (guide §2.4): read the bound from the PINNED
     # p, not from t — the old form re-ran the tokenize pipeline over the
     # whole corpus just for max(s).  shiftleft only ever sees sources
     # present in p, so guarding p's max is exactly the overflow guard.
@@ -264,12 +261,14 @@ def q187_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("bin"),
         "ev",
     )
-    # 10-row bin table, two consumers (totals + final) — uncached, the
+    # 10-row bin table, two consumers (totals + final) — unpinned, the
     # second re-ran the whole scan+bin pass (round-6 census: orders 4x)
-    g = b.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("ev").cast("int")).cast("long").alias("n_event"),
-    ).cache()
+    g = pin(
+        b.groupBy("bin").agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum(F.col("ev").cast("int")).cast("long").alias("n_event"),
+        )
+    )
     t = g.agg(
         F.sum("n_event").alias("te"), (F.sum("n") - F.sum("n_event")).alias("tn")
     )

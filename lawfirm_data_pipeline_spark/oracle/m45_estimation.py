@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..operators.ranking import top_k_ranked
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
@@ -300,19 +301,17 @@ def q196_join_card_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships with — q140's stats audit checks what Spark's CBO stores,
     this checks what such stats can actually predict."""
     # both per-key count tables are key-cardinality-sized and consumed
-    # by 3-4 downstream branches each; uncached, every branch re-ran
+    # by 3-4 downstream branches each; unpinned, every branch re-ran
     # the fact-table aggregate (round-6 census: lineitem scanned 5x)
-    a = (
+    a = pin(
         load_table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_suppkey").alias("key"))
         .agg(F.count(F.lit(1)).cast("long").alias("ca"))
-        .cache()
     )
-    b = (
+    b = pin(
         load_table(spark, sf_dir, "supplier")
         .groupBy(F.col("s_suppkey").alias("key"))
         .agg(F.count(F.lit(1)).cast("long").alias("cb"))
-        .cache()
     )
     # r10 q227-class audit: per-key count products are row-count
     # dependent (a skewed many-many join reaches ca*cb >= 2^63 per

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
@@ -67,7 +68,7 @@ def q213_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting; at full-graph scale the oriented adjacency-array variant
     (graph_metrics.triangle_counts) generates the wedges."""
     li = load_table(spark, sf_dir, "lineitem")
-    e0 = (
+    e0 = pin(
         li.alias("a")
         .join(
             li.alias("b"),
@@ -77,7 +78,6 @@ def q213_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("a.l_partkey") < _MAXP) & (F.col("b.l_partkey") < _MAXP))
         .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     und = e0.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionByName(
         e0.select(F.col("dst").alias("u"), F.col("src").alias("v"))

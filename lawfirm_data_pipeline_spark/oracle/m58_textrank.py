@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..operators.graph_metrics import pagerank_fixed
 from ..operators.ranking import top_k_ranked
 from ..operators.text import tokenized
@@ -87,10 +88,8 @@ def q221_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     q128's plan shape unchanged — composition, not new machinery."""
     docs = load_table(spark, sf_dir, "documents")
     # tok feeds both the vocab aggregate (broadcast side) and the bigram
-    # stream — uncached the tokenize pass runs twice (guide §5).  The
-    # cache lives only for the eager und-checkpoint inside
-    # pagerank_fixed; it is released before returning.
-    tok = tokenized(docs).cache()
+    # stream — unpinned the tokenize pass runs twice (guide §5).
+    tok = pin(tokenized(docs))
     flat = tok.select(F.explode("toks").alias("w"))
     vocab = flat.groupBy("w").agg(F.count(F.lit(1)).alias("c")).filter(
         F.col("c") >= _MIN_COUNT
@@ -125,9 +124,6 @@ def q221_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     pr = pagerank_fixed(edges, iters=3)
-    # pagerank_fixed eagerly checkpointed und: the text stage has run
-    # and the returned plan reads only the checkpoint — release tok now
-    tok.unpersist(blocking=False)
     return top_k_ranked(
         pr.select(F.col("node").alias("word"), "rank_fp"),
         _TOPK,

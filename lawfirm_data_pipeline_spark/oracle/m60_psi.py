@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
@@ -92,12 +93,14 @@ def q223_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_ref",
     )
     # the 10-row bin table feeds the totals row AND the final select:
-    # uncached, the second consumer re-ran the whole scan+bin pass
+    # unpinned, the second consumer re-ran the whole scan+bin pass
     # (round-6 census: events scanned 4x)
-    g = b.groupBy("bin").agg(
-        F.sum(F.col("is_ref").cast("int")).cast("long").alias("n_ref"),
-        F.sum((~F.col("is_ref")).cast("int")).cast("long").alias("n_cur"),
-    ).cache()
+    g = pin(
+        b.groupBy("bin").agg(
+            F.sum(F.col("is_ref").cast("int")).cast("long").alias("n_ref"),
+            F.sum((~F.col("is_ref")).cast("int")).cast("long").alias("n_cur"),
+        )
+    )
     t = g.agg(
         F.sum("n_ref").cast("long").alias("tr"),
         F.sum("n_cur").cast("long").alias("tc"),

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..operators.graph import connected_components
 from ..operators.linkage import name_variant_pairs
 from ..operators.multimodal import pool_frame_embeddings
@@ -183,12 +184,12 @@ def q231_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NAME is recomputed per cluster at the end
     # the surrogate dictionary has FOUR consumers (both pair-id joins,
     # the CC universe, the final name join) — pin it so the part
-    # aggregate runs once, not per consumer (guide §5).  r13 (r12
-    # verdict #1): eager localCheckpoint, not cache() — the dictionary
-    # must not outlive the query in the session CacheManager.
-    names = part.groupBy(F.col("p_name").alias("name")).agg(
-        F.min("p_partkey").cast("long").alias("nid")
-    ).localCheckpoint(eager=True)
+    # aggregate runs once, not per consumer (guide §5).
+    names = pin(
+        part.groupBy(F.col("p_name").alias("name")).agg(
+            F.min("p_partkey").cast("long").alias("nid")
+        )
+    )
     pairs = name_variant_pairs(
         part, "p_name", F.split(F.col("name"), " ").getItem(1), max_dist=4
     ).select("name_a", "name_b")

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
@@ -215,17 +216,13 @@ def q239_kmv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by both the estimate and the union sketch — plus the exact count
     # and the exact union); materialize once instead of re-running the
     # distinct shuffle per consumer.
-    # r12 OPTIMIZATION (guide §2.3 "narrower types"): the checkpointed
+    # r12 OPTIMIZATION (guide §2.3 "narrower types"): the pinned
     # sets and the exact-union shuffle carry 8-byte LONG keys; the
     # md5 string cast happens only inside the k-minima sketch (same
     # hash values — md5(CAST(v AS STRING)) is what both built before).
     # sf0.1 in-session A/B: 2.46 s → 2.05 s, match-verified.
-    a = (
-        orders.select(F.col("o_custkey").cast("long").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    b = (
+    a = pin(orders.select(F.col("o_custkey").cast("long").alias("v")).distinct())
+    b = pin(
         li.filter(F.col("l_orderkey") % 2 == 0)
         .select(
             (F.col("l_suppkey") * 10000 + F.col("l_partkey") % 10000)
@@ -233,7 +230,6 @@ def q239_kmv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def minima(df: DataFrame) -> DataFrame:
@@ -264,8 +260,8 @@ def q239_kmv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # each sketch is read twice (estimate + union sketch) and is ≤ k
     # rows — pin them too
-    ma = minima(a).localCheckpoint(eager=True)
-    mb = minima(b).localCheckpoint(eager=True)
+    ma = pin(minima(a))
+    mb = pin(minima(b))
     # union sketch = k smallest of the merged minima (dedup first: the
     # same value hashing into both sketches must count once)
     union_minima = ma.unionByName(mb).distinct().orderBy("h").limit(_K)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..operators.text import tfidf_topk
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
@@ -142,15 +143,13 @@ def q44_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT/EXCEPT compile to semi/anti joins after aggregate-dedup.
     Each branch consumes both distinct key-sets, and exchange reuse does
     NOT dedupe the repeated subtrees (round-6 census: 4 orders scans +
-    4 distinct shuffles) — cache the two custkey-sized sets instead."""
+    4 distinct shuffles) — pin the two custkey-sized sets instead."""
     orders = load_table(spark, sf_dir, "orders")
-    urgent = (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey").distinct().cache()
+    urgent = pin(
+        orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey").distinct()
     )
-    high = (
-        orders.filter(F.col("o_orderpriority") == "2-HIGH")
-        .select("o_custkey").distinct().cache()
+    high = pin(
+        orders.filter(F.col("o_orderpriority") == "2-HIGH").select("o_custkey").distinct()
     )
     both = urgent.intersect(high).select(F.lit("both").alias("tag"), "o_custkey")
     only = urgent.exceptAll(high).select(F.lit("urgent_only").alias("tag"), "o_custkey")

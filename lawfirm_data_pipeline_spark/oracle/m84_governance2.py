@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_table
+from ..pin import pin
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
@@ -187,13 +188,9 @@ def q274_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bucket"),
     )
     # the grp x bucket histogram is tiny and feeds four consumers
-    # (group totals, global totals, grand total, densified grid) — cache
-    # it so customer scans once (round-6 census: 4 scans uncached)
-    g = (
-        base.groupBy("grp", "bucket")
-        .agg(F.count(F.lit(1)).cast("double").alias("n"))
-        .cache()
-    )
+    # (group totals, global totals, grand total, densified grid) — pin
+    # it so customer scans once (round-6 census: 4 scans unpinned)
+    g = pin(base.groupBy("grp", "bucket").agg(F.count(F.lit(1)).cast("double").alias("n")))
     gt = g.groupBy("grp").agg(F.sum("n").alias("gn"))
     glob = g.groupBy("bucket").agg(F.sum("n").alias("bn"))
     tn = glob.agg(F.sum("bn").alias("tn"))

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..pin import pin
 from ..operators.dedup import minhash_signatures
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS, SHINGLES_SQL as _SHINGLES
@@ -148,20 +149,18 @@ def q282_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The batch is small by definition (tonight's ingest) but its plan
     # unions two document scans and feeds both the signature and the
-    # verify paths — cache it so it computes once.  The history side is
+    # verify paths — pin it so it computes once.  The history side is
     # the scale axis: it must be scanned for signatures (production
     # would read STORED sigs), but the verify stage below only ever
     # joins history shingles onto candidate pairs, so restrict the
     # second history pass to docs that actually collided
     # (value-identical: hn/hsh rows for non-candidates never survive
-    # the joins).  Unrestricted and uncached, this plan scanned
-    # documents 9x (round-6 census).  cache() not localCheckpoint:
-    # lazy, computed once at first use, and no eager barrier — these
-    # are straight-line reuses, not iterative lineage chains.
-    batch = batch.cache()
+    # the joins).  Unrestricted and unpinned, this plan scanned
+    # documents 9x (round-6 census).
+    batch = pin(batch)
     hb = bands_of(minhash_signatures(hist, k=_K, n=3), "hid")
     bb = bands_of(minhash_signatures(batch, k=_K, n=3), "bid")
-    cands = bb.join(hb, "bucket").select("bid", "hid").distinct().cache()
+    cands = pin(bb.join(hb, "bucket").select("bid", "hid").distinct())
 
     from ..operators.text import shingles_of, tokenized
 
@@ -176,9 +175,9 @@ def q282_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands.select(F.col("hid").alias("doc_id")).distinct(), "doc_id", "left_semi"
     )
     # the candidate-restricted shingle sets are consumed twice (size
-    # normalizer + common-shingle count) but derive from the cached
+    # normalizer + common-shingle count) but derive from the pinned
     # batch/cands parents — recomputing the bounded tokenize is cheaper
-    # than another cache layer
+    # than another pin
     hsh, bsh = sh_of(hist_hit), sh_of(batch)
     hn = hsh.groupBy(F.col("doc_id").alias("hid")).agg(
         F.count(F.lit(1)).cast("long").alias("hn")

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_table
+from ..pin import pin
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
@@ -164,7 +165,7 @@ def q292_gbdt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         score = d(F.col("SL")) * d(F.col("SL")) / d(F.col("nL")) + d(
             F.col("SR")
         ) * d(F.col("SR")) / d(F.col("nR"))
-        best = (
+        best = pin(
             splits.withColumn(
                 "rk",
                 F.row_number().over(Window.orderBy(score.desc(), "f", "t")),
@@ -180,7 +181,6 @@ def q292_gbdt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             # 1-row split decision, read twice (residual update + output
             # row) — pin it so the bucket agg + window ranking behind it
             # runs once per round, not twice
-            .localCheckpoint(eager=True)
         )
         cur = cur.crossJoin(F.broadcast(best)).select(
             "x1",
@@ -194,7 +194,7 @@ def q292_gbdt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(F.col("leafR"))
             ).alias("res"),
         )
-        cur = cur.localCheckpoint(eager=False)
+        cur = pin(cur)
         l1 = cur.agg(F.sum(F.abs(F.col("res"))).cast("long").alias("l1"))
         row = best.crossJoin(F.broadcast(l1)).select(
             "round",

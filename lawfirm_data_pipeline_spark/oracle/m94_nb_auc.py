@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_table
+from ..pin import pin
 from ..operators.ranking import global_running_sum
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS
@@ -94,11 +95,7 @@ def q293_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders smaller than the corpus — and derive everything model-side
     # from it; the corpus is then tokenized exactly twice (model build +
     # scoring), which beats checkpointing a corpus-scale token table.
-    counts = (
-        toks.groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    counts = pin(toks.groupBy("lang", "tok").agg(F.count(F.lit(1)).cast("long").alias("c")))
     vocab = counts.select("tok").distinct()
     vsize = vocab.agg(F.count(F.lit(1)).cast("long").alias("v"))
     ltot = counts.groupBy("lang").agg(F.sum("c").cast("long").alias("n"))

@@ -46,6 +46,7 @@ from ..operators.mutations import (
     update_many,
 )
 from ..operators.relations import hydrate_many_to_many, relation_none
+from ..pin import pin
 from .generate import LEGAL_TAGS, TAG_SLICE_MOD
 
 
@@ -203,7 +204,7 @@ def scrape_stage(
     # written — and therefore evaluated — separately; materialize the
     # batch-sized extraction once instead of re-running the stub per
     # table write
-    extracted = llm_extract(pending).localCheckpoint(eager=True)
+    extracted = pin(llm_extract(pending))
 
     skip = is_us_phone(F.col("x_phone")) | (F.size("x_services") == 0)
     kept = extracted.filter(~skip)
@@ -287,11 +288,13 @@ def sync_stage(
     # with-services branches, which between them feed all four staged
     # tables (each written — and evaluated — separately); materialize
     # the anti-join + M:N hydration once
-    hydrated = hydrate_many_to_many(
-        eligible, bridge, firm_service,
-        fact_key="id", bridge_fact_fk="A", bridge_dim_fk="B",
-        dim_key="id", dim_value="name", array_col="services",
-    ).localCheckpoint(eager=True)
+    hydrated = pin(
+        hydrate_many_to_many(
+            eligible, bridge, firm_service,
+            fact_key="id", bridge_fact_fk="A", bridge_dim_fk="B",
+            dim_key="id", dim_value="name", array_col="services",
+        )
+    )
 
     no_services = hydrated.filter(F.size("services") == 0)
     with_services = hydrated.filter(F.size("services") > 0)

@@ -234,24 +234,24 @@ def test_lsh_adaptive_sizing_counts_raw_input_not_parsed_projection(spark):
 
 def test_ranking_float_rejection_runs_before_pinning(spark):
     """The float/double TypeError must be raised from lazy schema
-    analysis BEFORE _ordered_pinned's eager localCheckpoint pays a
-    full materialization (r8 ADVICE #3)."""
+    analysis BEFORE the range pin plans (and samples) the input
+    (r8 ADVICE #3)."""
     from lawfirm_data_pipeline_spark.operators import ranking
 
     df = spark.createDataFrame(
         [(1, 1.5), (2, 2.5)], "k int, v double"
     )
-    orig = ranking._ordered_pinned
+    orig = ranking.pin
 
     def booby_trap(*a, **kw):
         raise AssertionError("materialized the input before the dtype check")
 
-    ranking._ordered_pinned = booby_trap
+    ranking.pin = booby_trap
     try:
         with pytest.raises(TypeError, match="exact arithmetic"):
             ranking.global_running_sum(df, "v", ["k"], "rs")
     finally:
-        ranking._ordered_pinned = orig
+        ranking.pin = orig
 
 
 # --- r10 ADVICE #1: _sum/_avg decimal snap must not change float ---------

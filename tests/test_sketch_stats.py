@@ -1,37 +1,19 @@
-"""Unit + plan tests for CMS, weighted reservoir sampling, and the
-column-correlation matrix."""
+"""Unit + plan tests for the CMS frequency audit, weighted reservoir
+sampling, and the column-correlation matrix."""
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from lawfirm_data_pipeline_spark.io import load_table
 from lawfirm_data_pipeline_spark.operators.sampling import weighted_reservoir_sample
-from lawfirm_data_pipeline_spark.operators.sketch import (
-    cms_frequency_audit,
-    count_min_sketch_cells,
-)
+from lawfirm_data_pipeline_spark.operators.sketch import cms_frequency_audit
 from lawfirm_data_pipeline_spark.operators.stats import column_correlations
 
 from .test_plans import plan_of
 
 SF = "/root/testdata/sf0.01"
-
-
-def test_cms_is_linear(spark):
-    docs = load_table(spark, SF, "documents")
-    lo = docs.filter(F.col("doc_id") < 250)
-    hi = docs.filter(F.col("doc_id") >= 250)
-    full = {
-        (r.row, r.col): r.cnt for r in count_min_sketch_cells(docs).collect()
-    }
-    parts: dict = {}
-    for half in (lo, hi):
-        for r in count_min_sketch_cells(half).collect():
-            parts[(r.row, r.col)] = parts.get((r.row, r.col), 0) + r.cnt
-    assert parts == full
 
 
 def test_cms_guarantees_hold(spark):

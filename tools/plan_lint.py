@@ -27,10 +27,10 @@ can hide:
   shuffles in one plan) get listed under ``review`` for manual
   reading, NOT under ``flagged``.  Since r7 the count is PHYSICAL
   (:func:`_tree_shuffle_count` walks the executed-plan tree, descending
-  AdaptiveSparkPlanExec and stopping at InMemoryTableScan leaves); the
-  old string count included ReusedExchange markers and cached-recipe
-  printing, overstating deep trees ~2-5× (q196: 19 string vs 4
-  physical).  Streaming captured plans remain string-counted (only
+  AdaptiveSparkPlanExec and stopping at pinned ``Scan ExistingRDD``
+  leaves); the old string count included ReusedExchange markers and
+  cached-recipe printing, overstating deep trees ~2-5× (q196: 19 string
+  vs 4 physical).  Streaming captured plans remain string-counted (only
   their text survives the run).
 * scans-per-table (``rescans`` key) — the standing version of the
   round-6 scan census: any table scanned ≥3× inside one plan is
@@ -116,36 +116,14 @@ def _bnlj_bounded(sub: str) -> bool:
       ``vec_id`` is the table's unique key, so the literal IS the row
       bound (the ANN/top-k convention: broadcast the queries, never
       shuffle the corpus);
-    * ``InMemoryTableScan`` leaves — this repo caches ONLY tiny
-      multi-consumer aggregates (cache census,
-      test_plans.py::test_census_multi_consumer_aggregates_are_cached),
-      so a cached build side is bounded by that standing convention;
     * driver-local literal data (``LocalTableScan`` /
       ``OneRowRelation``) or a ``Range`` with a literal end.
 
-    ``Scan ExistingRDD`` (localCheckpoint pins) is deliberately NOT
+    ``Scan ExistingRDD`` (``pin`` leaves) is deliberately NOT
     accepted as a leaf: pinned artifacts can be corpus-sized (q133's
     prefix table); a bounded pin must show a bounding aggregate above
     it to pass (q293's model root does: keys=[lang]).
     """
-    # Cut each InMemoryTableScan's subtree: InMemoryRelation prints the
-    # RECIPE that built the cache (including the original corpus
-    # FileScan) — those are not live scans of this plan.  The cache
-    # itself is bounded by the repo convention documented above.
-    lines = sub.splitlines()
-    kept: list[str] = []
-    skip_below = -1
-    for ln in lines:
-        c = _marker_col(ln)
-        if skip_below >= 0:
-            if c == -1 or c > skip_below:
-                continue
-            skip_below = -1
-        kept.append(ln)
-        if "InMemoryTableScan" in ln:
-            skip_below = c
-    sub = "\n".join(kept)
-
     # (a) 1-row global aggregate anywhere on the path
     if re.search(r"(HashAggregate|SortAggregate|ObjectHashAggregate)\(keys=\[\]", sub):
         return True
@@ -185,12 +163,8 @@ def _bnlj_bounded(sub: str) -> bool:
             return False
     if scans:
         return True
-    # (d)/(e) no FileScan: cached tiny aggregate / literal local data
-    return bool(
-        re.search(
-            r"InMemoryTableScan|LocalTableScan|OneRowRelation|Range \(", sub
-        )
-    )
+    # (d) no FileScan: literal local data
+    return bool(re.search(r"LocalTableScan|OneRowRelation|Range \(", sub))
 
 
 _MARKER = re.compile(r"[+:]- ")
@@ -314,8 +288,8 @@ def _tree_shuffle_count(df) -> int | None:
     text that cached/pinned tables print, overstating deep trees ~2-5×
     (q196: 19 string vs 4 physical).  The tree walk descends
     AdaptiveSparkPlanExec into its initialPlan and naturally stops at
-    InMemoryTableScan leaves (the cached plan is not a child), counting
-    only ShuffleExchange nodes this plan would actually run.  Returns
+    pinned ``Scan ExistingRDD`` leaves (the pinned plan is not a child),
+    counting only ShuffleExchange nodes this plan would actually run.  Returns
     None when the py4j walk fails (then the census falls back to the
     string count, suffixed '(string)')."""
     stats = _tree_stats(df)
