@@ -144,14 +144,10 @@ def incremental_exact_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     fp: Column | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Dedup an incoming batch against an already-ingested corpus: drop
     new docs whose content fingerprint exists historically, then keep one
     (min-id) copy per fingerprint within the batch itself.
-
-    ``materialize=False`` keeps the whole plan lazy (used by plan tests
-    to inspect the anti-join stage; production keeps the default).
 
     This is the production shape of dedup — the corpus is never re-deduped
     from scratch; each ingest round anti-joins its (fp) set against the
@@ -170,13 +166,12 @@ def incremental_exact_dedup(
     batch_fp = new_batch.select(F.col(id_col), fp.alias("fp"))
     fresh = batch_fp.join(hist_fp, on="fp", how="left_anti")
     keep_ids = fresh.groupBy("fp").agg(F.min(id_col).alias(id_col)).select(id_col)
-    if materialize:
-        # materialize the (batch-bounded) survivor-id set: the final
-        # semi-join otherwise re-derives BOTH input lineages a second
-        # time inside its own plan (measured 39 scan nodes on a 3-branch
-        # union input; 3 after).  This is also the production artifact —
-        # the ingest round's dedup decision set.
-        keep_ids = pin(keep_ids)
+    # materialize the (batch-bounded) survivor-id set: the final
+    # semi-join otherwise re-derives BOTH input lineages a second
+    # time inside its own plan (measured 39 scan nodes on a 3-branch
+    # union input; 3 after).  This is also the production artifact —
+    # the ingest round's dedup decision set.
+    keep_ids = pin(keep_ids)
     # no broadcast hint: survivors scale with the batch — AQE picks
     # broadcast when the materialized stats say it fits
     return new_batch.join(keep_ids, on=id_col, how="left_semi")

@@ -745,16 +745,14 @@ def embedding_covariance(
         embeddings.select(F.posexplode(vec_col).alias("pos", "x"))
         .select(
             "pos",
-            bfround(F.col("x").cast("double") * 1e6).cast("long").alias("x_fp"),
+            # decimal, not long: a component past the micro fixed-point
+            # int64 domain must fail in gram()'s own check, not race it
+            # with a CAST_OVERFLOW from this branch.  The sum stays exact
+            # and the final cast to double rounds once.
+            bfround(F.col("x").cast("double") * 1e6).cast("decimal(38,0)").alias("x_fp"),
         )
         .groupBy("pos")
-        # d29 sum: Σ|x_fp| ≤ N·1e6·|x|max overflows long at N ≈ 1e12
-        # unit-norm rows; decimal is exact and the final cast to double
-        # rounds once, identically to the old long → double path
-        .agg(
-            F.sum(F.col("x_fp").cast("decimal(19,0)")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
+        .agg(F.sum("x_fp").alias("s"), F.count(F.lit(1)).alias("n"))
     )
     mi = means.select(
         F.col("pos").alias("i"), F.col("s").alias("s_i"), F.col("n").alias("n")

@@ -19,8 +19,9 @@ ROUND 6 no longer relies on import order for the window: the
 registry dicts explicitly after every import has run, so a future
 import reshuffle (or a helper import pulling a sibling module early)
 cannot silently change which 50 queries the driver checks — the r5
-verdict/advice flagged exactly that fragility in the m79 delegate
-trick.  Import order below is kept for history; the list is the law.
+verdict/advice flagged exactly that fragility in the (since deleted) m79
+delegate trick.  Import order below is kept for history; the list is
+the law.
 
 ROUND 6 window (slots 1-50, all first-ever driver rows): q131-q151
 (m26 tail, m27-m31), q157-q174 (m33-m38), q177-q187 (m40-m43 head) —
@@ -56,11 +57,6 @@ from . import m75_pq_schema  # noqa: F401  (2)
 from . import m76_pq_adc  # noqa: F401  q263 (1)
 from . import m77_featurization  # noqa: F401  (3)
 from . import m78_masking_budget  # noqa: F401  (2)  — 45 so far
-
-# Re-check slots: q38/q69b, the only entries never driver-green
-# (r4 verdict #1).  Thin delegates claim the dict position; the
-# canonical m6/m11 registrations later replace the value in place.
-from . import m79_recheck  # noqa: F401  q38, q69b (2)  — 47
 
 from . import m53_interval_join  # noqa: F401  q212 (1)  — 48
 from . import m26_linkage_ivm  # noqa: F401  q129, q130 close the window
@@ -158,10 +154,7 @@ from . import m17_retrieval_quality  # noqa: F401
 # first 50 entries of queries()/oracle_sql() are exactly the round-8
 # window, independent of import order.  Every name is checked present
 # with an explicit raise (not assert — python -O must not disable the
-# guard) so a renamed query fails loudly at import time, and the two
-# historical thin-delegate slots (q38/q69b, r5 m79_recheck) are checked
-# to resolve to their canonical modules rather than the placeholder
-# delegates.
+# guard) so a renamed query fails loudly at import time.
 #
 # ROUND-13 WINDOW: CORRECTNESS_r12 greened the full r12 window (50/50,
 # zero err), so the window advances.  The r12 VERDICT (optimization
@@ -253,16 +246,6 @@ def _apply_rotation() -> None:
         d.clear()
         d.update(head)
         d.update(tail)
-
-    # r5-advice guard: the m79 thin delegates must have been replaced by
-    # the canonical registrations (dict-overwrite keeps position only).
-    for name, canonical in (
-        ("q38_lsh_ann_topk", "m6_similarity"),
-        ("q69b_ivf_ann_nprobe", "m11_sql_kit"),
-    ):
-        mod = _registry.QUERIES[name].__module__
-        if not mod.endswith(canonical):
-            raise RuntimeError(f"{name} resolved to {mod}, not {canonical}")
 
 
 _apply_rotation()

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 N_PLANTED_DOCS = 150  # bounded subset: pairwise stages stay cheap at any sf
 
@@ -107,6 +108,6 @@ BRUTE_FORCE_TOP10_SQL = f"""
                                       ORDER BY score DESC, vec_id) AS rank
             FROM scored
          )
-    SELECT query_id, vec_id, CASE WHEN isnan(CAST((score) AS DOUBLE)) OR abs(CAST((score) AS DOUBLE)) >= 9007199254.740992 THEN CAST((score) AS DOUBLE) ELSE floor(CAST((score) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS score, rank
+    SELECT query_id, vec_id, {bfround_sql('score', 6)} AS score, rank
     FROM ranked WHERE rank <= 10
 """

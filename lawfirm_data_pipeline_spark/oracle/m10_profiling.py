@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..operators.profile import profile_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _PROFILE_COLS = ["o_orderstatus", "o_orderpriority", "o_custkey"]
 
@@ -37,10 +37,10 @@ def q59_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q60: extended window functions over per-customer order sequences
 @query(
     "q60_window_misc",
-    """
+    f"""
     SELECT o_custkey, o_orderkey,
-           CASE WHEN isnan(CAST((percent_rank() OVER w) AS DOUBLE)) OR abs(CAST((percent_rank() OVER w) AS DOUBLE)) >= 9007199254.740992 THEN CAST((percent_rank() OVER w) AS DOUBLE) ELSE floor(CAST((percent_rank() OVER w) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS pr,
-           CASE WHEN isnan(CAST((cume_dist() OVER w) AS DOUBLE)) OR abs(CAST((cume_dist() OVER w) AS DOUBLE)) >= 9007199254.740992 THEN CAST((cume_dist() OVER w) AS DOUBLE) ELSE floor(CAST((cume_dist() OVER w) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS cd,
+           {bfround_sql('percent_rank() OVER w', 6)} AS pr,
+           {bfround_sql('cume_dist() OVER w', 6)} AS cd,
            first_value(o_orderkey) OVER w AS first_ok,
            nth_value(o_orderkey, 2) OVER w AS second_ok
     FROM orders

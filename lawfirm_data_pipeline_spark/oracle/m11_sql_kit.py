@@ -23,7 +23,7 @@ from ..operators.similarity import (
 )
 from ..queries import query
 from ._shared import BRUTE_FORCE_TOP10_SQL
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 # The coarse quantizer is a build artifact: at scale you train it once
 # and serve many queries from it.  Memoize per (sf_dir, K) so q69/q69b
@@ -39,7 +39,7 @@ def _centroids(spark: SparkSession, sf_dir: str, n_centroids: int = 16) -> list[
         _IVF_CENTROIDS[key] = ivf_train_centroids(emb, n_centroids=n_centroids)
     return _IVF_CENTROIDS[key]
 
-_CENTS = "CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)"
+_CENTS = f"CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT)"
 
 
 # -- q62: conditional aggregation (FILTER/CASE-WHEN per-group slices)
@@ -51,11 +51,8 @@ _CENTS = "CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST
            CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_finished,
            CAST(coalesce(sum(CASE WHEN o_orderstatus = 'O' THEN {_CENTS} END), 0) AS BIGINT)
                AS open_cents,
-           CASE WHEN isnan(CAST((sum(CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END)
-                 * 1.0 / count(*)) AS DOUBLE)) OR abs(CAST((sum(CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END)
-                 * 1.0 / count(*)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((sum(CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END)
-                 * 1.0 / count(*)) AS DOUBLE) ELSE floor(CAST((sum(CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END)
-                 * 1.0 / count(*)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS high_value_ratio
+           {bfround_sql('''sum(CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END)
+                 * 1.0 / count(*)''', 6)} AS high_value_ratio
     FROM orders GROUP BY o_orderpriority
     """,
 )
@@ -134,19 +131,10 @@ def q63_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum({_CENTS}) OVER (PARTITION BY o_custkey
                                     ORDER BY o_orderdate NULLS FIRST, o_orderkey
                                     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_cents,
-           CASE WHEN isnan(CAST((avg({_CENTS}) OVER (PARTITION BY o_custkey
+           {bfround_sql(f'''avg({_CENTS}) OVER (PARTITION BY o_custkey
                                      ORDER BY o_orderdate NULLS FIRST, o_orderkey
                                      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-                 / 100.0) AS DOUBLE)) OR abs(CAST((avg({_CENTS}) OVER (PARTITION BY o_custkey
-                                     ORDER BY o_orderdate NULLS FIRST, o_orderkey
-                                     ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-                 / 100.0) AS DOUBLE)) >= 9007199254.740992 THEN CAST((avg({_CENTS}) OVER (PARTITION BY o_custkey
-                                     ORDER BY o_orderdate NULLS FIRST, o_orderkey
-                                     ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-                 / 100.0) AS DOUBLE) ELSE floor(CAST((avg({_CENTS}) OVER (PARTITION BY o_custkey
-                                     ORDER BY o_orderdate NULLS FIRST, o_orderkey
-                                     ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-                 / 100.0) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS moving4_avg
+                 / 100.0''', 6)} AS moving4_avg
     FROM orders WHERE o_custkey % 11 = 0
     """,
 )

@@ -24,16 +24,17 @@ from ._shared import (
     planted_corpus as _planted_corpus,
     planted_jaccard_pairs,
 )
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 
 # -- q70: resample + forward-fill gap-fill on events
 @query(
     "q70_resample_ffill",
-    """
+    f"""
     WITH e AS (SELECT user_id, ts, value FROM events WHERE user_id % 11 = 0),
          b AS (
             SELECT user_id, date_trunc('hour', ts) AS bucket,
-                   CAST(sum(CAST(CASE WHEN isnan(CAST((value * 1e6) AS DOUBLE)) OR abs(CAST((value * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 1e6) AS DOUBLE) ELSE floor(CAST((value * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT) AS sum_micros,
+                   CAST(sum(CAST({bfround_sql('value * 1e6', 0)} AS BIGINT)) AS BIGINT) AS sum_micros,
                    count(*) AS n
             FROM e GROUP BY 1, 2
          ),
@@ -79,7 +80,7 @@ def q70_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM common
             JOIN sizes sa ON sa.did = ida
             JOIN sizes sb ON sb.did = idb
-            WHERE CASE WHEN isnan(CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE)) OR abs(CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE) ELSE floor(CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END >= 0.5
+            WHERE {bfround_sql('CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)', 6)} >= 0.5
          ),
          edges AS (SELECT ida AS a, idb AS b FROM pairs
                    UNION ALL SELECT idb, ida FROM pairs),
@@ -106,7 +107,7 @@ def q71_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q72: symmetric int8 embedding quantization (scale + audit scalars)
 @query(
     "q72_quantize_int8",
-    """
+    f"""
     WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
                FROM embeddings),
          s AS (SELECT vec_id, e,
@@ -117,14 +118,11 @@ def q71_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
          q AS (SELECT vec_id, scale, e,
                       list_transform(e, x -> CAST(floor(x / scale + 0.5) AS INT)) AS qv
                FROM s)
-    SELECT vec_id, CASE WHEN isnan(CAST((scale) AS DOUBLE)) OR abs(CAST((scale) AS DOUBLE)) >= 9007199254.740992 THEN CAST((scale) AS DOUBLE) ELSE floor(CAST((scale) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS scale6,
+    SELECT vec_id, {bfround_sql('scale', 6)} AS scale6,
            CAST(list_sum(qv) AS BIGINT) AS qsum,
            list_min(qv) AS qmin, list_max(qv) AS qmax,
-           CASE WHEN isnan(CAST((list_max(list_transform(generate_series(1, len(e)),
-                                         i -> abs(e[i] - qv[i] * scale)))) AS DOUBLE)) OR abs(CAST((list_max(list_transform(generate_series(1, len(e)),
-                                         i -> abs(e[i] - qv[i] * scale)))) AS DOUBLE)) >= 9007199254.740992 THEN CAST((list_max(list_transform(generate_series(1, len(e)),
-                                         i -> abs(e[i] - qv[i] * scale)))) AS DOUBLE) ELSE floor(CAST((list_max(list_transform(generate_series(1, len(e)),
-                                         i -> abs(e[i] - qv[i] * scale)))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS max_err
+           {bfround_sql('''list_max(list_transform(generate_series(1, len(e)),
+                                         i -> abs(e[i] - qv[i] * scale)))''', 6)} AS max_err
     FROM q
     """,
 )

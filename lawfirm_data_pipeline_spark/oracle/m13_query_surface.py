@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..operators.relations import hydrate_many_to_many, order_by_relation_count
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q73: order customers by their order count (desc), top 50
@@ -100,12 +100,12 @@ def q74_filtered_include(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q75: $transaction — atomic multi-table lake commit, driver-gated
 @query(
     "q75_transaction_commit",
-    """
+    f"""
     WITH updated AS (
         SELECT o_orderkey, o_orderstatus,
-               CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
+               CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT)
                + CASE WHEN o_orderstatus = 'F'
-                      THEN CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) // 20
+                      THEN CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) // 20
                       ELSE 0 END AS cents
         FROM orders
     ),
@@ -144,7 +144,7 @@ def q75_transaction_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             cents
             + F.when(
-                F.col("o_orderstatus") == "F", F.expr("CAST(CASE WHEN isnan(CAST((o_totalprice*100) AS DOUBLE)) OR abs(CAST((o_totalprice*100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice*100) AS DOUBLE) ELSE floor(CAST((o_totalprice*100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) div 20")
+                F.col("o_orderstatus") == "F", F.expr(f"CAST({bfround_sql('o_totalprice*100', 0)} AS BIGINT) div 20")
             ).otherwise(F.lit(0))
         ).alias("cents"),
     )

@@ -22,6 +22,7 @@ from ..operators.curation import (
     weighted_hash_keep,
 )
 from ..queries import query
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), x -> x != '')"
 
@@ -74,9 +75,9 @@ def q76_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
          bd AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_big, max(c) AS top_big
                 FROM big GROUP BY doc_id)
     SELECT ud.doc_id, n_tok,
-           CASE WHEN isnan(CAST((1 - CAST(n_distinct AS DOUBLE) / n_tok) AS DOUBLE)) OR abs(CAST((1 - CAST(n_distinct AS DOUBLE) / n_tok) AS DOUBLE)) >= 9007199254.740992 THEN CAST((1 - CAST(n_distinct AS DOUBLE) / n_tok) AS DOUBLE) ELSE floor(CAST((1 - CAST(n_distinct AS DOUBLE) / n_tok) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS dup_word_frac,
-           CASE WHEN isnan(CAST((CAST(top_w AS DOUBLE) / n_tok) AS DOUBLE)) OR abs(CAST((CAST(top_w AS DOUBLE) / n_tok) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(top_w AS DOUBLE) / n_tok) AS DOUBLE) ELSE floor(CAST((CAST(top_w AS DOUBLE) / n_tok) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS top_word_frac,
-           CASE WHEN isnan(CAST((coalesce(CAST(top_big AS DOUBLE) / n_big, 0.0)) AS DOUBLE)) OR abs(CAST((coalesce(CAST(top_big AS DOUBLE) / n_big, 0.0)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((coalesce(CAST(top_big AS DOUBLE) / n_big, 0.0)) AS DOUBLE) ELSE floor(CAST((coalesce(CAST(top_big AS DOUBLE) / n_big, 0.0)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS top_bigram_frac
+           {bfround_sql('1 - CAST(n_distinct AS DOUBLE) / n_tok', 6)} AS dup_word_frac,
+           {bfround_sql('CAST(top_w AS DOUBLE) / n_tok', 6)} AS top_word_frac,
+           {bfround_sql('coalesce(CAST(top_big AS DOUBLE) / n_big, 0.0)', 6)} AS top_bigram_frac
     FROM ud LEFT JOIN bd ON ud.doc_id = bd.doc_id
     """,
 )

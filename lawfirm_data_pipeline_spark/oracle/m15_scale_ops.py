@@ -19,6 +19,7 @@ from ..operators.cdc import table_diff
 from ..operators.packing import pack_sequences, packing_summary, shard_assignments
 from ..operators.sampling import mixture_sample
 from ..queries import query
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 _TOKS_RAW = "list_filter(str_split_regex(trim(text), '\\s+'), t -> t != '')"
 _BUCKET = "(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000)"
@@ -109,11 +110,8 @@ def q82_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            CAST(count(*) AS BIGINT) AS n_passages,
            CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_passages,
-           CASE WHEN isnan(CAST((CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*)) AS DOUBLE)) OR abs(CAST((CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*)) AS DOUBLE) ELSE floor(CAST((CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS dup_frac
+           {bfround_sql('''CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS DOUBLE)
+                 / count(*)''', 6)} AS dup_frac
     FROM r GROUP BY doc_id
     """,
 )

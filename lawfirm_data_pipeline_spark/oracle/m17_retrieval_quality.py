@@ -48,19 +48,13 @@ _BM25_IN = "('spark', 'window', 'hash')"
          idf AS (SELECT w, ln(1.0 + (n_docs - count(*) + 0.5) / (count(*) + 0.5)) AS idf
                  FROM tf CROSS JOIN consts GROUP BY w, n_docs),
          sc AS (SELECT tf.doc_id,
-                       CAST(CASE WHEN isnan(CAST((idf.idf * (tf.tf * 2.2)
+                       CAST({bfround_sql('''idf.idf * (tf.tf * 2.2)
                             / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl
-                               / (CAST(sum_dl AS DOUBLE) / n_docs))) * 1e9) AS DOUBLE)) OR abs(CAST((idf.idf * (tf.tf * 2.2)
-                            / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl
-                               / (CAST(sum_dl AS DOUBLE) / n_docs))) * 1e9) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((idf.idf * (tf.tf * 2.2)
-                            / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl
-                               / (CAST(sum_dl AS DOUBLE) / n_docs))) * 1e9) AS DOUBLE) ELSE floor(CAST((idf.idf * (tf.tf * 2.2)
-                            / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl
-                               / (CAST(sum_dl AS DOUBLE) / n_docs))) * 1e9) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
+                               / (CAST(sum_dl AS DOUBLE) / n_docs))) * 1e9''', 0)} AS BIGINT)
                        AS s_fp
                 FROM tf JOIN dl USING (doc_id) JOIN idf USING (w) CROSS JOIN consts),
          doc AS (SELECT doc_id, sum(s_fp) AS s_fp FROM sc GROUP BY 1)
-    SELECT doc_id, CASE WHEN isnan(CAST((CAST(s_fp AS DOUBLE) / 1e9) AS DOUBLE)) OR abs(CAST((CAST(s_fp AS DOUBLE) / 1e9) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(s_fp AS DOUBLE) / 1e9) AS DOUBLE) ELSE floor(CAST((CAST(s_fp AS DOUBLE) / 1e9) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS score
+    SELECT doc_id, {bfround_sql('CAST(s_fp AS DOUBLE) / 1e9', 6)} AS score
     FROM doc ORDER BY score DESC, doc_id LIMIT 10
     """,
 )
@@ -135,11 +129,11 @@ def q92_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH per AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS size
                  FROM documents GROUP BY source),
          s AS (SELECT source, size,
-                      CAST(CASE WHEN isnan(CAST((power(CAST(size AS DOUBLE), 0.3) * 1e9) AS DOUBLE)) OR abs(CAST((power(CAST(size AS DOUBLE), 0.3) * 1e9) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((power(CAST(size AS DOUBLE), 0.3) * 1e9) AS DOUBLE) ELSE floor(CAST((power(CAST(size AS DOUBLE), 0.3) * 1e9) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS pa
+                      CAST({bfround_sql('power(CAST(size AS DOUBLE), 0.3) * 1e9', 0)} AS BIGINT) AS pa
                FROM per),
          z AS (SELECT sum(pa) AS z FROM s)
     SELECT source, size,
-           CASE WHEN isnan(CAST((CAST(pa AS DOUBLE) / z) AS DOUBLE)) OR abs(CAST((CAST(pa AS DOUBLE) / z) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(pa AS DOUBLE) / z) AS DOUBLE) ELSE floor(CAST((CAST(pa AS DOUBLE) / z) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS weight,
+           {bfround_sql('CAST(pa AS DOUBLE) / z', 6)} AS weight,
            CAST({_ETOK_FP} AS BIGINT)
                AS expected_tokens
     FROM s CROSS JOIN z
@@ -169,7 +163,7 @@ def q93_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                       CASE WHEN vocab.w IS NULL THEN 1 ELSE 0 END AS oov
                FROM tok LEFT JOIN vocab ON tok.w = vocab.w)
     SELECT doc_id, count(*) AS n_tok, CAST(sum(oov) AS BIGINT) AS n_oov,
-           CASE WHEN isnan(CAST((CAST(sum(oov) AS DOUBLE) / count(*)) AS DOUBLE)) OR abs(CAST((CAST(sum(oov) AS DOUBLE) / count(*)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(oov) AS DOUBLE) / count(*)) AS DOUBLE) ELSE floor(CAST((CAST(sum(oov) AS DOUBLE) / count(*)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS oov_rate
+           {bfround_sql('CAST(sum(oov) AS DOUBLE) / count(*)', 6)} AS oov_rate
     FROM m GROUP BY doc_id
     """,
 )
@@ -225,11 +219,11 @@ def q95_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q96: per-source exact quantile profile
 @query(
     "q96_source_quantiles",
-    """
+    f"""
     SELECT source, count(*) AS n_docs,
-           CASE WHEN isnan(CAST((quantile_cont(n_chars, 0.25)) AS DOUBLE)) OR abs(CAST((quantile_cont(n_chars, 0.25)) AS DOUBLE)) >= 900719925474.0992 THEN CAST((quantile_cont(n_chars, 0.25)) AS DOUBLE) ELSE floor(CAST((quantile_cont(n_chars, 0.25)) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS q25,
-           CASE WHEN isnan(CAST((quantile_cont(n_chars, 0.50)) AS DOUBLE)) OR abs(CAST((quantile_cont(n_chars, 0.50)) AS DOUBLE)) >= 900719925474.0992 THEN CAST((quantile_cont(n_chars, 0.50)) AS DOUBLE) ELSE floor(CAST((quantile_cont(n_chars, 0.50)) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS q50,
-           CASE WHEN isnan(CAST((quantile_cont(n_chars, 0.75)) AS DOUBLE)) OR abs(CAST((quantile_cont(n_chars, 0.75)) AS DOUBLE)) >= 900719925474.0992 THEN CAST((quantile_cont(n_chars, 0.75)) AS DOUBLE) ELSE floor(CAST((quantile_cont(n_chars, 0.75)) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS q75,
+           {bfround_sql('quantile_cont(n_chars, 0.25)', 4)} AS q25,
+           {bfround_sql('quantile_cont(n_chars, 0.50)', 4)} AS q50,
+           {bfround_sql('quantile_cont(n_chars, 0.75)', 4)} AS q75,
            min(n_chars) AS min_chars, max(n_chars) AS max_chars
     FROM documents GROUP BY source
     """,

@@ -103,11 +103,11 @@ _LTOKS_RAW = "list_filter(str_split_regex(trim(text), '\\s+'), t -> t != '')"
                    CAST(sum(n_tok) AS BIGINT) AS size
             FROM kept GROUP BY source),
     s AS (SELECT source, n_docs, size,
-                 CAST(CASE WHEN isnan(CAST((power(CAST(size AS DOUBLE), 0.3) * 1e9) AS DOUBLE)) OR abs(CAST((power(CAST(size AS DOUBLE), 0.3) * 1e9) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((power(CAST(size AS DOUBLE), 0.3) * 1e9) AS DOUBLE) ELSE floor(CAST((power(CAST(size AS DOUBLE), 0.3) * 1e9) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS pa
+                 CAST({bfround_sql('power(CAST(size AS DOUBLE), 0.3) * 1e9', 0)} AS BIGINT) AS pa
           FROM per),
     z AS (SELECT sum(pa) AS z FROM s)
     SELECT source, n_docs, size,
-           CASE WHEN isnan(CAST((CAST(pa AS DOUBLE) / z) AS DOUBLE)) OR abs(CAST((CAST(pa AS DOUBLE) / z) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(pa AS DOUBLE) / z) AS DOUBLE) ELSE floor(CAST((CAST(pa AS DOUBLE) / z) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS weight,
+           {bfround_sql('CAST(pa AS DOUBLE) / z', 6)} AS weight,
            CAST({_ETOK_FP} AS BIGINT)
                AS expected_tokens
     FROM s CROSS JOIN z
@@ -159,12 +159,12 @@ def q97_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q98: stream-static enrichment join + tumbling aggregate
 @query(
     "q98_stream_enriched_window",
-    """
+    f"""
     SELECT time_bucket(INTERVAL '6 hours', e.ts) AS wstart,
            time_bucket(INTERVAL '6 hours', e.ts) + INTERVAL '6 hours' AS wend,
            c.c_nationkey,
            count(*) AS n,
-           CASE WHEN isnan(CAST((sum(e.value)) AS DOUBLE)) OR abs(CAST((sum(e.value)) AS DOUBLE)) >= 90071992547409.92 THEN CAST((sum(e.value)) AS DOUBLE) ELSE floor(CAST((sum(e.value)) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS sum_value
+           {bfround_sql('sum(e.value)', 2)} AS sum_value
     FROM events e JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY 1, 2, 3
     """,
@@ -194,10 +194,10 @@ def q98_stream_enriched_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q99: per-label embedding centroids (class prototypes)
 @query(
     "q99_label_centroids",
-    """
+    f"""
     WITH e AS (SELECT label, embedding::DOUBLE[] AS v FROM embeddings),
          u AS (SELECT label, i - 1 AS pos,
-                      CAST(CASE WHEN isnan(CAST((v[i] * 1e9) AS DOUBLE)) OR abs(CAST((v[i] * 1e9) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((v[i] * 1e9) AS DOUBLE) ELSE floor(CAST((v[i] * 1e9) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS x_fp
+                      CAST({bfround_sql('v[i] * 1e9', 0)} AS BIGINT) AS x_fp
                FROM e, unnest(generate_series(1, 64)) AS t(i)),
          agg AS (SELECT label, pos, sum(x_fp) AS s, count(*) AS n
                  FROM u GROUP BY 1, 2)
@@ -205,8 +205,8 @@ def q98_stream_enriched_window(spark: SparkSession, sf_dir: str) -> DataFrame:
            -- normalize -0.0 (a tiny negative exact sum rounds to a
            -- NEGATIVE zero here but a positive one in Spark; the sign
            -- of zero is noise, not value)
-           CASE WHEN CASE WHEN isnan(CAST((CAST(s AS DOUBLE) / 1e9 / n) AS DOUBLE)) OR abs(CAST((CAST(s AS DOUBLE) / 1e9 / n) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(s AS DOUBLE) / 1e9 / n) AS DOUBLE) ELSE floor(CAST((CAST(s AS DOUBLE) / 1e9 / n) AS DOUBLE) * 1e6 + 0.5) / 1e6 END = 0 THEN 0.0
-                ELSE CASE WHEN isnan(CAST((CAST(s AS DOUBLE) / 1e9 / n) AS DOUBLE)) OR abs(CAST((CAST(s AS DOUBLE) / 1e9 / n) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(s AS DOUBLE) / 1e9 / n) AS DOUBLE) ELSE floor(CAST((CAST(s AS DOUBLE) / 1e9 / n) AS DOUBLE) * 1e6 + 0.5) / 1e6 END END AS centroid
+           CASE WHEN {bfround_sql('CAST(s AS DOUBLE) / 1e9 / n', 6)} = 0 THEN 0.0
+                ELSE {bfround_sql('CAST(s AS DOUBLE) / 1e9 / n', 6)} END AS centroid
     FROM agg
     """,
 )
@@ -306,9 +306,9 @@ def q101_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q102: approximate quantiles with a value-level tolerance gate
 @query(
     "q102_approx_quantiles",
-    """
+    f"""
     SELECT source,
-           CASE WHEN isnan(CAST((quantile_cont(n_chars, 0.50)) AS DOUBLE)) OR abs(CAST((quantile_cont(n_chars, 0.50)) AS DOUBLE)) >= 900719925474.0992 THEN CAST((quantile_cont(n_chars, 0.50)) AS DOUBLE) ELSE floor(CAST((quantile_cont(n_chars, 0.50)) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS exact_q50,
+           {bfround_sql('quantile_cont(n_chars, 0.50)', 4)} AS exact_q50,
            true AS within_tol
     FROM documents GROUP BY source
     """,

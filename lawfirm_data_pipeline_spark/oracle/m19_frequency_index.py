@@ -33,7 +33,7 @@ from ..operators.sketch import heavy_hitters
 from ..queries import query
 from ..streaming.stateful import running_user_totals
 from ..streaming.windows import run_stream_to_table
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
 _TOKS = "list_filter(str_split_regex(trim(text), '\\s+'), t -> t != '')"
@@ -95,25 +95,19 @@ def q107_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q108: exact embedding covariance (upper triangle, fixed point)
 @query(
     "q108_embedding_covariance",
-    """
+    f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          u AS (SELECT vec_id, i - 1 AS pos,
-                      CAST(CASE WHEN isnan(CAST((v[i] * 1e6) AS DOUBLE)) OR abs(CAST((v[i] * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((v[i] * 1e6) AS DOUBLE) ELSE floor(CAST((v[i] * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS x
+                      CAST({bfround_sql('v[i] * 1e6', 0)} AS BIGINT) AS x
                FROM e, unnest(generate_series(1, 64)) AS t(i)),
          m AS (SELECT pos, sum(x) AS s, count(*) AS n FROM u GROUP BY pos),
          xy AS (SELECT a.pos AS i, b.pos AS j, sum(a.x * b.x) AS s_xy
                 FROM u a JOIN u b ON a.vec_id = b.vec_id AND a.pos <= b.pos
                 GROUP BY 1, 2)
     SELECT xy.i, xy.j, mi.n,
-           CASE WHEN isnan(CAST((CAST(s_xy AS DOUBLE) / 1e12 / mi.n
+           {bfround_sql('''CAST(s_xy AS DOUBLE) / 1e12 / mi.n
                  - (CAST(mi.s AS DOUBLE) / 1e6 / mi.n)
-                 * (CAST(mj.s AS DOUBLE) / 1e6 / mi.n)) AS DOUBLE)) OR abs(CAST((CAST(s_xy AS DOUBLE) / 1e12 / mi.n
-                 - (CAST(mi.s AS DOUBLE) / 1e6 / mi.n)
-                 * (CAST(mj.s AS DOUBLE) / 1e6 / mi.n)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(s_xy AS DOUBLE) / 1e12 / mi.n
-                 - (CAST(mi.s AS DOUBLE) / 1e6 / mi.n)
-                 * (CAST(mj.s AS DOUBLE) / 1e6 / mi.n)) AS DOUBLE) ELSE floor(CAST((CAST(s_xy AS DOUBLE) / 1e12 / mi.n
-                 - (CAST(mi.s AS DOUBLE) / 1e6 / mi.n)
-                 * (CAST(mj.s AS DOUBLE) / 1e6 / mi.n)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END + 0.0 AS cov
+                 * (CAST(mj.s AS DOUBLE) / 1e6 / mi.n)''', 6)} + 0.0 AS cov
     FROM xy JOIN m mi ON xy.i = mi.pos JOIN m mj ON xy.j = mj.pos
     """,
 )
@@ -152,14 +146,11 @@ def q109_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q110: transformWithStateInPandas running totals (Spark 4 API)
 @query(
     "q110_stateful_totals",
-    """
+    f"""
     SELECT user_id,
            CAST(count(*) AS BIGINT) AS n_events,
-           CASE WHEN isnan(CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE)
-                 / 100) AS DOUBLE)) OR abs(CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE)
-                 / 100) AS DOUBLE)) >= 90071992547409.92 THEN CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE)
-                 / 100) AS DOUBLE) ELSE floor(CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE)
-                 / 100) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS total_value,
+           {bfround_sql(f'''CAST(sum(CAST({bfround_sql('value * 100', 0)} AS BIGINT)) AS DOUBLE)
+                 / 100''', 2)} AS total_value,
            max(ts) AS last_ts
     FROM events GROUP BY user_id
     """,

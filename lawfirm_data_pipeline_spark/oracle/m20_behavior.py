@@ -18,6 +18,7 @@ from ..io import load_table
 from ..operators.behavior import cohort_retention, funnel_steps
 from ..operators.text import pmi_bigrams
 from ..queries import query
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
 
@@ -25,7 +26,7 @@ _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
 # -- q111: strict-order funnel view -> click -> purchase
 @query(
     "q111_event_funnel",
-    """
+    f"""
     WITH f AS (SELECT user_id, ts, event_type FROM events
                WHERE event_type IN ('view', 'click', 'purchase')),
          w0 AS (SELECT *, min(CASE WHEN event_type = 'view' THEN ts END)
@@ -40,11 +41,11 @@ _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
                       CAST(count(t1) AS BIGINT) AS n1,
                       CAST(count(t2) AS BIGINT) AS n2 FROM pu)
     SELECT 0 AS step_idx, 'view' AS step, n0 AS n_users,
-           CASE WHEN isnan(CAST((CAST(n0 AS DOUBLE) / n0) AS DOUBLE)) OR abs(CAST((CAST(n0 AS DOUBLE) / n0) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n0 AS DOUBLE) / n0) AS DOUBLE) ELSE floor(CAST((CAST(n0 AS DOUBLE) / n0) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS conversion FROM c
+           {bfround_sql('CAST(n0 AS DOUBLE) / n0', 6)} AS conversion FROM c
     UNION ALL
-    SELECT 1, 'click', n1, CASE WHEN isnan(CAST((CAST(n1 AS DOUBLE) / n0) AS DOUBLE)) OR abs(CAST((CAST(n1 AS DOUBLE) / n0) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n1 AS DOUBLE) / n0) AS DOUBLE) ELSE floor(CAST((CAST(n1 AS DOUBLE) / n0) AS DOUBLE) * 1e6 + 0.5) / 1e6 END FROM c
+    SELECT 1, 'click', n1, {bfround_sql('CAST(n1 AS DOUBLE) / n0', 6)} FROM c
     UNION ALL
-    SELECT 2, 'purchase', n2, CASE WHEN isnan(CAST((CAST(n2 AS DOUBLE) / n0) AS DOUBLE)) OR abs(CAST((CAST(n2 AS DOUBLE) / n0) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n2 AS DOUBLE) / n0) AS DOUBLE) ELSE floor(CAST((CAST(n2 AS DOUBLE) / n0) AS DOUBLE) * 1e6 + 0.5) / 1e6 END FROM c
+    SELECT 2, 'purchase', n2, {bfround_sql('CAST(n2 AS DOUBLE) / n0', 6)} FROM c
     """,
 )
 def q111_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,11 +93,8 @@ def q112_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
          l AS (SELECT w1, CAST(sum(c_ab) AS BIGINT) AS c_l FROM big GROUP BY w1),
          r AS (SELECT w2, CAST(sum(c_ab) AS BIGINT) AS c_r FROM big GROUP BY w2)
     SELECT big.w1, big.w2, c_ab,
-           CASE WHEN isnan(CAST((ln(CAST(c_ab AS DOUBLE) * CAST(n AS DOUBLE)
-                    / (CAST(c_l AS DOUBLE) * CAST(c_r AS DOUBLE)))) AS DOUBLE)) OR abs(CAST((ln(CAST(c_ab AS DOUBLE) * CAST(n AS DOUBLE)
-                    / (CAST(c_l AS DOUBLE) * CAST(c_r AS DOUBLE)))) AS DOUBLE)) >= 9007199254.740992 THEN CAST((ln(CAST(c_ab AS DOUBLE) * CAST(n AS DOUBLE)
-                    / (CAST(c_l AS DOUBLE) * CAST(c_r AS DOUBLE)))) AS DOUBLE) ELSE floor(CAST((ln(CAST(c_ab AS DOUBLE) * CAST(n AS DOUBLE)
-                    / (CAST(c_l AS DOUBLE) * CAST(c_r AS DOUBLE)))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END + 0.0 AS pmi
+           {bfround_sql('''ln(CAST(c_ab AS DOUBLE) * CAST(n AS DOUBLE)
+                    / (CAST(c_l AS DOUBLE) * CAST(c_r AS DOUBLE)))''', 6)} + 0.0 AS pmi
     FROM big JOIN l USING (w1) JOIN r USING (w2) CROSS JOIN tot
     WHERE c_ab >= 25
     ORDER BY pmi DESC, w1, w2 LIMIT 20

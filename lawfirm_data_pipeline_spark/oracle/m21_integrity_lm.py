@@ -30,7 +30,7 @@ from ..operators.constraints import (
 from ..operators.curation import winsorized_stats
 from ..operators.text import bigram_logprob_scores
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
 
@@ -38,10 +38,10 @@ _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
 # -- q114: local-supplier revenue per nation (TPC-H Q5 shape)
 @query(
     "q114_supply_chain",
-    """
+    f"""
     WITH rev AS (
         SELECT n.n_name,
-               CAST(CASE WHEN isnan(CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE)) OR abs(CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE) ELSE floor(CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+               CAST({bfround_sql('l.l_extendedprice * (1 - l.l_discount) * 100', 0)}
                     AS BIGINT) AS fp
         FROM lineitem l
         JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -55,7 +55,7 @@ _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
           AND o.o_orderdate < TIMESTAMP '1997-01-01'
     )
     SELECT n_name, CAST(count(*) AS BIGINT) AS n_items,
-           CASE WHEN isnan(CAST((CAST(sum(fp) AS DOUBLE) / 100) AS DOUBLE)) OR abs(CAST((CAST(sum(fp) AS DOUBLE) / 100) AS DOUBLE)) >= 90071992547409.92 THEN CAST((CAST(sum(fp) AS DOUBLE) / 100) AS DOUBLE) ELSE floor(CAST((CAST(sum(fp) AS DOUBLE) / 100) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS revenue
+           {bfround_sql('CAST(sum(fp) AS DOUBLE) / 100', 2)} AS revenue
     FROM rev GROUP BY n_name
     """,
 )
@@ -158,10 +158,10 @@ def q115_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q116: per-type winsorized value stats on events
 @query(
     "q116_winsorized_stats",
-    """
+    f"""
     WITH b AS (SELECT event_type,
-                      CASE WHEN isnan(CAST((quantile_cont(value, 0.01) * 1e6) AS DOUBLE)) OR abs(CAST((quantile_cont(value, 0.01) * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((quantile_cont(value, 0.01) * 1e6) AS DOUBLE) ELSE floor(CAST((quantile_cont(value, 0.01) * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6 AS lo,
-                      CASE WHEN isnan(CAST((quantile_cont(value, 0.99) * 1e6) AS DOUBLE)) OR abs(CAST((quantile_cont(value, 0.99) * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((quantile_cont(value, 0.99) * 1e6) AS DOUBLE) ELSE floor(CAST((quantile_cont(value, 0.99) * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6 AS hi
+                      {bfround_sql('quantile_cont(value, 0.01) * 1e6', 0)} / 1e6 AS lo,
+                      {bfround_sql('quantile_cont(value, 0.99) * 1e6', 0)} / 1e6 AS hi
                FROM events GROUP BY event_type),
          c AS (SELECT e.event_type, lo, hi,
                       least(greatest(value, lo), hi) AS v,
@@ -170,15 +170,12 @@ def q115_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM events e JOIN b USING (event_type))
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n,
-           CASE WHEN isnan(CAST((max(lo)) AS DOUBLE)) OR abs(CAST((max(lo)) AS DOUBLE)) >= 900719925474.0992 THEN CAST((max(lo)) AS DOUBLE) ELSE floor(CAST((max(lo)) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS p_low,
-           CASE WHEN isnan(CAST((max(hi)) AS DOUBLE)) OR abs(CAST((max(hi)) AS DOUBLE)) >= 900719925474.0992 THEN CAST((max(hi)) AS DOUBLE) ELSE floor(CAST((max(hi)) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS p_high,
+           {bfround_sql('max(lo)', 4)} AS p_low,
+           {bfround_sql('max(hi)', 4)} AS p_high,
            CAST(sum(low) AS BIGINT) AS n_clipped_low,
            CAST(sum(high) AS BIGINT) AS n_clipped_high,
-           CASE WHEN isnan(CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((v * 1e6) AS DOUBLE)) OR abs(CAST((v * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((v * 1e6) AS DOUBLE) ELSE floor(CAST((v * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE)
-                 / 1e6 / count(*)) AS DOUBLE)) OR abs(CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((v * 1e6) AS DOUBLE)) OR abs(CAST((v * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((v * 1e6) AS DOUBLE) ELSE floor(CAST((v * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE)
-                 / 1e6 / count(*)) AS DOUBLE)) >= 900719925474.0992 THEN CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((v * 1e6) AS DOUBLE)) OR abs(CAST((v * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((v * 1e6) AS DOUBLE) ELSE floor(CAST((v * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE)
-                 / 1e6 / count(*)) AS DOUBLE) ELSE floor(CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((v * 1e6) AS DOUBLE)) OR abs(CAST((v * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((v * 1e6) AS DOUBLE) ELSE floor(CAST((v * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE)
-                 / 1e6 / count(*)) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS clipped_mean
+           {bfround_sql(f'''CAST(sum(CAST({bfround_sql('v * 1e6', 0)} AS BIGINT)) AS DOUBLE)
+                 / 1e6 / count(*)''', 4)} AS clipped_mean
     FROM c GROUP BY event_type
     """,
 )
@@ -206,18 +203,15 @@ def q116_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
          cl AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM cb GROUP BY 1),
          v AS (SELECT CAST(count(DISTINCT w2) AS BIGINT) AS v FROM cb),
          lp AS (SELECT w1, w2,
-                       CAST(CASE WHEN isnan(CAST((ln(CAST(c12 + 1 AS DOUBLE)
-                                     / CAST(c1 + v AS DOUBLE)) * 1e9) AS DOUBLE)) OR abs(CAST((ln(CAST(c12 + 1 AS DOUBLE)
-                                     / CAST(c1 + v AS DOUBLE)) * 1e9) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((ln(CAST(c12 + 1 AS DOUBLE)
-                                     / CAST(c1 + v AS DOUBLE)) * 1e9) AS DOUBLE) ELSE floor(CAST((ln(CAST(c12 + 1 AS DOUBLE)
-                                     / CAST(c1 + v AS DOUBLE)) * 1e9) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
+                       CAST({bfround_sql('''ln(CAST(c12 + 1 AS DOUBLE)
+                                     / CAST(c1 + v AS DOUBLE)) * 1e9''', 0)} AS BIGINT)
                        AS lp_fp
                 FROM cb JOIN cl USING (w1) CROSS JOIN v),
          doc AS (SELECT doc_id, sum(cnt * lp_fp) AS s,
                         CAST(sum(cnt) AS BIGINT) AS nbig
                  FROM dbc JOIN lp USING (w1, w2) GROUP BY doc_id)
     SELECT doc_id, nbig,
-           CASE WHEN isnan(CAST((CAST(s AS DOUBLE) / 1e9 / nbig) AS DOUBLE)) OR abs(CAST((CAST(s AS DOUBLE) / 1e9 / nbig) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(s AS DOUBLE) / 1e9 / nbig) AS DOUBLE) ELSE floor(CAST((CAST(s AS DOUBLE) / 1e9 / nbig) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS avg_bigram_logp
+           {bfround_sql('CAST(s AS DOUBLE) / 1e9 / nbig', 6)} AS avg_bigram_logp
     FROM doc
     """,
 )

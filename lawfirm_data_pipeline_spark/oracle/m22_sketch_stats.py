@@ -24,6 +24,7 @@ from ..operators.sampling import weighted_reservoir_sample
 from ..operators.sketch import cms_frequency_audit
 from ..operators.stats import column_correlations
 from ..queries import query
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
 
@@ -52,17 +53,11 @@ def q118_cms_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q119: exact-k weighted reservoir sample (A-ES, hash-derandomized)
 @query(
     "q119_weighted_reservoir",
-    """
+    f"""
     SELECT doc_id, n_chars,
-           CASE WHEN isnan(CAST((ln(((('0x' || substring(md5('res' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+           {bfround_sql('''ln(((('0x' || substring(md5('res' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
                      + 1) / 4294967296.0))
-                 / CAST(n_chars AS DOUBLE)) AS DOUBLE)) OR abs(CAST((ln(((('0x' || substring(md5('res' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                     + 1) / 4294967296.0))
-                 / CAST(n_chars AS DOUBLE)) AS DOUBLE)) >= 9007.199254740992 THEN CAST((ln(((('0x' || substring(md5('res' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                     + 1) / 4294967296.0))
-                 / CAST(n_chars AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((ln(((('0x' || substring(md5('res' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                     + 1) / 4294967296.0))
-                 / CAST(n_chars AS DOUBLE)) AS DOUBLE) * 1e12 + 0.5) / 1e12 END AS sel_key
+                 / CAST(n_chars AS DOUBLE)''', 12)} AS sel_key
     FROM documents
     ORDER BY sel_key DESC, doc_id LIMIT 50
     """,
@@ -77,25 +72,20 @@ def q119_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_reservoir_sample(docs, 50, "doc_id", "n_chars", salt="res")
 
 
-_Q = "CAST(CASE WHEN isnan(CAST((l_quantity * 100) AS DOUBLE)) OR abs(CAST((l_quantity * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l_quantity * 100) AS DOUBLE) ELSE floor(CAST((l_quantity * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)"
-_P = "CAST(CASE WHEN isnan(CAST((l_extendedprice * 100) AS DOUBLE)) OR abs(CAST((l_extendedprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l_extendedprice * 100) AS DOUBLE) ELSE floor(CAST((l_extendedprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)"
-_D = "CAST(CASE WHEN isnan(CAST((l_discount * 100) AS DOUBLE)) OR abs(CAST((l_discount * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l_discount * 100) AS DOUBLE) ELSE floor(CAST((l_discount * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)"
-_T = "CAST(CASE WHEN isnan(CAST((l_tax * 100) AS DOUBLE)) OR abs(CAST((l_tax * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l_tax * 100) AS DOUBLE) ELSE floor(CAST((l_tax * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)"
+_Q = f"CAST({bfround_sql('l_quantity * 100', 0)} AS BIGINT)"
+_P = f"CAST({bfround_sql('l_extendedprice * 100', 0)} AS BIGINT)"
+_D = f"CAST({bfround_sql('l_discount * 100', 0)} AS BIGINT)"
+_T = f"CAST({bfround_sql('l_tax * 100', 0)} AS BIGINT)"
 
 
 def _corr_sql(x: str, y: str, sx: str, sy: str, sxx: str, syy: str, sxy: str) -> str:
     n = "CAST(n AS DOUBLE)"
+    corr = f"""({n} * CAST({sxy} AS DOUBLE) - CAST({sx} AS DOUBLE) * CAST({sy} AS DOUBLE))
+                 / sqrt(({n} * CAST({sxx} AS DOUBLE) - CAST({sx} AS DOUBLE) * CAST({sx} AS DOUBLE))
+                        * ({n} * CAST({syy} AS DOUBLE) - CAST({sy} AS DOUBLE) * CAST({sy} AS DOUBLE)))"""
     return f"""
     SELECT '{x}' AS col_x, '{y}' AS col_y, n,
-           CASE WHEN isnan(CAST((({n} * CAST({sxy} AS DOUBLE) - CAST({sx} AS DOUBLE) * CAST({sy} AS DOUBLE))
-                 / sqrt(({n} * CAST({sxx} AS DOUBLE) - CAST({sx} AS DOUBLE) * CAST({sx} AS DOUBLE))
-                        * ({n} * CAST({syy} AS DOUBLE) - CAST({sy} AS DOUBLE) * CAST({sy} AS DOUBLE)))) AS DOUBLE)) OR abs(CAST((({n} * CAST({sxy} AS DOUBLE) - CAST({sx} AS DOUBLE) * CAST({sy} AS DOUBLE))
-                 / sqrt(({n} * CAST({sxx} AS DOUBLE) - CAST({sx} AS DOUBLE) * CAST({sx} AS DOUBLE))
-                        * ({n} * CAST({syy} AS DOUBLE) - CAST({sy} AS DOUBLE) * CAST({sy} AS DOUBLE)))) AS DOUBLE)) >= 9007199254.740992 THEN CAST((({n} * CAST({sxy} AS DOUBLE) - CAST({sx} AS DOUBLE) * CAST({sy} AS DOUBLE))
-                 / sqrt(({n} * CAST({sxx} AS DOUBLE) - CAST({sx} AS DOUBLE) * CAST({sx} AS DOUBLE))
-                        * ({n} * CAST({syy} AS DOUBLE) - CAST({sy} AS DOUBLE) * CAST({sy} AS DOUBLE)))) AS DOUBLE) ELSE floor(CAST((({n} * CAST({sxy} AS DOUBLE) - CAST({sx} AS DOUBLE) * CAST({sy} AS DOUBLE))
-                 / sqrt(({n} * CAST({sxx} AS DOUBLE) - CAST({sx} AS DOUBLE) * CAST({sx} AS DOUBLE))
-                        * ({n} * CAST({syy} AS DOUBLE) - CAST({sy} AS DOUBLE) * CAST({sy} AS DOUBLE)))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END + 0.0 AS corr
+           {bfround_sql(corr, 6)} + 0.0 AS corr
     FROM a"""
 
 

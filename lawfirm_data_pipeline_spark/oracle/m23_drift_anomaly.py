@@ -28,6 +28,7 @@ from ._shared import (
     SHINGLES_SQL as _SHINGLES,
     planted_corpus as _planted_corpus,
 )
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
 
@@ -35,7 +36,7 @@ _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
 # -- q121: rolling-baseline hourly anomaly detection
 @query(
     "q121_hourly_anomalies",
-    """
+    f"""
     WITH hourly AS (SELECT event_type AS etype, date_trunc('hour', ts) AS bucket,
                            CAST(count(*) AS BIGINT) AS n
                     FROM events GROUP BY 1, 2),
@@ -49,19 +50,10 @@ _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
          z AS (SELECT etype, bucket, n,
                       (CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / m)
                       / (m - 1) AS var,
-                      CASE WHEN isnan(CAST(((CAST(n AS DOUBLE) - CAST(s AS DOUBLE) / m)
+                      {bfround_sql('''(CAST(n AS DOUBLE) - CAST(s AS DOUBLE) / m)
                             / sqrt((CAST(ss AS DOUBLE)
                                     - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / m)
-                                   / (m - 1))) AS DOUBLE)) OR abs(CAST(((CAST(n AS DOUBLE) - CAST(s AS DOUBLE) / m)
-                            / sqrt((CAST(ss AS DOUBLE)
-                                    - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / m)
-                                   / (m - 1))) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(n AS DOUBLE) - CAST(s AS DOUBLE) / m)
-                            / sqrt((CAST(ss AS DOUBLE)
-                                    - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / m)
-                                   / (m - 1))) AS DOUBLE) ELSE floor(CAST(((CAST(n AS DOUBLE) - CAST(s AS DOUBLE) / m)
-                            / sqrt((CAST(ss AS DOUBLE)
-                                    - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / m)
-                                   / (m - 1))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END + 0.0 AS z
+                                   / (m - 1))''', 6)} + 0.0 AS z
                FROM w WHERE m >= 12)
     SELECT etype, bucket, n, z FROM z WHERE var > 0 AND abs(z) >= 2
     """,
@@ -90,9 +82,9 @@ def q121_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
          directed AS (SELECT da AS ida, db AS idb, common FROM common
                       UNION ALL
                       SELECT db AS ida, da AS idb, common FROM common)
-    SELECT ida, idb, CASE WHEN isnan(CAST((CAST(common AS DOUBLE) / sz) AS DOUBLE)) OR abs(CAST((CAST(common AS DOUBLE) / sz) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(common AS DOUBLE) / sz) AS DOUBLE) ELSE floor(CAST((CAST(common AS DOUBLE) / sz) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS containment
+    SELECT ida, idb, {bfround_sql('CAST(common AS DOUBLE) / sz', 6)} AS containment
     FROM directed JOIN sizes ON sizes.did = directed.ida
-    WHERE sz >= 5 AND CASE WHEN isnan(CAST((CAST(common AS DOUBLE) / sz) AS DOUBLE)) OR abs(CAST((CAST(common AS DOUBLE) / sz) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(common AS DOUBLE) / sz) AS DOUBLE) ELSE floor(CAST((CAST(common AS DOUBLE) / sz) AS DOUBLE) * 1e6 + 0.5) / 1e6 END >= 0.9
+    WHERE sz >= 5 AND {bfround_sql('CAST(common AS DOUBLE) / sz', 6)} >= 0.9
     """,
 )
 def q122_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,22 +114,13 @@ def q122_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                         CAST(count(*) AS BIGINT) AS v
                  FROM merged GROUP BY src),
          c AS (SELECT m.src,
-                      CAST(CASE WHEN isnan(CAST(((CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
+                      CAST({bfround_sql('''(CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
                                  * ln((CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
                                       / (CAST(cb + 1 AS DOUBLE) / CAST(nb + v AS DOUBLE)))
-                                 * 1e12) AS DOUBLE)) OR abs(CAST(((CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
-                                 * ln((CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
-                                      / (CAST(cb + 1 AS DOUBLE) / CAST(nb + v AS DOUBLE)))
-                                 * 1e12) AS DOUBLE)) >= 9007199254740992.0 THEN CAST(((CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
-                                 * ln((CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
-                                      / (CAST(cb + 1 AS DOUBLE) / CAST(nb + v AS DOUBLE)))
-                                 * 1e12) AS DOUBLE) ELSE floor(CAST(((CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
-                                 * ln((CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
-                                      / (CAST(cb + 1 AS DOUBLE) / CAST(nb + v AS DOUBLE)))
-                                 * 1e12) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS k_fp
+                                 * 1e12''', 0)} AS BIGINT) AS k_fp
                FROM merged m JOIN per USING (src))
     SELECT c.src AS source, max(per.v) AS n_terms,
-           CASE WHEN isnan(CAST((CAST(sum(k_fp) AS DOUBLE) / 1e12) AS DOUBLE)) OR abs(CAST((CAST(sum(k_fp) AS DOUBLE) / 1e12) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(k_fp) AS DOUBLE) / 1e12) AS DOUBLE) ELSE floor(CAST((CAST(sum(k_fp) AS DOUBLE) / 1e12) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS kl
+           {bfround_sql('CAST(sum(k_fp) AS DOUBLE) / 1e12', 6)} AS kl
     FROM c JOIN per ON per.src = c.src
     GROUP BY c.src
     """,

@@ -22,6 +22,7 @@ from ..io import load_table
 from ..operators.sampling import epoch_shuffle
 from ..operators.stats import pca_explained_variance
 from ..queries import query
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 
 # -- q124: deterministic per-epoch training order
@@ -53,26 +54,20 @@ def q124_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q125: PCA explained-variance audit over q108's covariance
 @query(
     "q125_pca_audit",
-    """
+    f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          u AS (SELECT vec_id, i - 1 AS pos,
-                      CAST(CASE WHEN isnan(CAST((v[i] * 1e6) AS DOUBLE)) OR abs(CAST((v[i] * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((v[i] * 1e6) AS DOUBLE) ELSE floor(CAST((v[i] * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS x
+                      CAST({bfround_sql('v[i] * 1e6', 0)} AS BIGINT) AS x
                FROM e, unnest(generate_series(1, 64)) AS t(i)),
          m AS (SELECT pos, sum(x) AS s, sum(x * x) AS sxx, count(*) AS n
                FROM u GROUP BY pos),
          d AS (SELECT pos,
-                      CASE WHEN isnan(CAST((CAST(sxx AS DOUBLE) / 1e12 / n
+                      {bfround_sql('''CAST(sxx AS DOUBLE) / 1e12 / n
                             - (CAST(s AS DOUBLE) / 1e6 / n)
-                            * (CAST(s AS DOUBLE) / 1e6 / n)) AS DOUBLE)) OR abs(CAST((CAST(sxx AS DOUBLE) / 1e12 / n
-                            - (CAST(s AS DOUBLE) / 1e6 / n)
-                            * (CAST(s AS DOUBLE) / 1e6 / n)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sxx AS DOUBLE) / 1e12 / n
-                            - (CAST(s AS DOUBLE) / 1e6 / n)
-                            * (CAST(s AS DOUBLE) / 1e6 / n)) AS DOUBLE) ELSE floor(CAST((CAST(sxx AS DOUBLE) / 1e12 / n
-                            - (CAST(s AS DOUBLE) / 1e6 / n)
-                            * (CAST(s AS DOUBLE) / 1e6 / n)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END + 0.0 AS var
+                            * (CAST(s AS DOUBLE) / 1e6 / n)''', 6)} + 0.0 AS var
                FROM m)
     SELECT 64 AS n_components,
-           CASE WHEN isnan(CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((var * 1e6) AS DOUBLE)) OR abs(CAST((var * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((var * 1e6) AS DOUBLE) ELSE floor(CAST((var * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE) / 1e6) AS DOUBLE)) OR abs(CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((var * 1e6) AS DOUBLE)) OR abs(CAST((var * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((var * 1e6) AS DOUBLE) ELSE floor(CAST((var * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE) / 1e6) AS DOUBLE)) >= 900719925474.0992 THEN CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((var * 1e6) AS DOUBLE)) OR abs(CAST((var * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((var * 1e6) AS DOUBLE) ELSE floor(CAST((var * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE) / 1e6) AS DOUBLE) ELSE floor(CAST((CAST(sum(CAST(CASE WHEN isnan(CAST((var * 1e6) AS DOUBLE)) OR abs(CAST((var * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((var * 1e6) AS DOUBLE) ELSE floor(CAST((var * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS DOUBLE) / 1e6) AS DOUBLE) * 1e4 + 0.5) / 1e4 END
+           {bfround_sql(f'CAST(sum(CAST({bfround_sql("var * 1e6", 0)} AS BIGINT)) AS DOUBLE) / 1e6', 4)}
                AS trace,
            TRUE AS trace_matches_eigsum,
            TRUE AS ratios_in_bounds,

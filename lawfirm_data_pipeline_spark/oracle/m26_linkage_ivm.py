@@ -25,9 +25,9 @@ from ..operators.ivm import maintain_group_totals
 from ..operators.linkage import name_variant_pairs
 from ..operators.pareto import skyline_2d
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
-_CENTS = "CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)"
+_CENTS = f"CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT)"
 
 
 # -- q129: blocked edit-distance matching over the name dictionary
@@ -95,9 +95,9 @@ def q130_ivm_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q131: 2-D skyline (min price, max size) without the O(n^2) join
 @query(
     "q131_skyline_parts",
-    """
+    f"""
     WITH t AS (SELECT p_partkey, p_size,
-                      CAST(CASE WHEN isnan(CAST((p_retailprice * 100) AS DOUBLE)) OR abs(CAST((p_retailprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((p_retailprice * 100) AS DOUBLE) ELSE floor(CAST((p_retailprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS c
+                      CAST({bfround_sql('p_retailprice * 100', 0)} AS BIGINT) AS c
                FROM part)
     SELECT p.p_partkey, p.p_size, p.c AS cost_cents
     FROM t p

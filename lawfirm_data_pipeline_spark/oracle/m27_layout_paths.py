@@ -32,6 +32,7 @@ from ._shared import (
     SHINGLES_SQL as _SHINGLES,
     planted_corpus as _planted_corpus,
 )
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 # date-partition pruning predicate: mid-March 1997 .. mid-June 1998,
 # as days since epoch (identical constants on both sides)
@@ -50,7 +51,7 @@ _DAY_LO, _DAY_HI = 9935, 10387
                     FROM idx a JOIN idx b ON a.sh = b.sh AND a.did < b.did
                     GROUP BY 1, 2)
     SELECT da AS ida, db AS idb,
-           CASE WHEN isnan(CAST((CAST(c AS DOUBLE) / (sa.sz + sb.sz - c)) AS DOUBLE)) OR abs(CAST((CAST(c AS DOUBLE) / (sa.sz + sb.sz - c)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(c AS DOUBLE) / (sa.sz + sb.sz - c)) AS DOUBLE) ELSE floor(CAST((CAST(c AS DOUBLE) / (sa.sz + sb.sz - c)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS jaccard
+           {bfround_sql('CAST(c AS DOUBLE) / (sa.sz + sb.sz - c)', 6)} AS jaccard
     FROM common JOIN sizes sa ON sa.did = da JOIN sizes sb ON sb.did = db
     WHERE 5 * c >= 4 * (sa.sz + sb.sz - c)
     """,
@@ -133,9 +134,9 @@ def q135_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q136: last-touch attribution within a 7-day window
 @query(
     "q136_attribution",
-    """
+    f"""
     WITH t AS (SELECT user_id, ts, event_id, event_type,
-                      CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents,
+                      CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents,
                       last_value(CASE WHEN event_type != 'purchase'
                                       THEN event_type END IGNORE NULLS)
                         OVER w AS src,

@@ -22,7 +22,7 @@ from ..io import load_table
 from ..operators.stats import chisq_independence, mad_outliers, trend_slopes
 from ..operators.timeseries import max_concurrency, state_intervals
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 # q134's interval build, shared by the concurrency sweep
 _INTERVALS_SQL = """
@@ -73,8 +73,8 @@ def q137_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q138: median/MAD robust outliers on exact cents
 @query(
     "q138_mad_outliers",
-    """
-    WITH t AS (SELECT event_type, CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+    f"""
+    WITH t AS (SELECT event_type, CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents
                FROM events),
          med AS (SELECT event_type, CAST(median(cents) AS DOUBLE) AS med_cents,
                         CAST(count(*) AS BIGINT) AS n
@@ -106,7 +106,7 @@ def q138_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q139: chi-square independence of (source, lang)
 @query(
     "q139_chisq_independence",
-    """
+    f"""
     WITH cells AS (SELECT source AS r, lang AS c, CAST(count(*) AS BIGINT) AS o
                    FROM documents GROUP BY 1, 2),
          rows_ AS (SELECT r, CAST(sum(o) AS BIGINT) AS rn FROM cells GROUP BY r),
@@ -118,30 +118,15 @@ def q138_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
          grid AS (SELECT r, c, rn, cn, COALESCE(o, 0) AS o
                   FROM rows_ CROSS JOIN cols_
                   LEFT JOIN cells USING (r, c)),
-         k AS (SELECT CAST(CASE WHEN isnan(CAST((((CAST(o AS DOUBLE)
+         k AS (SELECT CAST({bfround_sql('''((CAST(o AS DOUBLE)
                                    - CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE))
                                   * (CAST(o AS DOUBLE)
                                      - CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE))
                                   / (CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE)))
-                                 * 1000000000.0) AS DOUBLE)) OR abs(CAST((((CAST(o AS DOUBLE)
-                                   - CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE))
-                                  * (CAST(o AS DOUBLE)
-                                     - CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE))
-                                  / (CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE)))
-                                 * 1000000000.0) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((((CAST(o AS DOUBLE)
-                                   - CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE))
-                                  * (CAST(o AS DOUBLE)
-                                     - CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE))
-                                  / (CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE)))
-                                 * 1000000000.0) AS DOUBLE) ELSE floor(CAST((((CAST(o AS DOUBLE)
-                                   - CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE))
-                                  * (CAST(o AS DOUBLE)
-                                     - CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE))
-                                  / (CAST(rn * cn AS DOUBLE) / CAST(n AS DOUBLE)))
-                                 * 1000000000.0) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS k_fp,
+                                 * 1000000000.0''', 0)} AS BIGINT) AS k_fp,
                       n, nr, nc
                FROM grid, tot)
-    SELECT CASE WHEN isnan(CAST((CAST(sum(k_fp) AS DOUBLE) / 1000000000.0) AS DOUBLE)) OR abs(CAST((CAST(sum(k_fp) AS DOUBLE) / 1000000000.0) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(k_fp) AS DOUBLE) / 1000000000.0) AS DOUBLE) ELSE floor(CAST((CAST(sum(k_fp) AS DOUBLE) / 1000000000.0) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS chi2,
+    SELECT {bfround_sql('CAST(sum(k_fp) AS DOUBLE) / 1000000000.0', 6)} AS chi2,
            CAST((nr - 1) * (nc - 1) AS BIGINT) AS dof,
            n AS n_rows
     FROM k GROUP BY n, nr, nc

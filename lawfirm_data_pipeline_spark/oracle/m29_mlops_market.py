@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..operators.itemsets import association_rules
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _CUTOFF = "2024-01-16"
 
@@ -72,7 +72,7 @@ def q141_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q142: association rules with support/confidence/lift
 @query(
     "q142_association_rules",
-    """
+    f"""
     WITH items AS MATERIALIZED (
             SELECT ok, pk
             FROM (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem)
@@ -88,8 +88,8 @@ def q141_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
                       UNION ALL
                       SELECT y AS ante, x AS cons, sab FROM pairs)
     SELECT ante, cons, sab AS support,
-           CASE WHEN isnan(CAST((CAST(sab AS DOUBLE) / CAST(sa.s AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(sab AS DOUBLE) / CAST(sa.s AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sab AS DOUBLE) / CAST(sa.s AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(sab AS DOUBLE) / CAST(sa.s AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS confidence,
-           CASE WHEN isnan(CAST((CAST(sab * nb.nb AS DOUBLE) / CAST(sa.s * sb.s AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(sab * nb.nb AS DOUBLE) / CAST(sa.s * sb.s AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sab * nb.nb AS DOUBLE) / CAST(sa.s * sb.s AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(sab * nb.nb AS DOUBLE) / CAST(sa.s * sb.s AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS lift
+           {bfround_sql('CAST(sab AS DOUBLE) / CAST(sa.s AS DOUBLE)', 6)} AS confidence,
+           {bfround_sql('CAST(sab * nb.nb AS DOUBLE) / CAST(sa.s * sb.s AS DOUBLE)', 6)} AS lift
     FROM directed
     JOIN sup sa ON sa.pk = directed.ante
     JOIN sup sb ON sb.pk = directed.cons
@@ -110,7 +110,7 @@ def q142_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q143: tokenizer fertility (chars per token) by language
 @query(
     "q143_token_fertility",
-    """
+    f"""
     WITH t AS (SELECT lang, CAST(length(text) AS BIGINT) AS nch,
                       CAST(len(list_filter(str_split_regex(trim(text), '\\s+'),
                                            x -> x != '')) AS BIGINT) AS ntok
@@ -118,7 +118,7 @@ def q142_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(nch) AS BIGINT) AS total_chars,
            CAST(sum(ntok) AS BIGINT) AS total_tokens,
-           CASE WHEN isnan(CAST((CAST(sum(nch) AS DOUBLE) / CAST(sum(ntok) AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(sum(nch) AS DOUBLE) / CAST(sum(ntok) AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(nch) AS DOUBLE) / CAST(sum(ntok) AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(sum(nch) AS DOUBLE) / CAST(sum(ntok) AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(sum(nch) AS DOUBLE) / CAST(sum(ntok) AS DOUBLE)', 6)}
              AS chars_per_token
     FROM t GROUP BY 1
     """,
@@ -145,7 +145,7 @@ def q143_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q144: signup -> first-purchase conversion lag percentiles
 @query(
     "q144_time_to_convert",
-    """
+    f"""
     WITH s AS (SELECT user_id,
                       min(CASE WHEN event_type = 'signup' THEN ts END) AS st
                FROM events GROUP BY 1),
@@ -158,10 +158,8 @@ def q143_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(count(*) AS BIGINT) AS n_converted,
            -- binary-floor 6dp rounding (see q266): engine round()s
            -- split on decimal-half ties of midpoint percentiles
-           floor(quantile_cont(delta_us, 0.5) / 1000000.0
-                 * 1000000.0 + 0.5) / 1000000.0 AS p50_sec,
-           floor(quantile_cont(delta_us, 0.9) / 1000000.0
-                 * 1000000.0 + 0.5) / 1000000.0 AS p90_sec
+           {bfround_sql('quantile_cont(delta_us, 0.5) / 1000000.0', 6)} AS p50_sec,
+           {bfround_sql('quantile_cont(delta_us, 0.9) / 1000000.0', 6)} AS p90_sec
     FROM conv
     """,
 )
@@ -184,9 +182,7 @@ def q144_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     def _sec6(expr: str):
-        # binary-floor 6dp rounding — identical IEEE ops both engines
-        x = F.expr(expr) / 1000000.0
-        return F.floor(x * 1000000.0 + 0.5) / 1000000.0
+        return bfround(F.expr(expr) / 1000000.0, 6)
 
     return conv.agg(
         F.count(F.lit(1)).cast("long").alias("n_converted"),

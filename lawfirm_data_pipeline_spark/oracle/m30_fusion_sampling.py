@@ -23,6 +23,7 @@ from ..operators.similarity import rrf_fusion
 from ..operators.text import bpe_first_merges
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 _COS = (
     "list_dot_product({a}, {b}) / "
@@ -57,7 +58,7 @@ _COS = (
                                            ORDER BY rrf_raw DESC, vec_id)
                           AS fused_rank
                  FROM fused)
-    SELECT query_id, vec_id, CASE WHEN isnan(CAST((rrf_raw) AS DOUBLE)) OR abs(CAST((rrf_raw) AS DOUBLE)) >= 9007199254.740992 THEN CAST((rrf_raw) AS DOUBLE) ELSE floor(CAST((rrf_raw) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS rrf,
+    SELECT query_id, vec_id, {bfround_sql('rrf_raw', 6)} AS rrf,
            CAST(fused_rank AS BIGINT) AS fused_rank
     FROM top WHERE fused_rank <= 10
     """,

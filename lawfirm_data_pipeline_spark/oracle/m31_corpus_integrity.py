@@ -23,7 +23,7 @@ from ..operators.stats import impute_group_median_audit
 from ..operators.text import vocab_stats, zipf_fit
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q148: Zipf slope per source
@@ -38,19 +38,16 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
                                               ORDER BY f DESC, w) AS r
                     FROM freq),
          t AS (SELECT g,
-                      CAST(CASE WHEN isnan(CAST((ln(CAST(r AS DOUBLE)) * 1000000.0) AS DOUBLE)) OR abs(CAST((ln(CAST(r AS DOUBLE)) * 1000000.0) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((ln(CAST(r AS DOUBLE)) * 1000000.0) AS DOUBLE) ELSE floor(CAST((ln(CAST(r AS DOUBLE)) * 1000000.0) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS x,
-                      CAST(CASE WHEN isnan(CAST((ln(CAST(f AS DOUBLE)) * 1000000.0) AS DOUBLE)) OR abs(CAST((ln(CAST(f AS DOUBLE)) * 1000000.0) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((ln(CAST(f AS DOUBLE)) * 1000000.0) AS DOUBLE) ELSE floor(CAST((ln(CAST(f AS DOUBLE)) * 1000000.0) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS y
+                      CAST({bfround_sql('ln(CAST(r AS DOUBLE)) * 1000000.0', 0)} AS BIGINT) AS x,
+                      CAST({bfround_sql('ln(CAST(f AS DOUBLE)) * 1000000.0', 0)} AS BIGINT) AS y
                FROM ranked),
          agg AS (SELECT g, CAST(count(*) AS BIGINT) AS m,
                         sum(x) AS sx, sum(y) AS sy,
                         sum(x * x) AS sx2, sum(x * y) AS sxy
                  FROM t GROUP BY g)
     SELECT g AS source, m AS vocab_size,
-           CASE WHEN isnan(CAST((CAST(m * sxy - sx * sy AS DOUBLE)
-                 / CAST(m * sx2 - sx * sx AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(m * sxy - sx * sy AS DOUBLE)
-                 / CAST(m * sx2 - sx * sx AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(m * sxy - sx * sy AS DOUBLE)
-                 / CAST(m * sx2 - sx * sx AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(m * sxy - sx * sy AS DOUBLE)
-                 / CAST(m * sx2 - sx * sx AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS zipf_slope
+           {bfround_sql('''CAST(m * sxy - sx * sy AS DOUBLE)
+                 / CAST(m * sx2 - sx * sx AS DOUBLE)''', 6)} AS zipf_slope
     FROM agg
     """,
 )
@@ -73,13 +70,10 @@ def q148_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT g AS source, CAST(sum(f) AS BIGINT) AS n_tokens,
            CAST(count(*) AS BIGINT) AS vocab,
            CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-           CASE WHEN isnan(CAST((CAST(count(*) AS DOUBLE) / CAST(sum(f) AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(count(*) AS DOUBLE) / CAST(sum(f) AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(count(*) AS DOUBLE) / CAST(sum(f) AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(count(*) AS DOUBLE) / CAST(sum(f) AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(count(*) AS DOUBLE) / CAST(sum(f) AS DOUBLE)', 6)}
              AS type_token_ratio,
-           CASE WHEN isnan(CAST((CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS hapax_ratio
+           {bfround_sql('''CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS DOUBLE)
+                 / CAST(count(*) AS DOUBLE)''', 6)} AS hapax_ratio
     FROM freq GROUP BY g
     """,
 )
@@ -94,23 +88,23 @@ def q149_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q150: per-group median imputation audit
 @query(
     "q150_impute_audit",
-    """
+    f"""
     WITH t AS (SELECT event_type,
                       CASE WHEN event_id % 13 = 0 THEN NULL
-                           ELSE CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) END AS cents
+                           ELSE CAST({bfround_sql('value * 100', 0)} AS BIGINT) END AS cents
                FROM events),
          med AS (SELECT event_type, CAST(median(cents) AS DOUBLE) AS med_cents
                  FROM t GROUP BY 1),
          j AS (SELECT t.event_type, med.med_cents, t.cents,
                       CASE WHEN t.cents IS NULL
-                           THEN CAST(CASE WHEN isnan(CAST((med.med_cents * 2) AS DOUBLE)) OR abs(CAST((med.med_cents * 2) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((med.med_cents * 2) AS DOUBLE) ELSE floor(CAST((med.med_cents * 2) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
+                           THEN CAST({bfround_sql('med.med_cents * 2', 0)} AS BIGINT)
                            ELSE t.cents * 2 END AS half
                FROM t JOIN med USING (event_type))
     SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
            CAST(sum(CASE WHEN cents IS NULL THEN 1 ELSE 0 END) AS BIGINT)
              AS n_imputed,
            med_cents,
-           CASE WHEN isnan(CAST(((CAST(sum(half) AS DOUBLE) / 2.0) / CAST(count(*) AS DOUBLE)) AS DOUBLE)) OR abs(CAST(((CAST(sum(half) AS DOUBLE) / 2.0) / CAST(count(*) AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(sum(half) AS DOUBLE) / 2.0) / CAST(count(*) AS DOUBLE)) AS DOUBLE) ELSE floor(CAST(((CAST(sum(half) AS DOUBLE) / 2.0) / CAST(count(*) AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('(CAST(sum(half) AS DOUBLE) / 2.0) / CAST(count(*) AS DOUBLE)', 6)}
              AS mean_cents_after
     FROM j GROUP BY event_type, med_cents
     """,

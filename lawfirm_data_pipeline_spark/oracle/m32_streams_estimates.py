@@ -24,10 +24,10 @@ from ..operators.graph_metrics import bfs_distances, copurchase_edges, undirect
 from ..pin import pin
 from ..queries import query
 from ..streaming.windows import run_stream_to_table
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _CUTOFF = "2024-01-16"
-_CENTS = "CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)"
+_CENTS = f"CAST({bfround_sql('value * 100', 0)} AS BIGINT)"
 
 
 # -- q152: streaming ingest deduplicated against a static history
@@ -81,7 +81,7 @@ def q152_stream_history_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q153: histogram join-cardinality estimate vs exact
 @query(
     "q153_join_cardinality",
-    """
+    f"""
     WITH ha AS (SELECT user_id % 64 AS bkt, CAST(count(*) AS BIGINT) AS ca,
                        CAST(count(DISTINCT user_id) AS BIGINT) AS da
                 FROM events GROUP BY 1),
@@ -97,11 +97,8 @@ def q152_stream_history_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  JOIN (SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS c
                        FROM orders GROUP BY 1) kb USING (k))
     SELECT est_fp, actual,
-           CASE WHEN isnan(CAST((abs(CAST(est_fp AS DOUBLE) / 1000000.0
-                     - CAST(actual AS DOUBLE)) / CAST(actual AS DOUBLE)) AS DOUBLE)) OR abs(CAST((abs(CAST(est_fp AS DOUBLE) / 1000000.0
-                     - CAST(actual AS DOUBLE)) / CAST(actual AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((abs(CAST(est_fp AS DOUBLE) / 1000000.0
-                     - CAST(actual AS DOUBLE)) / CAST(actual AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((abs(CAST(est_fp AS DOUBLE) / 1000000.0
-                     - CAST(actual AS DOUBLE)) / CAST(actual AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('''abs(CAST(est_fp AS DOUBLE) / 1000000.0
+                     - CAST(actual AS DOUBLE)) / CAST(actual AS DOUBLE)''', 6)}
              AS rel_err
     FROM est, act
     """,
@@ -192,10 +189,10 @@ def q154_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q155: market share of one region's suppliers, per order year
 @query(
     "q155_market_share",
-    """
+    f"""
     WITH rev AS (SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS yr,
                         r.r_name AS region,
-                        CAST(CASE WHEN isnan(CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE)) OR abs(CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE) ELSE floor(CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+                        CAST({bfround_sql('l.l_extendedprice * (1 - l.l_discount) * 100', 0)}
                              AS BIGINT) AS fp
                  FROM lineitem l
                  JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -205,9 +202,9 @@ def q154_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
          tot AS (SELECT yr, CAST(sum(fp) AS BIGINT) AS total_fp FROM rev GROUP BY 1),
          eu AS (SELECT yr, CAST(sum(fp) AS BIGINT) AS eu_fp FROM rev
                 WHERE region = 'EUROPE' GROUP BY 1)
-    SELECT tot.yr, CASE WHEN isnan(CAST((CAST(COALESCE(eu_fp, 0) AS DOUBLE) / 100) AS DOUBLE)) OR abs(CAST((CAST(COALESCE(eu_fp, 0) AS DOUBLE) / 100) AS DOUBLE)) >= 90071992547409.92 THEN CAST((CAST(COALESCE(eu_fp, 0) AS DOUBLE) / 100) AS DOUBLE) ELSE floor(CAST((CAST(COALESCE(eu_fp, 0) AS DOUBLE) / 100) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS europe_revenue,
-           CASE WHEN isnan(CAST((CAST(total_fp AS DOUBLE) / 100) AS DOUBLE)) OR abs(CAST((CAST(total_fp AS DOUBLE) / 100) AS DOUBLE)) >= 90071992547409.92 THEN CAST((CAST(total_fp AS DOUBLE) / 100) AS DOUBLE) ELSE floor(CAST((CAST(total_fp AS DOUBLE) / 100) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS total_revenue,
-           CASE WHEN isnan(CAST((CAST(COALESCE(eu_fp, 0) AS DOUBLE) / CAST(total_fp AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(COALESCE(eu_fp, 0) AS DOUBLE) / CAST(total_fp AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(COALESCE(eu_fp, 0) AS DOUBLE) / CAST(total_fp AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(COALESCE(eu_fp, 0) AS DOUBLE) / CAST(total_fp AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+    SELECT tot.yr, {bfround_sql('CAST(COALESCE(eu_fp, 0) AS DOUBLE) / 100', 2)} AS europe_revenue,
+           {bfround_sql('CAST(total_fp AS DOUBLE) / 100', 2)} AS total_revenue,
+           {bfround_sql('CAST(COALESCE(eu_fp, 0) AS DOUBLE) / CAST(total_fp AS DOUBLE)', 6)}
              AS share
     FROM tot LEFT JOIN eu ON eu.yr = tot.yr
     """,

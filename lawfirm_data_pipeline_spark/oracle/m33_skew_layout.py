@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..operators.skew import salted_join
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q157: salted join == plain join (skew mitigation is invisible)
@@ -59,8 +59,8 @@ def q157_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q158: time-weighted average value per user timeline
 @query(
     "q158_twap",
-    """
-    WITH seq AS (SELECT user_id, CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents,
+    f"""
+    WITH seq AS (SELECT user_id, CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents,
                         epoch_us(ts) AS t0,
                         epoch_us(lead(ts) OVER (PARTITION BY user_id
                                                 ORDER BY ts, event_id)) AS t1
@@ -68,7 +68,7 @@ def q157_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
          iv AS (SELECT user_id, cents, t1 - t0 AS dt
                 FROM seq WHERE t1 IS NOT NULL)
     SELECT user_id, CAST(count(*) AS BIGINT) AS n_intervals,
-           CASE WHEN isnan(CAST((CAST(sum(cents * dt) AS DOUBLE) / CAST(sum(dt) AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(sum(cents * dt) AS DOUBLE) / CAST(sum(dt) AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(cents * dt) AS DOUBLE) / CAST(sum(dt) AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(sum(cents * dt) AS DOUBLE) / CAST(sum(dt) AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(sum(cents * dt) AS DOUBLE) / CAST(sum(dt) AS DOUBLE)', 6)}
              AS twap_cents
     FROM iv GROUP BY 1
     """,
@@ -102,7 +102,7 @@ def q158_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q159: delta-encoding size estimate for the event timeline
 @query(
     "q159_delta_bits",
-    """
+    f"""
     WITH seq AS (SELECT epoch_us(ts)
                         - epoch_us(lag(ts) OVER (PARTITION BY user_id
                                                  ORDER BY ts, event_id)) AS delta
@@ -113,7 +113,7 @@ def q158_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AS delta_bits
                FROM seq)
     SELECT n_rows, CAST(64 * n_rows AS BIGINT) AS raw_bits, delta_bits,
-           CASE WHEN isnan(CAST((CAST(delta_bits AS DOUBLE) / CAST(64 * n_rows AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(delta_bits AS DOUBLE) / CAST(64 * n_rows AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(delta_bits AS DOUBLE) / CAST(64 * n_rows AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(delta_bits AS DOUBLE) / CAST(64 * n_rows AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(delta_bits AS DOUBLE) / CAST(64 * n_rows AS DOUBLE)', 6)}
              AS ratio
     FROM b
     """,
@@ -151,10 +151,10 @@ def q159_delta_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q160: order-independent per-user digests + collision audit
 @query(
     "q160_group_digests",
-    """
+    f"""
     WITH d AS (SELECT user_id,
                       bit_xor(('0x' || substring(md5(concat_ws(chr(1),
-                          event_type, CAST(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
+                          event_type, CAST(CAST({bfround_sql('value * 100', 0)} AS BIGINT)
                                            AS VARCHAR))), 1, 15))::BIGINT) AS dig
                FROM events GROUP BY 1)
     SELECT CAST(count(*) AS BIGINT) AS n_users,

@@ -21,13 +21,13 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q161: hash-randomized A/B conversion readout with z-statistic
 @query(
     "q161_ab_test",
-    """
+    f"""
     WITH assign AS (SELECT user_id,
                            CASE WHEN ('0x' || substring(md5('exp1:'
                                 || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 = 0
@@ -45,25 +45,13 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
                       max(CASE WHEN variant = 'B' THEN n_converted END) AS cb
                FROM per)
     SELECT na, ca, nb, cb,
-           CASE WHEN isnan(CAST((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS rate_a,
-           CASE WHEN isnan(CAST((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS rate_b,
-           CASE WHEN isnan(CAST(((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
+           {bfround_sql('CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)', 6)} AS rate_a,
+           {bfround_sql('CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)', 6)} AS rate_b,
+           {bfround_sql('''(CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
                   - CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
                  / sqrt((CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE))
                         * (1 - CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE))
-                        * (1.0 / CAST(na AS DOUBLE) + 1.0 / CAST(nb AS DOUBLE)))) AS DOUBLE)) OR abs(CAST(((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-                  - CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
-                 / sqrt((CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE))
-                        * (1 - CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE))
-                        * (1.0 / CAST(na AS DOUBLE) + 1.0 / CAST(nb AS DOUBLE)))) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-                  - CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
-                 / sqrt((CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE))
-                        * (1 - CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE))
-                        * (1.0 / CAST(na AS DOUBLE) + 1.0 / CAST(nb AS DOUBLE)))) AS DOUBLE) ELSE floor(CAST(((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-                  - CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
-                 / sqrt((CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE))
-                        * (1 - CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE))
-                        * (1.0 / CAST(na AS DOUBLE) + 1.0 / CAST(nb AS DOUBLE)))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+                        * (1.0 / CAST(na AS DOUBLE) + 1.0 / CAST(nb AS DOUBLE)))''', 6)}
              AS z_stat
     FROM w
     """,
@@ -117,7 +105,7 @@ def q161_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q162: per-column selectivity profile (index-advisor input)
 @query(
     "q162_selectivity_profile",
-    """
+    f"""
     WITH s AS (SELECT 'o_custkey' AS col,
                       (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n,
                       (SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) FROM orders)
@@ -140,8 +128,8 @@ def q161_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                         FROM (SELECT count(*) AS cnt FROM orders
                               GROUP BY o_orderstatus)) AS top_count)
     SELECT col, n, n_distinct, top_count,
-           CASE WHEN isnan(CAST((CAST(n_distinct AS DOUBLE) / CAST(n AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(n_distinct AS DOUBLE) / CAST(n AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n_distinct AS DOUBLE) / CAST(n AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(n_distinct AS DOUBLE) / CAST(n AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS distinct_ratio,
-           CASE WHEN isnan(CAST((CAST(top_count AS DOUBLE) / CAST(n AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(top_count AS DOUBLE) / CAST(n AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(top_count AS DOUBLE) / CAST(n AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(top_count AS DOUBLE) / CAST(n AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS top_share
+           {bfround_sql('CAST(n_distinct AS DOUBLE) / CAST(n AS DOUBLE)', 6)} AS distinct_ratio,
+           {bfround_sql('CAST(top_count AS DOUBLE) / CAST(n AS DOUBLE)', 6)} AS top_share
     FROM (SELECT * FROM s UNION ALL SELECT * FROM p UNION ALL SELECT * FROM st)
     """,
 )
@@ -193,7 +181,7 @@ def q162_selectivity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q163: 7-day rolling correlation of two event types' daily volumes
 @query(
     "q163_rolling_correlation",
-    """
+    f"""
     WITH daily AS (SELECT CAST(ts AS DATE) AS d,
                           CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
                                AS BIGINT) AS x,
@@ -208,27 +196,12 @@ def q162_selectivity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM daily
                WINDOW win AS (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
     SELECT CAST(d AS TIMESTAMP) AS day,
-           CASE WHEN isnan(CAST(((CAST(m AS DOUBLE) * CAST(sxy AS DOUBLE)
+           {bfround_sql('''(CAST(m AS DOUBLE) * CAST(sxy AS DOUBLE)
                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
                  / sqrt((CAST(m AS DOUBLE) * CAST(sx2 AS DOUBLE)
                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
                         * (CAST(m AS DOUBLE) * CAST(sy2 AS DOUBLE)
-                           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))) AS DOUBLE)) OR abs(CAST(((CAST(m AS DOUBLE) * CAST(sxy AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                 / sqrt((CAST(m AS DOUBLE) * CAST(sx2 AS DOUBLE)
-                         - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                        * (CAST(m AS DOUBLE) * CAST(sy2 AS DOUBLE)
-                           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(m AS DOUBLE) * CAST(sxy AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                 / sqrt((CAST(m AS DOUBLE) * CAST(sx2 AS DOUBLE)
-                         - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                        * (CAST(m AS DOUBLE) * CAST(sy2 AS DOUBLE)
-                           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))) AS DOUBLE) ELSE floor(CAST(((CAST(m AS DOUBLE) * CAST(sxy AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                 / sqrt((CAST(m AS DOUBLE) * CAST(sx2 AS DOUBLE)
-                         - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                        * (CAST(m AS DOUBLE) * CAST(sy2 AS DOUBLE)
-                           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+                           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))''', 6)}
              AS corr7
     FROM w WHERE m = 7
       AND (m * sx2 - sx * sx) > 0 AND (m * sy2 - sy * sy) > 0

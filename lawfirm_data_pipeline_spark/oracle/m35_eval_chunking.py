@@ -21,13 +21,13 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..operators.itemsets import MAX_BASKET
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q164: offline precision@3 of the co-purchase recommender
 @query(
     "q164_rec_precision",
-    """
+    f"""
     WITH items AS (SELECT ok, pk
                    FROM (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem)
                    QUALIFY count(*) OVER (PARTITION BY ok) <= 4096),
@@ -52,7 +52,7 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
     SELECT CAST(count(*) AS BIGINT) AS n_parts_scored,
            CAST(sum(n_rec) AS BIGINT) AS n_recommended,
            CAST(sum(n_hit) AS BIGINT) AS n_hits,
-           CASE WHEN isnan(CAST((CAST(sum(n_hit) AS DOUBLE) / CAST(sum(n_rec) AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(sum(n_hit) AS DOUBLE) / CAST(sum(n_rec) AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(n_hit) AS DOUBLE) / CAST(sum(n_rec) AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(sum(n_hit) AS DOUBLE) / CAST(sum(n_rec) AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(sum(n_hit) AS DOUBLE) / CAST(sum(n_rec) AS DOUBLE)', 6)}
              AS precision_at_3
     FROM hits
     """,
@@ -130,7 +130,7 @@ def q164_rec_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q165: stratified K-fold assignment balance audit
 @query(
     "q165_kfold_balance",
-    """
+    f"""
     WITH f AS (SELECT source,
                       ('0x' || substring(md5('fold:' || CAST(doc_id AS VARCHAR)),
                                          1, 8))::BIGINT % 5 AS fold,
@@ -142,7 +142,7 @@ def q164_rec_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
                         CAST(count(*) AS BIGINT) AS n_folds
                  FROM f GROUP BY 1)
     SELECT source, total, n_folds, max_fold, min_fold,
-           CASE WHEN isnan(CAST((CAST(max_fold AS DOUBLE) / CAST(min_fold AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(max_fold AS DOUBLE) / CAST(min_fold AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(max_fold AS DOUBLE) / CAST(min_fold AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(max_fold AS DOUBLE) / CAST(min_fold AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(max_fold AS DOUBLE) / CAST(min_fold AS DOUBLE)', 6)}
              AS balance_ratio
     FROM per
     """,
@@ -178,7 +178,7 @@ def q165_kfold_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q166: content-defined chunking (rolling-hash boundaries)
 @query(
     "q166_cdc_chunking",
-    """
+    f"""
     WITH t AS (SELECT doc_id, text, length(text) AS len
                FROM documents WHERE doc_id < 100),
          cuts AS (SELECT doc_id, len,
@@ -188,7 +188,7 @@ def q165_kfold_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
                   FROM t)
     SELECT doc_id, CAST(len AS BIGINT) AS n_chars,
            CAST(n_cuts + 1 AS BIGINT) AS n_chunks,
-           CASE WHEN isnan(CAST((CAST(len AS DOUBLE) / CAST(n_cuts + 1 AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(len AS DOUBLE) / CAST(n_cuts + 1 AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(len AS DOUBLE) / CAST(n_cuts + 1 AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(len AS DOUBLE) / CAST(n_cuts + 1 AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(len AS DOUBLE) / CAST(n_cuts + 1 AS DOUBLE)', 6)}
              AS avg_chunk_len
     FROM cuts
     """,

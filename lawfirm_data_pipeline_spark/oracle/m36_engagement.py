@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..pin import pin
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 # decay: half-life 7 days -> lambda = ln(2) / 7 per day; reference
 # point is the fixed end of the generated month (identical constants
@@ -34,18 +34,18 @@ _LAMBDA = 0.0990210257942779  # ln(2)/7
     "q167_decayed_engagement",
     f"""
     WITH t AS (SELECT user_id,
-                      CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents,
+                      CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents,
                       (epoch_us(TIMESTAMP '{_REF}') - epoch_us(ts))
                         / 86400000000.0 AS age_days
                FROM events WHERE event_type = 'purchase'),
          s AS (SELECT user_id,
-                      CAST(CASE WHEN isnan(CAST((cents * exp(-{_LAMBDA} * age_days) * 1000000.0) AS DOUBLE)) OR abs(CAST((cents * exp(-{_LAMBDA} * age_days) * 1000000.0) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((cents * exp(-{_LAMBDA} * age_days) * 1000000.0) AS DOUBLE) ELSE floor(CAST((cents * exp(-{_LAMBDA} * age_days) * 1000000.0) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+                      CAST({bfround_sql(f'cents * exp(-{_LAMBDA} * age_days) * 1000000.0', 0)}
                            AS BIGINT) AS fp,
                       cents
                FROM t)
     SELECT user_id, CAST(count(*) AS BIGINT) AS n_purchases,
            CAST(sum(cents) AS BIGINT) AS raw_cents,
-           CASE WHEN isnan(CAST((CAST(sum(fp) AS DOUBLE) / 1000000.0 / 100.0) AS DOUBLE)) OR abs(CAST((CAST(sum(fp) AS DOUBLE) / 1000000.0 / 100.0) AS DOUBLE)) >= 900719925474.0992 THEN CAST((CAST(sum(fp) AS DOUBLE) / 1000000.0 / 100.0) AS DOUBLE) ELSE floor(CAST((CAST(sum(fp) AS DOUBLE) / 1000000.0 / 100.0) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS decayed_value
+           {bfround_sql('CAST(sum(fp) AS DOUBLE) / 1000000.0 / 100.0', 4)} AS decayed_value
     FROM s GROUP BY 1
     """,
 )
@@ -75,7 +75,7 @@ def q167_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q168: DAU / trailing-7-day WAU stickiness
 @query(
     "q168_stickiness",
-    """
+    f"""
     WITH du AS (SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
          days AS (SELECT DISTINCT d FROM du),
          dau AS (SELECT d, CAST(count(*) AS BIGINT) AS dau FROM du GROUP BY 1),
@@ -84,7 +84,7 @@ def q167_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
                    ON du.d BETWEEN days.d - INTERVAL 6 DAY AND days.d
                  GROUP BY 1)
     SELECT CAST(dau.d AS TIMESTAMP) AS day, dau.dau, wau.wau,
-           CASE WHEN isnan(CAST((CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE)', 6)}
              AS stickiness
     FROM dau JOIN wau ON wau.d = dau.d
     WHERE dau.d >= (SELECT min(d) FROM days) + INTERVAL 6 DAY

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 def _user_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -30,8 +30,8 @@ def _user_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(bfround(F.col("value") * 100).cast("long")).cast("long").alias("total")
     )
 
-_USER_CENTS_SQL = """
-        SELECT user_id, CAST(sum(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+_USER_CENTS_SQL = f"""
+        SELECT user_id, CAST(sum(CAST({bfround_sql('value * 100', 0)} AS BIGINT)) AS BIGINT)
                  AS total
         FROM events WHERE event_type = 'purchase' GROUP BY 1
 """
@@ -40,9 +40,9 @@ _USER_CENTS_SQL = """
 # -- q169: rolling 7-day median of daily purchase volume
 @query(
     "q169_rolling_median",
-    """
+    f"""
     WITH daily AS (SELECT CAST(ts AS DATE) AS d,
-                          CAST(sum(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+                          CAST(sum(CAST({bfround_sql('value * 100', 0)} AS BIGINT)) AS BIGINT)
                             AS cents
                    FROM events WHERE event_type = 'purchase' GROUP BY 1),
          w AS (SELECT d, cents,
@@ -85,7 +85,7 @@ def q169_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH u AS ({_USER_CENTS_SQL}),
          cuts AS (SELECT list_transform(quantile_cont(total,
                       [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]),
-                      x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6) AS c
+                      x -> {bfround_sql('x * 1e6', 0)} / 1e6) AS c
                   FROM u),
          b AS (SELECT u.total,
                       1 + len(list_filter(cuts.c, x -> u.total > x)) AS decile
@@ -106,7 +106,7 @@ def q170_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts = u.agg(
         F.expr(
             "transform(percentile(total, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9)),"
-            " x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6)"
+            f" x -> {bfround_sql('x * 1e6', 0)} / 1e6)"
         ).alias("c")
     )
     b = u.crossJoin(F.broadcast(cuts)).select(
@@ -128,8 +128,8 @@ def q170_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q171_spend_concentration",
     f"""
     WITH u AS ({_USER_CENTS_SQL}),
-         cuts AS (SELECT CASE WHEN isnan(CAST((quantile_cont(total, 0.9) * 1e6) AS DOUBLE)) OR abs(CAST((quantile_cont(total, 0.9) * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((quantile_cont(total, 0.9) * 1e6) AS DOUBLE) ELSE floor(CAST((quantile_cont(total, 0.9) * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6 AS p90,
-                         CASE WHEN isnan(CAST((quantile_cont(total, 0.99) * 1e6) AS DOUBLE)) OR abs(CAST((quantile_cont(total, 0.99) * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((quantile_cont(total, 0.99) * 1e6) AS DOUBLE) ELSE floor(CAST((quantile_cont(total, 0.99) * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6 AS p99
+         cuts AS (SELECT {bfround_sql('quantile_cont(total, 0.9) * 1e6', 0)} / 1e6 AS p90,
+                         {bfround_sql('quantile_cont(total, 0.99) * 1e6', 0)} / 1e6 AS p99
                   FROM u),
          s AS (SELECT CAST(count(*) AS BIGINT) AS n_users,
                       CAST(sum(total) AS BIGINT) AS all_cents,
@@ -139,9 +139,9 @@ def q170_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                            AS BIGINT) AS top1_cents
                FROM u, cuts)
     SELECT n_users, all_cents,
-           CASE WHEN isnan(CAST((CAST(top10_cents AS DOUBLE) / CAST(all_cents AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(top10_cents AS DOUBLE) / CAST(all_cents AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(top10_cents AS DOUBLE) / CAST(all_cents AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(top10_cents AS DOUBLE) / CAST(all_cents AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(top10_cents AS DOUBLE) / CAST(all_cents AS DOUBLE)', 6)}
              AS top10_share,
-           CASE WHEN isnan(CAST((CAST(top1_cents AS DOUBLE) / CAST(all_cents AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(top1_cents AS DOUBLE) / CAST(all_cents AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(top1_cents AS DOUBLE) / CAST(all_cents AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(top1_cents AS DOUBLE) / CAST(all_cents AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(top1_cents AS DOUBLE) / CAST(all_cents AS DOUBLE)', 6)}
              AS top1_share
     FROM s
     """,
@@ -153,8 +153,8 @@ def q171_spend_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums."""
     u = _user_cents(spark, sf_dir)
     cuts = u.agg(
-        F.expr("CASE WHEN isnan(CAST((percentile(total, 0.9) * 1e6) AS DOUBLE)) OR abs(CAST((percentile(total, 0.9) * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((percentile(total, 0.9) * 1e6) AS DOUBLE) ELSE floor(CAST((percentile(total, 0.9) * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6").alias("p90"),
-        F.expr("CASE WHEN isnan(CAST((percentile(total, 0.99) * 1e6) AS DOUBLE)) OR abs(CAST((percentile(total, 0.99) * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((percentile(total, 0.99) * 1e6) AS DOUBLE) ELSE floor(CAST((percentile(total, 0.99) * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6").alias("p99"),
+        F.expr(f"{bfround_sql('percentile(total, 0.9) * 1e6', 0)} / 1e6").alias("p90"),
+        F.expr(f"{bfround_sql('percentile(total, 0.99) * 1e6', 0)} / 1e6").alias("p99"),
     )
     s = u.crossJoin(F.broadcast(cuts)).agg(
         F.count(F.lit(1)).cast("long").alias("n_users"),

@@ -20,9 +20,9 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
-_FP = "CAST(CASE WHEN isnan(CAST((l_extendedprice * (1 - l_discount) * 100) AS DOUBLE)) OR abs(CAST((l_extendedprice * (1 - l_discount) * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l_extendedprice * (1 - l_discount) * 100) AS DOUBLE) ELSE floor(CAST((l_extendedprice * (1 - l_discount) * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)"
+_FP = f"CAST({bfround_sql('l_extendedprice * (1 - l_discount) * 100', 0)} AS BIGINT)"
 
 
 # -- q172: shipping priority (TPC-H Q3 shape), top-10 by revenue
@@ -31,7 +31,7 @@ _FP = "CAST(CASE WHEN isnan(CAST((l_extendedprice * (1 - l_discount) * 100) AS D
     f"""
     SELECT o.o_orderkey, CAST(o.o_orderdate AS TIMESTAMP) AS orderdate,
            o.o_orderpriority,
-           CASE WHEN isnan(CAST((CAST(sum({_FP}) AS DOUBLE) / 100) AS DOUBLE)) OR abs(CAST((CAST(sum({_FP}) AS DOUBLE) / 100) AS DOUBLE)) >= 90071992547409.92 THEN CAST((CAST(sum({_FP}) AS DOUBLE) / 100) AS DOUBLE) ELSE floor(CAST((CAST(sum({_FP}) AS DOUBLE) / 100) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS revenue
+           {bfround_sql(f'CAST(sum({_FP}) AS DOUBLE) / 100', 2)} AS revenue
     FROM customer c
     JOIN orders o ON o.o_custkey = c.c_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -81,7 +81,7 @@ def q172_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q173_returned_items",
     f"""
     SELECT c.c_custkey, c.c_name, n.n_name,
-           CASE WHEN isnan(CAST((CAST(sum({_FP}) AS DOUBLE) / 100) AS DOUBLE)) OR abs(CAST((CAST(sum({_FP}) AS DOUBLE) / 100) AS DOUBLE)) >= 90071992547409.92 THEN CAST((CAST(sum({_FP}) AS DOUBLE) / 100) AS DOUBLE) ELSE floor(CAST((CAST(sum({_FP}) AS DOUBLE) / 100) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS lost_revenue
+           {bfround_sql(f'CAST(sum({_FP}) AS DOUBLE) / 100', 2)} AS lost_revenue
     FROM customer c
     JOIN orders o ON o.o_custkey = c.c_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey

@@ -22,12 +22,15 @@ from ..io import load_table
 from ..pin import pin
 from ..operators.similarity import cosine, _dvec
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _COS = (
     "list_dot_product({a}, {b}) / "
     "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
 )
+# q177: each vector's cosine to its class prototype, in 1e-9 units
+_INTRA_COS_1E9 = f"""{_COS.format(a='e.v', b='cent.c')}
+                                              * 1e9"""
 
 
 # -- q177: intra- vs inter-label cosine separation
@@ -36,7 +39,7 @@ _COS = (
     f"""
     WITH e AS (SELECT label, embedding::DOUBLE[] AS v FROM embeddings),
          u AS (SELECT label, i - 1 AS pos,
-                      CAST(CASE WHEN isnan(CAST((v[i] * 1e9) AS DOUBLE)) OR abs(CAST((v[i] * 1e9) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((v[i] * 1e9) AS DOUBLE) ELSE floor(CAST((v[i] * 1e9) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS x_fp
+                      CAST({bfround_sql('v[i] * 1e9', 0)} AS BIGINT) AS x_fp
                FROM e, unnest(generate_series(1, 64)) AS t(i)),
          agg AS (SELECT label, pos, sum(x_fp) AS s, count(*) AS n
                  FROM u GROUP BY 1, 2),
@@ -45,17 +48,13 @@ _COS = (
                         FROM agg)
                   GROUP BY label),
          intra AS (SELECT e.label, CAST(count(*) AS BIGINT) AS n_vecs,
-                          CAST(sum(CAST(CASE WHEN isnan(CAST(({_COS.format(a='e.v', b='cent.c')}
-                                              * 1e9) AS DOUBLE)) OR abs(CAST(({_COS.format(a='e.v', b='cent.c')}
-                                              * 1e9) AS DOUBLE)) >= 9007199254740992.0 THEN CAST(({_COS.format(a='e.v', b='cent.c')}
-                                              * 1e9) AS DOUBLE) ELSE floor(CAST(({_COS.format(a='e.v', b='cent.c')}
-                                              * 1e9) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT) AS sfp
+                          CAST(sum(CAST({bfround_sql(_INTRA_COS_1E9, 0)} AS BIGINT)) AS BIGINT) AS sfp
                    FROM e JOIN cent USING (label) GROUP BY 1),
          inter AS (SELECT a.label, max({_COS.format(a='a.c', b='b.c')}) AS mx
                    FROM cent a JOIN cent b ON a.label != b.label GROUP BY 1)
     SELECT intra.label, n_vecs,
-           CASE WHEN isnan(CAST((CAST(sfp AS DOUBLE) / n_vecs / 1e9) AS DOUBLE)) OR abs(CAST((CAST(sfp AS DOUBLE) / n_vecs / 1e9) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sfp AS DOUBLE) / n_vecs / 1e9) AS DOUBLE) ELSE floor(CAST((CAST(sfp AS DOUBLE) / n_vecs / 1e9) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS intra_mean_cos,
-           CASE WHEN isnan(CAST((mx) AS DOUBLE)) OR abs(CAST((mx) AS DOUBLE)) >= 9007199254.740992 THEN CAST((mx) AS DOUBLE) ELSE floor(CAST((mx) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS nearest_other_cos
+           {bfround_sql('CAST(sfp AS DOUBLE) / n_vecs / 1e9', 6)} AS intra_mean_cos,
+           {bfround_sql('mx', 6)} AS nearest_other_cos
     FROM intra JOIN inter ON inter.label = intra.label
     """,
 )

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 # per-source epoch weights for the upsampling demo (driver sources are
 # src0..src19): >1 upsamples, fractional parts hash-sample, <1
@@ -45,12 +45,12 @@ def _weight_case_sql() -> str:
                       CAST(floor(wt) AS BIGINT)
                       + CASE WHEN ('0x' || substring(md5('rep:'
                                 || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000
-                             < CAST(CASE WHEN isnan(CAST(((wt - floor(wt)) * 10000) AS DOUBLE)) OR abs(CAST(((wt - floor(wt)) * 10000) AS DOUBLE)) >= 9007199254740992.0 THEN CAST(((wt - floor(wt)) * 10000) AS DOUBLE) ELSE floor(CAST(((wt - floor(wt)) * 10000) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
+                             < CAST({bfround_sql('(wt - floor(wt)) * 10000', 0)} AS BIGINT)
                              THEN 1 ELSE 0 END AS copies
                FROM w)
     SELECT source, CAST(count(*) AS BIGINT) AS n_docs_in,
            CAST(sum(copies) AS BIGINT) AS n_docs_out,
-           CASE WHEN isnan(CAST((CAST(sum(copies) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS DOUBLE)) OR abs(CAST((CAST(sum(copies) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(copies) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS DOUBLE) ELSE floor(CAST((CAST(sum(copies) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(sum(copies) AS DOUBLE) / CAST(count(*) AS DOUBLE)', 6)}
              AS realized_ratio
     FROM c GROUP BY 1
     """,
@@ -97,16 +97,10 @@ def q179_epoch_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
                  FROM t GROUP BY 1),
          tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS all_tokens FROM per)
     SELECT source, n_docs, n_tokens,
-           CASE WHEN isnan(CAST((CAST(n_tokens AS DOUBLE) / all_tokens) AS DOUBLE)) OR abs(CAST((CAST(n_tokens AS DOUBLE) / all_tokens) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n_tokens AS DOUBLE) / all_tokens) AS DOUBLE) ELSE floor(CAST((CAST(n_tokens AS DOUBLE) / all_tokens) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS token_share,
-           CASE WHEN isnan(CAST((CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source
+           {bfround_sql('CAST(n_tokens AS DOUBLE) / all_tokens', 6)} AS token_share,
+           {bfround_sql('''CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source
                                           ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-                 / all_tokens) AS DOUBLE)) OR abs(CAST((CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source
-                                          ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-                 / all_tokens) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source
-                                          ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-                 / all_tokens) AS DOUBLE) ELSE floor(CAST((CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source
-                                          ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-                 / all_tokens) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS cum_share
+                 / all_tokens''', 6)} AS cum_share
     FROM per, tot
     """,
 )

@@ -33,16 +33,16 @@ from ._shared import (
     PLANTED_CORPUS_SQL as _CORPUS_SQL,
     planted_corpus as _planted_corpus,
 )
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q181: fixed-iteration Lloyd k-means on the embeddings table
 @query(
     "q181_kmeans_clusters",
-    """
+    f"""
     WITH v AS (SELECT vec_id,
                       list_transform(embedding::DOUBLE[],
-                                     x -> CAST(CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS v
+                                     x -> CAST({bfround_sql('x * 1e6', 0)} AS BIGINT)) AS v
                FROM embeddings),
          vl AS (SELECT vec_id, i AS pos, v[i] AS x
                 FROM v, unnest(generate_series(1, 64)) AS t(i)),
@@ -70,7 +70,7 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
                    FROM d2) WHERE rn = 1)
     SELECT cid AS cluster_id, CAST(count(*) AS BIGINT) AS n_vecs,
            CAST(sum(dist) AS BIGINT) AS wcss_fp,
-           CASE WHEN isnan(CAST((CAST(sum(dist) AS DOUBLE) / count(*) / 1e12) AS DOUBLE)) OR abs(CAST((CAST(sum(dist) AS DOUBLE) / count(*) / 1e12) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(dist) AS DOUBLE) / count(*) / 1e12) AS DOUBLE) ELSE floor(CAST((CAST(sum(dist) AS DOUBLE) / count(*) / 1e12) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS mean_sq_dist
+           {bfround_sql('CAST(sum(dist) AS DOUBLE) / count(*) / 1e12', 6)} AS mean_sq_dist
     FROM a2 GROUP BY 1
     """,
 )
@@ -116,7 +116,7 @@ def q181_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ON a.fp = b.fp AND a.doc_id < b.doc_id
                     GROUP BY 1, 2)
     SELECT doc_a, doc_b, shared_fps,
-           CASE WHEN isnan(CAST((CAST(shared_fps AS DOUBLE) / least(na.nf, nb.nf)) AS DOUBLE)) OR abs(CAST((CAST(shared_fps AS DOUBLE) / least(na.nf, nb.nf)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(shared_fps AS DOUBLE) / least(na.nf, nb.nf)) AS DOUBLE) ELSE floor(CAST((CAST(shared_fps AS DOUBLE) / least(na.nf, nb.nf)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS overlap
+           {bfround_sql('CAST(shared_fps AS DOUBLE) / least(na.nf, nb.nf)', 6)} AS overlap
     FROM shared
     JOIN sizes na ON na.doc_id = doc_a
     JOIN sizes nb ON nb.doc_id = doc_b
@@ -137,7 +137,7 @@ def q182_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q183: Bloom-pruned semi-join, value-gated to the plain semi-join
 @query(
     "q183_bloom_semijoin",
-    """
+    f"""
     WITH dim AS (SELECT o_orderkey FROM orders
                  WHERE o_orderdate >= DATE '1996-01-01'
                    AND o_orderdate < DATE '1996-02-01'),
@@ -146,7 +146,7 @@ def q182_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    WHERE d.o_orderkey = l.l_orderkey))
     SELECT l_returnflag,
            CAST(count(*) AS BIGINT) AS n_items,
-           CAST(sum(CAST(CASE WHEN isnan(CAST((l_extendedprice * 100) AS DOUBLE)) OR abs(CAST((l_extendedprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l_extendedprice * 100) AS DOUBLE) ELSE floor(CAST((l_extendedprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+           CAST(sum(CAST({bfround_sql('l_extendedprice * 100', 0)} AS BIGINT)) AS BIGINT)
              AS revenue_cents
     FROM matched GROUP BY 1
     """,
@@ -176,7 +176,7 @@ def q183_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q184: first-order Markov transition matrix over user event streams
 @query(
     "q184_event_transitions",
-    """
+    f"""
     WITH s AS (SELECT user_id, event_type,
                       lead(event_type) OVER (PARTITION BY user_id
                                              ORDER BY ts, event_id) AS nxt
@@ -185,11 +185,8 @@ def q183_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
                       CAST(count(*) AS BIGINT) AS n
                FROM s WHERE nxt IS NOT NULL GROUP BY 1, 2)
     SELECT src, dst, n,
-           CASE WHEN isnan(CAST((CAST(n AS DOUBLE)
-                 / sum(n) OVER (PARTITION BY src)) AS DOUBLE)) OR abs(CAST((CAST(n AS DOUBLE)
-                 / sum(n) OVER (PARTITION BY src)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n AS DOUBLE)
-                 / sum(n) OVER (PARTITION BY src)) AS DOUBLE) ELSE floor(CAST((CAST(n AS DOUBLE)
-                 / sum(n) OVER (PARTITION BY src)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS p
+           {bfround_sql('''CAST(n AS DOUBLE)
+                 / sum(n) OVER (PARTITION BY src)''', 6)} AS p
     FROM c
     """,
 )

@@ -33,7 +33,7 @@ from ..operators.similarity import brute_force_topk
 from ..operators.text import shingles_of, tokenized
 from ..queries import query
 from ._shared import _COS, LTOKS_SQL as _LTOKS, SHINGLES_SQL as _SHINGLES
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 def guarded_max_source_bit(t: DataFrame) -> DataFrame:
@@ -64,8 +64,8 @@ def guarded_max_source_bit(t: DataFrame) -> DataFrame:
                FROM p a JOIN p b ON a.sh = b.sh AND a.s < b.s
                GROUP BY 1, 2)
     SELECT 'src' || ia AS source_a, 'src' || ib AS source_b, n_shared,
-           CASE WHEN isnan(CAST((CAST(n_shared AS DOUBLE) / da.nd) AS DOUBLE)) OR abs(CAST((CAST(n_shared AS DOUBLE) / da.nd) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n_shared AS DOUBLE) / da.nd) AS DOUBLE) ELSE floor(CAST((CAST(n_shared AS DOUBLE) / da.nd) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS containment_a,
-           CASE WHEN isnan(CAST((CAST(n_shared AS DOUBLE) / db.nd) AS DOUBLE)) OR abs(CAST((CAST(n_shared AS DOUBLE) / db.nd) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n_shared AS DOUBLE) / db.nd) AS DOUBLE) ELSE floor(CAST((CAST(n_shared AS DOUBLE) / db.nd) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS containment_b
+           {bfround_sql('CAST(n_shared AS DOUBLE) / da.nd', 6)} AS containment_a,
+           {bfround_sql('CAST(n_shared AS DOUBLE) / db.nd', 6)} AS containment_b
     FROM c JOIN d da ON da.s = ia JOIN d db ON db.s = ib
     """,
 )
@@ -198,13 +198,13 @@ def q186_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q187: WOE / information-value binning of order value vs urgency
 @query(
     "q187_woe_binning",
-    """
-    WITH o AS (SELECT CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents,
+    f"""
+    WITH o AS (SELECT CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) AS cents,
                       (o_orderpriority = '1-URGENT') AS ev
                FROM orders),
          cuts AS (SELECT list_transform(quantile_cont(cents,
                       [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]),
-                      x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6) AS c
+                      x -> {bfround_sql('x * 1e6', 0)} / 1e6) AS c
                   FROM o),
          b AS (SELECT 1 + len(list_filter(cuts.c, x -> o.cents > x)) AS bin,
                       ev
@@ -215,25 +215,13 @@ def q186_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM b GROUP BY 1),
          t AS (SELECT sum(n_event) AS te, sum(n) - sum(n_event) AS tn FROM g)
     SELECT bin, n, n_event,
-           CASE WHEN isnan(CAST((CAST(n_event AS DOUBLE) / n) AS DOUBLE)) OR abs(CAST((CAST(n_event AS DOUBLE) / n) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n_event AS DOUBLE) / n) AS DOUBLE) ELSE floor(CAST((CAST(n_event AS DOUBLE) / n) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS event_rate,
-           CASE WHEN isnan(CAST((ln((CAST(n_event AS DOUBLE) / te)
-                    / (CAST(n - n_event AS DOUBLE) / tn))) AS DOUBLE)) OR abs(CAST((ln((CAST(n_event AS DOUBLE) / te)
-                    / (CAST(n - n_event AS DOUBLE) / tn))) AS DOUBLE)) >= 9007199254.740992 THEN CAST((ln((CAST(n_event AS DOUBLE) / te)
-                    / (CAST(n - n_event AS DOUBLE) / tn))) AS DOUBLE) ELSE floor(CAST((ln((CAST(n_event AS DOUBLE) / te)
-                    / (CAST(n - n_event AS DOUBLE) / tn))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS woe,
-           CASE WHEN isnan(CAST(((CAST(n_event AS DOUBLE) / te
+           {bfround_sql('CAST(n_event AS DOUBLE) / n', 6)} AS event_rate,
+           {bfround_sql('''ln((CAST(n_event AS DOUBLE) / te)
+                    / (CAST(n - n_event AS DOUBLE) / tn))''', 6)} AS woe,
+           {bfround_sql('''(CAST(n_event AS DOUBLE) / te
                   - CAST(n - n_event AS DOUBLE) / tn)
                  * ln((CAST(n_event AS DOUBLE) / te)
-                      / (CAST(n - n_event AS DOUBLE) / tn))) AS DOUBLE)) OR abs(CAST(((CAST(n_event AS DOUBLE) / te
-                  - CAST(n - n_event AS DOUBLE) / tn)
-                 * ln((CAST(n_event AS DOUBLE) / te)
-                      / (CAST(n - n_event AS DOUBLE) / tn))) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(n_event AS DOUBLE) / te
-                  - CAST(n - n_event AS DOUBLE) / tn)
-                 * ln((CAST(n_event AS DOUBLE) / te)
-                      / (CAST(n - n_event AS DOUBLE) / tn))) AS DOUBLE) ELSE floor(CAST(((CAST(n_event AS DOUBLE) / te
-                  - CAST(n - n_event AS DOUBLE) / tn)
-                 * ln((CAST(n_event AS DOUBLE) / te)
-                      / (CAST(n - n_event AS DOUBLE) / tn))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS iv_term
+                      / (CAST(n - n_event AS DOUBLE) / tn))''', 6)} AS iv_term
     FROM g, t
     """,
 )
@@ -252,7 +240,7 @@ def q187_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts = o.agg(
         F.expr(
             "transform(percentile(cents, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9)),"
-            " x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6)"
+            f" x -> {bfround_sql('x * 1e6', 0)} / 1e6)"
         ).alias("c")
     )
     b = o.crossJoin(F.broadcast(cuts)).select(
@@ -291,8 +279,8 @@ def q187_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q188: jackknife CI for mean order value (10 hash strata)
 @query(
     "q188_jackknife_ci",
-    """
-    WITH o AS (SELECT CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents,
+    f"""
+    WITH o AS (SELECT CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) AS cents,
                       ('0x' || substring(md5('jk:' || CAST(o_orderkey AS VARCHAR)),
                                          1, 8))::BIGINT % 10 AS stratum
                FROM orders),
@@ -303,7 +291,7 @@ def q187_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
                         CAST(sum(n) AS BIGINT) AS tn,
                         CAST(count(*) AS BIGINT) AS g
                  FROM s),
-         m AS (SELECT CAST(CASE WHEN isnan(CAST((CAST(ts - sc AS DOUBLE) / (tn - n) * 1e6) AS DOUBLE)) OR abs(CAST((CAST(ts - sc AS DOUBLE) / (tn - n) * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((CAST(ts - sc AS DOUBLE) / (tn - n) * 1e6) AS DOUBLE) ELSE floor(CAST((CAST(ts - sc AS DOUBLE) / (tn - n) * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+         m AS (SELECT CAST({bfround_sql('CAST(ts - sc AS DOUBLE) / (tn - n) * 1e6', 0)}
                            AS BIGINT) AS m_fp
                FROM s, tot),
          j AS (SELECT CAST(count(*) AS BIGINT) AS g,
@@ -311,16 +299,10 @@ def q187_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
                       sum(CAST(m_fp AS HUGEINT) * m_fp) AS sm2
                FROM m)
     SELECT tot.tn AS n_orders,
-           CASE WHEN isnan(CAST((CAST(tot.ts AS DOUBLE) / tot.tn) AS DOUBLE)) OR abs(CAST((CAST(tot.ts AS DOUBLE) / tot.tn) AS DOUBLE)) >= 90071992547409.92 THEN CAST((CAST(tot.ts AS DOUBLE) / tot.tn) AS DOUBLE) ELSE floor(CAST((CAST(tot.ts AS DOUBLE) / tot.tn) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS mean_cents,
-           CASE WHEN isnan(CAST((sqrt(CAST(j.g - 1 AS DOUBLE) / j.g
+           {bfround_sql('CAST(tot.ts AS DOUBLE) / tot.tn', 2)} AS mean_cents,
+           {bfround_sql('''sqrt(CAST(j.g - 1 AS DOUBLE) / j.g
                       * CAST(j.g * j.sm2 - CAST(j.sm AS HUGEINT) * j.sm AS DOUBLE)
-                      / (CAST(j.g AS DOUBLE) * j.g)) / 1e6) AS DOUBLE)) OR abs(CAST((sqrt(CAST(j.g - 1 AS DOUBLE) / j.g
-                      * CAST(j.g * j.sm2 - CAST(j.sm AS HUGEINT) * j.sm AS DOUBLE)
-                      / (CAST(j.g AS DOUBLE) * j.g)) / 1e6) AS DOUBLE)) >= 90071992547409.92 THEN CAST((sqrt(CAST(j.g - 1 AS DOUBLE) / j.g
-                      * CAST(j.g * j.sm2 - CAST(j.sm AS HUGEINT) * j.sm AS DOUBLE)
-                      / (CAST(j.g AS DOUBLE) * j.g)) / 1e6) AS DOUBLE) ELSE floor(CAST((sqrt(CAST(j.g - 1 AS DOUBLE) / j.g
-                      * CAST(j.g * j.sm2 - CAST(j.sm AS HUGEINT) * j.sm AS DOUBLE)
-                      / (CAST(j.g AS DOUBLE) * j.g)) / 1e6) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS jk_se_cents
+                      / (CAST(j.g AS DOUBLE) * j.g)) / 1e6''', 2)} AS jk_se_cents
     FROM tot, j
     """,
 )

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 # shared daily-count grid (one groupBy over the events scan; ~30 rows
 # per event type at every sf — all downstream math is grid-sized)
@@ -66,12 +66,9 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM g GROUP BY 1)
     SELECT t.etype,
            t.m AS n_days,
-           CASE WHEN isnan(CAST((CAST(t.s AS DOUBLE) / t.m) AS DOUBLE)) OR abs(CAST((CAST(t.s AS DOUBLE) / t.m) AS DOUBLE)) >= 900719925474.0992 THEN CAST((CAST(t.s AS DOUBLE) / t.m) AS DOUBLE) ELSE floor(CAST((CAST(t.s AS DOUBLE) / t.m) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS mean_daily,
-           CASE WHEN isnan(CAST((1 - (t.ss - r.fit)
-                     / (t.ss - CAST(t.s AS DOUBLE) * t.s / t.m)) AS DOUBLE)) OR abs(CAST((1 - (t.ss - r.fit)
-                     / (t.ss - CAST(t.s AS DOUBLE) * t.s / t.m)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((1 - (t.ss - r.fit)
-                     / (t.ss - CAST(t.s AS DOUBLE) * t.s / t.m)) AS DOUBLE) ELSE floor(CAST((1 - (t.ss - r.fit)
-                     / (t.ss - CAST(t.s AS DOUBLE) * t.s / t.m)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(t.s AS DOUBLE) / t.m', 4)} AS mean_daily,
+           {bfround_sql('''1 - (t.ss - r.fit)
+                     / (t.ss - CAST(t.s AS DOUBLE) * t.s / t.m)''', 6)}
              AS seasonal_strength
     FROM t JOIN r ON r.etype = t.etype
     """,
@@ -134,18 +131,12 @@ _ALPHA = 0.3
                         + power(1 - {_ALPHA}, t - 1) * y[1]) AS fc
                FROM arr),
          e AS (SELECT etype, t,
-                      CASE WHEN isnan(CAST((fc[t - 1]) AS DOUBLE)) OR abs(CAST((fc[t - 1]) AS DOUBLE)) >= 900719925474.0992 THEN CAST((fc[t - 1]) AS DOUBLE) ELSE floor(CAST((fc[t - 1]) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS last_forecast,
-                      CASE WHEN isnan(CAST((y[t]) AS DOUBLE)) OR abs(CAST((y[t]) AS DOUBLE)) >= 900719925474.0992 THEN CAST((y[t]) AS DOUBLE) ELSE floor(CAST((y[t]) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS last_actual,
+                      {bfround_sql('fc[t - 1]', 4)} AS last_forecast,
+                      {bfround_sql('y[t]', 4)} AS last_actual,
                       CASE WHEN t >= 8 THEN
-                        CASE WHEN isnan(CAST((list_sum(list_transform(
+                        {bfround_sql('''list_sum(list_transform(
                                   generate_series(8, t),
-                                  i -> abs(y[i] - fc[i - 1]))) / (t - 7)) AS DOUBLE)) OR abs(CAST((list_sum(list_transform(
-                                  generate_series(8, t),
-                                  i -> abs(y[i] - fc[i - 1]))) / (t - 7)) AS DOUBLE)) >= 900719925474.0992 THEN CAST((list_sum(list_transform(
-                                  generate_series(8, t),
-                                  i -> abs(y[i] - fc[i - 1]))) / (t - 7)) AS DOUBLE) ELSE floor(CAST((list_sum(list_transform(
-                                  generate_series(8, t),
-                                  i -> abs(y[i] - fc[i - 1]))) / (t - 7)) AS DOUBLE) * 1e4 + 0.5) / 1e4 END
+                                  i -> abs(y[i] - fc[i - 1]))) / (t - 7)''', 4)}
                       END AS mae
                FROM f WHERE t >= 2)
     SELECT etype, CAST(t AS BIGINT) AS n_days, last_forecast, last_actual, mae
@@ -218,7 +209,7 @@ def q190_ses_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q191: k-anonymity generalization ladder (k = 5)
 @query(
     "q191_k_anonymity",
-    """
+    f"""
     WITH qi AS (SELECT c_nationkey AS nat, c_mktsegment AS seg,
                        CAST(floor(c_acctbal / 1000) AS BIGINT) AS balband
                 FROM customer),
@@ -248,11 +239,8 @@ def q190_ses_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM l2)
     SELECT CAST(level AS BIGINT) AS level, quasi_ids, n_groups,
            groups_below_k, rows_at_risk, min_group,
-           CASE WHEN isnan(CAST((CAST(rows_at_risk AS DOUBLE)
-                 / (SELECT count(*) FROM customer)) AS DOUBLE)) OR abs(CAST((CAST(rows_at_risk AS DOUBLE)
-                 / (SELECT count(*) FROM customer)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(rows_at_risk AS DOUBLE)
-                 / (SELECT count(*) FROM customer)) AS DOUBLE) ELSE floor(CAST((CAST(rows_at_risk AS DOUBLE)
-                 / (SELECT count(*) FROM customer)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS risk_share
+           {bfround_sql('''CAST(rows_at_risk AS DOUBLE)
+                 / (SELECT count(*) FROM customer)''', 6)} AS risk_share
     FROM s
     """,
 )
@@ -298,21 +286,18 @@ def q191_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q192: Benford first-digit audit with chi-square terms
 @query(
     "q192_benford_audit",
-    """
-    WITH c AS (SELECT CAST(substring(CAST(CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+    f"""
+    WITH c AS (SELECT CAST(substring(CAST(CAST({bfround_sql('o_totalprice * 100', 0)}
                                            AS BIGINT) AS VARCHAR), 1, 1)
                            AS BIGINT) AS digit
                FROM orders),
          g AS (SELECT digit, CAST(count(*) AS BIGINT) AS n FROM c GROUP BY 1),
          t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM g)
     SELECT digit, n,
-           CASE WHEN isnan(CAST((CAST(n AS DOUBLE) / t.tot) AS DOUBLE)) OR abs(CAST((CAST(n AS DOUBLE) / t.tot) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n AS DOUBLE) / t.tot) AS DOUBLE) ELSE floor(CAST((CAST(n AS DOUBLE) / t.tot) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS share,
-           CASE WHEN isnan(CAST((log10(1 + 1.0 / digit)) AS DOUBLE)) OR abs(CAST((log10(1 + 1.0 / digit)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((log10(1 + 1.0 / digit)) AS DOUBLE) ELSE floor(CAST((log10(1 + 1.0 / digit)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS benford,
-           CASE WHEN isnan(CAST((power(n - t.tot * log10(1 + 1.0 / digit), 2)
-                 / (t.tot * log10(1 + 1.0 / digit))) AS DOUBLE)) OR abs(CAST((power(n - t.tot * log10(1 + 1.0 / digit), 2)
-                 / (t.tot * log10(1 + 1.0 / digit))) AS DOUBLE)) >= 9007199254.740992 THEN CAST((power(n - t.tot * log10(1 + 1.0 / digit), 2)
-                 / (t.tot * log10(1 + 1.0 / digit))) AS DOUBLE) ELSE floor(CAST((power(n - t.tot * log10(1 + 1.0 / digit), 2)
-                 / (t.tot * log10(1 + 1.0 / digit))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS chi2_term
+           {bfround_sql('CAST(n AS DOUBLE) / t.tot', 6)} AS share,
+           {bfround_sql('log10(1 + 1.0 / digit)', 6)} AS benford,
+           {bfround_sql('''power(n - t.tot * log10(1 + 1.0 / digit), 2)
+                 / (t.tot * log10(1 + 1.0 / digit))''', 6)} AS chi2_term
     FROM g, t
     """,
 )

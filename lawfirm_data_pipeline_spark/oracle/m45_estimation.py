@@ -29,19 +29,19 @@ from ..io import load_table
 from ..pin import pin
 from ..operators.ranking import top_k_ranked
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q193: Neyman allocation over nation strata (budget n = 1000)
 @query(
     "q193_neyman_allocation",
-    """
+    f"""
     WITH s AS (SELECT c_nationkey AS nat,
                       CAST(count(*) AS BIGINT) AS nh,
-                      CAST(sum(CAST(CASE WHEN isnan(CAST((c_acctbal * 100) AS DOUBLE)) OR abs(CAST((c_acctbal * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((c_acctbal * 100) AS DOUBLE) ELSE floor(CAST((c_acctbal * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+                      CAST(sum(CAST({bfround_sql('c_acctbal * 100', 0)} AS BIGINT)) AS BIGINT)
                         AS sc,
-                      CAST(sum(CAST(CASE WHEN isnan(CAST((c_acctbal * 100) AS DOUBLE)) OR abs(CAST((c_acctbal * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((c_acctbal * 100) AS DOUBLE) ELSE floor(CAST((c_acctbal * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
-                               * CAST(CASE WHEN isnan(CAST((c_acctbal * 100) AS DOUBLE)) OR abs(CAST((c_acctbal * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((c_acctbal * 100) AS DOUBLE) ELSE floor(CAST((c_acctbal * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+                      CAST(sum(CAST({bfround_sql('c_acctbal * 100', 0)} AS BIGINT)
+                               * CAST({bfround_sql('c_acctbal * 100', 0)} AS BIGINT)) AS BIGINT)
                         AS sc2
                FROM customer GROUP BY 1),
          v AS (SELECT nat, nh,
@@ -50,9 +50,9 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
                FROM s WHERE nh >= 2),
          t AS (SELECT sum(nh * sd) AS denom FROM v)
     SELECT nat, nh,
-           CASE WHEN isnan(CAST((sd / 100) AS DOUBLE)) OR abs(CAST((sd / 100) AS DOUBLE)) >= 900719925474.0992 THEN CAST((sd / 100) AS DOUBLE) ELSE floor(CAST((sd / 100) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS sd_bal,
-           CASE WHEN isnan(CAST((nh * sd / t.denom) AS DOUBLE)) OR abs(CAST((nh * sd / t.denom) AS DOUBLE)) >= 9007199254.740992 THEN CAST((nh * sd / t.denom) AS DOUBLE) ELSE floor(CAST((nh * sd / t.denom) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS weight,
-           CAST(CASE WHEN isnan(CAST((1000 * nh * sd / t.denom) AS DOUBLE)) OR abs(CAST((1000 * nh * sd / t.denom) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((1000 * nh * sd / t.denom) AS DOUBLE) ELSE floor(CAST((1000 * nh * sd / t.denom) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS alloc
+           {bfround_sql('sd / 100', 4)} AS sd_bal,
+           {bfround_sql('nh * sd / t.denom', 6)} AS weight,
+           CAST({bfround_sql('1000 * nh * sd / t.denom', 0)} AS BIGINT) AS alloc
     FROM v, t
     """,
 )
@@ -106,7 +106,7 @@ def q193_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q194: capture-recapture distinct-count estimate, audited
 @query(
     "q194_capture_recapture",
-    """
+    f"""
     WITH k AS (SELECT DISTINCT l_orderkey AS key FROM lineitem),
          m AS (SELECT key,
                       ('0x' || substring(md5('capA:' || CAST(key AS VARCHAR)),
@@ -121,8 +121,8 @@ def q193_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
                            AS BIGINT) AS nab
                FROM m)
     SELECT n_true, na, nb, nab,
-           CAST(CASE WHEN isnan(CAST((CAST(na AS DOUBLE) * nb / nab) AS DOUBLE)) OR abs(CAST((CAST(na AS DOUBLE) * nb / nab) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((CAST(na AS DOUBLE) * nb / nab) AS DOUBLE) ELSE floor(CAST((CAST(na AS DOUBLE) * nb / nab) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS n_est,
-           CASE WHEN isnan(CAST((abs(CAST(na AS DOUBLE) * nb / nab - n_true) / n_true) AS DOUBLE)) OR abs(CAST((abs(CAST(na AS DOUBLE) * nb / nab - n_true) / n_true) AS DOUBLE)) >= 9007199254.740992 THEN CAST((abs(CAST(na AS DOUBLE) * nb / nab - n_true) / n_true) AS DOUBLE) ELSE floor(CAST((abs(CAST(na AS DOUBLE) * nb / nab - n_true) / n_true) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           CAST({bfround_sql('CAST(na AS DOUBLE) * nb / nab', 0)} AS BIGINT) AS n_est,
+           {bfround_sql('abs(CAST(na AS DOUBLE) * nb / nab - n_true) / n_true', 6)}
              AS rel_error
     FROM c
     """,
@@ -175,7 +175,7 @@ def q194_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q195: Flesch-style readability per source
 @query(
     "q195_readability",
-    """
+    f"""
     WITH d AS (SELECT source, text,
                       len(list_filter(str_split_regex(trim(lower(text)), '\\s+'),
                                       t -> t != '')) AS words,
@@ -191,13 +191,10 @@ def q194_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
                       CAST(sum(syllables) AS BIGINT) AS tsy
                FROM d GROUP BY 1)
     SELECT source, n_docs,
-           CASE WHEN isnan(CAST((CAST(tw AS DOUBLE) / ts) AS DOUBLE)) OR abs(CAST((CAST(tw AS DOUBLE) / ts) AS DOUBLE)) >= 900719925474.0992 THEN CAST((CAST(tw AS DOUBLE) / ts) AS DOUBLE) ELSE floor(CAST((CAST(tw AS DOUBLE) / ts) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS words_per_sentence,
-           CASE WHEN isnan(CAST((CAST(tsy AS DOUBLE) / tw) AS DOUBLE)) OR abs(CAST((CAST(tsy AS DOUBLE) / tw) AS DOUBLE)) >= 900719925474.0992 THEN CAST((CAST(tsy AS DOUBLE) / tw) AS DOUBLE) ELSE floor(CAST((CAST(tsy AS DOUBLE) / tw) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS syllables_per_word,
-           CASE WHEN isnan(CAST((206.835 - 1.015 * (CAST(tw AS DOUBLE) / ts)
-                 - 84.6 * (CAST(tsy AS DOUBLE) / tw)) AS DOUBLE)) OR abs(CAST((206.835 - 1.015 * (CAST(tw AS DOUBLE) / ts)
-                 - 84.6 * (CAST(tsy AS DOUBLE) / tw)) AS DOUBLE)) >= 900719925474.0992 THEN CAST((206.835 - 1.015 * (CAST(tw AS DOUBLE) / ts)
-                 - 84.6 * (CAST(tsy AS DOUBLE) / tw)) AS DOUBLE) ELSE floor(CAST((206.835 - 1.015 * (CAST(tw AS DOUBLE) / ts)
-                 - 84.6 * (CAST(tsy AS DOUBLE) / tw)) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS flesch
+           {bfround_sql('CAST(tw AS DOUBLE) / ts', 4)} AS words_per_sentence,
+           {bfround_sql('CAST(tsy AS DOUBLE) / tw', 4)} AS syllables_per_word,
+           {bfround_sql('''206.835 - 1.015 * (CAST(tw AS DOUBLE) / ts)
+                 - 84.6 * (CAST(tsy AS DOUBLE) / tw)''', 4)} AS flesch
     FROM s
     """,
 )
@@ -268,27 +265,15 @@ _TOPK = 20
          tail_part AS (
             -- tail keys of A assumed uniform: avg tail multiplicity x
             -- the b-rows whose keys are NOT top keys of A
-            SELECT CAST(CASE WHEN isnan(CAST(((CAST(astats.tot - topstats.toptot AS DOUBLE)
+            SELECT CAST({bfround_sql('''(CAST(astats.tot - topstats.toptot AS DOUBLE)
                       / nullif(astats.nk - topstats.topn, 0))
                      * (SELECT sum(cb) FROM b
-                        WHERE key NOT IN (SELECT key FROM atop))) AS DOUBLE)) OR abs(CAST(((CAST(astats.tot - topstats.toptot AS DOUBLE)
-                      / nullif(astats.nk - topstats.topn, 0))
-                     * (SELECT sum(cb) FROM b
-                        WHERE key NOT IN (SELECT key FROM atop))) AS DOUBLE)) >= 9007199254740992.0 THEN CAST(((CAST(astats.tot - topstats.toptot AS DOUBLE)
-                      / nullif(astats.nk - topstats.topn, 0))
-                     * (SELECT sum(cb) FROM b
-                        WHERE key NOT IN (SELECT key FROM atop))) AS DOUBLE) ELSE floor(CAST(((CAST(astats.tot - topstats.toptot AS DOUBLE)
-                      / nullif(astats.nk - topstats.topn, 0))
-                     * (SELECT sum(cb) FROM b
-                        WHERE key NOT IN (SELECT key FROM atop))) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS e
+                        WHERE key NOT IN (SELECT key FROM atop))''', 0)} AS BIGINT) AS e
             FROM astats, topstats)
     SELECT truth.actual,
            exact_part.e + coalesce(tail_part.e, 0) AS estimate,
-           CASE WHEN isnan(CAST((abs(CAST(exact_part.e + coalesce(tail_part.e, 0) AS DOUBLE)
-                     - truth.actual) / truth.actual) AS DOUBLE)) OR abs(CAST((abs(CAST(exact_part.e + coalesce(tail_part.e, 0) AS DOUBLE)
-                     - truth.actual) / truth.actual) AS DOUBLE)) >= 9007199254.740992 THEN CAST((abs(CAST(exact_part.e + coalesce(tail_part.e, 0) AS DOUBLE)
-                     - truth.actual) / truth.actual) AS DOUBLE) ELSE floor(CAST((abs(CAST(exact_part.e + coalesce(tail_part.e, 0) AS DOUBLE)
-                     - truth.actual) / truth.actual) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS rel_error
+           {bfround_sql('''abs(CAST(exact_part.e + coalesce(tail_part.e, 0) AS DOUBLE)
+                     - truth.actual) / truth.actual''', 6)} AS rel_error
     FROM truth, exact_part, tail_part
     """,
 )

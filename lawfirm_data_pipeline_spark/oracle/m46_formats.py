@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -153,10 +153,10 @@ def q197_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q198: partitioned write + partition-pruned readback
 @query(
     "q198_partition_pruning",
-    """
+    f"""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+           CAST(sum(CAST({bfround_sql('value * 100', 0)} AS BIGINT)) AS BIGINT)
              AS value_cents
     FROM events
     WHERE CAST(date_trunc('day', ts) AS DATE) = DATE '2024-01-15'

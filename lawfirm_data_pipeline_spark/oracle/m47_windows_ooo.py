@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q199: trailing-10-minute velocity per user (RANGE frame)
@@ -76,13 +76,13 @@ def q199_event_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q200: grouping-sets marginals with grouping_id
 @query(
     "q200_grouping_sets",
-    """
+    f"""
     SELECT coalesce(o_orderstatus, 'ALL') AS status,
            coalesce(o_orderpriority, 'ALL') AS priority,
            CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
                 AS BIGINT) AS gid,
            CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+           CAST(sum(CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT)) AS BIGINT)
              AS revenue_cents
     FROM orders
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
@@ -123,7 +123,7 @@ def q200_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q201: out-of-order arrival audit (watermark sizing)
 @query(
     "q201_watermark_audit",
-    """
+    f"""
     WITH a AS (SELECT event_type AS etype, epoch_us(ts) AS us,
                       max(epoch_us(ts)) OVER (PARTITION BY event_type
                                               ORDER BY event_id
@@ -142,9 +142,9 @@ def q200_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                       CAST(quantile_disc(late_us, 0.99) AS BIGINT) AS p99_late_us
                FROM l GROUP BY 1)
     SELECT etype, n, n_late,
-           CASE WHEN isnan(CAST((CAST(n_late AS DOUBLE) / n) AS DOUBLE)) OR abs(CAST((CAST(n_late AS DOUBLE) / n) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n_late AS DOUBLE) / n) AS DOUBLE) ELSE floor(CAST((CAST(n_late AS DOUBLE) / n) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS late_share,
-           CAST(CASE WHEN isnan(CAST((max_late_us / 1e6) AS DOUBLE)) OR abs(CAST((max_late_us / 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((max_late_us / 1e6) AS DOUBLE) ELSE floor(CAST((max_late_us / 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS max_late_s,
-           CAST(CASE WHEN isnan(CAST((p99_late_us / 1e6) AS DOUBLE)) OR abs(CAST((p99_late_us / 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((p99_late_us / 1e6) AS DOUBLE) ELSE floor(CAST((p99_late_us / 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS p99_late_s
+           {bfround_sql('CAST(n_late AS DOUBLE) / n', 6)} AS late_share,
+           CAST({bfround_sql('max_late_us / 1e6', 0)} AS BIGINT) AS max_late_s,
+           CAST({bfround_sql('p99_late_us / 1e6', 0)} AS BIGINT) AS p99_late_s
     FROM s
     """,
 )

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..queries import query
 from ..sources import pydatasource
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q202: Python DataSource connector, value-gated
@@ -114,15 +114,18 @@ def q203_udtf_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_AVG_K = "avg(CAST(props->>'$.k' AS INTEGER))"
+
+
 # -- q204: VariantType JSON extraction (typed variant_get)
 @query(
     "q204_variant_json",
-    """
+    f"""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n,
            CAST(sum(CAST(props->>'$.k' AS INTEGER)) AS BIGINT) AS sum_k,
            CAST(max(CAST(props->>'$.k' AS INTEGER)) AS BIGINT) AS max_k,
-           CASE WHEN isnan(CAST((avg(CAST(props->>'$.k' AS INTEGER))) AS DOUBLE)) OR abs(CAST((avg(CAST(props->>'$.k' AS INTEGER))) AS DOUBLE)) >= 900719925474.0992 THEN CAST((avg(CAST(props->>'$.k' AS INTEGER))) AS DOUBLE) ELSE floor(CAST((avg(CAST(props->>'$.k' AS INTEGER))) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS avg_k
+           {bfround_sql(_AVG_K, 4)} AS avg_k
     FROM events GROUP BY 1
     """,
 )

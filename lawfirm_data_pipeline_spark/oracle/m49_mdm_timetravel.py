@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..queries import query
 from ..sources import lake
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -83,7 +83,7 @@ def _messy(spark: SparkSession, sf_dir: str) -> DataFrame:
          g AS (SELECT lower(trim(name)) AS ckey,
                       CAST(min(src_id) AS BIGINT) AS canonical_id,
                       CAST(count(*) AS BIGINT) AS n_members,
-                      CAST(max(CAST(CASE WHEN isnan(CAST((bal * 100) AS DOUBLE)) OR abs(CAST((bal * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((bal * 100) AS DOUBLE) ELSE floor(CAST((bal * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+                      CAST(max(CAST({bfround_sql('bal * 100', 0)} AS BIGINT)) AS BIGINT)
                         AS best_bal_cents,
                       CAST(min(nat) AS BIGINT) AS nat,
                       CAST(sum(CASE WHEN bal IS NULL THEN 1 ELSE 0 END)
@@ -199,11 +199,11 @@ def q206_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q207: percentile_approx graded against the exact quantile
 @query(
     "q207_approx_percentile_gate",
-    """
-    WITH c AS (SELECT CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+    f"""
+    WITH c AS (SELECT CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) AS cents
                FROM orders),
          e AS (SELECT quantile_cont(cents, [0.5, 0.9, 0.99]) AS p FROM c)
-    SELECT CAST(q AS DOUBLE) AS q, CAST(CASE WHEN isnan(CAST((exact_cents) AS DOUBLE)) OR abs(CAST((exact_cents) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((exact_cents) AS DOUBLE) ELSE floor(CAST((exact_cents) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
+    SELECT CAST(q AS DOUBLE) AS q, CAST({bfround_sql('exact_cents', 0)} AS BIGINT)
              AS exact_cents,
            TRUE AS within_1pct
     FROM (SELECT 0.5 AS q, p[1] AS exact_cents FROM e

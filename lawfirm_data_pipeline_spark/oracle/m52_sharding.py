@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _VNODES = 64
 _RING = 1 << 32
@@ -69,10 +69,10 @@ def _pos_sql(expr: str) -> str:
                             AS BIGINT) AS moved
                 FROM keys)
     SELECT 'consistent' AS strategy, n, moved,
-           CASE WHEN isnan(CAST((CAST(moved AS DOUBLE) / n) AS DOUBLE)) OR abs(CAST((CAST(moved AS DOUBLE) / n) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(moved AS DOUBLE) / n) AS DOUBLE) ELSE floor(CAST((CAST(moved AS DOUBLE) / n) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS moved_share
+           {bfround_sql('CAST(moved AS DOUBLE) / n', 6)} AS moved_share
     FROM ch
     UNION ALL
-    SELECT 'mod', n, moved, CASE WHEN isnan(CAST((CAST(moved AS DOUBLE) / n) AS DOUBLE)) OR abs(CAST((CAST(moved AS DOUBLE) / n) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(moved AS DOUBLE) / n) AS DOUBLE) ELSE floor(CAST((CAST(moved AS DOUBLE) / n) AS DOUBLE) * 1e6 + 0.5) / 1e6 END FROM md
+    SELECT 'mod', n, moved, {bfround_sql('CAST(moved AS DOUBLE) / n', 6)} FROM md
     """,
 )
 def q210_reshard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,7 +185,7 @@ def q210_reshard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q211: shuffle-skew salting planner
 @query(
     "q211_salt_planner",
-    """
+    f"""
     WITH c AS (SELECT l_suppkey AS key, CAST(count(*) AS BIGINT) AS cnt
                FROM lineitem GROUP BY 1),
          t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
@@ -194,7 +194,7 @@ def q210_reshard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
          b AS (SELECT CAST(ceil(CAST(t.total AS DOUBLE) / 32 / 4) AS BIGINT)
                  AS budget FROM t)
     SELECT c.key, c.cnt,
-           CASE WHEN isnan(CAST((CAST(c.cnt AS DOUBLE) / t.total) AS DOUBLE)) OR abs(CAST((CAST(c.cnt AS DOUBLE) / t.total) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(c.cnt AS DOUBLE) / t.total) AS DOUBLE) ELSE floor(CAST((CAST(c.cnt AS DOUBLE) / t.total) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS share,
+           {bfround_sql('CAST(c.cnt AS DOUBLE) / t.total', 6)} AS share,
            CAST(ceil(CAST(c.cnt AS DOUBLE) / b.budget) AS BIGINT) AS salt_factor
     FROM c, t, b
     WHERE c.cnt > b.budget

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..pin import pin
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _MAXP = 60  # bounded co-purchase subgraph (parts < 60): pairwise stays small
 
@@ -49,7 +49,7 @@ _EDGE_SQL = f"""
                     FROM wedge GROUP BY 1, 2),
          linked AS (SELECT src AS x, dst AS y FROM e0)
     SELECT c.x, c.y, c.cn,
-           CASE WHEN isnan(CAST((CAST(c.cn AS DOUBLE) / (dx.d + dy.d - c.cn)) AS DOUBLE)) OR abs(CAST((CAST(c.cn AS DOUBLE) / (dx.d + dy.d - c.cn)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(c.cn AS DOUBLE) / (dx.d + dy.d - c.cn)) AS DOUBLE) ELSE floor(CAST((CAST(c.cn AS DOUBLE) / (dx.d + dy.d - c.cn)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS jaccard,
+           {bfround_sql('CAST(c.cn AS DOUBLE) / (dx.d + dy.d - c.cn)', 6)} AS jaccard,
            (l.x IS NOT NULL) AS already_linked
     FROM common c
     JOIN deg dx ON dx.u = c.x

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..operators.ranking import global_running_sum
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _QS = [0.2, 0.4, 0.6, 0.8]
 _QS_SQL = "[0.2, 0.4, 0.6, 0.8]"
@@ -34,7 +34,7 @@ _QS_SQL = "[0.2, 0.4, 0.6, 0.8]"
     f"""
     WITH o AS (SELECT o_custkey AS c,
                       epoch_us(o_orderdate) AS ts_us,
-                      CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+                      CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) AS cents
                FROM orders),
          per AS (SELECT c,
                         CAST(max(ts_us) AS BIGINT) AS last_us,
@@ -42,11 +42,11 @@ _QS_SQL = "[0.2, 0.4, 0.6, 0.8]"
                         CAST(sum(cents) AS BIGINT) AS monetary
                  FROM o GROUP BY 1),
          cuts AS (SELECT list_transform(quantile_cont(last_us, {_QS_SQL}),
-                                        x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6) AS rc,
+                                        x -> {bfround_sql('x * 1e6', 0)} / 1e6) AS rc,
                          list_transform(quantile_cont(freq, {_QS_SQL}),
-                                        x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6) AS fc,
+                                        x -> {bfround_sql('x * 1e6', 0)} / 1e6) AS fc,
                          list_transform(quantile_cont(monetary, {_QS_SQL}),
-                                        x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6) AS mc
+                                        x -> {bfround_sql('x * 1e6', 0)} / 1e6) AS mc
                   FROM per),
          scored AS (SELECT per.c,
                            1 + len(list_filter(cuts.rc, x -> per.last_us > x)) AS r,
@@ -78,13 +78,13 @@ def q215_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     qarr = "array(" + ",".join(str(q) for q in _QS) + ")"
     cuts = per.agg(
         F.expr(
-            f"transform(percentile(last_us, {qarr}), x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6)"
+            f"transform(percentile(last_us, {qarr}), x -> {bfround_sql('x * 1e6', 0)} / 1e6)"
         ).alias("rc"),
         F.expr(
-            f"transform(percentile(freq, {qarr}), x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6)"
+            f"transform(percentile(freq, {qarr}), x -> {bfround_sql('x * 1e6', 0)} / 1e6)"
         ).alias("fc"),
         F.expr(
-            f"transform(percentile(monetary, {qarr}), x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6)"
+            f"transform(percentile(monetary, {qarr}), x -> {bfround_sql('x * 1e6', 0)} / 1e6)"
         ).alias("mc"),
     )
 
@@ -107,9 +107,9 @@ def q215_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q216: ABC classification of parts by revenue
 @query(
     "q216_abc_classification",
-    """
+    f"""
     WITH p AS (SELECT l_partkey AS part,
-                      CAST(sum(CAST(CASE WHEN isnan(CAST((l_extendedprice * 100) AS DOUBLE)) OR abs(CAST((l_extendedprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l_extendedprice * 100) AS DOUBLE) ELSE floor(CAST((l_extendedprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT))
+                      CAST(sum(CAST({bfround_sql('l_extendedprice * 100', 0)} AS BIGINT))
                            AS BIGINT) AS rev
                FROM lineitem GROUP BY 1),
          t AS (SELECT CAST(sum(rev) AS BIGINT) AS total FROM p),
@@ -125,7 +125,7 @@ def q215_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT cls,
            CAST(count(*) AS BIGINT) AS n_parts,
            CAST(sum(rev) AS BIGINT) AS revenue_cents,
-           CASE WHEN isnan(CAST((CAST(sum(rev) AS DOUBLE) / max(t2.total)) AS DOUBLE)) OR abs(CAST((CAST(sum(rev) AS DOUBLE) / max(t2.total)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(rev) AS DOUBLE) / max(t2.total)) AS DOUBLE) ELSE floor(CAST((CAST(sum(rev) AS DOUBLE) / max(t2.total)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS revenue_share
+           {bfround_sql('CAST(sum(rev) AS DOUBLE) / max(t2.total)', 6)} AS revenue_share
     FROM c, (SELECT CAST(sum(rev) AS BIGINT) AS total FROM p) t2
     GROUP BY 1
     """,

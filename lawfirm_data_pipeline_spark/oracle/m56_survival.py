@@ -24,13 +24,13 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q217: discrete Kaplan-Meier churn curve over activity weeks
 @query(
     "q217_km_churn",
-    """
+    f"""
     WITH wk AS (SELECT user_id,
                        CAST(floor(CAST(date_diff('day', DATE '2024-01-01',
                                        CAST(date_trunc('week', ts) AS DATE))
@@ -48,12 +48,9 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
                          AS n_churned
                 FROM grid g)
     SELECT w, n_risk, n_churned,
-           CASE WHEN isnan(CAST((CAST(n_churned AS DOUBLE) / n_risk) AS DOUBLE)) OR abs(CAST((CAST(n_churned AS DOUBLE) / n_risk) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n_churned AS DOUBLE) / n_risk) AS DOUBLE) ELSE floor(CAST((CAST(n_churned AS DOUBLE) / n_risk) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS hazard,
-           CASE WHEN isnan(CAST((exp(sum(ln(1 - CAST(n_churned AS DOUBLE) / n_risk))
-                     OVER (ORDER BY w))) AS DOUBLE)) OR abs(CAST((exp(sum(ln(1 - CAST(n_churned AS DOUBLE) / n_risk))
-                     OVER (ORDER BY w))) AS DOUBLE)) >= 9007199254.740992 THEN CAST((exp(sum(ln(1 - CAST(n_churned AS DOUBLE) / n_risk))
-                     OVER (ORDER BY w))) AS DOUBLE) ELSE floor(CAST((exp(sum(ln(1 - CAST(n_churned AS DOUBLE) / n_risk))
-                     OVER (ORDER BY w))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS survival
+           {bfround_sql('CAST(n_churned AS DOUBLE) / n_risk', 6)} AS hazard,
+           {bfround_sql('''exp(sum(ln(1 - CAST(n_churned AS DOUBLE) / n_risk))
+                     OVER (ORDER BY w))''', 6)} AS survival
     FROM km
     """,
 )
@@ -115,9 +112,9 @@ def q217_km_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q218: position-based (40/40/20) multi-touch attribution
 @query(
     "q218_position_attribution",
-    """
+    f"""
     WITH e AS (SELECT user_id, ts, event_id, event_type,
-                      CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+                      CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents
                FROM events
                QUALIFY count(*) OVER (PARTITION BY user_id) <= 5000),
          conv AS (SELECT user_id, ts, event_id, cents FROM e

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _BUCKET_US = 600_000_000  # 10 minutes
 
@@ -32,7 +32,7 @@ _BUCKET_US = 600_000_000  # 10 minutes
     "q219_duplicate_payments",
     f"""
     WITH p AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-                      CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+                      CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents
                FROM events WHERE event_type = 'purchase'),
          pairs AS (SELECT a.user_id, a.cents,
                           a.event_id AS first_id, b.event_id AS second_id,
@@ -105,9 +105,9 @@ def q219_duplicate_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q220: cohort LTV (cumulative revenue by weeks since first touch)
 @query(
     "q220_cohort_ltv",
-    """
+    f"""
     WITH e AS (SELECT user_id, ts,
-                      CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents,
+                      CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents,
                       event_type
                FROM events),
          first AS (SELECT user_id,
@@ -130,11 +130,8 @@ def q219_duplicate_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT g.cohort, g.age, sz.n_users,
            CAST(sum(g.wk_cents) OVER (PARTITION BY g.cohort
                                       ORDER BY g.age) AS BIGINT) AS cum_cents,
-           CASE WHEN isnan(CAST((CAST(sum(g.wk_cents) OVER (PARTITION BY g.cohort ORDER BY g.age)
-                      AS DOUBLE) / sz.n_users / 100) AS DOUBLE)) OR abs(CAST((CAST(sum(g.wk_cents) OVER (PARTITION BY g.cohort ORDER BY g.age)
-                      AS DOUBLE) / sz.n_users / 100) AS DOUBLE)) >= 900719925474.0992 THEN CAST((CAST(sum(g.wk_cents) OVER (PARTITION BY g.cohort ORDER BY g.age)
-                      AS DOUBLE) / sz.n_users / 100) AS DOUBLE) ELSE floor(CAST((CAST(sum(g.wk_cents) OVER (PARTITION BY g.cohort ORDER BY g.age)
-                      AS DOUBLE) / sz.n_users / 100) AS DOUBLE) * 1e4 + 0.5) / 1e4 END AS ltv_per_user
+           {bfround_sql('''CAST(sum(g.wk_cents) OVER (PARTITION BY g.cohort ORDER BY g.age)
+                      AS DOUBLE) / sz.n_users / 100''', 4)} AS ltv_per_user
     FROM g JOIN sz USING (cohort)
     """,
 )

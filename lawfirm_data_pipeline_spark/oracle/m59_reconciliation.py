@@ -25,23 +25,20 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q222: order header vs line-item detail reconciliation
 @query(
     "q222_order_reconciliation",
-    """
+    f"""
     WITH l AS (SELECT l_orderkey AS k,
-                      CAST(sum(CAST(CASE WHEN isnan(CAST((l_extendedprice * (1 - l_discount)
-                                          * (1 + l_tax) * 100) AS DOUBLE)) OR abs(CAST((l_extendedprice * (1 - l_discount)
-                                          * (1 + l_tax) * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l_extendedprice * (1 - l_discount)
-                                          * (1 + l_tax) * 100) AS DOUBLE) ELSE floor(CAST((l_extendedprice * (1 - l_discount)
-                                          * (1 + l_tax) * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT))
+                      CAST(sum(CAST({bfround_sql('''l_extendedprice * (1 - l_discount)
+                                          * (1 + l_tax) * 100''', 0)} AS BIGINT))
                            AS BIGINT) AS calc_cents
                FROM lineitem GROUP BY 1),
          j AS (SELECT o.o_orderkey,
-                      CAST(CASE WHEN isnan(CAST((o.o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o.o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o.o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o.o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS o_cents,
+                      CAST({bfround_sql('o.o_totalprice * 100', 0)} AS BIGINT) AS o_cents,
                       l.calc_cents
                FROM orders o LEFT JOIN l ON l.k = o.o_orderkey),
          d AS (SELECT o_orderkey,
@@ -53,7 +50,7 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
            CAST(sum(CASE WHEN orphan THEN 1 ELSE 0 END) AS BIGINT) AS n_no_items,
            CAST(sum(CASE WHEN delta <= 1 THEN 1 ELSE 0 END) AS BIGINT)
              AS n_reconciled,
-           CAST(CASE WHEN isnan(CAST((quantile_cont(delta, 0.5)) AS DOUBLE)) OR abs(CAST((quantile_cont(delta, 0.5)) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((quantile_cont(delta, 0.5)) AS DOUBLE) ELSE floor(CAST((quantile_cont(delta, 0.5)) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS p50_delta_cents,
+           CAST({bfround_sql('quantile_cont(delta, 0.5)', 0)} AS BIGINT) AS p50_delta_cents,
            CAST(max(delta) AS BIGINT) AS max_delta_cents
     FROM d
     """,

@@ -24,17 +24,17 @@ from ..streaming.windows import (
     sliding_counts,
     tumbling_counts,
 )
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 @query(
     "q22_stream_tumbling_window",
-    """
+    f"""
     SELECT time_bucket(INTERVAL '6 hours', ts) AS wstart,
            time_bucket(INTERVAL '6 hours', ts) + INTERVAL '6 hours' AS wend,
            event_type,
            count(*) AS n,
-           CASE WHEN isnan(CAST((sum(value)) AS DOUBLE)) OR abs(CAST((sum(value)) AS DOUBLE)) >= 90071992547409.92 THEN CAST((sum(value)) AS DOUBLE) ELSE floor(CAST((sum(value)) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS sum_value
+           {bfround_sql('sum(value)', 2)} AS sum_value
     FROM events
     GROUP BY 1, 2, 3
     """,
@@ -68,7 +68,7 @@ def q23_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q24_session_window",
-    """
+    f"""
     WITH marked AS (
         SELECT user_id, ts, value,
                CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -86,7 +86,7 @@ def q23_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(ts) AS session_start,
            max(ts) + INTERVAL '30 minutes' AS session_end,
            count(*) AS n_events,
-           CASE WHEN isnan(CAST((sum(value)) AS DOUBLE)) OR abs(CAST((sum(value)) AS DOUBLE)) >= 90071992547409.92 THEN CAST((sum(value)) AS DOUBLE) ELSE floor(CAST((sum(value)) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS sum_value
+           {bfround_sql('sum(value)', 2)} AS sum_value
     FROM islands
     GROUP BY user_id, sid
     """,

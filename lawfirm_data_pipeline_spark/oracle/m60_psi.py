@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..pin import pin
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _SPLIT = "2024-01-08"  # reference = first week of the event window
 
@@ -29,12 +29,12 @@ _SPLIT = "2024-01-08"  # reference = first week of the event window
 @query(
     "q223_psi_drift",
     f"""
-    WITH e AS (SELECT CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents,
+    WITH e AS (SELECT CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents,
                       ts < TIMESTAMP '{_SPLIT} 00:00:00' AS is_ref
                FROM events),
          cuts AS (SELECT list_transform(quantile_cont(cents,
                       [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]),
-                      x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6) AS c
+                      x -> {bfround_sql('x * 1e6', 0)} / 1e6) AS c
                   FROM e WHERE is_ref),
          b AS (SELECT 1 + len(list_filter(cuts.c, x -> e.cents > x)) AS bin,
                       is_ref
@@ -50,21 +50,12 @@ _SPLIT = "2024-01-08"  # reference = first week of the event window
                       CAST(count(*) AS BIGINT) AS nb
                FROM g)
     SELECT g.bin, g.n_ref, g.n_cur,
-           CASE WHEN isnan(CAST((CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb)) AS DOUBLE)) OR abs(CAST((CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb)) AS DOUBLE) ELSE floor(CAST((CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS ref_share,
-           CASE WHEN isnan(CAST((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb)) AS DOUBLE)) OR abs(CAST((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb)) AS DOUBLE) ELSE floor(CAST((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS cur_share,
-           CASE WHEN isnan(CAST(((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb)
+           {bfround_sql('CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb)', 6)} AS ref_share,
+           {bfround_sql('CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb)', 6)} AS cur_share,
+           {bfround_sql('''(CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb)
                   - CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb))
                  * ln((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb))
-                      / (CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb)))) AS DOUBLE)) OR abs(CAST(((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb)
-                  - CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb))
-                 * ln((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb))
-                      / (CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb)))) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb)
-                  - CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb))
-                 * ln((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb))
-                      / (CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb)))) AS DOUBLE) ELSE floor(CAST(((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb)
-                  - CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb))
-                 * ln((CAST(g.n_cur + 1 AS DOUBLE) / (t.tc + t.nb))
-                      / (CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb)))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+                      / (CAST(g.n_ref + 1 AS DOUBLE) / (t.tr + t.nb)))''', 6)}
              AS psi_term
     FROM g, t
     """,
@@ -83,7 +74,7 @@ def q223_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts = e.filter("is_ref").agg(
         F.expr(
             "transform(percentile(cents, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9)),"
-            " x -> CASE WHEN isnan(CAST((x * 1e6) AS DOUBLE)) OR abs(CAST((x * 1e6) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((x * 1e6) AS DOUBLE) ELSE floor(CAST((x * 1e6) AS DOUBLE) * 1e0 + 0.5) / 1e0 END / 1e6)"
+            f" x -> {bfround_sql('x * 1e6', 0)} / 1e6)"
         ).alias("c")
     )
     b = e.crossJoin(F.broadcast(cuts)).select(

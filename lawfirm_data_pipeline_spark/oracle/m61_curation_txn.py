@@ -39,7 +39,7 @@ from ..sources.lake import Catalog
 from ._shared import LTOKS_SQL as _LTOKS
 from ._shared import PLANT_SQL as _PLANT_SQL
 from ._shared import _COS
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -57,6 +57,7 @@ _LI_CKSUM_SQL = """('0x' || substring(md5(concat_ws(chr(1),
         coalesce(CAST(l_orderkey AS VARCHAR), chr(0)),
         coalesce(CAST(l_partkey AS VARCHAR), chr(0)),
         coalesce(CAST(l_linenumber AS VARCHAR), chr(0)))), 1, 8))::BIGINT % 1000000007"""
+_PAIR_COS = _COS.format(a="a.v", b="b.v")
 
 
 def _cksum(df: DataFrame, cols: list[str], label: str) -> DataFrame:
@@ -152,7 +153,7 @@ def q224_multi_table_transaction(spark: SparkSession, sf_dir: str) -> DataFrame:
          pairs AS (
             SELECT a.vec_id AS ida, b.vec_id AS idb
             FROM vecs a JOIN vecs b ON a.vec_id < b.vec_id
-            WHERE CASE WHEN isnan(CAST(({_COS.format(a='a.v', b='b.v')}) AS DOUBLE)) OR abs(CAST(({_COS.format(a='a.v', b='b.v')}) AS DOUBLE)) >= 9007199254.740992 THEN CAST(({_COS.format(a='a.v', b='b.v')}) AS DOUBLE) ELSE floor(CAST(({_COS.format(a='a.v', b='b.v')}) AS DOUBLE) * 1e6 + 0.5) / 1e6 END >= 0.9
+            WHERE {bfround_sql(_PAIR_COS, 6)} >= 0.9
          ),
          drops AS (SELECT idb AS vec_id, CAST(count(*) AS BIGINT) AS n_lower_dups
                    FROM pairs GROUP BY 1)
@@ -213,10 +214,10 @@ _SPLIT = "2024-01-08"
     f"""
     WITH e AS (SELECT user_id, user_id % 2 AS arm,
                       CASE WHEN ts < TIMESTAMP '{_SPLIT} 00:00:00'
-                           THEN CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
+                           THEN CAST({bfround_sql('value * 100', 0)} AS BIGINT)
                            ELSE 0 END AS pre,
                       CASE WHEN ts >= TIMESTAMP '{_SPLIT} 00:00:00'
-                           THEN CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
+                           THEN CAST({bfround_sql('value * 100', 0)} AS BIGINT)
                            ELSE 0 END AS post
                FROM events),
          u AS (SELECT user_id, arm,
@@ -234,24 +235,12 @@ _SPLIT = "2024-01-08"
                       CAST(sum(post_cents) AS BIGINT) AS so_a
                FROM u GROUP BY 1)
     SELECT arm, n_a AS n_users,
-           CASE WHEN isnan(CAST(((CAST(so_a AS DOUBLE) / n_a) / 100.0) AS DOUBLE)) OR abs(CAST(((CAST(so_a AS DOUBLE) / n_a) / 100.0) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(so_a AS DOUBLE) / n_a) / 100.0) AS DOUBLE) ELSE floor(CAST(((CAST(so_a AS DOUBLE) / n_a) / 100.0) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS raw_mean,
-           CASE WHEN isnan(CAST(((CAST(so_a AS DOUBLE) / n_a
+           {bfround_sql('(CAST(so_a AS DOUBLE) / n_a) / 100.0', 6)} AS raw_mean,
+           {bfround_sql('''(CAST(so_a AS DOUBLE) / n_a
                   - (CAST(n * spo - sp * so AS DOUBLE)
                      / CAST(n * spp - sp * sp AS DOUBLE))
                     * (CAST(sp_a AS DOUBLE) / n_a - CAST(sp AS DOUBLE) / n))
-                 / 100.0) AS DOUBLE)) OR abs(CAST(((CAST(so_a AS DOUBLE) / n_a
-                  - (CAST(n * spo - sp * so AS DOUBLE)
-                     / CAST(n * spp - sp * sp AS DOUBLE))
-                    * (CAST(sp_a AS DOUBLE) / n_a - CAST(sp AS DOUBLE) / n))
-                 / 100.0) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(so_a AS DOUBLE) / n_a
-                  - (CAST(n * spo - sp * so AS DOUBLE)
-                     / CAST(n * spp - sp * sp AS DOUBLE))
-                    * (CAST(sp_a AS DOUBLE) / n_a - CAST(sp AS DOUBLE) / n))
-                 / 100.0) AS DOUBLE) ELSE floor(CAST(((CAST(so_a AS DOUBLE) / n_a
-                  - (CAST(n * spo - sp * so AS DOUBLE)
-                     / CAST(n * spp - sp * sp AS DOUBLE))
-                    * (CAST(sp_a AS DOUBLE) / n_a - CAST(sp AS DOUBLE) / n))
-                 / 100.0) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS adjusted_mean
+                 / 100.0''', 6)} AS adjusted_mean
     FROM a, p
     """,
 )

@@ -27,7 +27,7 @@ from ..operators.multimodal import pool_frame_embeddings
 from ..operators.similarity import hard_negative_topk
 from ..queries import query
 from ._shared import _COS
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q228: l-diversity audit over (nation, segment) quasi-identifiers
@@ -76,11 +76,11 @@ def q228_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q229: frame→clip embedding pooling (media = vec_id div 8)
 @query(
     "q229_frame_pooling",
-    """
+    f"""
     WITH f AS (SELECT vec_id // 8 AS media_id, embedding
                FROM embeddings WHERE vec_id // 8 < 200),
          u AS (SELECT media_id, i AS pos,
-                      CAST(CASE WHEN isnan(CAST((CAST(embedding[i] AS DOUBLE) * 1000000) AS DOUBLE)) OR abs(CAST((CAST(embedding[i] AS DOUBLE) * 1000000) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((CAST(embedding[i] AS DOUBLE) * 1000000) AS DOUBLE) ELSE floor(CAST((CAST(embedding[i] AS DOUBLE) * 1000000) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+                      CAST({bfround_sql('CAST(embedding[i] AS DOUBLE) * 1000000', 0)}
                            AS BIGINT) AS micro
                FROM f, unnest(generate_series(1, len(embedding))) AS t(i))
     SELECT media_id, CAST(pos AS BIGINT) AS pos,
@@ -121,7 +121,7 @@ def q229_frame_pooling(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       ORDER BY score DESC, vec_id) AS rank
             FROM scored
          )
-    SELECT query_id, vec_id, CASE WHEN isnan(CAST((score) AS DOUBLE)) OR abs(CAST((score) AS DOUBLE)) >= 9007199254.740992 THEN CAST((score) AS DOUBLE) ELSE floor(CAST((score) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS score, rank
+    SELECT query_id, vec_id, {bfround_sql('score', 6)} AS score, rank
     FROM ranked WHERE rank <= 5
     """,
 )
@@ -138,7 +138,7 @@ def q230_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q231: entity resolution end to end (block → verify → CC → survive)
 @query(
     "q231_er_clusters",
-    """
+    f"""
     WITH RECURSIVE
          names AS (SELECT p_name AS name,
                           CAST(min(p_partkey) AS BIGINT) AS nid,
@@ -160,7 +160,7 @@ def q230_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
          nl AS (SELECT n.name, l.cluster_id
                 FROM names n JOIN lab l ON l.nid = n.nid),
          j AS (SELECT nl.cluster_id, p.p_name,
-                      CAST(CASE WHEN isnan(CAST((p_retailprice * 100) AS DOUBLE)) OR abs(CAST((p_retailprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((p_retailprice * 100) AS DOUBLE) ELSE floor(CAST((p_retailprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+                      CAST({bfround_sql('p_retailprice * 100', 0)} AS BIGINT) AS cents
                FROM part p JOIN nl ON nl.name = p.p_name)
     SELECT min(p_name) AS canonical_name,
            CAST(count(DISTINCT p_name) AS BIGINT) AS n_names,

@@ -29,7 +29,7 @@ from ..io import load_table
 from ..operators.ivm import maintain_join_totals
 from ..operators.temporal import asof_nearest
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -38,10 +38,10 @@ _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 # -- q232: exactly-once totals across a streaming restart
 @query(
     "q232_stream_restart_recovery",
-    """
+    f"""
     SELECT user_id,
            CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+           CAST(sum(CAST({bfround_sql('value * 100', 0)} AS BIGINT)) AS BIGINT)
              AS total_cents
     FROM events WHERE user_id % 13 = 0
     GROUP BY 1
@@ -111,9 +111,9 @@ def q232_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q233: join-view IVM (inserts on BOTH sides, three delta terms)
 @query(
     "q233_ivm_join_totals",
-    """
+    f"""
     WITH a AS (SELECT o_custkey,
-                      CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+                      CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) AS cents
                FROM orders),
          b AS (SELECT c_custkey, c_nationkey FROM customer)
     SELECT b.c_nationkey AS nat,

@@ -21,17 +21,17 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..pin import pin
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q235: unpivot (wide metrics → long) with exact integer cells
 @query(
     "q235_unpivot_metrics",
-    """
+    f"""
     WITH w AS (SELECT o_orderpriority AS pri,
                       CAST(count(*) AS BIGINT) AS n_orders,
                       CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_custs,
-                      CAST(sum(CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT))
+                      CAST(sum(CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT))
                            AS BIGINT) AS cents
                FROM orders GROUP BY 1)
     SELECT pri, metric, value FROM w

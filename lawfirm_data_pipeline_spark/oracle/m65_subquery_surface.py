@@ -20,10 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..io import register_views
 from ..queries import query
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 # -- q240: LATERAL dependent subquery — top-2 orders per nation's
 #    highest-balance customer cohort (LATERAL runs per outer row)
-_LATERAL_SQL = """
+_LATERAL_SQL = f"""
     WITH top_cust AS (
         SELECT c_custkey, c_nationkey
         FROM customer
@@ -34,7 +35,7 @@ _LATERAL_SQL = """
     FROM top_cust t,
     LATERAL (
         SELECT o_orderkey,
-               CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+               CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) AS cents
         FROM orders
         WHERE o_custkey = t.c_custkey
         ORDER BY o_totalprice DESC, o_orderkey

@@ -22,7 +22,7 @@ from ..io import load_table
 from ..queries import query
 from ..sources import pydatasource
 from ..streaming.windows import run_stream_to_table
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q242: Python STREAMING data source drains to the batch answer
@@ -86,8 +86,8 @@ _LAT0, _LON0 = 40.7128, -74.006  # reference point (NYC)
     )
     SELECT cell_lat, cell_lon,
            CAST(count(*) AS BIGINT) AS n_pts,
-           CASE WHEN isnan(CAST((min(km)) AS DOUBLE)) OR abs(CAST((min(km)) AS DOUBLE)) >= 9007199254740.992 THEN CAST((min(km)) AS DOUBLE) ELSE floor(CAST((min(km)) AS DOUBLE) * 1e3 + 0.5) / 1e3 END AS min_km,
-           CASE WHEN isnan(CAST((max(km)) AS DOUBLE)) OR abs(CAST((max(km)) AS DOUBLE)) >= 9007199254740.992 THEN CAST((max(km)) AS DOUBLE) ELSE floor(CAST((max(km)) AS DOUBLE) * 1e3 + 0.5) / 1e3 END AS max_km
+           {bfround_sql('min(km)', 3)} AS min_km,
+           {bfround_sql('max(km)', 3)} AS max_km
     FROM d GROUP BY 1, 2
     """,
 )

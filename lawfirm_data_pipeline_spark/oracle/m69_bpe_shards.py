@@ -28,7 +28,7 @@ from ..io import load_table
 from ..operators.ranking import global_row_number
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 # model artifact: (pair → marker) merge list, applied in order; markers
 # are control chars absent from any corpus text
@@ -57,7 +57,7 @@ def _apply_merges_sql(expr: str) -> str:
                            - (n_words - 1) AS BIGINT) AS n_bpe_tokens
                FROM t)
     SELECT doc_id, n_words, n_char_tokens, n_bpe_tokens,
-           CASE WHEN isnan(CAST((CAST(n_bpe_tokens AS DOUBLE) / n_char_tokens) AS DOUBLE)) OR abs(CAST((CAST(n_bpe_tokens AS DOUBLE) / n_char_tokens) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(n_bpe_tokens AS DOUBLE) / n_char_tokens) AS DOUBLE) ELSE floor(CAST((CAST(n_bpe_tokens AS DOUBLE) / n_char_tokens) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('CAST(n_bpe_tokens AS DOUBLE) / n_char_tokens', 6)}
              AS compression
     FROM e
     """,

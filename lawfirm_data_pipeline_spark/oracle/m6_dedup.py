@@ -25,6 +25,7 @@ from ._shared import (
     SHINGLES_SQL as _SHINGLES,
     planted_corpus as _planted_corpus,
 )
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 
 @query(
@@ -59,11 +60,11 @@ def q31_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             GROUP BY 1, 2
          )
     SELECT ida, idb,
-           CASE WHEN isnan(CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE)) OR abs(CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE) ELSE floor(CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS jaccard
+           {bfround_sql('CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)', 6)} AS jaccard
     FROM common
     JOIN sizes sa ON sa.did = ida
     JOIN sizes sb ON sb.did = idb
-    WHERE CASE WHEN isnan(CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE)) OR abs(CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE) ELSE floor(CAST((CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END >= 0.5
+    WHERE {bfround_sql('CAST(common AS DOUBLE) / (sa.sz + sb.sz - common)', 6)} >= 0.5
     """,
 )
 def q32_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,6 +25,7 @@ from ..operators.similarity import (
 )
 from ..queries import query
 from ._shared import _COS, BRUTE_FORCE_TOP10_SQL
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 @query(
@@ -44,7 +45,7 @@ from ._shared import _COS, BRUTE_FORCE_TOP10_SQL
                                       ORDER BY score DESC, vec_id) AS rank
             FROM scored
          )
-    SELECT query_id, vec_id, CASE WHEN isnan(CAST((score) AS DOUBLE)) OR abs(CAST((score) AS DOUBLE)) >= 9007199254.740992 THEN CAST((score) AS DOUBLE) ELSE floor(CAST((score) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS score, rank
+    SELECT query_id, vec_id, {bfround_sql('score', 6)} AS score, rank
     FROM ranked WHERE rank <= 5
     """,
 )
@@ -58,7 +59,6 @@ def q36_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (q225's SemDeDup policy reuses it without import-order side effects)
 from ._shared import PLANT_SQL as _PLANT_SQL  # noqa: E402
 from ._shared import planted_vectors as _planted_vectors  # noqa: E402
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
 
 
 @query(
@@ -70,8 +70,8 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
                    {_COS.format(a='a.v', b='b.v')} AS score
             FROM vecs a JOIN vecs b ON a.vec_id < b.vec_id
          )
-    SELECT ida, idb, CASE WHEN isnan(CAST((score) AS DOUBLE)) OR abs(CAST((score) AS DOUBLE)) >= 9007199254.740992 THEN CAST((score) AS DOUBLE) ELSE floor(CAST((score) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS score
-    FROM pairs WHERE CASE WHEN isnan(CAST((score) AS DOUBLE)) OR abs(CAST((score) AS DOUBLE)) >= 9007199254.740992 THEN CAST((score) AS DOUBLE) ELSE floor(CAST((score) AS DOUBLE) * 1e6 + 0.5) / 1e6 END >= 0.9
+    SELECT ida, idb, {bfround_sql('score', 6)} AS score
+    FROM pairs WHERE {bfround_sql('score', 6)} >= 0.9
     """,
 )
 def q37_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..operators import text as TX
 from ..queries import query
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 # DuckDB-side tokenization identical to text.tokens()
 _TOKS = "list_filter(str_split_regex(trim(text), '\\s+'), t -> t != '')"
@@ -141,19 +142,10 @@ def q29_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM t
          )
     SELECT doc_id,
-           CASE WHEN isnan(CAST((((CASE WHEN n_tok BETWEEN 20 AND 1000 THEN 1.0 WHEN n_tok >= 5 THEN 0.5 ELSE 0.0 END)
+           {bfround_sql('''((CASE WHEN n_tok BETWEEN 20 AND 1000 THEN 1.0 WHEN n_tok >= 5 THEN 0.5 ELSE 0.0 END)
                 + (CASE WHEN wl BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.3 END)
                 + (CASE WHEN pr <= 0.2 THEN 1.0 ELSE 0.2 END)
-                + (CASE WHEN sr >= 0.05 THEN 1.0 ELSE 0.4 END)) / 4.0) AS DOUBLE)) OR abs(CAST((((CASE WHEN n_tok BETWEEN 20 AND 1000 THEN 1.0 WHEN n_tok >= 5 THEN 0.5 ELSE 0.0 END)
-                + (CASE WHEN wl BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.3 END)
-                + (CASE WHEN pr <= 0.2 THEN 1.0 ELSE 0.2 END)
-                + (CASE WHEN sr >= 0.05 THEN 1.0 ELSE 0.4 END)) / 4.0) AS DOUBLE)) >= 9007199254.740992 THEN CAST((((CASE WHEN n_tok BETWEEN 20 AND 1000 THEN 1.0 WHEN n_tok >= 5 THEN 0.5 ELSE 0.0 END)
-                + (CASE WHEN wl BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.3 END)
-                + (CASE WHEN pr <= 0.2 THEN 1.0 ELSE 0.2 END)
-                + (CASE WHEN sr >= 0.05 THEN 1.0 ELSE 0.4 END)) / 4.0) AS DOUBLE) ELSE floor(CAST((((CASE WHEN n_tok BETWEEN 20 AND 1000 THEN 1.0 WHEN n_tok >= 5 THEN 0.5 ELSE 0.0 END)
-                + (CASE WHEN wl BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.3 END)
-                + (CASE WHEN pr <= 0.2 THEN 1.0 ELSE 0.2 END)
-                + (CASE WHEN sr >= 0.05 THEN 1.0 ELSE 0.4 END)) / 4.0) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS quality
+                + (CASE WHEN sr >= 0.05 THEN 1.0 ELSE 0.4 END)) / 4.0''', 6)} AS quality
     FROM feats
     """,
 )

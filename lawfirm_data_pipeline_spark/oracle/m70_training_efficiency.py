@@ -24,7 +24,7 @@ from ..operators.ranking import global_row_number
 from ..operators.text import tokens
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _STOPWORDS = ["a", "and", "in", "is", "it", "of", "the", "to"]
 
@@ -104,14 +104,14 @@ _TEMP = 2.0
     f"""
     WITH s AS (SELECT source,
                       CAST(count(*) AS BIGINT) AS n_docs,
-                      CASE WHEN isnan(CAST((avg(n_chars) / 100.0) AS DOUBLE)) OR abs(CAST((avg(n_chars) / 100.0) AS DOUBLE)) >= 9007199254.740992 THEN CAST((avg(n_chars) / 100.0) AS DOUBLE) ELSE floor(CAST((avg(n_chars) / 100.0) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS score
+                      {bfround_sql('avg(n_chars) / 100.0', 6)} AS score
                FROM documents GROUP BY 1),
          e AS (SELECT source, n_docs, score,
                       exp(score / {_TEMP}) AS u
                FROM s),
          z AS (SELECT sum(u) AS z FROM e)
     SELECT e.source, e.n_docs, e.score,
-           CASE WHEN isnan(CAST((e.u / z.z) AS DOUBLE)) OR abs(CAST((e.u / z.z) AS DOUBLE)) >= 9007199254.740992 THEN CAST((e.u / z.z) AS DOUBLE) ELSE floor(CAST((e.u / z.z) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS weight
+           {bfround_sql('e.u / z.z', 6)} AS weight
     FROM e, z
     """,
 )
@@ -163,7 +163,7 @@ _BATCH = 32
            CAST(count(*) AS BIGINT) AS n_batches,
            CAST(sum(tok) AS BIGINT) AS token_sum,
            CAST(sum(mx * n_rows) AS BIGINT) AS padded_sum,
-           CASE WHEN isnan(CAST((1.0 - CAST(sum(tok) AS DOUBLE) / sum(mx * n_rows)) AS DOUBLE)) OR abs(CAST((1.0 - CAST(sum(tok) AS DOUBLE) / sum(mx * n_rows)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((1.0 - CAST(sum(tok) AS DOUBLE) / sum(mx * n_rows)) AS DOUBLE) ELSE floor(CAST((1.0 - CAST(sum(tok) AS DOUBLE) / sum(mx * n_rows)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('1.0 - CAST(sum(tok) AS DOUBLE) / sum(mx * n_rows)', 6)}
              AS waste_ratio
     FROM per_batch GROUP BY 1
     """,

@@ -21,13 +21,13 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q253: calibration bins + per-bin ECE contribution
 @query(
     "q253_calibration_ece",
-    """
+    f"""
     WITH s AS (SELECT o_orderkey,
                       (o_orderkey * 2654435761 % 1000) AS conf_milli,
                       CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END AS y
@@ -40,17 +40,11 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
                FROM b GROUP BY 1),
          t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM g)
     SELECT g.bin, g.n,
-           CASE WHEN isnan(CAST((CAST(g.conf_sum AS DOUBLE) / g.n / 1000.0) AS DOUBLE)) OR abs(CAST((CAST(g.conf_sum AS DOUBLE) / g.n / 1000.0) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(g.conf_sum AS DOUBLE) / g.n / 1000.0) AS DOUBLE) ELSE floor(CAST((CAST(g.conf_sum AS DOUBLE) / g.n / 1000.0) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS mean_conf,
-           CASE WHEN isnan(CAST((CAST(g.n_pos AS DOUBLE) / g.n) AS DOUBLE)) OR abs(CAST((CAST(g.n_pos AS DOUBLE) / g.n) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(g.n_pos AS DOUBLE) / g.n) AS DOUBLE) ELSE floor(CAST((CAST(g.n_pos AS DOUBLE) / g.n) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS obs_rate,
-           CASE WHEN isnan(CAST((CAST(g.n AS DOUBLE) / t.total
+           {bfround_sql('CAST(g.conf_sum AS DOUBLE) / g.n / 1000.0', 6)} AS mean_conf,
+           {bfround_sql('CAST(g.n_pos AS DOUBLE) / g.n', 6)} AS obs_rate,
+           {bfround_sql('''CAST(g.n AS DOUBLE) / t.total
                  * abs(CAST(g.conf_sum AS DOUBLE) / g.n / 1000.0
-                       - CAST(g.n_pos AS DOUBLE) / g.n)) AS DOUBLE)) OR abs(CAST((CAST(g.n AS DOUBLE) / t.total
-                 * abs(CAST(g.conf_sum AS DOUBLE) / g.n / 1000.0
-                       - CAST(g.n_pos AS DOUBLE) / g.n)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(g.n AS DOUBLE) / t.total
-                 * abs(CAST(g.conf_sum AS DOUBLE) / g.n / 1000.0
-                       - CAST(g.n_pos AS DOUBLE) / g.n)) AS DOUBLE) ELSE floor(CAST((CAST(g.n AS DOUBLE) / t.total
-                 * abs(CAST(g.conf_sum AS DOUBLE) / g.n / 1000.0
-                       - CAST(g.n_pos AS DOUBLE) / g.n)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS ece_term
+                       - CAST(g.n_pos AS DOUBLE) / g.n)''', 6)} AS ece_term
     FROM g, t
     """,
 )
@@ -90,7 +84,7 @@ def q253_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q254: NDCG@5 per customer (rank by spend, graded by urgency)
 @query(
     "q254_ndcg_at_5",
-    """
+    f"""
     WITH o AS (SELECT o_custkey, o_orderkey, o_totalprice,
                       5 - CAST(substring(o_orderpriority, 1, 1) AS INT) AS rel
                FROM orders WHERE o_custkey % 7 = 0),
@@ -111,9 +105,9 @@ def q253_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
                          sum(rel / log2(r + 1.0)) AS idcg
                   FROM ideal WHERE r <= 5 GROUP BY 1)
     SELECT d.o_custkey AS cust,
-           CASE WHEN isnan(CAST((d.dcg) AS DOUBLE)) OR abs(CAST((d.dcg) AS DOUBLE)) >= 9007199254.740992 THEN CAST((d.dcg) AS DOUBLE) ELSE floor(CAST((d.dcg) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS dcg,
-           CASE WHEN isnan(CAST((i.idcg) AS DOUBLE)) OR abs(CAST((i.idcg) AS DOUBLE)) >= 9007199254.740992 THEN CAST((i.idcg) AS DOUBLE) ELSE floor(CAST((i.idcg) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS idcg,
-           CASE WHEN isnan(CAST((CASE WHEN i.idcg > 0 THEN d.dcg / i.idcg ELSE 1.0 END) AS DOUBLE)) OR abs(CAST((CASE WHEN i.idcg > 0 THEN d.dcg / i.idcg ELSE 1.0 END) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CASE WHEN i.idcg > 0 THEN d.dcg / i.idcg ELSE 1.0 END) AS DOUBLE) ELSE floor(CAST((CASE WHEN i.idcg > 0 THEN d.dcg / i.idcg ELSE 1.0 END) AS DOUBLE) * 1e6 + 0.5) / 1e6 END
+           {bfround_sql('d.dcg', 6)} AS dcg,
+           {bfround_sql('i.idcg', 6)} AS idcg,
+           {bfround_sql('CASE WHEN i.idcg > 0 THEN d.dcg / i.idcg ELSE 1.0 END', 6)}
              AS ndcg
     FROM dcg d JOIN idcg i ON i.o_custkey = d.o_custkey
     """,
@@ -157,7 +151,7 @@ def q254_ndcg_at_5(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q255: disparate impact (80% rule) across market segments
 @query(
     "q255_disparate_impact",
-    """
+    f"""
     WITH g AS (SELECT c_mktsegment AS seg,
                       CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(CASE WHEN c_acctbal > 5000 THEN 1 ELSE 0 END)
@@ -165,8 +159,8 @@ def q254_ndcg_at_5(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM customer GROUP BY 1),
          m AS (SELECT max(CAST(n_pos AS DOUBLE) / n) AS max_rate FROM g)
     SELECT g.seg, g.n, g.n_pos,
-           CASE WHEN isnan(CAST((CAST(g.n_pos AS DOUBLE) / g.n) AS DOUBLE)) OR abs(CAST((CAST(g.n_pos AS DOUBLE) / g.n) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(g.n_pos AS DOUBLE) / g.n) AS DOUBLE) ELSE floor(CAST((CAST(g.n_pos AS DOUBLE) / g.n) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS pos_rate,
-           CASE WHEN isnan(CAST((CAST(g.n_pos AS DOUBLE) / g.n / m.max_rate) AS DOUBLE)) OR abs(CAST((CAST(g.n_pos AS DOUBLE) / g.n / m.max_rate) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(g.n_pos AS DOUBLE) / g.n / m.max_rate) AS DOUBLE) ELSE floor(CAST((CAST(g.n_pos AS DOUBLE) / g.n / m.max_rate) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS di_ratio,
+           {bfround_sql('CAST(g.n_pos AS DOUBLE) / g.n', 6)} AS pos_rate,
+           {bfround_sql('CAST(g.n_pos AS DOUBLE) / g.n / m.max_rate', 6)} AS di_ratio,
            CAST(g.n_pos AS DOUBLE) / g.n / m.max_rate < 0.8 AS below_80pct
     FROM g, m
     """,

@@ -28,7 +28,7 @@ from ..io import load_table
 from ..queries import query
 from ..sources.lake import Catalog
 from ..streaming.catalog_sink import exactly_once_totals_sink
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -43,8 +43,8 @@ _BACKFILL_DAY = "2024-01-15"
     WITH e AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
                       CASE WHEN CAST(date_trunc('day', ts) AS DATE)
                                 = DATE '{_BACKFILL_DAY}'
-                           THEN 2 * CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
-                           ELSE CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)
+                           THEN 2 * CAST({bfround_sql('value * 100', 0)} AS BIGINT)
+                           ELSE CAST({bfround_sql('value * 100', 0)} AS BIGINT)
                       END AS cents
                FROM events WHERE user_id % 5 = 0)
     SELECT CAST(day AS VARCHAR) AS day,
@@ -98,10 +98,10 @@ def q256_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
 # -- q257: exactly-once streaming sink through the catalog (+ replay)
 @query(
     "q257_stream_catalog_sink",
-    """
+    f"""
     SELECT user_id,
            CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+           CAST(sum(CAST({bfround_sql('value * 100', 0)} AS BIGINT)) AS BIGINT)
              AS total_cents
     FROM events WHERE user_id % 11 = 0
     GROUP BY 1

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _FP = 1_000_000
 
@@ -31,7 +31,7 @@ _FP = 1_000_000
     "q260_stl_decompose",
     f"""
     WITH d AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-                      CAST(sum(CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+                      CAST(sum(CAST({bfround_sql('value * 100', 0)} AS BIGINT)) AS BIGINT)
                         AS cents
                FROM events GROUP BY 1),
          t AS (SELECT day, cents,

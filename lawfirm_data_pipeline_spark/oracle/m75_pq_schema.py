@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..operators.similarity import pq_codes
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -32,10 +32,10 @@ _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 # -- q261: PQ code assignment (8 subspaces x 16 centroids, exact)
 @query(
     "q261_pq_codes",
-    """
+    f"""
     WITH v AS (SELECT vec_id,
                       list_transform(embedding,
-                          x -> CAST(CASE WHEN isnan(CAST((CAST(x AS DOUBLE) * 1000000) AS DOUBLE)) OR abs(CAST((CAST(x AS DOUBLE) * 1000000) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((CAST(x AS DOUBLE) * 1000000) AS DOUBLE) ELSE floor(CAST((CAST(x AS DOUBLE) * 1000000) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+                          x -> CAST({bfround_sql('CAST(x AS DOUBLE) * 1000000', 0)}
                                     AS BIGINT)) AS fp
                FROM embeddings),
          seeds AS (SELECT vec_id AS c, fp FROM v WHERE vec_id < 16),
@@ -73,13 +73,13 @@ def q261_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q262: mergeSchema read over evolved parquet history
 @query(
     "q262_schema_merge_read",
-    """
+    f"""
     WITH old AS (SELECT o_orderkey,
-                        CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents,
+                        CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) AS cents,
                         NULL AS channel
                  FROM orders WHERE o_orderkey % 2 = 0),
          new AS (SELECT o_orderkey,
-                        CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents,
+                        CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) AS cents,
                         'web-' || (o_orderkey % 3) AS channel
                  FROM orders WHERE o_orderkey % 2 = 1),
          u AS (SELECT * FROM old UNION ALL SELECT * FROM new)

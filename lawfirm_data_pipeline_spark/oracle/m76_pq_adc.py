@@ -19,14 +19,15 @@ from pyspark.sql import DataFrame, SparkSession
 from ..io import load_table
 from ..operators.similarity import pq_adc_topk
 from ..queries import query
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 
 @query(
     "q263_pq_adc_topk",
-    """
+    f"""
     WITH v AS (SELECT vec_id,
                       list_transform(embedding,
-                          x -> CAST(CASE WHEN isnan(CAST((CAST(x AS DOUBLE) * 1000000) AS DOUBLE)) OR abs(CAST((CAST(x AS DOUBLE) * 1000000) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((CAST(x AS DOUBLE) * 1000000) AS DOUBLE) ELSE floor(CAST((CAST(x AS DOUBLE) * 1000000) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+                          x -> CAST({bfround_sql('CAST(x AS DOUBLE) * 1000000', 0)}
                                     AS BIGINT)) AS fp
                FROM embeddings),
          seeds AS (SELECT vec_id AS c, fp FROM v WHERE vec_id < 16),

@@ -22,16 +22,16 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..operators.ranking import top_k_ranked
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q264: MaxSim late-interaction retrieval (query doc 0 vs corpus)
 @query(
     "q264_maxsim_retrieval",
-    """
+    f"""
     WITH t AS (SELECT vec_id // 8 AS doc_id, vec_id % 8 AS tok,
                       list_transform(embedding,
-                          x -> CAST(CASE WHEN isnan(CAST((CAST(x AS DOUBLE) * 1000) AS DOUBLE)) OR abs(CAST((CAST(x AS DOUBLE) * 1000) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((CAST(x AS DOUBLE) * 1000) AS DOUBLE) ELSE floor(CAST((CAST(x AS DOUBLE) * 1000) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+                          x -> CAST({bfround_sql('CAST(x AS DOUBLE) * 1000', 0)}
                                     AS BIGINT)) AS fp
                FROM embeddings WHERE vec_id // 8 < 250),
          q AS (SELECT tok AS qtok, fp AS qfp FROM t WHERE doc_id = 0),
@@ -127,24 +127,29 @@ def q265_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# q266's leave-one-out mean in dollars; singleton categories encode 0
+_LOO_MEAN = (
+    "CASE WHEN g.n > 1 THEN CAST(g.s - o.cents AS DOUBLE) / (g.n - 1) / 100.0"
+    " ELSE 0.0 END"
+)
+
+
 # -- q266: leave-one-out target encoding (leakage-free, exact cents)
 @query(
     "q266_target_encoding_loo",
-    """
+    f"""
     WITH o AS (SELECT o_orderkey, o_orderpriority AS cat,
-                      CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+                      CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) AS cents
                FROM orders WHERE o_orderkey % 5 = 0),
          g AS (SELECT cat, CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(cents) AS BIGINT) AS s
                FROM o GROUP BY 1)
     SELECT o.o_orderkey, o.cat,
-           -- binary-floor 6dp rounding: floor(x*1e6 + 0.5)/1e6 is the
-           -- same IEEE ops on the same double in BOTH engines, so ties
-           -- at a decimal half cannot split them the way each engine's
-           -- own round() does (r10 fresh-draw finding)
-           floor(CASE WHEN g.n > 1
-                      THEN CAST(g.s - o.cents AS DOUBLE) / (g.n - 1) / 100.0
-                      ELSE 0.0 END * 1000000.0 + 0.5) / 1000000.0 AS loo_mean
+           -- binary-floor 6dp rounding: the same IEEE ops on the same
+           -- double in BOTH engines, so ties at a decimal half cannot
+           -- split them the way each engine's own round() does (r10
+           -- fresh-draw finding)
+           {bfround_sql(_LOO_MEAN, 6)} AS loo_mean
     FROM o JOIN g ON g.cat = o.cat
     """,
 )
@@ -167,9 +172,6 @@ def q266_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n") > 1,
         (F.col("s") - F.col("cents")).cast("double") / (F.col("n") - 1) / 100.0,
     ).otherwise(0.0)
-    # binary-floor 6dp rounding — identical IEEE ops both engines (the
-    # engines' own round() split on a decimal-half tie, r10 fresh-draw)
-    loo6 = F.floor(loo * 1000000.0 + 0.5) / 1000000.0
     return o.join(F.broadcast(g), "cat").select(
-        "o_orderkey", "cat", loo6.alias("loo_mean")
+        "o_orderkey", "cat", bfround(loo, 6).alias("loo_mean")
     )

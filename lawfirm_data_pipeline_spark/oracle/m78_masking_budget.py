@@ -23,7 +23,7 @@ from ..io import load_table
 from ..operators.ranking import global_running_sum
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 # -- q267: deterministic span-corruption plan (merged hash spans)
@@ -62,7 +62,7 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
     SELECT doc_id, n_tokens,
            CAST(count(*) AS BIGINT) AS n_spans,
            CAST(sum(me - ms) AS BIGINT) AS n_masked,
-           CASE WHEN isnan(CAST((CAST(sum(me - ms) AS DOUBLE) / n_tokens) AS DOUBLE)) OR abs(CAST((CAST(sum(me - ms) AS DOUBLE) / n_tokens) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sum(me - ms) AS DOUBLE) / n_tokens) AS DOUBLE) ELSE floor(CAST((CAST(sum(me - ms) AS DOUBLE) / n_tokens) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS mask_rate
+           {bfround_sql('CAST(sum(me - ms) AS DOUBLE) / n_tokens', 6)} AS mask_rate
     FROM merged GROUP BY 1, 2
     """,
 )

@@ -22,9 +22,9 @@ from ..io import load_table
 from ..pin import pin
 from ..operators.text import tfidf_topk
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
-_CENTS = "CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)"
+_CENTS = f"CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT)"
 
 
 # -- q41: ROLLUP — subtotal hierarchy (nation → nation+year → grand total)
@@ -117,11 +117,11 @@ def q42_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q43_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
     return spark.sql(
-        """
+        f"""
         SELECT coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
                coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
                count(*) AS n_orders,
-               sum(CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS sum_cents
+               sum(CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT)) AS sum_cents
         FROM orders_gs
         GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus))
         """
@@ -159,7 +159,7 @@ def q44_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q45: moment statistics from exact integer sums (order-independent)
 @query(
     "q45_moment_stats",
-    """
+    f"""
     WITH s AS (
         SELECT l_returnflag,
                count(*) AS n,
@@ -171,17 +171,11 @@ def q44_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem GROUP BY l_returnflag
     )
     SELECT l_returnflag, n,
-           CASE WHEN isnan(CAST((CAST(sq AS DOUBLE) / n) AS DOUBLE)) OR abs(CAST((CAST(sq AS DOUBLE) / n) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(sq AS DOUBLE) / n) AS DOUBLE) ELSE floor(CAST((CAST(sq AS DOUBLE) / n) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS mean_qty,
-           CASE WHEN isnan(CAST((sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * sq / n) / (n - 1))) AS DOUBLE)) OR abs(CAST((sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * sq / n) / (n - 1))) AS DOUBLE)) >= 9007199254.740992 THEN CAST((sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * sq / n) / (n - 1))) AS DOUBLE) ELSE floor(CAST((sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * sq / n) / (n - 1))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS stddev_qty,
-           CASE WHEN isnan(CAST(((CAST(sql_ AS DOUBLE) - CAST(sq AS DOUBLE) * sl / n)
+           {bfround_sql('CAST(sq AS DOUBLE) / n', 6)} AS mean_qty,
+           {bfround_sql('sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * sq / n) / (n - 1))', 6)} AS stddev_qty,
+           {bfround_sql('''(CAST(sql_ AS DOUBLE) - CAST(sq AS DOUBLE) * sl / n)
                  / sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * sq / n)
-                        * (CAST(sll AS DOUBLE) - CAST(sl AS DOUBLE) * sl / n))) AS DOUBLE)) OR abs(CAST(((CAST(sql_ AS DOUBLE) - CAST(sq AS DOUBLE) * sl / n)
-                 / sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * sq / n)
-                        * (CAST(sll AS DOUBLE) - CAST(sl AS DOUBLE) * sl / n))) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(sql_ AS DOUBLE) - CAST(sq AS DOUBLE) * sl / n)
-                 / sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * sq / n)
-                        * (CAST(sll AS DOUBLE) - CAST(sl AS DOUBLE) * sl / n))) AS DOUBLE) ELSE floor(CAST(((CAST(sql_ AS DOUBLE) - CAST(sq AS DOUBLE) * sl / n)
-                 / sqrt((CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * sq / n)
-                        * (CAST(sll AS DOUBLE) - CAST(sl AS DOUBLE) * sl / n))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS corr_qty_line
+                        * (CAST(sll AS DOUBLE) - CAST(sl AS DOUBLE) * sl / n))''', 6)} AS corr_qty_line
     FROM s
     """,
 )
@@ -226,7 +220,7 @@ _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"
          nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM docs),
          scored AS (
             SELECT tc.doc_id, tc.term,
-                   CASE WHEN isnan(CAST(((CAST(cnt AS DOUBLE) / dlen) * ln(CAST(n_docs AS DOUBLE) / dfreq)) AS DOUBLE)) OR abs(CAST(((CAST(cnt AS DOUBLE) / dlen) * ln(CAST(n_docs AS DOUBLE) / dfreq)) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(cnt AS DOUBLE) / dlen) * ln(CAST(n_docs AS DOUBLE) / dfreq)) AS DOUBLE) ELSE floor(CAST(((CAST(cnt AS DOUBLE) / dlen) * ln(CAST(n_docs AS DOUBLE) / dfreq)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS tfidf
+                   {bfround_sql('(CAST(cnt AS DOUBLE) / dlen) * ln(CAST(n_docs AS DOUBLE) / dfreq)', 6)} AS tfidf
             FROM tc JOIN dl USING (doc_id) JOIN dfc USING (term) CROSS JOIN nd
          ),
          ranked AS (
@@ -312,10 +306,10 @@ def q48_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q49: exact interpolated percentiles (same operands → same doubles)
 @query(
     "q49_percentiles",
-    """
+    f"""
     SELECT l_returnflag,
-           CASE WHEN isnan(CAST((quantile_cont(l_quantity, 0.5)) AS DOUBLE)) OR abs(CAST((quantile_cont(l_quantity, 0.5)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((quantile_cont(l_quantity, 0.5)) AS DOUBLE) ELSE floor(CAST((quantile_cont(l_quantity, 0.5)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS p50_qty,
-           CASE WHEN isnan(CAST((quantile_cont(l_quantity, 0.9)) AS DOUBLE)) OR abs(CAST((quantile_cont(l_quantity, 0.9)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((quantile_cont(l_quantity, 0.9)) AS DOUBLE) ELSE floor(CAST((quantile_cont(l_quantity, 0.9)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS p90_qty
+           {bfround_sql('quantile_cont(l_quantity, 0.5)', 6)} AS p50_qty,
+           {bfround_sql('quantile_cont(l_quantity, 0.9)', 6)} AS p90_qty
     FROM lineitem GROUP BY l_returnflag
     """,
 )

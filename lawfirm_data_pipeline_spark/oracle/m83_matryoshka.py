@@ -24,7 +24,7 @@ from pyspark.sql.window import Window
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _FP = 1_000_000
 _K = 10
@@ -49,7 +49,7 @@ _RANK_SQL = """
     f"""
     WITH vecs AS (SELECT vec_id,
                          list_transform(embedding,
-                             x -> CAST(CASE WHEN isnan(CAST((CAST(x AS DOUBLE) * {_FP}) AS DOUBLE)) OR abs(CAST((CAST(x AS DOUBLE) * {_FP}) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((CAST(x AS DOUBLE) * {_FP}) AS DOUBLE) ELSE floor(CAST((CAST(x AS DOUBLE) * {_FP}) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+                             x -> CAST({bfround_sql(f'CAST(x AS DOUBLE) * {_FP}', 0)}
                                        AS BIGINT)) AS fp
                   FROM embeddings),
          qs AS (SELECT * FROM vecs WHERE vec_id < {_NQ}),

@@ -27,15 +27,15 @@ from pyspark.sql.window import Window
 from ..io import load_table
 from ..pin import pin
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 @query(
     "q273_entropy_fd_profile",
-    """
+    f"""
     WITH ent AS (
         SELECT col, CAST(count(*) AS BIGINT) AS n_distinct,
-               CASE WHEN isnan(CAST((-sum((n / tot) * ln(n / tot))) AS DOUBLE)) OR abs(CAST((-sum((n / tot) * ln(n / tot))) AS DOUBLE)) >= 9007199254.740992 THEN CAST((-sum((n / tot) * ln(n / tot))) AS DOUBLE) ELSE floor(CAST((-sum((n / tot) * ln(n / tot))) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS entropy
+               {bfround_sql('-sum((n / tot) * ln(n / tot))', 6)} AS entropy
         FROM (
             SELECT col, v, CAST(count(*) AS DOUBLE) AS n,
                    CAST(sum(count(*)) OVER (PARTITION BY col) AS DOUBLE) AS tot
@@ -169,7 +169,7 @@ _NBUCKETS = 5
         FROM grid
     )
     SELECT grp AS group_id,
-           CASE WHEN isnan(CAST((sum(abs(cd)) / ({_NBUCKETS} - 1)) AS DOUBLE)) OR abs(CAST((sum(abs(cd)) / ({_NBUCKETS} - 1)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((sum(abs(cd)) / ({_NBUCKETS} - 1)) AS DOUBLE) ELSE floor(CAST((sum(abs(cd)) / ({_NBUCKETS} - 1)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS emd,
+           {bfround_sql(f'sum(abs(cd)) / ({_NBUCKETS} - 1)', 6)} AS emd,
            sum(abs(cd)) / ({_NBUCKETS} - 1) > {_T} AS breach
     FROM cum GROUP BY grp
     """,

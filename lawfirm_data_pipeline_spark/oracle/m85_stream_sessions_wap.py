@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..io import load_events_stream, load_table
 from ..queries import query
 from ..sources.lake import Catalog
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -36,7 +36,7 @@ _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 @query(
     "q275_stream_session_windows",
-    """
+    f"""
     WITH e AS (SELECT user_id, ts, value FROM events WHERE user_id % 17 = 0),
     marked AS (
         SELECT user_id, ts, value,
@@ -55,7 +55,7 @@ _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
            min(ts) AS session_start,
            max(ts) + INTERVAL '30 minutes' AS session_end,
            CAST(count(*) AS BIGINT) AS n_events,
-           CASE WHEN isnan(CAST((sum(value)) AS DOUBLE)) OR abs(CAST((sum(value)) AS DOUBLE)) >= 90071992547409.92 THEN CAST((sum(value)) AS DOUBLE) ELSE floor(CAST((sum(value)) AS DOUBLE) * 1e2 + 0.5) / 1e2 END AS sum_value
+           {bfround_sql('sum(value)', 2)} AS sum_value
     FROM islands
     GROUP BY user_id, sid
     """,
@@ -81,7 +81,7 @@ def q275_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q276_write_audit_publish",
-    """
+    f"""
     WITH good AS (
         SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 3 = 0
     ),
@@ -100,7 +100,7 @@ def q275_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
            (SELECT CAST(count(*) AS BIGINT) FROM good) AS n
     UNION ALL
     SELECT 'published_cents',
-           (SELECT CAST(sum(CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+           (SELECT CAST(sum(CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT)) AS BIGINT)
             FROM good)
     UNION ALL SELECT 'rejected_bad_price', (SELECT n_bad_price FROM bad_audit)
     UNION ALL SELECT 'rejected_dup_keys',

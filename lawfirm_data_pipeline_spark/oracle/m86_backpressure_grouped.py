@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -40,10 +40,10 @@ _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 @query(
     "q277_stream_backpressure",
-    """
+    f"""
     WITH e AS (
         SELECT event_type,
-               CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+               CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents
         FROM events WHERE user_id % 13 = 0
     )
     SELECT 'batches_match_files' AS metric, CAST(1 AS BIGINT) AS n
@@ -125,7 +125,7 @@ def q277_stream_backpressure(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(scratch, ignore_errors=True)
 
 
-_OLS_SQL_TERMS = """
+_OLS_SQL_TERMS = f"""
         SELECT user_id,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(x) AS BIGINT) AS sx,
@@ -136,7 +136,7 @@ _OLS_SQL_TERMS = """
             SELECT user_id,
                    CAST(floor(epoch(ts) / 60) AS BIGINT)
                      - 28401120 AS x,
-                   CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS y
+                   CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS y
             -- sample = observed rows (r12 nulls axis): a NULL value
             -- has no y; count(*) must not mix denominators
             FROM events WHERE user_id % 29 = 0 AND value IS NOT NULL

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 # 26 single letters guarantee termination; multi-char entries make the
 # greedy choice nontrivial.
@@ -214,10 +214,10 @@ def _touch_bucket_table_dirs(spark: SparkSession, tables: tuple[str, str]) -> No
 
 @query(
     "q280_bucketed_join_revenue",
-    """
+    f"""
     SELECT o.o_orderpriority,
            CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(sum(CAST(CASE WHEN isnan(CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE)) OR abs(CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE) ELSE floor(CAST((l.l_extendedprice * (1 - l.l_discount) * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+           CAST(sum(CAST({bfround_sql('l.l_extendedprice * (1 - l.l_discount) * 100', 0)}
                          AS BIGINT)) AS BIGINT) AS revenue_cents
     FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
     WHERE o.o_orderstatus = 'O'

@@ -34,7 +34,7 @@ from ..pin import pin
 from ..operators.dedup import minhash_signatures
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS, SHINGLES_SQL as _SHINGLES
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -101,7 +101,7 @@ def _sig_bands_sql(src: str) -> str:
             GROUP BY 1, 2
          )
     SELECT common.bid AS batch_id, common.hid AS hist_id,
-           CASE WHEN isnan(CAST((CAST(nc AS DOUBLE) / (bn.n + hn.n - nc)) AS DOUBLE)) OR abs(CAST((CAST(nc AS DOUBLE) / (bn.n + hn.n - nc)) AS DOUBLE)) >= 9007199254.740992 THEN CAST((CAST(nc AS DOUBLE) / (bn.n + hn.n - nc)) AS DOUBLE) ELSE floor(CAST((CAST(nc AS DOUBLE) / (bn.n + hn.n - nc)) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS j
+           {bfround_sql('CAST(nc AS DOUBLE) / (bn.n + hn.n - nc)', 6)} AS j
     FROM common
     JOIN bn ON bn.doc_id = common.bid
     JOIN hn ON hn.doc_id = common.hid

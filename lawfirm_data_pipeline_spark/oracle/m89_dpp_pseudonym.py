@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -70,10 +70,10 @@ def dpp_revenue(spark: SparkSession, sf_dir: str, fact_dir: str) -> DataFrame:
 
 @query(
     "q284_dynamic_partition_pruning",
-    """
+    f"""
     SELECT o_orderpriority,
            CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+           CAST(sum(CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT)) AS BIGINT)
              AS cents
     FROM orders
     WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -100,9 +100,9 @@ def pseudonymize(df: DataFrame, col: str, secret: str = "s3cr3t") -> DataFrame:
 
 @query(
     "q285_pseudonymized_join",
-    """
+    f"""
     WITH e AS (SELECT md5('s3cr3t:' || CAST(user_id AS VARCHAR)) AS pid,
-                      CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+                      CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents
                FROM events WHERE user_id % 37 = 0),
          c AS (SELECT md5('s3cr3t:' || CAST(c_custkey AS VARCHAR)) AS pid,
                       c_mktsegment

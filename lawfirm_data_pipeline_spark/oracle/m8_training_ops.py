@@ -17,6 +17,7 @@ from ..operators.dedup import exact_dedup
 from ..operators.sampling import hash_split, stratified_hash_sample
 from ..operators.temporal import asof_join, range_join
 from ..queries import query
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 
 def _events(spark, sf_dir, etype: str) -> DataFrame:
@@ -234,7 +235,7 @@ def q57_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- q58: unigram log-prob quality proxy (perplexity-style filtering)
 @query(
     "q58_unigram_logprob",
-    """
+    f"""
     WITH t AS (SELECT doc_id,
                       list_filter(str_split_regex(trim(lower(text)), '\\s+'), x -> x != '') AS ltoks
                FROM documents),
@@ -242,11 +243,11 @@ def q57_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
          tc AS (SELECT doc_id, w, count(*) AS cnt FROM tok GROUP BY 1, 2),
          corpus AS (SELECT w, sum(cnt) AS cw FROM tc GROUP BY w),
          tot AS (SELECT sum(cw) AS n FROM corpus),
-         lp AS (SELECT w, CAST(CASE WHEN isnan(CAST((ln(CAST(cw AS DOUBLE) / n) * 1e9) AS DOUBLE)) OR abs(CAST((ln(CAST(cw AS DOUBLE) / n) * 1e9) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((ln(CAST(cw AS DOUBLE) / n) * 1e9) AS DOUBLE) ELSE floor(CAST((ln(CAST(cw AS DOUBLE) / n) * 1e9) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS lp_fp
+         lp AS (SELECT w, CAST({bfround_sql('ln(CAST(cw AS DOUBLE) / n) * 1e9', 0)} AS BIGINT) AS lp_fp
                 FROM corpus, tot),
          doc AS (SELECT tc.doc_id, sum(tc.cnt * lp.lp_fp) AS s, sum(tc.cnt) AS ntok
                  FROM tc JOIN lp USING (w) GROUP BY 1)
-    SELECT doc_id, CASE WHEN isnan(CAST(((CAST(s AS DOUBLE) / 1e9) / ntok) AS DOUBLE)) OR abs(CAST(((CAST(s AS DOUBLE) / 1e9) / ntok) AS DOUBLE)) >= 9007199254.740992 THEN CAST(((CAST(s AS DOUBLE) / 1e9) / ntok) AS DOUBLE) ELSE floor(CAST(((CAST(s AS DOUBLE) / 1e9) / ntok) AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS avg_logp
+    SELECT doc_id, {bfround_sql('(CAST(s AS DOUBLE) / 1e9) / ntok', 6)} AS avg_logp
     FROM doc
     """,
 )

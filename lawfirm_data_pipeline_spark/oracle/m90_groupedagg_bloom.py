@@ -30,15 +30,15 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 @query(
     "q286_grouped_agg_trimmed_mean",
-    """
+    f"""
     WITH e AS (
         SELECT user_id % 50 AS grp,
-               CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+               CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents
         -- sample = observed rows (r12 nulls axis): NULL value has
         -- no cents; the trim set is over observations only
         FROM events WHERE user_id % 3 = 0 AND value IS NOT NULL

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 @query(
@@ -57,11 +57,11 @@ def q288_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q289_observed_metrics",
-    """
+    f"""
     SELECT CAST(count(*) AS BIGINT) AS n_rows,
            CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_finished,
-           CAST(sum(CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS BIGINT)
+           CAST(sum(CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT)) AS BIGINT)
              AS total_cents
     FROM orders
     """,

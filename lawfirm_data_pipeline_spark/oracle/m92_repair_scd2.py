@@ -27,7 +27,7 @@ from pyspark.sql.window import Window
 
 from ..io import load_table
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 @query(
@@ -106,7 +106,7 @@ def q290_fd_majority_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q291_scd2_temporal_join",
-    """
+    f"""
     WITH pts AS (
         SELECT user_id, ts,
                row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -122,7 +122,7 @@ def q290_fd_majority_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM pts
     ),
     fact AS (
-        SELECT user_id, ts, CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) AS cents
+        SELECT user_id, ts, CAST({bfround_sql('value * 100', 0)} AS BIGINT) AS cents
         FROM events WHERE user_id % 19 = 0
     )
     SELECT f.user_id, v.version,

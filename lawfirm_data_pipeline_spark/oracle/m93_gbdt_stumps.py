@@ -36,14 +36,14 @@ from pyspark.sql.window import Window
 from ..io import load_table
 from ..pin import pin
 from ..queries import query
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _ROUNDS = 3
 
-_BASE_SQL = """
+_BASE_SQL = f"""
         SELECT user_id % 32 AS x1,
                CAST(hour(ts) AS BIGINT) AS x2,
-               CAST(CASE WHEN isnan(CAST((value * 100) AS DOUBLE)) OR abs(CAST((value * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((value * 100) AS DOUBLE) ELSE floor(CAST((value * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) * 1000 AS res
+               CAST({bfround_sql('value * 100', 0)} AS BIGINT) * 1000 AS res
         FROM events WHERE user_id % 3 = 1
 """
 

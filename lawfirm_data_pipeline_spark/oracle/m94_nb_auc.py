@@ -31,7 +31,7 @@ from ..pin import pin
 from ..operators.ranking import global_running_sum
 from ..queries import query
 from ._shared import LTOKS_SQL as _LTOKS
-from lawfirm_data_pipeline_spark.functions.rounding import bfround
+from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 
 @query(
@@ -49,11 +49,8 @@ from lawfirm_data_pipeline_spark.functions.rounding import bfround
     ltot AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n FROM counts GROUP BY 1),
     model AS (
         SELECT l.lang, v.tok,
-               CAST(CASE WHEN isnan(CAST((ln(CAST(coalesce(c.c, 0) + 1 AS DOUBLE)
-                             / CAST(l.n + vs.v AS DOUBLE)) * 1000000000) AS DOUBLE)) OR abs(CAST((ln(CAST(coalesce(c.c, 0) + 1 AS DOUBLE)
-                             / CAST(l.n + vs.v AS DOUBLE)) * 1000000000) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((ln(CAST(coalesce(c.c, 0) + 1 AS DOUBLE)
-                             / CAST(l.n + vs.v AS DOUBLE)) * 1000000000) AS DOUBLE) ELSE floor(CAST((ln(CAST(coalesce(c.c, 0) + 1 AS DOUBLE)
-                             / CAST(l.n + vs.v AS DOUBLE)) * 1000000000) AS DOUBLE) * 1e0 + 0.5) / 1e0 END
+               CAST({bfround_sql('''ln(CAST(coalesce(c.c, 0) + 1 AS DOUBLE)
+                             / CAST(l.n + vs.v AS DOUBLE)) * 1000000000''', 0)}
                     AS BIGINT) AS nano_logp
         FROM ltot l
         CROSS JOIN vocab v
@@ -142,10 +139,10 @@ def q293_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q294_exact_auc",
-    """
+    f"""
     WITH base AS (
         SELECT CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y,
-               CAST(CASE WHEN isnan(CAST((o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT) % 10000 AS score
+               CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT) % 10000 AS score
         -- scored rows only (r12 nulls axis): a NULL o_totalprice
         -- has no score; AUC is defined over scored examples
         FROM orders WHERE o_orderkey % 2 = 0 AND o_totalprice IS NOT NULL

@@ -13,11 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..io import register_views
 from ..queries import query
+from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
 
 # One string, two engines. Stick to the ANSI intersection: explicit
 # JOIN ... ON, CTEs, CASE, standard aggregates, HAVING, ORDER-free
 # (driver compare is order-insensitive).
-_RAW_SQL = """
+_RAW_SQL = f"""
     WITH cust AS (
         SELECT c.c_custkey, n.n_name
         FROM customer c
@@ -25,7 +26,7 @@ _RAW_SQL = """
     ),
     spend AS (
         SELECT o.o_custkey, count(*) AS n_orders,
-               sum(CAST(CASE WHEN isnan(CAST((o.o_totalprice * 100) AS DOUBLE)) OR abs(CAST((o.o_totalprice * 100) AS DOUBLE)) >= 9007199254740992.0 THEN CAST((o.o_totalprice * 100) AS DOUBLE) ELSE floor(CAST((o.o_totalprice * 100) AS DOUBLE) * 1e0 + 0.5) / 1e0 END AS BIGINT)) AS cents
+               sum(CAST({bfround_sql('o.o_totalprice * 100', 0)} AS BIGINT)) AS cents
         FROM orders o
         GROUP BY o.o_custkey
     )

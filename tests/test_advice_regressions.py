@@ -478,68 +478,3 @@ def test_close_gate_run_preserves_artifact_on_failure(tmp_path, monkeypatch):
     assert ok
     assert artifact.read_text().strip() == '{"fresh": 1}'
 
-
-# ---------------------------------------------------------------------------
-# r12 ADVICE #1: convert_rounds.py must not rewrite round() mentioned in
-# SQL comment prose ('--' line comments, /* */ blocks) — it garbled two
-# doc comments in r11 (m29:159, m77:144, both restored).
-
-
-def test_convert_rounds_skips_sql_comment_prose():
-    import sys as _sys
-
-    _sys.path.insert(0, os.path.join(_REPO, "tools"))
-    import convert_rounds as cr
-
-    sql = (
-        "SELECT a,\n"
-        "       -- engine round()s split on ties; round(x, 2) is bad\n"
-        "       /* also round(y, 4) in a block comment */\n"
-        "       round(b, 2) AS b2\n"
-        "FROM t"
-    )
-    review: list[str] = []
-    out, n = cr._convert_sql_text(sql, "test.py", review)
-    assert n == 1  # only the real site converted
-    assert "-- engine round()s split on ties; round(x, 2) is bad" in out
-    assert "/* also round(y, 4) in a block comment */" in out
-    assert "floor(CAST((b) AS DOUBLE)" in out or "floor(" in out
-    # quoted '--' must not open a phantom comment that hides real SQL
-    sql2 = "SELECT '--not a comment', round(c, 3) FROM t"
-    out2, n2 = cr._convert_sql_text(sql2, "test.py", [])
-    assert n2 == 1 and "round(c, 3)" not in out2
-
-
-# r12 ADVICE #2: a nested round() inside a converted argument must also
-# convert (the old scan resumed past the whole replacement).
-
-
-def test_convert_rounds_converts_nested_round():
-    import re as _re
-    import sys as _sys
-
-    _sys.path.insert(0, os.path.join(_REPO, "tools"))
-    import convert_rounds as cr
-
-    sql = "SELECT round(round(x, 4) + 1.0, 2) FROM t"
-    out, n = cr._convert_sql_text(sql, "test.py", [])
-    assert n == 2
-    assert not _re.search(r"(?<![\w.])round\s*\(", out, _re.I), out[:200]
-
-
-def test_convert_rounds_is_noop_over_current_tree():
-    """A re-run of the one-shot converter must not want to touch the
-    already-converted tree: 0 convertible sites, with only the two
-    adjudicated q15 decimal pairs surfaced for review.  (Before the r12
-    guards it would have garbled six docstring-prose round(d) mentions
-    written AFTER the r11 conversion run.)"""
-    import subprocess as _sp
-    import sys as _sys
-
-    p = _sp.run(
-        [_sys.executable, "tools/convert_rounds.py", "--dry-run"],
-        capture_output=True, text=True, cwd=_REPO,
-    )
-    assert p.returncode == 0, p.stderr[-500:]
-    assert "TOTAL: 0 code sites, 0 sql sites" in p.stdout, p.stdout[-800:]
-    assert p.stdout.count("m3_mutations.py") == 2  # the q15 decimal pair

@@ -263,25 +263,27 @@ def test_oov_vocab_joins_broadcast(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_incremental_dedup_anti_join_on_fingerprints(spark):
+def test_incremental_dedup_anti_join_on_fingerprints(spark, monkeypatch):
     """q92: the history check is a LeftAnti join keyed on the md5
     fingerprint — the exchange carries hashes, never documents.
-    Inspected on the lazy variant (production materializes the
-    survivor-id set, which hides the stage from the final explain)."""
-    from lawfirm_data_pipeline_spark.operators.dedup import incremental_exact_dedup
+    Inspected with the survivor-id pin swapped for the identity
+    (production pins that set, which hides the stage from the final
+    explain)."""
+    from lawfirm_data_pipeline_spark.operators import dedup
     from lawfirm_data_pipeline_spark.oracle._shared import planted_corpus
     from pyspark.sql import functions as F
 
+    monkeypatch.setattr(dedup, "pin", lambda df: df)
     corpus = planted_corpus(spark, SF)
-    lazy = incremental_exact_dedup(
+    lazy = dedup.incremental_exact_dedup(
         corpus.filter(F.col("doc_id") >= 100000),
         corpus.filter(F.col("doc_id") < 100000),
-        materialize=False,
     )
     plan = plan_of(lazy)
     assert "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan, plan
-    # and the registered (materialized) q92 plan stays compact
+    # and the registered (pinned) q92 plan stays compact
+    monkeypatch.undo()
     from lawfirm_data_pipeline_spark.queries import QUERIES
 
     final = plan_of(QUERIES["q92_incremental_dedup"](spark, SF))

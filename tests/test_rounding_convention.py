@@ -236,3 +236,89 @@ def test_kernel_round_sites_all_classified():
             assert {s["site"] for s in d["python_kernel_round_sites"]} == {
                 s["site"] for s in sites
             }
+
+
+# -- one spelling of the convention ------------------------------------------
+# Oracle SQL splices ``bfround_sql(X, d)`` at import time, so the guard
+# constant and the CASE form live in functions/rounding.py alone; these
+# lints keep a hand-inlined copy or an engine round() from creeping back.
+
+_PKG = os.path.join(_REPO, "lawfirm_data_pipeline_spark")
+
+
+def _package_sources():
+    for root, _dirs, files in os.walk(_PKG):
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                path = os.path.join(root, fn)
+                yield os.path.relpath(path, _PKG), open(path).read()
+
+
+def _strip_sql_comments(sql: str) -> str:
+    """``sql`` with ``--`` line and ``/* */`` block comments blanked;
+    single-quoted literals are kept whole, so a quoted '--' is data."""
+    out, i, n = [], 0, len(sql)
+    while i < n:
+        if sql[i] == "'":
+            j = sql.find("'", i + 1)
+            j = n if j < 0 else j + 1
+            out.append(sql[i:j])
+            i = j
+        elif sql.startswith("--", i):
+            j = sql.find("\n", i)
+            i = n if j < 0 else j
+        elif sql.startswith("/*", i):
+            j = sql.find("*/", i + 2)
+            i = n if j < 0 else j + 2
+        else:
+            out.append(sql[i])
+            i += 1
+    return "".join(out)
+
+
+def test_strip_sql_comments_keeps_quoted_dashes():
+    sql = "SELECT '--x', a -- round(b, 2)\n/* round(c, 4) */ FROM t"
+    assert _strip_sql_comments(sql) == "SELECT '--x', a \n FROM t"
+
+
+def test_bfround_case_form_is_spelled_only_in_rounding_module():
+    hits = [
+        rel for rel, src in _package_sources()
+        if "isnan(CAST((" in src and rel != os.path.join("functions", "rounding.py")
+    ]
+    assert hits == [], hits
+
+
+def test_oracle_sql_has_no_engine_round_outside_q15_decimal_pair():
+    """Engine round() in oracle SQL is allowed only on q15's exact
+    DECIMAL product (approved path #2); comment prose may say round()."""
+    import re
+
+    from lawfirm_data_pipeline_spark.queries import ORACLE_SQL
+
+    engine_round = re.compile(r"(?<![\w.])round\s*\(", re.I)
+    hits = {}
+    for name, sql in ORACLE_SQL.items():
+        code = _strip_sql_comments(sql)
+        found = [code[m.start(): m.start() + 60] for m in engine_round.finditer(code)]
+        if found:
+            hits[name] = found
+    assert list(hits) == ["q15_upsert"], hits
+    [q15] = hits["q15_upsert"]
+    assert "DECIMAL(18,2)" in q15, q15
+
+
+def test_spark_engine_round_only_at_q15_decimal_site():
+    import re
+
+    engine_round = re.compile(r"\bF\.b?round\(")
+    hits = [
+        (rel, line.strip())
+        for rel, src in _package_sources()
+        for line in src.splitlines()
+        if engine_round.search(line)
+    ]
+    assert len(hits) == 1, hits
+    rel, line = hits[0]
+    assert rel == os.path.join("oracle", "m3_mutations.py"), hits
+    assert 'cast("decimal(18,2)")' in line, line
