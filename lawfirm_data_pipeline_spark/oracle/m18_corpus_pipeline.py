@@ -175,7 +175,8 @@ def q98_stream_enriched_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     count/sum per nation; memory-sink drain compared against batch SQL
     proves the unified-API path (streaming/windows.py)."""
     from ..io import load_events_stream
-    from ..streaming.windows import enriched_tumbling_counts, run_stream_to_table
+    from ..streaming.bounded import run_stream_to_table
+    from ..streaming.windows import enriched_tumbling_counts
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     stream = load_events_stream(spark, sf_dir)
@@ -384,7 +385,8 @@ def q104_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared against the batch interval join — batch/stream unification
     for the two-stream topology (streaming/windows.py)."""
     from ..io import load_events_stream
-    from ..streaming.windows import run_stream_to_table, stream_stream_interval_join
+    from ..streaming.bounded import run_stream_to_table
+    from ..streaming.windows import stream_stream_interval_join
 
     def build(stream):
         # one user cohort (20%): the topology and state machinery are
@@ -412,19 +414,7 @@ def q104_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stream = load_events_stream(spark, sf_dir)
-    # Interval joins keep 4 state-store instances per shuffle partition
-    # (two sides x two index stores); at the session's 32 partitions
-    # that is 128 stores whose per-batch init+commit dwarfs the actual
-    # join on a bounded replay.  State-heavy streaming queries tune
-    # partitions to state volume — 8 here; a production firehose would
-    # raise it with cluster size.  (The conf is read at query start, so
-    # the temporary set/reset is scoped to this stream.)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return run_stream_to_table(spark, stream, build, "q104_ss_join", output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_stream_to_table(spark, stream, build, "q104_ss_join", output_mode="append")
 
 
 # -- q105: salted hot-key aggregation (driver-gated skew path)

@@ -31,8 +31,8 @@ from ..operators.retrieval import phrase_match_counts
 from ..operators.similarity import embedding_covariance
 from ..operators.sketch import heavy_hitters
 from ..queries import query
+from ..streaming.bounded import run_stream_to_table
 from ..streaming.stateful import running_user_totals
-from ..streaming.windows import run_stream_to_table
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _LTOKS = "list_filter(str_split_regex(trim(lower(text)), '\\s+'), t -> t != '')"

@@ -23,7 +23,7 @@ from ..io import load_events_stream, load_table
 from ..operators.graph_metrics import bfs_distances, copurchase_edges, undirect
 from ..pin import pin
 from ..queries import query
-from ..streaming.windows import run_stream_to_table
+from ..streaming.bounded import run_stream_to_table
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _CUTOFF = "2024-01-16"

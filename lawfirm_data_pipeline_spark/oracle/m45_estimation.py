@@ -139,7 +139,7 @@ def q194_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("key")
     ).distinct()
 
-    def capture(salt: str):
+    def in_capture(salt: str):
         return (
             F.conv(
                 F.substring(
@@ -154,7 +154,7 @@ def q194_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
             < 20
         )
 
-    m = k.select(capture("capA").alias("in_a"), capture("capB").alias("in_b"))
+    m = k.select(in_capture("capA").alias("in_a"), in_capture("capB").alias("in_b"))
     c = m.agg(
         F.count(F.lit(1)).cast("long").alias("n_true"),
         F.sum(F.col("in_a").cast("int")).cast("long").alias("na"),

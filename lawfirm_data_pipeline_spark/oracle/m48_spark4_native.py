@@ -97,12 +97,12 @@ def q203_udtf_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield doc_id, toks[i] + " " + toks[i + 1]
 
     spark.udtf.register("bigrams_t", Bigrams)
-    load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < 200
-    ).select("doc_id", "text").createOrReplaceTempView("m48_docs")
     g = spark.sql(
-        "SELECT t.ngram, t.doc_id FROM m48_docs d,"
-        " LATERAL bigrams_t(d.doc_id, d.text) t"
+        "SELECT t.ngram, t.doc_id FROM {docs} d,"
+        " LATERAL bigrams_t(d.doc_id, d.text) t",
+        docs=load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id", "text"),
     )
     return (
         g.groupBy("ngram")

@@ -77,12 +77,11 @@ def q208_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    e0.createOrReplaceTempView("m50_e0")
     return spark.sql(
         """
         WITH RECURSIVE
-          edges AS (SELECT src, dst FROM m50_e0
-                    UNION ALL SELECT dst, src FROM m50_e0),
+          edges AS (SELECT src, dst FROM {e0}
+                    UNION ALL SELECT dst, src FROM {e0}),
           r(seed, node, depth) AS (
             SELECT CAST(s AS BIGINT), CAST(s AS BIGINT), CAST(0 AS BIGINT)
             FROM VALUES (1), (7), (42) AS seeds(s)
@@ -94,5 +93,6 @@ def q208_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT CAST(seed AS BIGINT) AS seed, CAST(node AS BIGINT) AS node,
                CAST(min(depth) AS BIGINT) AS min_depth
         FROM r GROUP BY 1, 2
-        """
+        """,
+        e0=e0,
     )

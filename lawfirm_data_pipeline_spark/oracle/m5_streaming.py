@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 
 from ..io import load_events_stream, load_table
 from ..queries import query
+from ..streaming.bounded import run_stream_to_table
 from ..streaming.windows import (
-    run_stream_to_table,
     session_windows,
     sliding_counts,
     tumbling_counts,

@@ -29,6 +29,7 @@ from ..io import load_table
 from ..operators.ivm import maintain_join_totals
 from ..operators.temporal import asof_nearest
 from ..queries import query
+from ..streaming.bounded import drain
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -71,28 +72,19 @@ def q232_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ev.filter(F.col("event_id") % 2 == 0).write.parquet(src)
 
-        def drain() -> None:
-            stream = (
+        def sink_writer():
+            return (
                 spark.readStream.schema("event_id long, user_id long, cents long")
                 .parquet(src)
-            )
-            q = (
-                stream.writeStream.format("parquet")
+                .writeStream.format("parquet")
                 .option("path", sink)
                 .option("checkpointLocation", ckpt)
-                .start()
             )
-            try:
-                q.processAllAvailable()
-                from ..streaming.plan_capture import capture
 
-                capture(q, "recovery_drain")
-            finally:
-                q.stop()
-
-        drain()  # phase 1
+        drain(spark, sink_writer(), "recovery_drain")  # phase 1
         ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
-        drain()  # restart: same checkpoint, new query object
+        # restart: same checkpoint, new query object
+        drain(spark, sink_writer(), "recovery_drain")
 
         out = (
             spark.read.parquet(sink)

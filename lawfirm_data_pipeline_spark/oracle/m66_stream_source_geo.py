@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..queries import query
 from ..sources import pydatasource
-from ..streaming.windows import run_stream_to_table
+from ..streaming.bounded import run_stream_to_table
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..queries import query
 from ..sources.lake import Catalog
+from ..streaming.bounded import drain
 from ..streaming.catalog_sink import exactly_once_totals_sink
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
@@ -133,18 +134,13 @@ def q257_stream_catalog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "user_id", bfround(F.col("value") * 100).cast("long").alias("cents")
             )
         )
-        q = (
-            stream.writeStream.foreachBatch(tracking_sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .start()
+        drain(
+            spark,
+            stream.writeStream.foreachBatch(tracking_sink).option(
+                "checkpointLocation", os.path.join(scratch, "ckpt")
+            ),
+            "exactly_once_totals",
         )
-        try:
-            q.processAllAvailable()
-            from ..streaming.plan_capture import capture
-
-            capture(q, "exactly_once_totals")
-        finally:
-            q.stop()
         # simulate an at-least-once redelivery of the final micro-batch
         if seen:
             df, bid = seen[-1]

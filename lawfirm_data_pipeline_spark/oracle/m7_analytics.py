@@ -115,16 +115,16 @@ def q42_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q43_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
     return spark.sql(
         f"""
         SELECT coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
                coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
                count(*) AS n_orders,
                sum(CAST({bfround_sql('o_totalprice * 100', 0)} AS BIGINT)) AS sum_cents
-        FROM orders_gs
+        FROM {{orders}}
         GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus))
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -10,8 +10,9 @@ committing its whole table set through ONE :class:`~..sources.lake.
 Catalog` transaction (the q224 OCC machinery — data + status
 write-back land atomically, exactly like the reference's per-record
 Postgres transactions).  The streams are real Structured Streaming
-queries (``availableNow`` file sources over the catalog's committed
-version dirs — the streaming analog of the reference's queue polls).
+queries (file sources over the catalog's committed version dirs,
+drained by ``streaming.bounded.drain`` — the streaming analog of the
+reference's queue polls).
 
 The external-effect stubs (A18/A19/A20) here derive every field from
 md5 residues instead of Spark ``hash()`` so DuckDB can replay the
@@ -50,6 +51,7 @@ from ..pipeline.generate import (
 from ..pipeline.stages import locate_stage, scrape_stage, sync_stage
 from ..queries import query
 from ..sources.lake import Catalog
+from ..streaming.bounded import drain
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
@@ -134,36 +136,21 @@ def _run_stage_as_stream(spark, scratch, cat, src_table, sink_fn, schema):
     """One reference worker: a real Structured Streaming query whose
     file source is the committed version dir of ``src_table`` (the
     queue being polled) and whose foreachBatch body commits through a
-    catalog transaction.  ``availableNow`` drains the current queue
-    state — the batch analog of the 3-second poll loop."""
+    catalog transaction.  Draining the current queue state is the
+    batch analog of the 3-second poll loop."""
     _, tables = cat.snapshot()
     src_dir = os.path.join(scratch, src_table, f"v={tables[src_table]}")
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    # queue-state tables are a few thousand rows; the sink body's
-    # merge/dedup joins each pay per-task overhead per shuffle
-    # partition, so the session's core-count default (32) is pure
-    # overhead — scope a small count across the drain (the foreachBatch
-    # body plans its batch jobs while the stream runs, so the scope
-    # must cover awaitTermination, unlike the windows harness where
-    # the plan is fixed at start)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(sink_fn)
-            .option(
-                "checkpointLocation",
-                os.path.join(scratch, f"ckpt_{src_table}_{uuid.uuid4().hex[:8]}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from ..streaming.plan_capture import capture
-
-        capture(q, f"pipeline_stage_{src_table}")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    drain(
+        spark,
+        spark.readStream.schema(schema)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(sink_fn)
+        .option(
+            "checkpointLocation",
+            os.path.join(scratch, f"ckpt_{src_table}_{uuid.uuid4().hex[:8]}"),
+        ),
+        f"pipeline_stage_{src_table}",
+    )
 
 
 @query(
@@ -251,7 +238,7 @@ def _run_stage_as_stream(spark, scratch, cat, src_table, sink_fn, schema):
     """.replace("__TAG_SLICE_MOD__", str(TAG_SLICE_MOD)),
 )
 def q270_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """locate → scrape → sync as three availableNow streams over the
+    """locate → scrape → sync as three drained streams over the
     shared OCC catalog; summary = queue-state transitions + lead counts
     + an email checksum over the synced leads, all DuckDB-replayed."""
     scratch = os.path.join(_TMP_ROOT, f"pipe_{uuid.uuid4().hex}")

@@ -65,14 +65,15 @@ def q275_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges across micro-batches); complete-mode memory sink compared to
     the batch island oracle.  The user filter keeps session state at
     |users|/17 — the knob that bounds state on an unbounded stream."""
-    from ..streaming.windows import run_stream_to_table, session_windows
+    from ..streaming.bounded import run_stream_to_table
+    from ..streaming.windows import session_windows
 
     stream = load_events_stream(spark, sf_dir).filter(F.col("user_id") % 17 == 0)
     out = run_stream_to_table(
         spark,
         stream,
         lambda s: session_windows(s, "30 minutes"),
-        f"q275_sessions_{uuid.uuid4().hex[:8]}",
+        "q275_sessions",
     )
     return out.withColumn("sum_value", bfround("sum_value", 2)).withColumn(
         "n_events", F.col("n_events").cast("long")

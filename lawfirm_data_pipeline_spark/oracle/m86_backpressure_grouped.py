@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries import query
+from ..streaming.bounded import drain
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -92,16 +93,13 @@ def q277_stream_backpressure(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .collect()
             )
 
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            spark,
+            stream.writeStream.foreachBatch(sink).option(
+                "checkpointLocation", os.path.join(scratch, "ckpt")
+            ),
+            "backpressure",
         )
-        q.awaitTermination()
-        from ..streaming.plan_capture import capture
-
-        capture(q, "backpressure")
         n_files = sum(
             1
             for f in os.listdir(src_dir)

@@ -33,6 +33,7 @@ from ..io import load_table
 from ..pin import pin
 from ..operators.dedup import minhash_signatures
 from ..queries import query
+from ..streaming.bounded import drain
 from ._shared import LTOKS_SQL as _LTOKS, SHINGLES_SQL as _SHINGLES
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
@@ -290,31 +291,14 @@ def q283_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .select(F.col("w.start").alias("wstart"), F.col("w.end").alias("wend"), "n")
         )
-        name = f"q283_wm_{uuid.uuid4().hex[:8]}"
-        # 25 rows/batch: the session's 32 shuffle partitions mean 32
-        # state-store commits per micro-batch of pure overhead.  The
-        # value is baked into the checkpoint at stream start, so scope
-        # a small one to this query (same pattern as m18's salted agg).
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                from ..streaming.plan_capture import capture
-
-                capture(q, "watermark_drop")
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        emitted: list = []
+        q = drain(
+            spark,
+            agg.writeStream.outputMode("append")
+            .foreachBatch(lambda batch_df, _: emitted.extend(batch_df.collect()))
+            .option("checkpointLocation", os.path.join(scratch, "ckpt")),
+            "watermark_drop",
+        )
         # Contract with the lag note above: 3 file micro-batches (one
         # per payload, maxFilesPerTrigger=1).  If a Spark version ever
         # consumes the watermark without the one-batch lag (or batches
@@ -327,15 +311,13 @@ def q283_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"one-batch-lag contract), got {len(file_batches)}: "
                 f"{[(p['batchId'], p['numInputRows']) for p in q.recentProgress]}"
             )
-        out = (
-            spark.table(name)
+        return (
+            spark.createDataFrame(emitted, agg.schema)
             # windows guaranteed closed by the batch-1 watermark (10:50);
             # later windows' emission depends on a trailing no-data batch
             # — excluded to keep the gate deterministic
             .filter(F.col("wend") <= F.to_timestamp(F.lit("2030-01-01 10:50:00")))
             .select("wstart", "n")
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

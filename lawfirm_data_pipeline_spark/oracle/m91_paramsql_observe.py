@@ -41,17 +41,17 @@ def q288_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Named parameter markers carry the literals (:minp, :status) —
     the $queryRaw tagged-template contract; values never concatenate
     into the SQL text."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q288_orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
                CAST(count(*) AS BIGINT) AS n,
                CAST(max(o_totalprice) AS DOUBLE) AS max_price
-        FROM q288_orders
+        FROM {orders}
         WHERE o_totalprice > :minp AND o_orderstatus = :status
         GROUP BY 1
         """,
         args={"minp": 250000, "status": "F"},
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

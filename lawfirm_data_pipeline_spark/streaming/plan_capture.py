@@ -3,31 +3,30 @@
 The static plan-lint census (`tools/plan_lint.py`) audits every batch
 query's physical plan without executing it, but a streaming query's
 plan only exists per-trigger while the stream runs — planning one
-means running it.  That left the 14 stream-driving registry queries
+means running it.  That left the stream-driving registry queries
 exempt from the uniform CartesianProduct / BatchEvalPython / exchange
 censuses (they had individual pins only).
 
-This module closes the asymmetry: every streaming harness in the repo
-calls :func:`capture` on its ``StreamingQuery`` right after the drain
-(``processAllAvailable`` / ``awaitTermination``) and BEFORE ``stop()``,
-recording the last trigger's executed plan (``explainInternal`` — the
-same string ``q.explain(extended=True)`` prints) plus the final
-``lastProgress`` JSON.  ``tools/plan_lint.py`` then EXECUTES the
-streaming registry entries, drains this buffer per query, and applies
-the identical checks to the captured plans — census coverage 299/299,
-skip list empty.
+This module closes the asymmetry: ``streaming.bounded.drain`` — the
+one place the package drives a stream — calls :func:`capture` on its
+``StreamingQuery`` right after ``processAllAvailable`` and BEFORE
+``stop()``, recording the last trigger's executed plan
+(``explainInternal`` — the same string ``q.explain(extended=True)``
+prints) plus the final ``lastProgress`` JSON.  ``tools/plan_lint.py``
+builds every registry entry, drains this buffer after each build, and
+applies the identical checks to whatever plans a build captured.
 
 Capture is always best-effort: a plan string is diagnostics, and a
 failure to fetch it must never fail the harness that produced correct
 results (a stopped/errored stream raises from ``explainInternal``).
 The buffer is process-global and append-only between explicit
 ``drain()`` calls, because one registry query may run several streams
-(q270 drives three) and nested harnesses must all land in the same
-census bucket.  It is CAPPED (r7 ADVICE): only plan_lint drains it, so
-a long-lived session (the full bench sweep runs every streaming
-harness) would otherwise accumulate plan strings indefinitely.  The
+(q270 drives three, q232 two) and they must all land in the same
+census bucket.  It is CAPPED (r7 ADVICE): only the census tools drain
+it, so a long-lived session (the full bench sweep runs every streaming
+query) would otherwise accumulate plan strings indefinitely.  The
 cap keeps the newest entries — plan_lint drains immediately after each
-query it executes, so within a census window the buffer never nears
+query it builds, so within a census window the buffer never nears
 the cap and nothing a census wants is ever evicted.
 """
 

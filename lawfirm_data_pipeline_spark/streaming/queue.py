@@ -2,10 +2,11 @@
 
 Reference shape (A21, SURVEY.md §3.4): ``Effect.loop`` — pop one pending
 row, process, write status back, sleep 3 s (locator.ts:166-178).  Spark
-shape: the queue table is a streaming source, ``trigger(processingTime=
-"3 seconds")`` replaces the sleep, and ``foreachBatch`` applies the same
-batch stage function to each micro-batch with an idempotent merge
-write-back.  The workflow-state database collapses into the streaming
+shape: the queue table is a streaming source drained by
+``bounded.drain`` (a deployment would keep the same writer running on a
+processing-time trigger in place of the sleep), and ``foreachBatch``
+applies the same batch stage function to each micro-batch with an
+idempotent merge write-back.  The workflow-state database collapses into the streaming
 checkpoint (exactly-once per epoch via idempotent MERGE on the unique
 key — A25's idempotency-key semantics).
 
@@ -19,6 +20,8 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .bounded import drain
 
 
 def retry_with_backoff(fn: Callable, retries: int = 3, base_delay: float = 0.1, cap: float = 30.0):
@@ -41,34 +44,21 @@ def run_queue_stream(
     schema,
     batch_fn: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    trigger_seconds: int = 3,
-    synchronous: bool = True,
-):
-    """Stream a queue directory through ``batch_fn`` (micro-batch driver).
+) -> None:
+    """Drain a queue directory through ``batch_fn`` (micro-batch driver).
 
     ``batch_fn(batch_df, epoch_id)`` receives each file-arrival batch —
     the streaming equivalent of one poll iteration, except it sees the
-    whole pending set.  With ``synchronous`` the call drains available
-    input and returns (test mode); otherwise the query keeps running on
-    the 3-second trigger like the reference's loop.
+    whole pending set.
     """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
+    drain(
+        spark,
+        spark.readStream.schema(schema)
+        .parquet(source_dir)
+        .writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir),
+        "queue_poll",
     )
-    q = writer.start()
-    if synchronous:
-        try:
-            q.processAllAvailable()
-            from .plan_capture import capture
-
-            capture(q, "queue_poll")
-        finally:
-            q.stop()
-        return None
-    return q
 
 
 def stream_dedup_within_watermark(

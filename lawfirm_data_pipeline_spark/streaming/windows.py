@@ -2,8 +2,8 @@
 
 The transforms are plain DataFrame functions so the SAME code path serves
 batch DataFrames and streaming DataFrames (Spark's unified API); streaming
-tests wrap them with ``readStream`` + memory sink, batch oracle queries
-call them directly.
+callers drain them through ``bounded.run_stream_to_table``, batch oracle
+queries call them directly.
 
 Watermark policy: ``withWatermark`` bounds state for late data.  On a
 bounded replay (tests) a generous watermark admits everything; in
@@ -143,46 +143,3 @@ def stream_stream_interval_join(
     )
     return l_wm.alias("l").join(r_wm.alias("r"), cond, "inner")
 
-
-def run_stream_to_table(
-    spark,
-    source_df_stream,
-    transform,
-    table_name: str,
-    output_mode: str = "complete",
-    shuffle_partitions: int = 8,
-) -> DataFrame:
-    """Drive a bounded streaming source through ``transform`` to a memory
-    sink synchronously; returns the materialized result table.
-
-    This is the test/oracle harness for streaming queries: real
-    ``readStream`` execution, deterministic completion via
-    ``processAllAvailable``.
-
-    Every caller streams a few hundred grouped rows at most, but each
-    micro-batch pays a state-store commit PER shuffle partition, so the
-    session's core-count default (32) is pure overhead here — the value
-    is baked into the query at start, so scope a small one (results are
-    partitioning-independent; a real deployment sizes this to state
-    volume instead).
-    """
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            transform(source_df_stream)
-            .writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(table_name)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    try:
-        q.processAllAvailable()
-        from .plan_capture import capture
-
-        capture(q, table_name)
-    finally:
-        q.stop()
-    return spark.table(table_name)

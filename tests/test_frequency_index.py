@@ -237,7 +237,7 @@ def test_postings_are_exchange_free(spark):
 
 def test_running_user_totals_matches_batch(spark):
     from lawfirm_data_pipeline_spark.io import load_events_stream
-    from lawfirm_data_pipeline_spark.streaming.windows import run_stream_to_table
+    from lawfirm_data_pipeline_spark.streaming.bounded import run_stream_to_table
 
     sf = "/root/testdata/sf0.001"
     out = run_stream_to_table(

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from lawfirm_data_pipeline_spark.queries import ORACLE_SQL, QUERIES
+from lawfirm_data_pipeline_spark.schemas import DRIVER_TABLES
 
 from .conftest import SF_ORACLE
 from .oracle_compare import canon_multiset, compare
@@ -20,6 +21,7 @@ def test_query_matches_oracle(name, spark, duck):
     # start from an empty CacheManager so the hygiene check below sees
     # only what this query left behind
     spark.catalog.clearCache()
+    views = _temp_views(spark)
     df = QUERIES[name](spark, SF_ORACLE)
     sql = ORACLE_SQL.get(name)
     if sql is None:
@@ -30,6 +32,13 @@ def test_query_matches_oracle(name, spark, duck):
         assert len(rows) >= 0
     else:
         compare(df, duck, sql)
-    # a finished query leaves no cache entry and no running stream
+    # a finished query leaves no cache entry, no running stream and no
+    # temp view (io.register_views' driver tables excepted: q55, q240
+    # and q241 run their SQL verbatim over them)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
     assert not spark.streams.active, name
+    assert _temp_views(spark) - views <= set(DRIVER_TABLES), name
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}

@@ -9,14 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from lawfirm_data_pipeline_spark import schemas
+from lawfirm_data_pipeline_spark.streaming.bounded import run_stream_to_table
 from lawfirm_data_pipeline_spark.streaming.queue import (
     retry_with_backoff,
     run_queue_stream,
 )
-from lawfirm_data_pipeline_spark.streaming.windows import (
-    run_stream_to_table,
-    tumbling_counts,
-)
+from lawfirm_data_pipeline_spark.streaming.windows import tumbling_counts
 
 SF = "/root/testdata/sf0.001"
 
@@ -113,9 +111,7 @@ def test_queue_stream_foreachbatch(spark, tmp_path):
         done.write.mode("overwrite").parquet(f"{sink}/epoch={epoch_id}")
         seen.append((epoch_id, pending.count()))
 
-    run_queue_stream(
-        spark, src, schemas.GOOGLE_PLACE_URL_TO_SCRAPE, batch_fn, ckpt, synchronous=True
-    )
+    run_queue_stream(spark, src, schemas.GOOGLE_PLACE_URL_TO_SCRAPE, batch_fn, ckpt)
     assert seen and sum(n for _, n in seen) == 25  # half of 50 are pending (id%10<5)
     out = spark.read.parquet(f"{sink}/epoch=*")
     assert out.filter(F.col("status") != True).count() == 0  # noqa: E712

@@ -38,17 +38,15 @@ can hide:
   the ten multi-consumer re-scan shapes the r6 census fixed would all
   reappear here).  Informational, like the shuffle histogram.
   Only CartesianProduct, BatchEvalPython, unbounded BNLJ, row-scale
-  global windows, plan errors, and missing stream captures fail the
-  exit code.
+  global windows and plan errors fail the exit code.
 
-Streaming queries (real readStream harnesses) can't be planned without
-running the stream.  Since r7 they are EXECUTED here instead (r6
-verdict #6): every streaming harness records its last trigger's
-executed plan via ``streaming.plan_capture``, and this census drains
-that buffer per query and applies the identical checks to the captured
-plans — coverage is 299/299, no skip list.  Set
-``SPARK_GRAFT_LINT_SKIP_STREAMING=1`` to restore the fast batch-only
-census while iterating.
+Streaming queries can't be planned without running the stream, and
+building one runs it: ``streaming.bounded.drain`` records each drained
+stream's last executed plan via ``streaming.plan_capture``.  The census
+builds every query the same way and reads that buffer after each
+build; a query that captured plans is audited on them (the identical
+checks), any other on its returned DataFrame's plan.  No list of
+streaming queries is kept, so none can go stale.
 
 Usage:  python tools/plan_lint.py            # one JSON line + flag report
 """
@@ -64,25 +62,6 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Queries whose callable DRIVES a real stream (memory-sink harness) or
-# mutates catalog state as a side effect of being called: planning them
-# statically is impossible, so the census RUNS them and audits the
-# executed plans captured by streaming/plan_capture (r6 verdict #6).
-# (q23/q24 left this list in r7: their implementations are batch
-# window composites — sliding_counts / session_windows over a batch
-# table — and plan statically like any other query.)
-_EXECUTING = re.compile(
-    r"q(22|25|104|110|232|242|257|270|275|276|277|283)_"
-)
-
-# Executing queries whose heavy lifting is transactional batch work
-# (OCC stage/audit/publish loops), not a readStream: they legitimately
-# capture zero streaming plans.  Their returned DataFrame is audited
-# statically instead; anything else capturing zero plans stays flagged
-# (a harness that forgot to call plan_capture.capture is a census
-# coverage bug).
-_EXECUTING_NO_STREAM = {"q276_write_audit_publish"}
 
 # Dimension tables bounded by the data model itself (25 nations, 5
 # regions) — safe to broadcast into a nested-loop probe at any SF.
@@ -345,8 +324,6 @@ def main() -> None:
     from lawfirm_data_pipeline_spark.queries import QUERIES
     from lawfirm_data_pipeline_spark.streaming import plan_capture
 
-    skip_streaming = os.environ.get("SPARK_GRAFT_LINT_SKIP_STREAMING") == "1"
-
     spark = get_spark(app_name="plan_lint")
     flags: dict[str, list[str]] = {}
     exchanges: dict[str, int] = {}
@@ -358,40 +335,21 @@ def main() -> None:
     # review-threshold triage.
     string_counted: set[str] = set()
     rescans: dict[str, dict[str, int]] = {}
-    skipped: list[str] = []
+    streamed: list[str] = []
     n_stream_plans = 0
     for name, fn in QUERIES.items():
-        if _EXECUTING.match(name):
-            if skip_streaming:
-                skipped.append(name)
-                continue
-            # streaming census (r6 verdict #6): run the harness, audit
-            # every executed plan it captured
-            plan_capture.drain()
-            try:
-                df = fn(spark, SF_DIR)
-                df.collect()
-            except Exception as e:  # noqa: BLE001 — census must finish
-                flags.setdefault(name, []).append(
-                    f"stream-error: {type(e).__name__}: {e}"
-                )
-                continue
+        plan_capture.drain()
+        try:
+            df = fn(spark, SF_DIR)
             captured = plan_capture.drain()
             if not captured:
-                if name in _EXECUTING_NO_STREAM:
-                    plan = df._jdf.queryExecution().executedPlan().toString()
-                    probs = _string_checks(plan) + _check_bnlj(plan)
-                    exchanges[name] = plan.count("Exchange ") + plan.count(
-                        "Exchange\n"
-                    )
-                    string_counted.add(name)
-                    if probs:
-                        flags[name] = probs
-                else:
-                    flags.setdefault(name, []).append(
-                        "stream ran but captured no executed plan"
-                    )
-                continue
+                plan = df._jdf.queryExecution().executedPlan().toString()
+        except Exception as e:  # noqa: BLE001 — census must finish
+            flags.setdefault(name, []).append(f"plan-error: {type(e).__name__}: {e}")
+            continue
+        if captured:
+            # streaming census: audit every executed plan the build drained
+            streamed.append(name)
             n_stream_plans += len(captured)
             probs = []
             n_ex = 0
@@ -403,12 +361,6 @@ def main() -> None:
             string_counted.add(name)
             if probs:
                 flags[name] = probs
-            continue
-        try:
-            df = fn(spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as e:  # noqa: BLE001 — census must finish
-            flags.setdefault(name, []).append(f"plan-error: {type(e).__name__}: {e}")
             continue
         probs = _string_checks(plan) + _check_bnlj(plan)
         stats = _tree_stats(df)
@@ -426,7 +378,7 @@ def main() -> None:
         "metric": "plan_lint",
         **_LINT_STAMP,
         "n_planned": len(exchanges),
-        "n_skipped_streaming": len(skipped),
+        "streamed": streamed,
         "n_stream_plans_captured": n_stream_plans,
         "flagged": flags,
         # >12 review triage applies to tree-counted (physical) entries
