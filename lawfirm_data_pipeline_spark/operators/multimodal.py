@@ -4,49 +4,35 @@ The charter treatment: media travels through the pipeline as
 ``BinaryType`` payloads with a typed metadata struct; decode /
 feature-extract / resize / frame-sample are Arrow-batched Python
 boundaries (``mapInPandas``) because codecs don't exist in the JVM.  The
-decode libraries (PIL/ffmpeg/torchcodec) are NOT in this image, so the
-decode kernels are stubbed: a deterministic fake honoring the declared
-output schema, or ``NotImplementedError`` where faking would be
-misleading.  Everything Spark-side — schema, batch iteration, partition
-sizing, column pruning before the Python boundary — is real and tested.
+BMP, PNG, WAV and baseline-JPEG decoders (``decode_*_stats``,
+``decode_image``) are real zero-dependency codecs.  Feature extraction,
+resize and frame sampling need libraries this image lacks
+(PIL/ffmpeg/torchcodec), so their kernels are deterministic stubs that
+honor the declared output schema.
 
-Scale notes: media rows are large; the operators (a) prune to
-(id, payload) before the Python boundary so Arrow doesn't ship unused
-columns, (b) repartition by a size budget (rows × avg payload) rather
-than row count, because a 128 MB parquet split of 4 MB images is 32 rows
-— partition count must come from byte budgets at 100 TB.
+One Python crossing per decode: the synthetic payload tables are built
+on the driver as an Arrow table (a JVM ``LocalTableScan``), so a decode
+query runs one Python task, the decoder's — the shape a media lake's
+parquet scan gives.  Each Python task carries a fixed worker cost
+(SCALE.md "Multimodal (M6d)"), so a fixture must not add its own.
+
+Scale notes: media rows are large; the operators prune to (id, payload)
+before the Python boundary so Arrow doesn't ship unused columns, and the
+parquet scan's byte-sized splits (``maxPartitionBytes``) set the
+partition count: a 128 MB split of 4 MB images is 32 rows.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from lawfirm_data_pipeline_spark.functions.rounding import bfround
-
-MEDIA_META = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-    ]
-)
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("meta", MEDIA_META, True),
-    ]
-)
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
@@ -60,14 +46,38 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 
 def _media_partitions(n: int) -> int:
     """Partition count for a synthetic media table: one slice per 1024
-    items, min 1.  ``spark.range(n)`` defaults to defaultParallelism
-    slices, which for the 48-64-row fixtures means launching one Python
-    worker PER CORE per UDF stage to decode two rows each — the q244
-    in-sweep churn the r4 verdict flagged (measured 3.8 s cold / 0.67 s
-    warm at 32 slices vs 0.3 s at 1).  A real media lake reads parquet
-    whose partitioning already scales with data volume; this only sizes
-    the synthetic fixtures honestly."""
+    items, min 1.  Both ``spark.range(n)`` and a driver-built
+    ``LocalTableScan`` default to defaultParallelism slices, which for
+    the 48-64-row fixtures means one Python task PER CORE in the decode
+    stage, each decoding a handful of rows for the fixed per-task worker
+    cost (32 slices measured 3.8 s cold / 0.67 s warm vs 0.3 s at 1).
+    A real media lake reads parquet whose partitioning already scales
+    with data volume; this only sizes the synthetic fixtures honestly."""
     return max(1, n // 1024)
+
+
+def _media_table(spark, n: int, synth: Callable[[int], bytes]) -> DataFrame:
+    """``(media_id BIGINT NOT NULL, payload BINARY)`` for ids ``0..n-1``,
+    payloads ``synth(id)``, built on the driver as a ``pyarrow.Table``.
+
+    The plan is ``Coalesce(_media_partitions(n))`` over a JVM
+    ``LocalTableScan``, so the decode kernel downstream is the only
+    Python task.  A ``pandas_udf`` generator over ``spark.range`` ran a
+    second one per query.  Measured on the 64-row BMP decode (warm
+    process-tree CPU per query, 4 vCPUs): this shape 0.36 s, the
+    generator 0.69 s.  Two other shapes are worse:
+    ``createDataFrame(list)`` goes through a Python RDD that spawns
+    worker tasks of its own (1.43 s), and without the ``coalesce`` the
+    scan splits into defaultParallelism slices, each a separate decode
+    task (1.24 s)."""
+    import pyarrow as pa
+
+    schema = pa.schema(
+        [pa.field("media_id", pa.int64(), nullable=False), ("payload", pa.binary())]
+    )
+    ids = list(range(n))
+    table = pa.table({"media_id": ids, "payload": [synth(i) for i in ids]}, schema=schema)
+    return spark.createDataFrame(table).coalesce(_media_partitions(n))
 
 
 def synth_media(spark, n: int = 64) -> DataFrame:
@@ -263,18 +273,6 @@ def frame_sample_stub(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     return frames
 
 
-def repartition_by_bytes(media: DataFrame, target_partition_bytes: int = 128 << 20, avg_payload_bytes: int | None = None) -> DataFrame:
-    """Partition media by byte budget, not row count (payloads are MBs)."""
-    if avg_payload_bytes is None:
-        avg_payload_bytes = (
-            media.select(F.avg(F.length("payload"))).first()[0] or 1
-        )
-    rows_per_part = max(1, int(target_partition_bytes / max(avg_payload_bytes, 1)))
-    n_rows = media.count()
-    n_parts = max(1, (n_rows + rows_per_part - 1) // rows_per_part)
-    return media.repartition(n_parts)
-
-
 def pool_frame_embeddings(
     frames,
     media_col: str = "media_id",
@@ -294,8 +292,6 @@ def pool_frame_embeddings(
     the groupBy key count is |media| x dim, each group ~frame-count
     rows, no skew beyond the longest video.
     """
-    from pyspark.sql import functions as F
-
     exploded = frames.select(
         F.col(media_col),
         F.posexplode(vec_col).alias("pos0", "x"),
@@ -324,8 +320,6 @@ def synth_bmp_bytes(media_id: int) -> bytes:
     pixel (x, y) BGR = ((id*7+x*3+y*5)%256, (id*11+x+2*y)%256,
     (id*13+2*x+y)%256).  Pure integer math, so an oracle can derive
     the decoded stats without decoding."""
-    import struct
-
     w, h = 4 + media_id % 5, 3 + media_id % 4
     row_pad = (-(w * 3)) % 4
     img = bytearray()
@@ -347,24 +341,13 @@ def synth_bmp_bytes(media_id: int) -> bytes:
 def synth_bmp_media(spark, n: int = 64) -> DataFrame:
     """(media_id, payload BINARY) table of synthetic BMPs — the binary
     ingestion shape (id + opaque bytes) a media lake lands."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def gen(mid: pd.Series) -> pd.Series:
-        return mid.map(lambda i: synth_bmp_bytes(int(i)))
-
-    return spark.range(n, numPartitions=_media_partitions(n)).select(
-        F.col("id").alias("media_id"), gen(F.col("id")).alias("payload")
-    )
+    return _media_table(spark, n, synth_bmp_bytes)
 
 
 def bmp_stats_of(raw: bytes) -> tuple[int, int, int]:
     """Per-payload 24-bit BMP decode → (width, height, px_sum); the
     shared kernel body for ``decode_bmp_stats`` and the mixed-format
     ``decode_image`` dispatch."""
-    import struct
-
     if raw[:2] != b"BM":
         raise ValueError("not a BMP")
     off = struct.unpack_from("<I", raw, 10)[0]
@@ -447,9 +430,6 @@ def synth_png_bytes(media_id: int) -> bytes:
     reconstruction is exercised for real; ids % 3 == 0 split the
     compressed stream across two IDAT chunks (the spec allows any
     split) to pin multi-chunk reassembly."""
-    import struct
-    import zlib
-
     w, h = 4 + media_id % 5, 3 + media_id % 4
     bpp = 3
     prior = bytes(w * bpp)
@@ -496,16 +476,8 @@ def synth_png_bytes(media_id: int) -> bytes:
 
 
 def synth_png_media(spark, n: int = 64) -> DataFrame:
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def gen(mid: pd.Series) -> pd.Series:
-        return mid.map(lambda i: synth_png_bytes(int(i)))
-
-    return spark.range(n, numPartitions=_media_partitions(n)).select(
-        F.col("id").alias("media_id"), gen(F.col("id")).alias("payload")
-    )
+    """(media_id, payload BINARY) table of synthetic PNGs."""
+    return _media_table(spark, n, synth_png_bytes)
 
 
 def png_stats_of(raw: bytes) -> tuple[int, int, int]:
@@ -515,9 +487,6 @@ def png_stats_of(raw: bytes) -> tuple[int, int, int]:
     inflated, scanlines reconstructed per filter byte; unsupported
     shapes (non-8-bit, non-RGB, interlaced) and corrupt/truncated
     streams raise loudly."""
-    import struct
-    import zlib
-
     if raw[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG")
     pos, ihdr, idat = 8, None, bytearray()
@@ -621,8 +590,6 @@ def synth_wav_bytes(media_id: int) -> bytes:
     """Deterministic 16-bit mono PCM WAV: 8000 Hz, n = 64 + (id % 37)
     samples, sample[i] = ((id * 131 + i * 17) % 4001) - 2000.  Pure
     integer math so the oracle can derive decoded stats arithmetically."""
-    import struct
-
     n = 64 + media_id % 37
     samples = [((media_id * 131 + i * 17) % 4001) - 2000 for i in range(n)]
     data = struct.pack(f"<{n}h", *samples)
@@ -635,16 +602,8 @@ def synth_wav_bytes(media_id: int) -> bytes:
 
 
 def synth_wav_media(spark, n: int = 48) -> DataFrame:
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def gen(mid: pd.Series) -> pd.Series:
-        return mid.map(lambda i: synth_wav_bytes(int(i)))
-
-    return spark.range(n, numPartitions=_media_partitions(n)).select(
-        F.col("id").alias("media_id"), gen(F.col("id")).alias("payload")
-    )
+    """(media_id, payload BINARY) table of synthetic PCM WAVs."""
+    return _media_table(spark, n, synth_wav_bytes)
 
 
 def decode_wav_stats(media: DataFrame) -> DataFrame:
@@ -806,8 +765,6 @@ def synth_jpeg_bytes(media_id: int) -> bytes:
     rounding-free and px_sum = sum over blocks of 64*v — derivable in
     SQL without a decoder.  The file itself is a real JPEG: Annex K
     Huffman tables, DC prediction across blocks, byte stuffing."""
-    import struct
-
     w = 16 + 8 * (media_id % 3)
     h = 8 + 8 * (media_id % 4)
     dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
@@ -853,16 +810,7 @@ def synth_jpeg_bytes(media_id: int) -> bytes:
 
 def synth_jpeg_media(spark, n: int = 64) -> DataFrame:
     """(media_id, payload BINARY) table of synthetic baseline JPEGs."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def gen(mid: pd.Series) -> pd.Series:
-        return mid.map(lambda i: synth_jpeg_bytes(int(i)))
-
-    return spark.range(n, numPartitions=_media_partitions(n)).select(
-        F.col("id").alias("media_id"), gen(F.col("id")).alias("payload")
-    )
+    return _media_table(spark, n, synth_jpeg_bytes)
 
 
 class _JpegBitReader:
@@ -951,8 +899,6 @@ def decode_jpeg_bytes(raw: bytes) -> "np.ndarray":  # noqa: F821
     the supported profile (progressive, multi-component, 12-bit,
     restart intervals) and on truncation — never a silent partial
     image."""
-    import struct
-
     import numpy as np
 
     if raw[:2] != b"\xff\xd8":

@@ -167,7 +167,6 @@ def connect_or_create(
     bridge_fact_fk: str = "A",
     bridge_dim_fk: str = "B",
     dim_id_prefix: str = "fs_",
-    materialize_dim: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """``connectOrCreate`` for the m:n tag relation (A9).
 
@@ -186,13 +185,12 @@ def connect_or_create(
     Ordering contract (SURVEY.md §4): dim merge runs before bridge append
     so bridge rows always resolve.
 
-    ``materialize_dim=True`` pins the merged dimension before the
-    bridge derives from it.  The merged dim appears TWICE downstream (the
-    bridge resolve joins it, and the caller writes it), so the lazy plan
-    carries two copies of the distinct+anti-join subtree — Catalyst
-    planning time, not execution, dominates this operator's benchmark
-    cost.  In production the dim merge is WRITTEN before bridge append
-    (the ordering contract above), which is exactly this materialization.
+    The merged dimension is pinned before the bridge derives from it.
+    Every caller reads it twice (the bridge resolve joins it, and the
+    caller writes or joins it), so without the pin the distinct and
+    anti-join subtree would be planned and run once per read.  The
+    ordering contract above already writes the dim merge before the
+    bridge append, which is exactly this materialization.
     """
     tags = (
         facts_with_tags.select(F.explode(F.array_distinct(F.col(tags_col))).alias("__tag"), F.col(fact_key).alias("__fid"))
@@ -211,8 +209,7 @@ def connect_or_create(
         missing.select(*[c for c in dim.columns if c in missing.columns]),
         allowMissingColumns=True,
     )
-    if materialize_dim:
-        new_dim = pin(new_dim)
+    new_dim = pin(new_dim)
     # 2. bridge append (connect), dedup'd against existing pairs
     resolved = tags.join(
         new_dim.select(F.col(dim_name).alias("__tag"), F.col(dim_key).alias("__did")),

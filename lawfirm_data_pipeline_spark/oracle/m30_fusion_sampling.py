@@ -22,13 +22,8 @@ from ..operators.sampling import hash_bucket_negatives
 from ..operators.similarity import rrf_fusion
 from ..operators.text import bpe_first_merges
 from ..queries import query
-from ._shared import LTOKS_SQL as _LTOKS
+from ._shared import _COS, LTOKS_SQL as _LTOKS
 from lawfirm_data_pipeline_spark.functions.rounding import bfround_sql
-
-_COS = (
-    "list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
 
 
 # -- q145: reciprocal rank fusion of cosine + inner-product retrievers

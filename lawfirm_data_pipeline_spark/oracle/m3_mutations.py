@@ -150,7 +150,7 @@ def q17_connect_or_create(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array("p_type", "p_brand").alias("tags"),
     )
     bridge = spark.createDataFrame([], "A string, B string")
-    new_dim, new_bridge = connect_or_create(facts, dim, bridge, materialize_dim=True)
+    new_dim, new_bridge = connect_or_create(facts, dim, bridge)
     return (
         new_dim.join(new_bridge, new_dim["id"] == new_bridge["B"], "left")
         .groupBy("name")

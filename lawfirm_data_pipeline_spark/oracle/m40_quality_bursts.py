@@ -22,12 +22,9 @@ from ..io import load_table
 from ..pin import pin
 from ..operators.similarity import cosine, _dvec
 from ..queries import query
+from ._shared import _COS
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
 
-_COS = (
-    "list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
 # q177: each vector's cosine to its class prototype, in 1e-9 units
 _INTRA_COS_1E9 = f"""{_COS.format(a='e.v', b='cent.c')}
                                               * 1e9"""

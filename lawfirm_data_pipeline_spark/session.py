@@ -46,6 +46,9 @@ def get_spark(
         # Parquet scans: keep splits small enough that a 100 TB table still
         # yields memory-sized partitions; AQE coalesces the tiny-SF case.
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # A warm lead tick uses more than the default 100 generated
+        # classes: at 100 it recompiled 56-71 of them per tick, at 1000 0-11.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

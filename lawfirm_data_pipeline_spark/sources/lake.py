@@ -31,8 +31,10 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _POINTER = "_LATEST"
+_SCHEMA = "_schema.json"
 
 
 def _pointer_path(table_dir: str) -> str:
@@ -65,7 +67,12 @@ def write_version(df: DataFrame, table_dir: str) -> int:
     # skip over orphaned uncommitted dirs from crashed writers
     while os.path.exists(os.path.join(table_dir, f"v={nxt}")):
         nxt += 1
-    df.write.mode("errorifexists").parquet(os.path.join(table_dir, f"v={nxt}"))
+    path = os.path.join(table_dir, f"v={nxt}")
+    df.write.mode("errorifexists").parquet(path)
+    # readers take the schema from here instead of a footer-inference job;
+    # Spark's file index skips ``_``-prefixed files
+    with open(os.path.join(path, _SCHEMA), "w") as f:
+        f.write(df.schema.json())
     return nxt
 
 
@@ -73,11 +80,21 @@ def publish(table_dir: str, version: int) -> None:
     _publish(table_dir, version)
 
 
+def _read_dir(spark: SparkSession, path: str) -> DataFrame:
+    """Read a version dir with the schema ``write_version`` left beside
+    it, so building the read launches no footer-inference job."""
+    sidecar = os.path.join(path, _SCHEMA)
+    if not os.path.exists(sidecar):  # older dirs, compact() output: infer
+        return spark.read.parquet(path)
+    with open(sidecar) as f:
+        return spark.read.schema(StructType.fromJson(json.load(f))).parquet(path)
+
+
 def read_latest(spark: SparkSession, table_dir: str) -> DataFrame:
     v = current_version(table_dir)
     if v is None:
         raise FileNotFoundError(f"no committed version in {table_dir}")
-    return spark.read.parquet(os.path.join(table_dir, f"v={v}"))
+    return _read_dir(spark, os.path.join(table_dir, f"v={v}"))
 
 
 def read_version(spark: SparkSession, table_dir: str, version: int) -> DataFrame:
@@ -90,7 +107,7 @@ def read_version(spark: SparkSession, table_dir: str, version: int) -> DataFrame
     path = os.path.join(table_dir, f"v={version}")
     if not os.path.exists(path):
         raise FileNotFoundError(f"version {version} not found in {table_dir}")
-    return spark.read.parquet(path)
+    return _read_dir(spark, path)
 
 
 def commit_many(staged: dict[str, int]) -> None:

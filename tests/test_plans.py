@@ -652,6 +652,22 @@ def test_census_multi_consumer_aggregates_are_cached(spark):
         assert plan.count("Scan ExistingRDD") == n_reads, (name, plan)
 
 
+def test_media_decode_crosses_into_python_once(spark):
+    """Each decode query runs one Python exec, the ``MapInPandas``
+    decoder, over the driver-built payload table's ``LocalTableScan``.
+    A ``pandas_udf`` payload generator shows up as an
+    ``ArrowEvalPython`` node: a second Python task per query."""
+    import re
+
+    from lawfirm_data_pipeline_spark.queries import QUERIES
+
+    for name in ("q244_bmp_decode", "q245_wav_decode", "q269_png_decode", "q295_jpeg_decode"):
+        plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+        nodes = [re.match(r"[\s:+|-]*(?:\*\(\d+\) )?(\w+)", ln).group(1) for ln in plan.splitlines()]
+        assert [n for n in nodes if "Python" in n or "Pandas" in n] == ["MapInPandas"], (name, plan)
+        assert nodes[-1] == "LocalTableScan", (name, plan)
+
+
 def _plan_lint_mod():
     import importlib.util
     import os
