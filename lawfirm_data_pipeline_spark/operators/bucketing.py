@@ -9,8 +9,11 @@ reference gets the same effect from Postgres btree indexes; columnar
 lakes get it from bucketing (or from liquid clustering on newer table
 formats).
 
-Bucketed writes require a metastore table (``saveAsTable``): Spark
-persists bucket metadata in the catalog, not in parquet footers.
+Bucketed writes require a catalog table (``saveAsTable``): Spark
+persists bucket metadata in the catalog, not in parquet footers.  The
+table is external, at a caller-owned ``path``, so nothing lands in the
+session's warehouse dir; dropping the table leaves the files to the
+caller's scratch scope.
 """
 
 from __future__ import annotations
@@ -19,32 +22,24 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort: bool = True,
-    mode: str = "overwrite",
+    df: DataFrame, table: str, bucket_col: str, path: str, n_buckets: int = 16
 ) -> None:
-    """Persist ``df`` as a bucketed (and bucket-sorted) catalog table.
-
-    ``sort`` additionally sorts within buckets on the key, letting a
-    downstream sort-merge join skip its sort too.
-    """
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table)
+    """Persist ``df`` as an external bucketed catalog table at ``path``,
+    sorted within buckets on the key so a downstream sort-merge join
+    skips its sort too."""
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .option("path", path)
+        .saveAsTable(table)
+    )
 
 
 def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: str,
-    how: str = "inner",
+    spark: SparkSession, left_table: str, right_table: str, on: str
 ) -> DataFrame:
-    """Join two same-bucketed catalog tables on their bucket key.
+    """Inner-join two same-bucketed catalog tables on their bucket key.
 
     With matching bucket counts the plan shows SortMergeJoin with no
     Exchange on either side (asserted in tests/test_bucketing.py).
@@ -52,4 +47,4 @@ def bucketed_join(
     tiny; keep ``spark.sql.autoBroadcastJoinThreshold`` in mind when
     reading plans at test scale.
     """
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
+    return spark.table(left_table).join(spark.table(right_table), on=on)

@@ -11,6 +11,8 @@ Reference parity:
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -127,13 +129,9 @@ def q75_transaction_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle reproduces the post-state from the raw input, so the
     whole stage→commit→read cycle is value-checked.  The lake lives in
     a fresh temp dir per invocation (hermetic; data writes are the
-    distributed part, the commit is two pointer renames)."""
-    import tempfile
-
+    distributed part, the commit is two pointer renames), so the ≤3
+    summary rows are collected before it is deleted."""
     from ..sources import lake
-
-    base = tempfile.mkdtemp(prefix="q75_lake_")
-    orders_dir, audit_dir = f"{base}/orders", f"{base}/audit"
 
     orders = load_table(spark, sf_dir, "orders")
     cents = bfround(F.col("o_totalprice") * 100).cast("long")
@@ -150,20 +148,24 @@ def q75_transaction_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     audit = orders.filter(F.col("o_orderstatus") == "F").select("o_orderkey")
 
-    staged = {
-        orders_dir: lake.write_version(updated, orders_dir),
-        audit_dir: lake.write_version(audit, audit_dir),
-    }
-    lake.commit_many(staged)
+    with tempfile.TemporaryDirectory(prefix="q75_", ignore_cleanup_errors=True) as base:
+        orders_dir, audit_dir = f"{base}/orders", f"{base}/audit"
+        staged = {
+            orders_dir: lake.write_version(updated, orders_dir),
+            audit_dir: lake.write_version(audit, audit_dir),
+        }
+        lake.commit_many(staged)
 
-    committed = lake.read_latest(spark, orders_dir)
-    audited = lake.read_latest(spark, audit_dir).withColumn("__a", F.lit(1))
-    return (
-        committed.join(audited, on="o_orderkey", how="left")
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("cents").alias("sum_cents"),
-            F.sum(F.coalesce("__a", F.lit(0))).cast("long").alias("n_audited"),
+        committed = lake.read_latest(spark, orders_dir)
+        audited = lake.read_latest(spark, audit_dir).withColumn("__a", F.lit(1))
+        out = (
+            committed.join(audited, on="o_orderkey", how="left")
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).alias("n_orders"),
+                F.sum("cents").alias("sum_cents"),
+                F.sum(F.coalesce("__a", F.lit(0))).cast("long").alias("n_audited"),
+            )
         )
-    )
+        rows = out.collect()
+        return spark.createDataFrame(rows, out.schema)

@@ -13,9 +13,7 @@ rotation: m18+ register first (see m18's docstring).
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,9 +23,6 @@ from ..operators.cdc import row_hash
 from ..queries import query
 from ..sources import lake
 from ..sources.migrations import apply_migration
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 _CHECK_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
 
@@ -66,16 +61,13 @@ def q175_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_latest at each stage must equal the oracle's checksum of the
     source rows — mutation machinery must be content-invisible.  The
     tiny audit rows are collected before the scratch dir is deleted
-    (read_latest DataFrames would dangle otherwise); scratch lives
-    under the repo's gitignored .tmp_lake/."""
+    (read_latest DataFrames would dangle otherwise)."""
     src = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 3 == 0)
         .select(*_CHECK_COLS)
     )
-    table_dir = os.path.join(_TMP_ROOT, f"orders_{uuid.uuid4().hex}")
-    os.makedirs(table_dir, exist_ok=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="q175_", ignore_cleanup_errors=True) as table_dir:
         v1 = lake.write_version(src.repartition(8), table_dir)
         lake.publish(table_dir, v1)
         r1 = _cksum(lake.read_latest(spark, table_dir), _CHECK_COLS).collect()[0]
@@ -85,8 +77,6 @@ def q175_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         lake.publish(table_dir, v2)
         lake.vacuum(table_dir, keep=1)
         r2 = _cksum(lake.read_latest(spark, table_dir), _CHECK_COLS).collect()[0]
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [("v1", r1["n_rows"], r1["checksum"]), ("compacted", r2["n_rows"], r2["checksum"])],
         "stage string, n_rows long, checksum long",

@@ -16,9 +16,6 @@ parquet sat under the driver's VALUE gate.  These queries close that:
   in tests/test_formats.py; the value gate proves pruning lost
   nothing.
 
-Scratch lives under the repo's gitignored ``.tmp_lake/`` (the m39
-convention) and is deleted after the audit rows are collected.
-
 Registered after m45 — outside round 3's 50-query window (round-4
 rotation note in ``oracle/__init__.py``).
 """
@@ -26,8 +23,7 @@ rotation note in ``oracle/__init__.py``).
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,9 +32,6 @@ from pyspark.sql import types as T
 from ..io import load_table
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 # documents slice checksum: every column participates, 60-bit md5
 # prefix folded mod a prime (the q151/q175 convention)
@@ -114,9 +107,7 @@ def q197_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 2 == 0)
         .select(*_COLS)
     )
-    scratch = os.path.join(_TMP_ROOT, f"fmt_{uuid.uuid4().hex}")
-    os.makedirs(scratch, exist_ok=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="q197_", ignore_cleanup_errors=True) as scratch:
         rows = []
         for fmt in ("parquet", "orc", "csv", "json"):
             path = os.path.join(scratch, fmt)
@@ -146,8 +137,6 @@ def q197_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             r = _doc_cksum(back).collect()[0]
             rows.append((fmt, r["n_rows"], r["checksum"]))
         return spark.createDataFrame(rows, "fmt string, n_rows long, checksum long")
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # -- q198: partitioned write + partition-pruned readback
@@ -180,9 +169,7 @@ def q198_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         bfround(F.col("value") * 100).cast("long").alias("cents"),
         F.to_date(F.date_trunc("day", "ts")).alias("day"),
     )
-    scratch = os.path.join(_TMP_ROOT, f"part_{uuid.uuid4().hex}")
-    os.makedirs(scratch, exist_ok=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="q198_", ignore_cleanup_errors=True) as scratch:
         # ts as micros long: plain TimestampNTZ round-trips fine too,
         # but the integer form keeps the gate unit-proof (io.py sniff)
         ev.withColumn("ts_us", F.unix_micros("ts")).drop("ts").write.mode(
@@ -198,5 +185,3 @@ def q198_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(r["event_type"], r["n"], r["value_cents"]) for r in rows],
             "event_type string, n long, value_cents long",
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

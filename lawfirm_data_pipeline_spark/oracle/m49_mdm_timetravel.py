@@ -21,9 +21,7 @@ rotation note in ``oracle/__init__.py``).
 from __future__ import annotations
 
 import math
-import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,9 +30,6 @@ from ..io import load_table
 from ..queries import query
 from ..sources import lake
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 # planted messy-duplicate derivation (shared Spark/DuckDB): every 7th
 # customer re-enters uppercased with a null balance, every 13th with a
@@ -151,8 +146,6 @@ def q206_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 5 == 0)
         .select("o_orderkey", "o_orderstatus")
     )
-    table_dir = os.path.join(_TMP_ROOT, f"tt_{uuid.uuid4().hex}")
-    os.makedirs(table_dir, exist_ok=True)
 
     def cksum(df: DataFrame):
         h = (
@@ -178,7 +171,7 @@ def q206_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         return r["n"], r["c"]
 
-    try:
+    with tempfile.TemporaryDirectory(prefix="q206_", ignore_cleanup_errors=True) as table_dir:
         v1 = lake.write_version(src, table_dir)
         lake.publish(table_dir, v1)
         mutated = lake.read_latest(spark, table_dir).withColumn(
@@ -192,8 +185,6 @@ def q206_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("v1_asof", n1, c1), ("v2_latest", n2, c2)],
             "stage string, n_rows long, checksum long",
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
 
 
 # -- q207: percentile_approx graded against the exact quantile

@@ -22,9 +22,7 @@ sf0.1) green at registration, rows in BASELINE.md.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,9 +38,6 @@ from ._shared import LTOKS_SQL as _LTOKS
 from ._shared import PLANT_SQL as _PLANT_SQL
 from ._shared import _COS
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 _ORD_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
 _LI_COLS = ["l_orderkey", "l_partkey", "l_linenumber"]
@@ -104,8 +99,7 @@ def q224_multi_table_transaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     both tables; the oracle computes the expected post-state directly.
     Commit cost is one O_EXCL file create regardless of data volume —
     the distributed writes all happen before the commit point."""
-    scratch = os.path.join(_TMP_ROOT, f"txn_{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q224_", ignore_cleanup_errors=True) as scratch:
         cat = Catalog(scratch)
         orders = (
             load_table(spark, sf_dir, "orders")
@@ -141,8 +135,6 @@ def q224_multi_table_transaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before the scratch dir disappears
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # -- q225: SemDeDup keep/drop policy over the planted embedding corpus

@@ -19,8 +19,7 @@ registration; BASELINE.md rows same-commit.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,9 +30,6 @@ from ..operators.temporal import asof_nearest
 from ..queries import query
 from ..streaming.bounded import drain
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 
 # -- q232: exactly-once totals across a streaming restart
@@ -58,9 +54,8 @@ def q232_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     restarts rely on, exercised with real checkpoints — not a unit
     mock.  (At scale the sink is the lake table and the checkpoint
     lives with it; the mechanics are identical.)"""
-    scratch = os.path.join(_TMP_ROOT, f"rcv_{uuid.uuid4().hex}")
-    src, sink, ckpt = (os.path.join(scratch, d) for d in ("src", "sink", "ckpt"))
-    try:
+    with tempfile.TemporaryDirectory(prefix="q232_", ignore_cleanup_errors=True) as scratch:
+        src, sink, ckpt = (os.path.join(scratch, d) for d in ("src", "sink", "ckpt"))
         ev = (
             load_table(spark, sf_dir, "events")
             .filter(F.col("user_id") % 13 == 0)
@@ -96,8 +91,6 @@ def q232_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # -- q233: join-view IVM (inserts on BOTH sides, three delta terms)

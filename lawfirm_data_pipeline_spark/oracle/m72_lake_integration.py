@@ -18,8 +18,7 @@ driver rows with the round-5 rotation.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,9 +29,6 @@ from ..sources.lake import Catalog
 from ..streaming.bounded import drain
 from ..streaming.catalog_sink import exactly_once_totals_sink
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 _BACKFILL_DAY = "2024-01-15"
 
@@ -61,8 +57,8 @@ def q256_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     day byte-identical to the original and the backfilled day changed.
     This is the idempotent-backfill primitive every scheduled pipeline
     re-run depends on."""
-    scratch = os.path.join(_TMP_ROOT, f"dpo_{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q256_", ignore_cleanup_errors=True) as scratch:
+        table = os.path.join(scratch, "t")
         ev = (
             load_table(spark, sf_dir, "events")
             .filter(F.col("user_id") % 5 == 0)
@@ -71,7 +67,7 @@ def q256_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
                 bfround(F.col("value") * 100).cast("long").alias("cents"),
             )
         )
-        ev.write.partitionBy("day").parquet(scratch)
+        ev.write.partitionBy("day").parquet(table)
         backfill = ev.filter(F.col("day") == _BACKFILL_DAY).select(
             "day", (F.col("cents") * 2).alias("cents")
         )
@@ -79,10 +75,10 @@ def q256_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
             backfill.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("day")
-            .parquet(scratch)
+            .parquet(table)
         )
         out = (
-            spark.read.parquet(scratch)
+            spark.read.parquet(table)
             .groupBy("day")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
@@ -92,8 +88,6 @@ def q256_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # -- q257: exactly-once streaming sink through the catalog (+ replay)
@@ -117,8 +111,7 @@ def q257_stream_catalog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (batch skipped) both flip the hash."""
     from ..io import load_events_stream
 
-    scratch = os.path.join(_TMP_ROOT, f"cds_{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q257_", ignore_cleanup_errors=True) as scratch:
         cat = Catalog(scratch)
         sink = exactly_once_totals_sink(spark, cat)
         seen: list = []
@@ -148,5 +141,3 @@ def q257_stream_catalog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = cat.read(spark, "totals")
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

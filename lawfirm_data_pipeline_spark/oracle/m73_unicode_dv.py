@@ -22,8 +22,7 @@ driver rows with the round-5 rotation.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,9 +31,6 @@ from ..io import load_table
 from ..operators.cdc import row_hash
 from ..operators.text import unicode_normalize
 from ..queries import query
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 # planted non-ASCII fixtures — IDENTICAL literals in engine and oracle;
 # ids far above any doc_id
@@ -117,9 +113,8 @@ def q259_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the oracle's direct post-delete derivation — the
     Delta/Iceberg delete path without rewriting a single base file
     until compaction chooses to."""
-    scratch = os.path.join(_TMP_ROOT, f"dv_{uuid.uuid4().hex}")
-    base_dir, dv_dir = os.path.join(scratch, "base"), os.path.join(scratch, "dv")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q259_", ignore_cleanup_errors=True) as scratch:
+        base_dir, dv_dir = os.path.join(scratch, "base"), os.path.join(scratch, "dv")
         base = (
             load_table(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") % 3 == 0)
@@ -161,5 +156,3 @@ def q259_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = first.unionByName(second)
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

@@ -14,8 +14,7 @@ driver rows with the round-5 rotation.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,9 +23,6 @@ from ..io import load_table
 from ..operators.similarity import pq_codes
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 
 # -- q261: PQ code assignment (8 subspaces x 16 centroids, exact)
@@ -96,8 +92,7 @@ def q262_schema_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     generations lands in the unified aggregate.  This is the read-side
     half of schema evolution (q176 is the write side): history never
     needs rewriting to be queryable."""
-    scratch = os.path.join(_TMP_ROOT, f"sm_{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q262_", ignore_cleanup_errors=True) as scratch:
         orders = load_table(spark, sf_dir, "orders")
         cents = bfround(F.col("o_totalprice") * 100).cast("long")
         old = orders.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -124,5 +119,3 @@ def q262_schema_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

@@ -32,8 +32,7 @@ the catalog arbitrating writer conflicts.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,9 +51,6 @@ from ..pipeline.stages import locate_stage, scrape_stage, sync_stage
 from ..queries import query
 from ..sources.lake import Catalog
 from ..streaming.bounded import drain
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 
 def _mh(c) -> F.Column:
@@ -145,10 +141,7 @@ def _run_stage_as_stream(spark, scratch, cat, src_table, sink_fn, schema):
         spark.readStream.schema(schema)
         .parquet(src_dir)
         .writeStream.foreachBatch(sink_fn)
-        .option(
-            "checkpointLocation",
-            os.path.join(scratch, f"ckpt_{src_table}_{uuid.uuid4().hex[:8]}"),
-        ),
+        .option("checkpointLocation", os.path.join(scratch, f"ckpt_{src_table}")),
         f"pipeline_stage_{src_table}",
     )
 
@@ -241,8 +234,7 @@ def q270_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """locate → scrape → sync as three drained streams over the
     shared OCC catalog; summary = queue-state transitions + lead counts
     + an email checksum over the synced leads, all DuckDB-replayed."""
-    scratch = os.path.join(_TMP_ROOT, f"pipe_{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q270_", ignore_cleanup_errors=True) as scratch:
         cat = Catalog(scratch)
         seeds = (
             load_table(spark, sf_dir, "customer")
@@ -375,5 +367,3 @@ def q270_pipeline_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

@@ -19,8 +19,7 @@ oracle re-derives both audits and the surviving table state.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,9 +28,6 @@ from ..io import load_events_stream, load_table
 from ..queries import query
 from ..sources.lake import Catalog
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 
 @query(
@@ -141,8 +137,7 @@ def q276_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         return {"n_bad_price": row["n_bad_price"], "n_dup_keys": row["n_dup_keys"]}
 
-    scratch = os.path.join(_TMP_ROOT, f"wap_{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q276_", ignore_cleanup_errors=True) as scratch:
         cat = Catalog(scratch)
 
         def wap(incoming: DataFrame) -> tuple[bool, dict[str, int]]:
@@ -186,5 +181,3 @@ def q276_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("head_after_reject", int(head_id)),
         ]
         return spark.createDataFrame(rows, "metric string, n long")
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

@@ -21,8 +21,7 @@ computes, so the Arrow boundary is hash-gated with no tolerance.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+import tempfile
 from typing import Iterator
 
 import pandas as pd
@@ -34,9 +33,6 @@ from ..io import load_table
 from ..queries import query
 from ..streaming.bounded import drain
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 
 @query(
@@ -72,8 +68,7 @@ def q277_stream_backpressure(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", bfround(F.col("value") * 100).cast("long").alias("cents")
         )
     )
-    scratch = os.path.join(_TMP_ROOT, f"bp_{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q277_", ignore_cleanup_errors=True) as scratch:
         src_dir = os.path.join(scratch, "src")
         src.repartition(4).write.parquet(src_dir)
         stream = (
@@ -119,8 +114,6 @@ def q277_stream_backpressure(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((f"rows_{et}", n))
             rows.append((f"cents_{et}", cents))
         return spark.createDataFrame(rows, "metric string, n long")
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 _OLS_SQL_TERMS = f"""

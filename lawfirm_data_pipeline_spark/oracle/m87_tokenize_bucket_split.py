@@ -25,10 +25,8 @@ across runs/engines, never a Bernoulli approximation.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
-import time
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -143,75 +141,6 @@ def q279_greedy_wordpiece(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_TABLE_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-# Leftover bucketed-table dirs older than this are garbage from a dead
-# session (tags fold the applicationId in, so no live session can own
-# them after a restart) and get reclaimed before writing new ones.
-_STALE_BUCKET_DIR_SECONDS = 24 * 3600
-
-
-def _own_bucket_table_dirs(spark: SparkSession) -> set[str]:
-    """Lower-cased dir names of every bucketed table THIS session has
-    registered in _BUCKETED_TABLE_CACHE (any sf_dir)."""
-    app = spark.sparkContext.applicationId
-    return {
-        t.lower()
-        for (cache_app, _), tables in _BUCKETED_TABLE_CACHE.items()
-        if cache_app == app
-        for t in tables
-    }
-
-
-def _sweep_stale_bucket_dirs(spark: SparkSession) -> None:
-    """Age-based reclaim of b_orders_*/b_lineitem_* warehouse dirs
-    (r7 ADVICE): per-session table tags fixed the concurrent DROP
-    hazard but made the same-tag reclaim path unreachable (application
-    IDs are unique per JVM launch), so crashed sessions' dirs
-    accumulated unboundedly.  Anything older than a day cannot belong
-    to a live session on this box; anything younger is left alone so
-    concurrent sessions stay safe.
-
-    r8 ADVICE hardening: dir mtimes stay at write time, so a session
-    alive >24h could have its own still-referenced dirs (an earlier
-    sf_dir entry of its cache) reclaimed — never sweep a dir this
-    session's cache still points at (the cache-hit path also refreshes
-    mtimes via os.utime, protecting long-lived sessions from OTHER
-    sweepers too)."""
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    root = wh.removeprefix("file:")
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    now = time.time()
-    own = _own_bucket_table_dirs(spark)
-    for name in entries:
-        if not name.startswith(("b_orders_", "b_lineitem_")):
-            continue
-        if name.lower() in own:
-            continue
-        path = os.path.join(root, name)
-        try:
-            if now - os.path.getmtime(path) > _STALE_BUCKET_DIR_SECONDS:
-                shutil.rmtree(path, ignore_errors=True)
-        except OSError:
-            continue
-
-
-def _touch_bucket_table_dirs(spark: SparkSession, tables: tuple[str, str]) -> None:
-    """Refresh dir mtimes on every cache hit (r8 ADVICE): keeps a
-    >24h-lived session's still-referenced bucketed tables out of any
-    concurrent session's age-based sweep window."""
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    root = wh.removeprefix("file:")
-    for t in tables:
-        try:
-            os.utime(os.path.join(root, t.lower()))
-        except OSError:
-            pass
-
-
 @query(
     "q280_bucketed_join_revenue",
     f"""
@@ -229,68 +158,49 @@ def q280_bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free (no Exchange on either side — the bucketed layout IS
     the shuffle, paid once at write), aggregate open-order revenue.
     The result must equal the plain join, proving bucket routing loses
-    no rows (operators/bucketing.write_bucketed/bucketed_join)."""
+    no rows (operators/bucketing.write_bucketed/bucketed_join).  Both
+    tables are external, under this call's scratch dir, and are dropped
+    before it is deleted."""
     from ..operators.bucketing import bucketed_join, write_bucketed
 
-    # The bucketed layout is a WRITE-ONCE artifact by design ("the
-    # bucketed layout IS the shuffle, paid once at write") — cache the
-    # two tables per (session, sf_dir) like the jaccard-pair and graph
-    # artifact caches, so repeated runs measure the exchange-free join
-    # they gate, not a fresh re-bucketing of lineitem each time.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tables = _BUCKETED_TABLE_CACHE.get(key)
-    if tables is not None:
-        _touch_bucket_table_dirs(spark, tables)
-    if tables is None:
-        # Tag folds the applicationId in (r6 ADVICE): a pure md5(sf_dir)
-        # tag made two concurrent sessions sharing the warehouse dir
-        # DROP/rmtree each other's live tables mid-query.  Per-session
-        # names keep concurrency safe; the stale-dir rmtree below still
-        # reclaims leftovers from crashed sessions that shared OUR tag
-        # (same app id restart), and distinct-session leftovers are
-        # plain warehouse garbage, not correctness hazards.
-        tag = hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:8]
+    with tempfile.TemporaryDirectory(prefix="q280_", ignore_cleanup_errors=True) as scratch:
+        # the scratch dir's unique name doubles as the per-call table tag,
+        # so concurrent sessions sharing a catalog never collide
+        tag = os.path.basename(scratch)
         lt, rt = f"b_orders_{tag}", f"b_lineitem_{tag}"
-        _sweep_stale_bucket_dirs(spark)
-        for t in (lt, rt):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            # a PREVIOUS session's warehouse dir survives its metastore:
-            # DROP is then a no-op but saveAsTable refuses the nonempty
-            # location — clear the stale managed-table dir explicitly
-            wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-            shutil.rmtree(
-                os.path.join(wh.removeprefix("file:"), t.lower()),
-                ignore_errors=True,
+        try:
+            write_bucketed(
+                load_table(spark, sf_dir, "orders")
+                .filter(F.col("o_orderstatus") == "O")
+                .select("o_orderkey", "o_orderpriority")
+                .withColumnRenamed("o_orderkey", "k"),
+                lt,
+                "k",
+                os.path.join(scratch, lt),
             )
-        write_bucketed(
-            load_table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderstatus") == "O")
-            .select("o_orderkey", "o_orderpriority")
-            .withColumnRenamed("o_orderkey", "k"),
-            lt,
-            "k",
-        )
-        write_bucketed(
-            load_table(spark, sf_dir, "lineitem").select(
-                F.col("l_orderkey").alias("k"),
-                bfround(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
-                .cast("long")
-                .alias("cents"),
-            ),
-            rt,
-            "k",
-        )
-        tables = _BUCKETED_TABLE_CACHE[key] = (lt, rt)
-    lt, rt = tables
-    out = (
-        bucketed_join(spark, lt, rt, on="k")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-            F.sum("cents").cast("long").alias("revenue_cents"),
-        )
-    )
-    rows = out.collect()
+            write_bucketed(
+                load_table(spark, sf_dir, "lineitem").select(
+                    F.col("l_orderkey").alias("k"),
+                    bfround(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
+                    .cast("long")
+                    .alias("cents"),
+                ),
+                rt,
+                "k",
+                os.path.join(scratch, rt),
+            )
+            out = (
+                bucketed_join(spark, lt, rt, on="k")
+                .groupBy("o_orderpriority")
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_lines"),
+                    F.sum("cents").cast("long").alias("revenue_cents"),
+                )
+            )
+            rows = out.collect()
+        finally:
+            for t in (lt, rt):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
     return spark.createDataFrame(rows, out.schema)
 
 

@@ -23,8 +23,7 @@ audited lateness in batch — this gates the actual drop.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,9 +35,6 @@ from ..queries import query
 from ..streaming.bounded import drain
 from ._shared import LTOKS_SQL as _LTOKS, SHINGLES_SQL as _SHINGLES
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 _K = 8
 _BANDS = 4
@@ -260,8 +256,7 @@ def q283_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrives; the batch-count assertion below makes a Spark-side
     # behavior change loud instead of a silent hash flip
     neutral = ts_row("2030-01-01 10:55:00")
-    scratch = os.path.join(_TMP_ROOT, f"wm_{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q283_", ignore_cleanup_errors=True) as scratch:
         src = os.path.join(scratch, "src")
         payloads = (
             on_time.unionByName(pusher),
@@ -319,5 +314,3 @@ def q283_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("wend") <= F.to_timestamp(F.lit("2030-01-01 10:50:00")))
             .select("wstart", "n")
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

@@ -21,8 +21,7 @@ flips the hash.  Pure projection per table — scales as the scans do.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,9 +29,6 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..queries import query
 from lawfirm_data_pipeline_spark.functions.rounding import bfround, bfround_sql
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_TMP_ROOT = os.path.join(_REPO, ".tmp_lake")
 
 
 def dpp_revenue(spark: SparkSession, sf_dir: str, fact_dir: str) -> DataFrame:
@@ -81,13 +77,10 @@ def dpp_revenue(spark: SparkSession, sf_dir: str, fact_dir: str) -> DataFrame:
     """,
 )
 def q284_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scratch = os.path.join(_TMP_ROOT, f"dpp_{uuid.uuid4().hex}")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q284_", ignore_cleanup_errors=True) as scratch:
         out = dpp_revenue(spark, sf_dir, os.path.join(scratch, "fact"))
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def pseudonymize(df: DataFrame, col: str, secret: str = "s3cr3t") -> DataFrame:

@@ -9,7 +9,7 @@ carry exact ReadSchema for pruning.
 Scale notes: csv/json are row formats — fine for ingest edges, wrong for
 the lake.  ``write_table`` defaults to parquet with optional
 ``partition_by`` (hive-style directory partitioning → partition pruning
-on read) and ``bucket_by`` via saveAsTable when a metastore is present.
+on read); bucketed tables are written by ``operators/bucketing``.
 """
 
 from __future__ import annotations

@@ -156,47 +156,6 @@ def test_wav_decode_raises_without_data_chunk(spark):
         decode_wav_stats(media).collect()
 
 
-# --- r8 ADVICE: bucket-dir sweep must not reclaim live session dirs -------
-
-def test_bucket_sweep_spares_own_cached_dirs_and_hit_refreshes_mtime(spark):
-    """The 24h age sweep must skip dirs the CURRENT session's
-    _BUCKETED_TABLE_CACHE still references (a >24h-lived session would
-    otherwise rmtree its own live bucketed tables), and the cache-hit
-    path must os.utime the dirs so concurrent sessions' sweeps spare
-    them too (r8 ADVICE #1)."""
-    import time
-
-    from lawfirm_data_pipeline_spark.oracle import m87_tokenize_bucket_split as m87
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    os.makedirs(wh, exist_ok=True)
-    own = os.path.join(wh, "b_orders_deadbeef")
-    foreign = os.path.join(wh, "b_lineitem_feedface")
-    for d in (own, foreign):
-        os.makedirs(d, exist_ok=True)
-        two_days_ago = time.time() - 2 * 24 * 3600
-        os.utime(d, (two_days_ago, two_days_ago))
-
-    app = spark.sparkContext.applicationId
-    key = (app, "/tmp/does-not-matter-sfdir")
-    try:
-        m87._BUCKETED_TABLE_CACHE[key] = ("b_orders_deadbeef", "b_lineitem_deadbeef")
-        m87._sweep_stale_bucket_dirs(spark)
-        assert os.path.isdir(own), "sweep reclaimed a dir its own cache references"
-        assert not os.path.isdir(foreign), "sweep left a stale foreign dir"
-
-        # cache-hit path refreshes mtime, protecting against OTHER sweepers
-        old = time.time() - 2 * 24 * 3600
-        os.utime(own, (old, old))
-        m87._touch_bucket_table_dirs(spark, ("b_orders_deadbeef",))
-        assert time.time() - os.path.getmtime(own) < 3600
-    finally:
-        m87._BUCKETED_TABLE_CACHE.pop(key, None)
-        for d in (own, foreign):
-            if os.path.isdir(d):
-                os.rmdir(d)
-
-
 # --- r8 ADVICE: adaptive-plane sizing counts the RAW input ----------------
 
 def test_lsh_adaptive_sizing_counts_raw_input_not_parsed_projection(spark):

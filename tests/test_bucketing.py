@@ -16,11 +16,12 @@ SF = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark):
+def bucketed_tables(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("bucketed")
     orders = load_table(spark, SF, "orders").withColumnRenamed("o_custkey", "custkey")
     customer = load_table(spark, SF, "customer").withColumnRenamed("c_custkey", "custkey")
-    write_bucketed(orders, "orders_b", "custkey", n_buckets=8)
-    write_bucketed(customer, "customer_b", "custkey", n_buckets=8)
+    write_bucketed(orders, "orders_b", "custkey", str(root / "orders_b"), n_buckets=8)
+    write_bucketed(customer, "customer_b", "custkey", str(root / "customer_b"), n_buckets=8)
     yield "orders_b", "customer_b"
     spark.sql("DROP TABLE IF EXISTS orders_b")
     spark.sql("DROP TABLE IF EXISTS customer_b")
@@ -55,40 +56,3 @@ def test_bucketed_join_matches_plain_join(spark, bucketed_tables):
     p, b = plain.first(), bucketed.first()
     assert p.n == b.n and abs(p.s - b.s) < 1e-6 * abs(p.s)
 
-
-def test_stale_bucket_dir_sweep(spark, tmp_path, monkeypatch):
-    """r7 ADVICE: per-session table tags made b_orders_*/b_lineitem_*
-    warehouse dirs from crashed sessions accumulate forever (app ids
-    never repeat, so the same-tag reclaim was unreachable).  The
-    age-based sweep removes dirs older than a day and leaves young
-    ones (possibly a live concurrent session) untouched."""
-    import os
-    import time
-
-    from lawfirm_data_pipeline_spark.oracle import m87_tokenize_bucket_split as m87
-
-    old = tmp_path / "b_orders_deadbeef"
-    young = tmp_path / "b_lineitem_cafe0123"
-    other = tmp_path / "not_a_bucket_dir"
-    for d in (old, young, other):
-        d.mkdir()
-        (d / "part-0.parquet").write_bytes(b"x")
-    stale = time.time() - m87._STALE_BUCKET_DIR_SECONDS - 60
-    os.utime(old, (stale, stale))
-    os.utime(other, (stale, stale))
-
-    class _Conf:
-        def get(self, k, default=None):
-            return str(tmp_path)
-
-    class _FakeContext:
-        applicationId = "fake-app-no-cache-entries"
-
-    class _FakeSpark:
-        conf = _Conf()
-        sparkContext = _FakeContext()
-
-    m87._sweep_stale_bucket_dirs(_FakeSpark())
-    assert not old.exists(), "day-old bucket dir must be reclaimed"
-    assert young.exists(), "young dir may belong to a live session"
-    assert other.exists(), "sweep must only touch b_orders_/b_lineitem_ dirs"

@@ -3,9 +3,6 @@ formats agree, and the CSV gate genuinely catches type mangling."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -20,7 +17,7 @@ def test_format_roundtrip_all_formats_agree(spark):
     assert len({(r["n_rows"], r["checksum"]) for r in rows}) == 1
 
 
-def test_csv_without_schema_would_fail_gate(spark):
+def test_csv_without_schema_would_fail_gate(spark, tmp_path):
     # the reason q197 pins explicit schemas: inferred CSV re-types and
     # the checksum moves — proving the gate has teeth
     import lawfirm_data_pipeline_spark.oracle.m46_formats as m
@@ -30,46 +27,38 @@ def test_csv_without_schema_would_fail_gate(spark):
         .filter(F.col("doc_id") % 2 == 0)
         .select("doc_id", "text", "lang", "source", "n_chars")
     )
-    scratch = os.path.join(m._TMP_ROOT, f"csvtest_{uuid.uuid4().hex}")
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        src.write.mode("overwrite").option("header", "true").csv(scratch)
-        naive = spark.read.option("header", "true").csv(scratch)  # all strings
-        assert dict(naive.dtypes)["doc_id"] == "string"
-        want = m._doc_cksum(src).collect()[0]
-        pinned = (
-            spark.read.schema(m._DOC_SCHEMA).option("header", "true").csv(scratch)
-        )
-        got = m._doc_cksum(pinned).collect()[0]
-        assert (got["n_rows"], got["checksum"]) == (want["n_rows"], want["checksum"])
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    scratch = str(tmp_path / "csv")
+    src.write.mode("overwrite").option("header", "true").csv(scratch)
+    naive = spark.read.option("header", "true").csv(scratch)  # all strings
+    assert dict(naive.dtypes)["doc_id"] == "string"
+    want = m._doc_cksum(src).collect()[0]
+    pinned = (
+        spark.read.schema(m._DOC_SCHEMA).option("header", "true").csv(scratch)
+    )
+    got = m._doc_cksum(pinned).collect()[0]
+    assert (got["n_rows"], got["checksum"]) == (want["n_rows"], want["checksum"])
 
 
-def test_partitioned_read_prunes_to_one_directory(spark):
+def test_partitioned_read_prunes_to_one_directory(spark, tmp_path):
     import lawfirm_data_pipeline_spark.oracle.m46_formats as m
 
     ev = spark.read.parquet(f"{SF}/events.parquet").select(
         "event_id",
         F.to_date(F.date_trunc("day", F.col("ts").cast("timestamp"))).alias("day"),
     )
-    scratch = os.path.join(m._TMP_ROOT, f"prune_{uuid.uuid4().hex}")
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        ev.write.mode("overwrite").partitionBy("day").parquet(scratch)
-        n_days = ev.select("day").distinct().count()
-        assert n_days > 1
-        pruned = spark.read.parquet(scratch).filter(F.col("day") == "2024-01-15")
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        # the day predicate must land in PartitionFilters (planning-time
-        # pruning) and leave nothing for row-level DataFilters
-        assert "PartitionFilters: [isnotnull(day" in plan and "= 2024-01-15)" in plan
-        assert "DataFilters: []" in plan
-        # and the pruned rows are exactly that day's rows
-        want = ev.filter(F.col("day") == "2024-01-15").count()
-        assert pruned.count() == want
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    scratch = str(tmp_path / "events")
+    ev.write.mode("overwrite").partitionBy("day").parquet(scratch)
+    n_days = ev.select("day").distinct().count()
+    assert n_days > 1
+    pruned = spark.read.parquet(scratch).filter(F.col("day") == "2024-01-15")
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    # the day predicate must land in PartitionFilters (planning-time
+    # pruning) and leave nothing for row-level DataFilters
+    assert "PartitionFilters: [isnotnull(day" in plan and "= 2024-01-15)" in plan
+    assert "DataFilters: []" in plan
+    # and the pruned rows are exactly that day's rows
+    want = ev.filter(F.col("day") == "2024-01-15").count()
+    assert pruned.count() == want
 
 
 def test_csv_roundtrip_preserves_empty_and_multiline_text(spark, tmp_path):

@@ -3,9 +3,6 @@ immutability, and that the approx-quantile gate actually has teeth."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -45,27 +42,23 @@ def test_survivorship_rules(spark, monkeypatch):
     assert g["n_null_bal"] == 1
 
 
-def test_time_travel_versions_are_immutable(spark):
+def test_time_travel_versions_are_immutable(spark, tmp_path):
     from lawfirm_data_pipeline_spark.sources import lake
 
-    scratch = os.path.join("/root/repo/.tmp_lake", f"ttx_{uuid.uuid4().hex}")
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        df1 = spark.range(10).select(F.col("id"), F.lit("a").alias("s"))
-        v1 = lake.write_version(df1, scratch)
-        lake.publish(scratch, v1)
-        df2 = spark.range(10).select(F.col("id"), F.lit("b").alias("s"))
-        v2 = lake.write_version(df2, scratch)
-        lake.publish(scratch, v2)
-        asof = lake.read_version(spark, scratch, v1)
-        assert asof.filter(F.col("s") == "a").count() == 10
-        assert lake.read_latest(spark, scratch).filter(F.col("s") == "b").count() == 10
-        import pytest
+    scratch = str(tmp_path)
+    df1 = spark.range(10).select(F.col("id"), F.lit("a").alias("s"))
+    v1 = lake.write_version(df1, scratch)
+    lake.publish(scratch, v1)
+    df2 = spark.range(10).select(F.col("id"), F.lit("b").alias("s"))
+    v2 = lake.write_version(df2, scratch)
+    lake.publish(scratch, v2)
+    asof = lake.read_version(spark, scratch, v1)
+    assert asof.filter(F.col("s") == "a").count() == 10
+    assert lake.read_latest(spark, scratch).filter(F.col("s") == "b").count() == 10
+    import pytest
 
-        with pytest.raises(FileNotFoundError):
-            lake.read_version(spark, scratch, 99)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    with pytest.raises(FileNotFoundError):
+        lake.read_version(spark, scratch, 99)
 
 
 def test_q206_stages_differ(spark):

@@ -7,6 +7,8 @@ CORRECTNESS_r{N}.json.
 
 from __future__ import annotations
 
+import tempfile
+
 import pytest
 
 from lawfirm_data_pipeline_spark.queries import ORACLE_SQL, QUERIES
@@ -17,11 +19,12 @@ from .oracle_compare import canon_multiset, compare
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(name, spark, duck):
+def test_query_matches_oracle(name, spark, duck, tmp_path, monkeypatch):
     # start from an empty CacheManager so the hygiene check below sees
-    # only what this query left behind
+    # only what this query left behind; its scratch goes under tmp_path
     spark.catalog.clearCache()
-    views = _temp_views(spark)
+    views, tables = _tables(spark, True), _tables(spark, False)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     df = QUERIES[name](spark, SF_ORACLE)
     sql = ORACLE_SQL.get(name)
     if sql is None:
@@ -32,13 +35,16 @@ def test_query_matches_oracle(name, spark, duck):
         assert len(rows) >= 0
     else:
         compare(df, duck, sql)
-    # a finished query leaves no cache entry, no running stream and no
+    # a finished query leaves no cache entry, no running stream, no
     # temp view (io.register_views' driver tables excepted: q55, q240
-    # and q241 run their SQL verbatim over them)
+    # and q241 run their SQL verbatim over them), no scratch dir and no
+    # catalog table
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
     assert not spark.streams.active, name
-    assert _temp_views(spark) - views <= set(DRIVER_TABLES), name
+    assert _tables(spark, True) - views <= set(DRIVER_TABLES), name
+    assert not any(tmp_path.iterdir()), name
+    assert _tables(spark, False) == tables, name
 
 
-def _temp_views(spark) -> set[str]:
-    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+def _tables(spark, temporary: bool) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary == temporary}

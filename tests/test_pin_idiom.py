@@ -1,11 +1,15 @@
-"""One owner per idiom: each Spark call below may appear in the package
-only inside the module that owns it.
+"""One owner per idiom: each call below may appear in the package only
+inside the module that owns it (or nowhere, for an owner of ``None``).
 
 - materialization: only ``pin`` calls ``cache``, ``persist``,
   ``unpersist`` or ``localCheckpoint``;
 - bounded streams: only ``streaming/bounded`` starts, drains, captures
   and stops a stream, names a memory sink or scopes shuffle partitions;
-- temp views: only ``io.register_views`` registers one.
+- temp views: only ``io.register_views`` registers one;
+- scratch: a query scopes its own in ``tempfile.TemporaryDirectory``,
+  so only ``sources/lake`` (vacuum, restore) deletes a tree, only
+  ``operators/bucketing`` writes a catalog table, nothing reads the
+  warehouse dir, derives a path from ``__file__`` or calls ``mkdtemp``.
 """
 
 from __future__ import annotations
@@ -36,6 +40,22 @@ _RULES = {
         r"\.createOrReplaceTempView\(",
         "pass DataFrames to spark.sql(..., name=df) instead of registering a view",
     ),
+    "rmtree": (
+        "sources/lake.py",
+        r"\bshutil\.rmtree\(",
+        "scope scratch in tempfile.TemporaryDirectory instead of deleting it",
+    ),
+    "catalog_table": (
+        "operators/bucketing.py",
+        r"\.saveAsTable\(|spark\.sql\.warehouse\.dir",
+        "write catalog tables through operators.bucketing.write_bucketed at a"
+        " scratch path; never touch the warehouse dir",
+    ),
+    "scratch_root": (
+        None,
+        r"__file__|\bmkdtemp\(",
+        "scope scratch in tempfile.TemporaryDirectory, not under the package",
+    ),
 }
 
 
@@ -46,7 +66,7 @@ def test_one_owner_per_idiom(rule):
     offenders = [
         f"{path.relative_to(_PKG.parent)}:{n}: {line.strip()}"
         for path in sorted(_PKG.rglob("*.py"))
-        if path != _PKG / owner
+        if path.relative_to(_PKG).as_posix() != owner
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if call.search(line)
     ]

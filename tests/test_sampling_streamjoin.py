@@ -3,8 +3,6 @@ stream-stream interval join vs its batch equivalent."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from lawfirm_data_pipeline_spark.io import load_events_stream, load_table
@@ -49,7 +47,7 @@ def test_stratified_sample_respects_salt_independence(spark):
     assert all(r.lang == "en" for r in s1.select("lang").distinct().collect())
 
 
-def test_stream_stream_interval_join_matches_batch(spark):
+def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     """Purchases joined to clicks of the same user within the preceding
     hour — streaming (two watermarked streams) equals the batch join."""
     clicks_s = load_events_stream(spark, SF).filter(F.col("event_type") == "click").select(
@@ -68,9 +66,7 @@ def test_stream_stream_interval_join_matches_batch(spark):
             "AND buy_ts <= click_ts + INTERVAL 1 HOUR"
         ),
     ).select("click_id", "buy_id")
-    import shutil
-
-    ckpt = tempfile.mkdtemp()
+    ckpt = str(tmp_path / "ckpt")
     q = (
         joined.writeStream.format("memory")
         .queryName("ssj")
@@ -82,7 +78,6 @@ def test_stream_stream_interval_join_matches_batch(spark):
     q.awaitTermination(180)
     q.stop()
     got = {(r.click_id, r.buy_id) for r in spark.sql("SELECT * FROM ssj").collect()}
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     ev = load_table(spark, SF, "events")
     cb = ev.filter(F.col("event_type") == "click").select(

@@ -4,8 +4,6 @@ stateful streaming operator."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from lawfirm_data_pipeline_spark.io import load_events_stream, load_table
@@ -141,10 +139,10 @@ def test_chunking_edges(spark):
     assert got[4] is None or got[4] == []
 
 
-def test_stateful_running_user_stats_matches_batch(spark):
+def test_stateful_running_user_stats_matches_batch(spark, tmp_path):
     stream = load_events_stream(spark, SF)
     out = running_user_stats(stream)
-    ckpt = tempfile.mkdtemp()
+    ckpt = str(tmp_path / "ckpt")
     q = (
         out.writeStream.format("memory")
         .queryName("user_stats")
@@ -155,11 +153,6 @@ def test_stateful_running_user_stats_matches_batch(spark):
     )
     q.awaitTermination(120)
     q.stop()
-    # state-store maintenance threads may still be touching the
-    # checkpoint; tolerate a racy cleanup rather than failing the test
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
     # last emitted row per user = final running totals
     emitted = spark.sql(
         """
