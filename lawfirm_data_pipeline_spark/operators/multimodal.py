@@ -13,8 +13,10 @@ honor the declared output schema.
 One Python crossing per decode: the synthetic payload tables are built
 on the driver as an Arrow table (a JVM ``LocalTableScan``), so a decode
 query runs one Python task, the decoder's — the shape a media lake's
-parquet scan gives.  Each Python task carries a fixed worker cost
-(SCALE.md "Multimodal (M6d)"), so a fixture must not add its own.
+parquet scan gives.  Each Python task still carries a fixed worker cost
+(SCALE.md "Multimodal (M6d)"; about 0.06 s CPU since ``worker_daemon``
+stopped re-reading ``pyspark.zip`` per task, 0.3 s before), so a fixture
+must not add its own.
 
 Scale notes: media rows are large; the operators prune to (id, payload)
 before the Python boundary so Arrow doesn't ship unused columns, and the
@@ -50,7 +52,7 @@ def _media_partitions(n: int) -> int:
     ``LocalTableScan`` default to defaultParallelism slices, which for
     the 48-64-row fixtures means one Python task PER CORE in the decode
     stage, each decoding a handful of rows for the fixed per-task worker
-    cost (32 slices measured 3.8 s cold / 0.67 s warm vs 0.3 s at 1).
+    cost (on 4 vCPUs: 0.62 s warm at 4 slices vs 0.38 s at 1).
     A real media lake reads parquet whose partitioning already scales
     with data volume; this only sizes the synthetic fixtures honestly."""
     return max(1, n // 1024)
@@ -62,14 +64,13 @@ def _media_table(spark, n: int, synth: Callable[[int], bytes]) -> DataFrame:
 
     The plan is ``Coalesce(_media_partitions(n))`` over a JVM
     ``LocalTableScan``, so the decode kernel downstream is the only
-    Python task.  A ``pandas_udf`` generator over ``spark.range`` ran a
-    second one per query.  Measured on the 64-row BMP decode (warm
-    process-tree CPU per query, 4 vCPUs): this shape 0.36 s, the
-    generator 0.69 s.  Two other shapes are worse:
-    ``createDataFrame(list)`` goes through a Python RDD that spawns
-    worker tasks of its own (1.43 s), and without the ``coalesce`` the
-    scan splits into defaultParallelism slices, each a separate decode
-    task (1.24 s)."""
+    Python task.  Measured on the 64-row BMP decode (warm process-tree
+    CPU per query, median of 12, 4 vCPUs): this shape 0.38 s.  The other
+    shapes are worse: a ``pandas_udf`` generator over ``spark.range``
+    runs a second Python task per query (0.50 s); without the
+    ``coalesce`` the scan splits into defaultParallelism slices, each a
+    separate decode task (0.62 s); ``createDataFrame(list)`` goes through
+    a Python RDD that spawns worker tasks of its own (0.77 s)."""
     import pyarrow as pa
 
     schema = pa.schema(
