@@ -68,8 +68,3 @@ def normalize_tags(*cols: Column) -> Column:
     (activities/syncCrm.ts:141)."""
     arr = F.array_compact(F.array(*cols))
     return F.array_distinct(arr)
-
-
-def domain_of(url: Column | str) -> Column:
-    c = F.col(url) if isinstance(url, str) else url
-    return F.try_parse_url(c, F.lit("HOST"))

@@ -63,9 +63,3 @@ def table_diff(
         )
         .filter(F.col("change").isNotNull())
     )
-
-
-def diff_summary(diff: DataFrame) -> DataFrame:
-    """Counts per change kind — the audit row a snapshot-promotion job
-    logs before committing the new version."""
-    return diff.groupBy("change").agg(F.count(F.lit(1)).alias("n"))

@@ -131,10 +131,6 @@ def lang_scores_of(ltoks: Column) -> dict[str, Column]:
     return out
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    return lang_scores_of(tokens(F.lower(_c(text))))
-
-
 def lang_id_of(ltoks: Column) -> Column:
     """argmax over language marker scores; ties and zero evidence → 'und'.
 
@@ -167,13 +163,9 @@ def fingerprint(text: Column | str) -> Column:
 
 
 def prefix_fingerprint_of(ltoks: Column, k: int = 5) -> Column:
-    return F.md5(F.array_join(F.slice(ltoks, 1, k), " "))
-
-
-def prefix_fingerprint(text: Column | str, k: int = 5) -> Column:
     """md5 of the first k tokens — a locality-sensitive prefix signature
     (collides for documents sharing an opening)."""
-    return prefix_fingerprint_of(tokens(F.lower(_c(text))), k)
+    return F.md5(F.array_join(F.slice(ltoks, 1, k), " "))
 
 
 def tfidf_topk(docs, k: int = 3, text_col: str = "text", id_col: str = "doc_id"):

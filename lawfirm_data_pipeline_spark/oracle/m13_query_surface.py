@@ -123,13 +123,13 @@ def q74_filtered_include(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q75_transaction_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """$transaction (reference src/db/client/effect.ts:369-396) driver
-    gate: stage a two-table mutation (orders rewrite + audit insert) as
-    new lake versions, flip both pointers with ``commit_many``, and
-    summarize the COMMITTED state read back through ``read_latest`` —
-    the oracle reproduces the post-state from the raw input, so the
+    gate: stage a two-table mutation (orders rewrite + audit insert) in
+    one catalog transaction, commit both tables with one commit file,
+    and summarize the COMMITTED state read back through ``Catalog.read``
+    — the oracle reproduces the post-state from the raw input, so the
     whole stage→commit→read cycle is value-checked.  The lake lives in
     a fresh temp dir per invocation (hermetic; data writes are the
-    distributed part, the commit is two pointer renames), so the ≤3
+    distributed part, the commit is one small file create), so the ≤3
     summary rows are collected before it is deleted."""
     from ..sources import lake
 
@@ -149,15 +149,14 @@ def q75_transaction_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit = orders.filter(F.col("o_orderstatus") == "F").select("o_orderkey")
 
     with tempfile.TemporaryDirectory(prefix="q75_", ignore_cleanup_errors=True) as base:
-        orders_dir, audit_dir = f"{base}/orders", f"{base}/audit"
-        staged = {
-            orders_dir: lake.write_version(updated, orders_dir),
-            audit_dir: lake.write_version(audit, audit_dir),
-        }
-        lake.commit_many(staged)
+        cat = lake.Catalog(base)
+        txn = cat.transaction()
+        txn.stage("orders", updated)
+        txn.stage("audit", audit)
+        txn.commit()
 
-        committed = lake.read_latest(spark, orders_dir)
-        audited = lake.read_latest(spark, audit_dir).withColumn("__a", F.lit(1))
+        committed = cat.read(spark, "orders")
+        audited = cat.read(spark, "audit").withColumn("__a", F.lit(1))
         out = (
             committed.join(audited, on="o_orderkey", how="left")
             .groupBy("o_orderstatus")

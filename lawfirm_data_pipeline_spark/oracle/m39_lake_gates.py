@@ -3,7 +3,7 @@
 The versioned-table machinery (sources/lake.py) and schema migrations
 (sources/migrations.py) were pytest-gated; these queries put both
 under the driver's VALUE gate using the q151 checksum trick: content
-preservation across write->publish->compact->vacuum (q175) and across
+preservation across commit->compact->commit->vacuum (q175) and across
 a four-op migration chain (q176) is asserted by an order-independent
 checksum the oracle recomputes directly from the source table.
 
@@ -56,27 +56,29 @@ def _cksum(df: DataFrame, cols: list[str]):
     """,
 )
 def q175_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """write_version(8 files) -> publish -> compact into a new version
-    (coalesce) -> publish -> vacuum(keep=1): the checksum of
-    read_latest at each stage must equal the oracle's checksum of the
-    source rows — mutation machinery must be content-invisible.  The
-    tiny audit rows are collected before the scratch dir is deleted
-    (read_latest DataFrames would dangle otherwise)."""
+    """Commit the slice as 8 files -> compact it in a second transaction
+    (``coalesce(1)`` into a new version) -> commit -> ``Catalog.vacuum``
+    drops the old version: the checksum of the committed table at each
+    stage must equal the oracle's checksum of the source rows — mutation
+    machinery must be content-invisible.  The tiny audit rows are
+    collected before the scratch dir is deleted (lake DataFrames would
+    dangle otherwise)."""
     src = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 3 == 0)
         .select(*_CHECK_COLS)
     )
-    with tempfile.TemporaryDirectory(prefix="q175_", ignore_cleanup_errors=True) as table_dir:
-        v1 = lake.write_version(src.repartition(8), table_dir)
-        lake.publish(table_dir, v1)
-        r1 = _cksum(lake.read_latest(spark, table_dir), _CHECK_COLS).collect()[0]
-        v2 = lake.write_version(
-            lake.read_latest(spark, table_dir).coalesce(1), table_dir
-        )
-        lake.publish(table_dir, v2)
-        lake.vacuum(table_dir, keep=1)
-        r2 = _cksum(lake.read_latest(spark, table_dir), _CHECK_COLS).collect()[0]
+    with tempfile.TemporaryDirectory(prefix="q175_", ignore_cleanup_errors=True) as root:
+        cat = lake.Catalog(root)
+        txn = cat.transaction()
+        txn.stage("t", src.repartition(8))
+        txn.commit()
+        r1 = _cksum(cat.read(spark, "t"), _CHECK_COLS).collect()[0]
+        txn = cat.transaction()
+        txn.stage("t", txn.read(spark, "t").coalesce(1))
+        txn.commit()
+        cat.vacuum("t")
+        r2 = _cksum(cat.read(spark, "t"), _CHECK_COLS).collect()[0]
     return spark.createDataFrame(
         [("v1", r1["n_rows"], r1["checksum"]), ("compacted", r2["n_rows"], r2["checksum"])],
         "stage string, n_rows long, checksum long",

@@ -7,8 +7,8 @@
   AFTER q129's linkage finds the clusters and q71's CC labels them.
 * q206 — time-travel read gate: after v2 mutates the table, reading
   AS OF v1 must still checksum to the original content — the Delta/
-  Iceberg `VERSION AS OF` semantics on the repo's pointer-file lake
-  (`sources/lake.read_version`).
+  Iceberg `VERSION AS OF` semantics on the repo's catalog-log lake
+  (`sources/lake.Catalog.read` at an old snapshot).
 * q207 — approx-percentile tolerance gate: Spark's t-digest
   `percentile_approx` graded against the exact quantile Spark-side,
   with the verdict column the oracle expects to be TRUE — the q50
@@ -136,9 +136,9 @@ def q205_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q206_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """v1 = the slice as-is; v2 = every status overwritten with 'X'
-    (a full-table mutation).  After v2 publishes, ``read_version(v1)``
-    must reproduce the ORIGINAL checksum and ``read_latest`` the
-    mutated one — version dirs are immutable, so AS OF reads cost a
+    (a full-table mutation).  After v2 commits, reading at the v1
+    snapshot must reproduce the ORIGINAL checksum and reading the head
+    the mutated one — version dirs are immutable, so AS OF reads cost a
     directory path, not a log replay.  Audit rows are collected before
     scratch deletion (the q175 discipline)."""
     src = (
@@ -171,16 +171,17 @@ def q206_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         return r["n"], r["c"]
 
-    with tempfile.TemporaryDirectory(prefix="q206_", ignore_cleanup_errors=True) as table_dir:
-        v1 = lake.write_version(src, table_dir)
-        lake.publish(table_dir, v1)
-        mutated = lake.read_latest(spark, table_dir).withColumn(
-            "o_orderstatus", F.lit("X")
-        )
-        v2 = lake.write_version(mutated, table_dir)
-        lake.publish(table_dir, v2)
-        n1, c1 = cksum(lake.read_version(spark, table_dir, v1))
-        n2, c2 = cksum(lake.read_latest(spark, table_dir))
+    with tempfile.TemporaryDirectory(prefix="q206_", ignore_cleanup_errors=True) as root:
+        cat = lake.Catalog(root)
+        txn = cat.transaction()
+        txn.stage("t", src)
+        txn.commit()
+        v1 = cat.snapshot()
+        txn = cat.transaction()
+        txn.stage("t", txn.read(spark, "t").withColumn("o_orderstatus", F.lit("X")))
+        txn.commit()
+        n1, c1 = cksum(cat.read(spark, "t", v1))
+        n2, c2 = cksum(cat.read(spark, "t"))
         return spark.createDataFrame(
             [("v1_asof", n1, c1), ("v2_latest", n2, c2)],
             "stage string, n_rows long, checksum long",

@@ -5,10 +5,10 @@ Reference parity: the reference carries six Prisma migration files
 column-nullability relaxation (20260102133035_init/migration.sql:
 ``ALTER TABLE "PlaceEntry" ALTER COLUMN "name" DROP NOT NULL, ...``),
 and CreateIndex/DropIndex.  A lake has no in-place ALTER TABLE: schema
-changes are COPY-ON-WRITE — project the latest snapshot onto the target
-schema and commit the projection as the next version
-(``write_version`` + ``publish``), so readers atomically flip from
-old-schema data to new-schema data exactly like a data rewrite.
+changes are COPY-ON-WRITE — project the table at the catalog head onto
+the target schema and commit the projection as its next version in one
+``Catalog`` transaction, so readers atomically flip from old-schema
+data to new-schema data exactly like a data rewrite.
 
 Supported ops (the lake analogues of the reference's Postgres DDL):
 
@@ -27,7 +27,7 @@ CreateIndex/DropIndex have no lake analogue — ordering/bucketing AT
 WRITE TIME is the engine's index story (operators/bucketing.py).
 
 Scale: the migration rewrite is one distributed projection of the table
-(embarrassingly parallel, no shuffle) + one pointer flip; old versions
+(embarrassingly parallel, no shuffle) + one catalog commit; old versions
 remain readable (``conform`` lets a reader present an old snapshot
 under the new schema, Delta-``mergeSchema`` style).
 """
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .lake import publish, read_latest, write_version
+from .lake import Catalog
 
 _WIDENINGS: set[tuple[str, str]] = {
     ("tinyint", "smallint"), ("tinyint", "int"), ("tinyint", "bigint"),
@@ -96,13 +96,13 @@ def _mark_nullable(df: DataFrame, name: str) -> DataFrame:
 
 
 def migrate_table(
-    spark: SparkSession, table_dir: str, ops: list[dict[str, Any]]
+    spark: SparkSession, catalog: Catalog, table: str, ops: list[dict[str, Any]]
 ) -> int:
-    """Apply ``ops`` to the latest committed version and publish the
-    result as the next version.  Returns the new version number."""
-    migrated = apply_migration(read_latest(spark, table_dir), ops)
-    v = write_version(migrated, table_dir)
-    publish(table_dir, v)
+    """Apply ``ops`` to ``table`` at the catalog head and commit the
+    result as its next version.  Returns the new version number."""
+    txn = catalog.transaction()
+    v = txn.stage(table, apply_migration(txn.read(spark, table), ops))
+    txn.commit()
     return v
 
 

@@ -1,102 +1,80 @@
-"""Versioned-table commits: readers never see partial state, multi-table
-staging, vacuum retention, compaction file counts."""
+"""Versioned-table commits through the catalog log: readers never see
+partial state, multi-table staging, vacuum retention, migrations."""
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from lawfirm_data_pipeline_spark.io import load_table
 from lawfirm_data_pipeline_spark.operators.mutations import upsert
 from lawfirm_data_pipeline_spark.sources import lake
-
-SF = "/root/testdata/sf0.01"
-
-
-def test_write_then_publish_is_visible_and_staged_is_not(spark):
-    with tempfile.TemporaryDirectory() as d:
-        t = os.path.join(d, "t")
-        v0 = lake.write_version(spark.range(5), t)
-        with pytest.raises(FileNotFoundError):
-            lake.read_latest(spark, t)  # staged but never committed
-        lake.publish(t, v0)
-        assert lake.read_latest(spark, t).count() == 5
-        # stage v1; readers still see v0 until publish
-        v1 = lake.write_version(spark.range(9), t)
-        assert lake.read_latest(spark, t).count() == 5
-        lake.publish(t, v1)
-        assert lake.read_latest(spark, t).count() == 9
+from lawfirm_data_pipeline_spark.sources.lake import Catalog
 
 
-def test_transactional_upsert_cycle(spark):
-    """The $transaction shape: read latest -> mutate -> stage -> commit."""
-    with tempfile.TemporaryDirectory() as d:
-        t = os.path.join(d, "companies")
-        base = spark.createDataFrame(
-            [("c1", "Acme", None), ("c2", "Beta", "x@b.io")],
-            "id string, name string, email string",
-        )
-        lake.publish(t, lake.write_version(base, t))
-        incoming = spark.createDataFrame(
-            [("c2", "Beta", "new@b.io"), ("c3", "Gamma", None)],
-            "id string, name string, email string",
-        )
-        cur = lake.read_latest(spark, t)
-        staged = lake.write_version(upsert(cur, incoming, keys="id"), t)
-        lake.commit_many({t: staged})
-        final = {r.id: r.email for r in lake.read_latest(spark, t).collect()}
-        assert final == {"c1": None, "c2": "new@b.io", "c3": None}
+def _commit(cat, table, df) -> int:
+    txn = cat.transaction()
+    v = txn.stage(table, df)
+    txn.commit()
+    return v
 
 
-def test_vacuum_keeps_committed_version(spark):
-    with tempfile.TemporaryDirectory() as d:
-        t = os.path.join(d, "t")
-        versions = [lake.write_version(spark.range(i + 1), t) for i in range(4)]
-        lake.publish(t, versions[1])  # commit an OLD version
-        removed = lake.vacuum(t, keep=1)
-        # newest is kept, committed v1 is kept even though old
-        assert lake.read_latest(spark, t).count() == 2
-        assert all(f"v={versions[1]}" not in p for p in removed)
+def test_transactional_upsert_cycle(spark, tmp_path):
+    """The $transaction shape: read head -> mutate -> stage -> commit."""
+    cat = Catalog(str(tmp_path / "cat"))
+    base = spark.createDataFrame(
+        [("c1", "Acme", None), ("c2", "Beta", "x@b.io")],
+        "id string, name string, email string",
+    )
+    _commit(cat, "companies", base)
+    incoming = spark.createDataFrame(
+        [("c2", "Beta", "new@b.io"), ("c3", "Gamma", None)],
+        "id string, name string, email string",
+    )
+    txn = cat.transaction()
+    txn.stage("companies", upsert(txn.read(spark, "companies"), incoming, keys="id"))
+    txn.commit()
+    final = {r.id: r.email for r in cat.read(spark, "companies").collect()}
+    assert final == {"c1": None, "c2": "new@b.io", "c3": None}
 
 
-def test_compact_reduces_file_count(spark):
-    with tempfile.TemporaryDirectory() as d:
-        p = os.path.join(d, "frag")
-        load_table(spark, SF, "orders").repartition(40).write.parquet(p)
-        n_before = len([f for f in os.listdir(p) if f.endswith(".parquet")])
-        assert n_before >= 40
-        before = spark.read.parquet(p).agg(F.sum("o_orderkey")).first()[0]
-        lake.compact(spark, p, target_file_bytes=1 << 30)
-        n_after = len([f for f in os.listdir(p) if f.endswith(".parquet")])
-        assert n_after < 5
-        assert spark.read.parquet(p).agg(F.sum("o_orderkey")).first()[0] == before
+def test_vacuum_keeps_head_and_in_flight_versions(spark, tmp_path):
+    """Vacuum drops only versions older than the head: a version staged
+    by a live writer after the head stays, and its commit still lands."""
+    cat = Catalog(str(tmp_path / "cat"))
+    _commit(cat, "t", spark.range(1))
+    _commit(cat, "t", spark.range(2))
+    inflight = cat.transaction()
+    inflight.stage("t", spark.range(3))  # v=2, not yet committed
+    t = os.path.join(cat.root, "t")
+    assert cat.vacuum("t") == [os.path.join(t, "v=0")]
+    # the table dir holds version dirs and nothing else: no pointer file
+    assert sorted(os.listdir(t)) == ["v=1", "v=2"]
+    assert inflight.commit() == 2
+    assert cat.read(spark, "t").count() == 3
 
 
 def test_schema_migration_chain(spark, tmp_path):
     """Copy-on-write schema evolution: add/backfill, rename, widen,
     relax-nullable, drop — committed as new versions; old snapshots stay
     readable and conform to the new schema."""
-    from pyspark.sql import functions as F
-
-    from lawfirm_data_pipeline_spark.sources import lake
     from lawfirm_data_pipeline_spark.sources.migrations import (
         apply_migration,
         conform,
         migrate_table,
     )
 
-    d = str(tmp_path / "t")
+    cat = Catalog(str(tmp_path / "cat"))
     df0 = spark.range(5).select(
         F.col("id").cast("int").alias("id"), F.concat(F.lit("n"), "id").alias("name")
     )
-    lake.publish(d, lake.write_version(df0, d))
+    _commit(cat, "t", df0)
 
     v = migrate_table(
         spark,
-        d,
+        cat,
+        "t",
         [
             {"add": {"name": "status", "type": "string", "default": "new"}},
             {"rename": {"from": "name", "to": "title"}},
@@ -104,28 +82,24 @@ def test_schema_migration_chain(spark, tmp_path):
             {"relax_nullable": "title"},
         ],
     )
-    cur = lake.read_latest(spark, d)
-    assert v == 1 and lake.current_version(d) == 1
+    cur = cat.read(spark, "t")
+    assert v == 1 and cat.snapshot()[1]["t"] == 1
     assert dict(cur.dtypes) == {"id": "bigint", "title": "string", "status": "string"}
     assert cur.schema["title"].nullable
     assert cur.filter(F.col("status") == "new").count() == 5
 
     # lossy widen refused
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="lossy"):
+    with pytest.raises(ValueError, match="lossy"):
         apply_migration(cur, [{"widen": {"name": "id", "type": "int"}}])
 
     # old snapshot (v=0) conforms to the new schema: missing col -> NULL
-    import os
-
-    old = spark.read.parquet(os.path.join(d, "v=0"))
+    old = lake.read_version(spark, os.path.join(cat.root, "t"), 0)
     conformed = conform(old, cur.schema)
     assert conformed.columns == ["id", "title", "status"]
     assert conformed.filter(F.col("status").isNull()).count() == 5
     # drop completes the DDL surface
-    v2 = migrate_table(spark, d, [{"drop": "status"}])
-    assert lake.read_latest(spark, d).columns == ["id", "title"] and v2 == 2
+    v2 = migrate_table(spark, cat, "t", [{"drop": "status"}])
+    assert cat.read(spark, "t").columns == ["id", "title"] and v2 == 2
 
 
 # ------------------------------------------------------- catalog txns

@@ -45,20 +45,23 @@ def test_survivorship_rules(spark, monkeypatch):
 def test_time_travel_versions_are_immutable(spark, tmp_path):
     from lawfirm_data_pipeline_spark.sources import lake
 
-    scratch = str(tmp_path)
-    df1 = spark.range(10).select(F.col("id"), F.lit("a").alias("s"))
-    v1 = lake.write_version(df1, scratch)
-    lake.publish(scratch, v1)
-    df2 = spark.range(10).select(F.col("id"), F.lit("b").alias("s"))
-    v2 = lake.write_version(df2, scratch)
-    lake.publish(scratch, v2)
-    asof = lake.read_version(spark, scratch, v1)
+    cat = lake.Catalog(str(tmp_path))
+
+    def commit(s: str):
+        txn = cat.transaction()
+        txn.stage("t", spark.range(10).select(F.col("id"), F.lit(s).alias("s")))
+        txn.commit()
+        return cat.snapshot()
+
+    v1 = commit("a")
+    commit("b")
+    asof = cat.read(spark, "t", v1)
     assert asof.filter(F.col("s") == "a").count() == 10
-    assert lake.read_latest(spark, scratch).filter(F.col("s") == "b").count() == 10
+    assert cat.read(spark, "t").filter(F.col("s") == "b").count() == 10
     import pytest
 
     with pytest.raises(FileNotFoundError):
-        lake.read_version(spark, scratch, 99)
+        lake.read_version(spark, str(tmp_path / "t"), 99)
 
 
 def test_q206_stages_differ(spark):

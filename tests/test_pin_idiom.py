@@ -7,9 +7,12 @@ inside the module that owns it (or nowhere, for an owner of ``None``).
   and stops a stream, names a memory sink or scopes shuffle partitions;
 - temp views: only ``io.register_views`` registers one;
 - scratch: a query scopes its own in ``tempfile.TemporaryDirectory``,
-  so only ``sources/lake`` (vacuum, restore) deletes a tree, only
+  so only ``sources/lake`` (``Catalog.vacuum``) deletes a tree, only
   ``operators/bucketing`` writes a catalog table, nothing reads the
-  warehouse dir, derives a path from ``__file__`` or calls ``mkdtemp``.
+  warehouse dir, derives a path from ``__file__`` or calls ``mkdtemp``;
+- lake commits: only ``sources/lake`` writes a table version, so every
+  version is staged through ``Transaction.stage`` and committed in the
+  catalog log.
 """
 
 from __future__ import annotations
@@ -50,6 +53,11 @@ _RULES = {
         r"\.saveAsTable\(|spark\.sql\.warehouse\.dir",
         "write catalog tables through operators.bucketing.write_bucketed at a"
         " scratch path; never touch the warehouse dir",
+    ),
+    "lake_commit": (
+        "sources/lake.py",
+        r"\bwrite_version\(",
+        "stage table versions through sources.lake.Transaction.stage",
     ),
     "scratch_root": (
         None,
